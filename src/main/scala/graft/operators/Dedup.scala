@@ -515,21 +515,21 @@ object Dedup {
     // PARTITION-LOCAL UNION-FIND PRE-PASS (round-17; guide §2 — shrink
     // the iteration count instead of speeding the iterations): each
     // partition's edges collapse to local component skeletons in one
-    // narrow mapPartitions (no shuffle), the global loop then runs on
-    // the CONTRACTED graph — one vertex per (partition-local component),
-    // edges only where a vertex spans partitions with different local
-    // labels. On clustered dup graphs (the operator's entire diet:
-    // near-dup families, DBSCAN cores, fuzzy-entity blocks) almost all
-    // connectivity is local, so the global loop sees a near-empty graph
-    // and converges in 1–2 passes instead of ⌈log₂ n⌉ — each pass saved
-    // is one materialization + one convergence action + one shuffle.
-    // Fixpoint unchanged: a local label is the min id of a locally
-    // connected set (so every label is an id in the same component),
-    // the contracted graph's components correspond 1:1 to the original's
-    // (adjacent vertices share a local label in their edge's partition;
-    // stitch edges connect every vertex's labels across partitions),
-    // and the true component-min vertex is always its own local min —
-    // so min-over-contracted = min-over-original (PropertySpec's
+    // narrow mapPartitions (no shuffle) into one (vertex, local root)
+    // row per vertex per partition it appears in, and the global loop
+    // then runs on those STAR edges (vertex ↔ local root) instead of
+    // the raw edges. On clustered dup graphs (the operator's entire
+    // diet: near-dup families, DBSCAN cores, fuzzy-entity blocks) almost
+    // all connectivity is local, so every star is shallow and the loop
+    // converges in 1–2 passes instead of ⌈log₂ n⌉ — each pass saved is
+    // one materialization + one convergence action + one shuffle.
+    // Fixpoint unchanged: a local root is the min id of a locally
+    // connected set (so every star edge joins two ids of the same
+    // component); the two ends of every raw edge share a local root in
+    // that edge's partition (so no connection is lost); and stars of
+    // different partitions chain through the vertices they share — so
+    // the star graph's components equal the original's vertex for
+    // vertex, and min-over-stars = min-over-original (PropertySpec's
     // union-find equivalence and q35's recursive-CTE oracle pin it).
     // Only in AUTO mode: an explicit maxIter is a documented exact cap
     // on the global passes over the RAW graph (DedupSpec pins that a

@@ -65,6 +65,7 @@ object IndexStore {
     import spark.implicits._
     kv.toDF("key", "value").coalesce(1)
       .write.mode("overwrite").parquet(s"$path/meta")
+    evictMeta(path)
   }
 
   /** The persisted build parameters of the index at `path` (public:
@@ -103,13 +104,14 @@ object IndexStore {
     // MEMOIZED per meta-file signature (round-16 verdict ask #8): a
     // lifecycle op consults meta up to ~20× (metaOf + one per
     // [[readTable]]); the listing above runs on EVERY call and is what
-    // validates the cache — any meta rewrite changes the part files'
-    // names/mtimes/lengths, so a stale entry can never be served. Only
-    // the parquet-mr open+parse of each part file is skipped.
+    // validates the cache — a meta rewrite changes the part files'
+    // names/mtimes/lengths, and this JVM's meta writers also evict the
+    // entry ([[evictMeta]]). Only the parquet-mr open+parse of each
+    // part file is skipped.
     val sig = parts.toSeq
       .map(s => (s.getPath.toString, s.getModificationTime, s.getLen))
       .sortBy(_._1)
-    val cached = metaCache.get(dir.toString)
+    val cached = metaCache.synchronized(metaCache.get(dir.toString))
     if (cached != null && cached._1 == sig) cached._2
     else {
       val m = parts.toSeq.map(_.getPath).flatMap { p =>
@@ -121,23 +123,32 @@ object IndexStore {
           .toList
         finally reader.close()
       }.toMap
-      metaCache.put(dir.toString, (sig, m))
+      metaCache.synchronized(metaCache.put(dir.toString, (sig, m)))
       m
     }
   }
 
+  private type MetaEntry = (Seq[(String, Long, Long)], Map[String, String])
+
   /** [[readMeta]] cache: meta-dir path → (part-file signature, parsed
-    * map). Bounded by eviction at a generous cap — scratch indexes come
-    * and go within a session and must not accumulate entries forever.
+    * map). An LRU bounded at 256 entries — scratch indexes come and go
+    * within a session and must not accumulate entries forever — and
+    * guarded by its own lock (every access goes through
+    * `metaCache.synchronized`).
     */
-  private val metaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Seq[(String, Long, Long)], Map[String, String])]() {
-    override def put(k: String,
-        v: (Seq[(String, Long, Long)], Map[String, String])):
-        (Seq[(String, Long, Long)], Map[String, String]) = {
-      if (size() > 256) clear()
-      super.put(k, v)
+  private val metaCache =
+    new java.util.LinkedHashMap[String, MetaEntry](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[String, MetaEntry]): Boolean = size() > 256
     }
+
+  /** Drop `path`'s [[metaCache]] entry. Called by the meta writer and
+    * by [[resetGenerations]], which deletes meta: the signature check
+    * alone would miss a rewrite that reuses the part-file names and
+    * lengths within the filesystem's mtime granularity.
+    */
+  private def evictMeta(path: String): Unit = metaCache.synchronized {
+    metaCache.remove(new org.apache.hadoop.fs.Path(path, "meta").toString): Unit
   }
 
   /** `ddl_<table> -> schema DDL` meta entries, recorded by every save*
@@ -189,13 +200,10 @@ object IndexStore {
     m
   }
 
-  /** Enforce the monotone-id append contract: every id in `incoming`
-    * must sort strictly after every id in `existing` (both single-column
-    * frames). Distributed and type-generic: two 1-row aggregates and a
-    * cross of them — no driver-side comparison of unknown types. An
-    * empty `existing` (first append into a fresh index) passes.
-    */
-  /** 1-row (__ids_violated boolean) monotone-contract aggregate as ONE
+  /** The monotone-id append contract as a 1-row (__ids_violated
+    * boolean) aggregate: every id in `incoming` must sort strictly
+    * after every id in `existing` (both single-column frames; an empty
+    * `existing` — the first append into a fresh index — passes). ONE
     * union-tagged aggregation (round-17, guide §2.4 — fewer
     * jobs/action): the former two 1-row aggregates + broadcast +
     * cross-of-one-row cost ~4 tiny AQE stage-jobs per append; tagging
@@ -204,7 +212,8 @@ object IndexStore {
     * null semantics match the old crossJoin/where exactly: either side
     * empty → null extremum → NULL comparison → not violated. Kept a
     * DataFrame so append bodies can cross it with their heal-coverage
-    * identity and pay ONE driver action for both guards.
+    * identity and pay ONE driver action for both guards
+    * ([[requireIdsAfter]] is the standalone check).
     */
   private def idsAfterAgg(
       existing: DataFrame, incoming: DataFrame): DataFrame =
@@ -1349,11 +1358,17 @@ object IndexStore {
     */
   private def applyDeletes(
       t: DataFrame, del: Option[DataFrame], idColName: String): DataFrame =
-    del.fold(t)(d => t.join(d.toDF(idColName), Seq(idColName), "left_anti")
-      // the join moves its key to the front — restore the stored
-      // column order (vacuum rewrites and schema-shaped consumers
-      // must see the exact save-time shape)
-      .select(t.columns.map(col).toIndexedSeq: _*))
+    del.fold(t)(d => joinKeepingShape(t, d.toDF(idColName), idColName,
+      "left_anti"))
+
+  /** `t` semi- or anti-joined with `keys` on `key`, in `t`'s own column
+    * order: the USING join moves its key to the front, and vacuum
+    * rewrites and schema-shaped consumers must see the exact save-time
+    * shape.
+    */
+  private def joinKeepingShape(
+      t: DataFrame, keys: DataFrame, key: String, how: String): DataFrame =
+    t.join(keys, Seq(key), how).select(t.columns.map(col).toIndexedSeq: _*)
 
   /** Union the kind's id GRAVEYARD (the deletes table, if present)
     * into an existing-ids relation for the monotone append guard: a
@@ -1396,7 +1411,7 @@ object IndexStore {
   }
 
   /** [[tombstoneDelete]] over an ALREADY cast-and-checkpointed delete
-    * set. `liveProven = true` ([[replaceCore]]'s fresh path, which
+    * set. `liveProven = true` ([[replace]]'s fresh path, which
     * already proved every id live with its classification aggregate)
     * skips the live-set join — the remaining null/duplicate checks
     * need only the small del-side aggregate, not a second pass over
@@ -1477,17 +1492,8 @@ object IndexStore {
     * @return the number of documents tombstoned
     */
   def deleteFromTextIndex(
-      spark: SparkSession, path: String, ids: DataFrame): Long = {
-    withIndexLease(spark, path, "deleteFromTextIndex") {
-      metaOf(spark, path, "text")
-      val (resolved, dir) = resolvedDirs(spark, path)
-      val liveIds = applyDeletes(
-        readTable(spark, path, dir, "doclen").select(col("doc_id")),
-        readDeletes(spark, path, dir), "doc_id")
-      tombstoneDelete(spark, path, "deleteFromTextIndex", "doc_id",
-        ids, liveIds, dir, resolved)
-    }
-  }
+      spark: SparkSession, path: String, ids: DataFrame): Long =
+    deleteFrom(TextKind, spark, path, ids)
 
   /** Fold tombstones into the heavy tables: rewrite postings and
     * doclen WITHOUT the deleted docs' rows and publish both with one
@@ -1510,67 +1516,9 @@ object IndexStore {
   def vacuumTextIndex(
       spark: SparkSession, path: String,
       retainGenerations: Int = 1,
-      retainAge: Option[java.time.Duration] = None): Long = {
-    withIndexLease(spark, path, "vacuumTextIndex") {
-      metaOf(spark, path, "text")
-      val dir = tableDirs(spark, path)
-      readDeletes(spark, path, dir) match {
-        case None => 0L
-        case Some(del0) =>
-          val del = del0.localCheckpoint(true)
-          val doclen = readTable(spark, path, dir, "doclen")
-          val postings = readTable(spark, path, dir, "postings")
-          val unfolded = doclen.join(del, Seq("doc_id"), "left_semi").count()
-          if (unfolded == 0L) 0L
-          else {
-            swapGenerations(spark, path, retainGenerations, retainAge)(Seq(
-              "doclen" -> (d => doclen.join(del, Seq("doc_id"), "left_anti")
-                .repartition(col("doc_id"))
-                .write.mode("overwrite").parquet(d)),
-              "postings" -> (d =>
-                postings.join(del, Seq("doc_id"), "left_anti")
-                  .repartition(col("term"))
-                  .write.mode("overwrite").parquet(d))))
-            unfolded
-          }
-      }
-    }
-  }
+      retainAge: Option[java.time.Duration] = None): Long =
+    vacuum(TextKind, spark, path, retainGenerations, retainAge)
 
-  /** MERGE shard text indexes into one — the shard-parallel BUILD path
-    * at 100 TB: no single job tokenizes a 100 TB corpus in one go, so
-    * K builders each [[saveTextIndex]] a disjoint id range
-    * concurrently (each under its own path's lease) and this op unions
-    * them into one probe-able index. It is exact BY THE SAME DESIGN
-    * that makes append ≡ rebuild: a text index stores NO corpus
-    * statistic — N, Σdl and df all derive from postings/doclen at
-    * probe time — so the union of shard tables IS the single-build
-    * index (merge ≡ [[saveTextIndex]] over the concatenated corpus,
-    * IndexStoreSpec, and q261's full-replay oracle). Shards are read
-    * through [[loadTextIndex]] (torn shards raise; shard tombstones
-    * are applied — the merged index starts with a clean slate, no
-    * `deletes` table, so shard graveyards do NOT transfer and the
-    * output's monotone guard fences against live ids only). Disjoint
-    * doc_ids across shards are REQUIRED and verified with one narrow
-    * count-vs-distinct aggregate (the failure path samples the
-    * overlapping ids); the rewrite clusters postings by term and
-    * doclen by doc_id — one scan-shaped pass over the combined data,
-    * the same cost shape as one compaction of the result. The shards
-    * themselves are left untouched (readers pinned on them are
-    * unaffected), but every merge HOLDS the shards' single-writer
-    * leases for its duration ([[withShardLeases]]): the shard tables
-    * are read lazily and re-scanned during the output writes, so a
-    * concurrent shard append in that window would land rows the
-    * disjointness proof never saw — with the leases held, the
-    * appender raises at ITS acquire instead. Size `ttlMs` ABOVE the
-    * expected merge duration (default 30 min): a merge outliving its
-    * TTL loses the shard leases to a stealing appender and the
-    * protection silently reverts to the fence/monotone backstops.
-    * `outPath` must be a fresh or sacrificial location — it is
-    * rebuilt via [[resetGenerations]] under its own lease.
-    *
-    * @return the merged index's document count
-    */
   /** The merge ops' shared path guards. Paths are FULLY QUALIFIED
     * through the filesystem before comparing (trailing slashes,
     * relative forms, and scheme prefixes all collapse to one
@@ -1657,17 +1605,6 @@ object IndexStore {
       .map(c => if (c == idCol) guarded else col(c)).toIndexedSeq: _*)
   }
 
-  /** Hold every shard's single-writer lease for the duration of a
-    * merge (sorted acquisition; acquire RAISES rather than blocks, so
-    * there is no deadlock to order around — sorting just makes the
-    * failure deterministic). The merge reads shard tables LAZILY and
-    * re-scans them during the output writes, so without the leases a
-    * concurrent shard append between the disjointness proof and the
-    * write could land rows in the merged output that were never
-    * checked for id overlap; holding them turns that race into a loud
-    * raise at the APPENDER's acquire — prevention, the round-13 lease
-    * posture.
-    */
   /** Test seam: runs once after every shard lease is acquired, before
     * the merge body — a spec can steal a shard lease in exactly the
     * over-TTL window [[withShardLeases]]'s verify thunk exists for.
@@ -1675,17 +1612,25 @@ object IndexStore {
     */
   private[graft] var shardLeaseTestHook: () => Unit = () => ()
 
-  /** Run `body` holding EVERY shard's single-writer lease, acquired in
-    * sorted order (deterministic, deadlock-free against another
-    * multi-shard op; a held shard raises rather than blocks). `body`
-    * receives a VERIFY thunk that re-reads each shard lease and raises
-    * if any is no longer this op's — merges call it immediately before
-    * their output write, so a merge that outlived its ttlMs (lease
-    * stolen, shard possibly mutated underneath) fails LOUDLY before
-    * publishing instead of silently degrading to the fence/monotone
-    * backstops. Release-time stolen detection alone can't cover this:
-    * a stealer that acquired, appended, and released inside the window
-    * leaves no lease file behind to compare owners against.
+  /** Run `body` holding EVERY shard's single-writer lease for the
+    * duration of a merge, acquired in sorted order (acquire RAISES
+    * rather than blocks, so there is no deadlock to order around —
+    * sorting makes the failure deterministic against another
+    * multi-shard op). The merge reads shard tables LAZILY and re-scans
+    * them during the output writes, so without the leases a concurrent
+    * shard append between the disjointness proof and the write could
+    * land rows in the merged output that were never checked for id
+    * overlap; holding them turns that race into a loud raise at the
+    * APPENDER's acquire — prevention, the round-13 lease posture.
+    * `body` receives a VERIFY thunk that re-reads each shard lease and
+    * raises if any is no longer this op's — merges call it immediately
+    * before their output write, so a merge that outlived its ttlMs
+    * (lease stolen, shard possibly mutated underneath) fails LOUDLY
+    * before publishing instead of silently degrading to the
+    * fence/monotone backstops. Release-time stolen detection alone
+    * can't cover this: a stealer that acquired, appended, and released
+    * inside the window leaves no lease file behind to compare owners
+    * against.
     */
   private def withShardLeases[T](
       spark: SparkSession, shardPaths: Seq[String], op: String,
@@ -1739,6 +1684,40 @@ object IndexStore {
     c.getLong(0)
   }
 
+  /** MERGE shard text indexes into one — the shard-parallel BUILD path
+    * at 100 TB: no single job tokenizes a 100 TB corpus in one go, so
+    * K builders each [[saveTextIndex]] a disjoint id range
+    * concurrently (each under its own path's lease) and this op unions
+    * them into one probe-able index. It is exact BY THE SAME DESIGN
+    * that makes append ≡ rebuild: a text index stores NO corpus
+    * statistic — N, Σdl and df all derive from postings/doclen at
+    * probe time — so the union of shard tables IS the single-build
+    * index (merge ≡ [[saveTextIndex]] over the concatenated corpus,
+    * IndexStoreSpec, and q261's full-replay oracle). Shards are read
+    * through [[loadTextIndex]] (torn shards raise; shard tombstones
+    * are applied — the merged index starts with a clean slate, no
+    * `deletes` table, so shard graveyards do NOT transfer and the
+    * output's monotone guard fences against live ids only). Disjoint
+    * doc_ids across shards are REQUIRED and verified with one narrow
+    * count-vs-distinct aggregate (the failure path samples the
+    * overlapping ids); the rewrite clusters postings by term and
+    * doclen by doc_id — one scan-shaped pass over the combined data,
+    * the same cost shape as one compaction of the result. The shards
+    * themselves are left untouched (readers pinned on them are
+    * unaffected), but every merge HOLDS the shards' single-writer
+    * leases for its duration ([[withShardLeases]]): the shard tables
+    * are read lazily and re-scanned during the output writes, so a
+    * concurrent shard append in that window would land rows the
+    * disjointness proof never saw — with the leases held, the
+    * appender raises at ITS acquire instead. Size `ttlMs` ABOVE the
+    * expected merge duration (default 30 min): a merge outliving its
+    * TTL loses the shard leases to a stealing appender and the
+    * protection silently reverts to the fence/monotone backstops.
+    * `outPath` must be a fresh or sacrificial location — it is
+    * rebuilt via [[resetGenerations]] under its own lease.
+    *
+    * @return the merged index's document count
+    */
   def mergeTextIndexes(
       spark: SparkSession, shardPaths: Seq[String], outPath: String,
       ttlMs: Long = DefaultLeaseTtlMs): Long = {
@@ -1948,17 +1927,8 @@ object IndexStore {
     * @return the number of assets tombstoned
     */
   def deleteFromMediaIndex(
-      spark: SparkSession, path: String, ids: DataFrame): Long = {
-    withIndexLease(spark, path, "deleteFromMediaIndex") {
-      metaOf(spark, path, "media")
-      val (resolved, dir) = resolvedDirs(spark, path)
-      val live = applyDeletes(
-        readTable(spark, path, dir, "members").select(col("member_id")),
-        readDeletes(spark, path, dir), "member_id")
-      tombstoneDelete(spark, path, "deleteFromMediaIndex", "member_id",
-        ids, live, dir, resolved)
-    }
-  }
+      spark: SparkSession, path: String, ids: DataFrame): Long =
+    deleteFrom(MediaKind, spark, path, ids)
 
   /** Fold a media index's tombstones: rewrite `members` without the
     * deleted rows and `bands` without the signatures that no longer
@@ -1983,35 +1953,8 @@ object IndexStore {
   def vacuumMediaIndex(
       spark: SparkSession, path: String,
       retainGenerations: Int = 1,
-      retainAge: Option[java.time.Duration] = None): Long = {
-    withIndexLease(spark, path, "vacuumMediaIndex") {
-      metaOf(spark, path, "media")
-      val dir = tableDirs(spark, path)
-      readDeletes(spark, path, dir) match {
-        case None => 0L
-        case Some(del0) =>
-          val del = del0.toDF("member_id").localCheckpoint(true)
-          val members = readTable(spark, path, dir, "members")
-          val unfolded =
-            members.join(del, Seq("member_id"), "left_semi").count()
-          if (unfolded == 0L) 0L
-          else {
-            val live = members.join(del, Seq("member_id"), "left_anti")
-              .select(members.columns.map(col).toIndexedSeq: _*)
-            val bands = readTable(spark, path, dir, "bands")
-            swapGenerations(spark, path, retainGenerations, retainAge)(Seq(
-              "members" -> (d => live.repartition(col("dh"))
-                .write.mode("overwrite").parquet(d)),
-              "bands" -> (d => bands
-                .join(live.select(col("dh")).distinct(), Seq("dh"),
-                  "left_semi")
-                .repartition(col("band_hash"))
-                .write.mode("overwrite").parquet(d))))
-            unfolded
-          }
-      }
-    }
-  }
+      retainAge: Option[java.time.Duration] = None): Long =
+    vacuum(MediaKind, spark, path, retainGenerations, retainAge)
 
   /** TOMBSTONE-delete members from a persisted VECTOR index. Deletion
     * is at the MEMBER grain: the rep rows are internal scoring state
@@ -2025,17 +1968,8 @@ object IndexStore {
     * [[deleteFromTextIndex]].
     */
   def deleteFromVectorIndex(
-      spark: SparkSession, path: String, ids: DataFrame): Long = {
-    withIndexLease(spark, path, "deleteFromVectorIndex") {
-      metaOf(spark, path, "vector")
-      val (resolved, dir) = resolvedDirs(spark, path)
-      val live = applyDeletes(
-        readTable(spark, path, dir, "members").select(col("member_id")),
-        readDeletes(spark, path, dir), "member_id")
-      tombstoneDelete(spark, path, "deleteFromVectorIndex", "member_id",
-        ids, live, dir, resolved)
-    }
-  }
+      spark: SparkSession, path: String, ids: DataFrame): Long =
+    deleteFrom(VectorKind, spark, path, ids)
 
   /** Fold a vector index's tombstones: `members` loses the deleted
     * rows; `reps` and `blocks` lose the families with no surviving
@@ -2047,40 +1981,8 @@ object IndexStore {
   def vacuumVectorIndex(
       spark: SparkSession, path: String,
       retainGenerations: Int = 1,
-      retainAge: Option[java.time.Duration] = None): Long = {
-    withIndexLease(spark, path, "vacuumVectorIndex") {
-      metaOf(spark, path, "vector")
-      val dir = tableDirs(spark, path)
-      readDeletes(spark, path, dir) match {
-        case None => 0L
-        case Some(del0) =>
-          val del = del0.toDF("member_id").localCheckpoint(true)
-          val members = readTable(spark, path, dir, "members")
-          val unfolded =
-            members.join(del, Seq("member_id"), "left_semi").count()
-          if (unfolded == 0L) 0L
-          else {
-            val live = members.join(del, Seq("member_id"), "left_anti")
-              .select(members.columns.map(col).toIndexedSeq: _*)
-            val liveGroups = live.select(col("rep_id")).distinct()
-            val reps = readTable(spark, path, dir, "reps")
-            val blocks = readTable(spark, path, dir, "blocks")
-            swapGenerations(spark, path, retainGenerations, retainAge)(Seq(
-              "members" -> (d => live.repartition(col("rep_id"))
-                .write.mode("overwrite").parquet(d)),
-              "reps" -> (d => reps
-                .join(liveGroups, Seq("rep_id"), "left_semi")
-                .repartition(col("rep_id"))
-                .write.mode("overwrite").parquet(d)),
-              "blocks" -> (d => blocks
-                .join(liveGroups, Seq("rep_id"), "left_semi")
-                .repartition(col("band_hash"))
-                .write.mode("overwrite").parquet(d))))
-            unfolded
-          }
-      }
-    }
-  }
+      retainAge: Option[java.time.Duration] = None): Long =
+    vacuum(VectorKind, spark, path, retainGenerations, retainAge)
 
   /** TOMBSTONE-delete documents from a persisted CORPUS (MinHash-LSH)
     * index — [[deleteFromVectorIndex]]'s lexical twin, member grain
@@ -2093,17 +1995,8 @@ object IndexStore {
     * [[vacuumCorpusIndex]] prunes them.
     */
   def deleteFromCorpusIndex(
-      spark: SparkSession, path: String, ids: DataFrame): Long = {
-    withIndexLease(spark, path, "deleteFromCorpusIndex") {
-      metaOf(spark, path, "corpus")
-      val (resolved, dir) = resolvedDirs(spark, path)
-      val live = applyDeletes(
-        readTable(spark, path, dir, "members").select(col("member_id")),
-        readDeletes(spark, path, dir), "member_id")
-      tombstoneDelete(spark, path, "deleteFromCorpusIndex", "member_id",
-        ids, live, dir, resolved)
-    }
-  }
+      spark: SparkSession, path: String, ids: DataFrame): Long =
+    deleteFrom(CorpusKind, spark, path, ids)
 
   /** Fold a corpus index's tombstones: `members` loses the deleted
     * rows; `sets` and `bands` lose the families with no surviving
@@ -2112,40 +2005,8 @@ object IndexStore {
   def vacuumCorpusIndex(
       spark: SparkSession, path: String,
       retainGenerations: Int = 1,
-      retainAge: Option[java.time.Duration] = None): Long = {
-    withIndexLease(spark, path, "vacuumCorpusIndex") {
-      metaOf(spark, path, "corpus")
-      val dir = tableDirs(spark, path)
-      readDeletes(spark, path, dir) match {
-        case None => 0L
-        case Some(del0) =>
-          val del = del0.toDF("member_id").localCheckpoint(true)
-          val members = readTable(spark, path, dir, "members")
-          val unfolded =
-            members.join(del, Seq("member_id"), "left_semi").count()
-          if (unfolded == 0L) 0L
-          else {
-            val live = members.join(del, Seq("member_id"), "left_anti")
-              .select(members.columns.map(col).toIndexedSeq: _*)
-            val liveGroups = live.select(col("corpus_id")).distinct()
-            val sets = readTable(spark, path, dir, "sets")
-            val bands = readTable(spark, path, dir, "bands")
-            swapGenerations(spark, path, retainGenerations, retainAge)(Seq(
-              "members" -> (d => live.repartition(col("corpus_id"))
-                .write.mode("overwrite").parquet(d)),
-              "sets" -> (d => sets
-                .join(liveGroups, Seq("corpus_id"), "left_semi")
-                .repartition(col("corpus_id"))
-                .write.mode("overwrite").parquet(d)),
-              "bands" -> (d => bands
-                .join(liveGroups, Seq("corpus_id"), "left_semi")
-                .repartition(col("band_hash"))
-                .write.mode("overwrite").parquet(d))))
-            unfolded
-          }
-      }
-    }
-  }
+      retainAge: Option[java.time.Duration] = None): Long =
+    vacuum(CorpusKind, spark, path, retainGenerations, retainAge)
 
   /** TOMBSTONE-delete vector ids from a persisted IVF model: the id
     * leaves the inverted lists at load ([[loadIvf]] anti-joins), so no
@@ -2156,17 +2017,8 @@ object IndexStore {
     * unions the graveyard so a deleted id can never be re-admitted.
     */
   def deleteFromIvf(
-      spark: SparkSession, path: String, ids: DataFrame): Long = {
-    withIndexLease(spark, path, "deleteFromIvf") {
-      metaOf(spark, path, "ivf")
-      val (resolved, dir) = resolvedDirs(spark, path)
-      val live = applyDeletes(
-        readTable(spark, path, dir, "assign").select(col("id")),
-        readDeletes(spark, path, dir), "id")
-      tombstoneDelete(spark, path, "deleteFromIvf", "id",
-        ids, live, dir, resolved)
-    }
-  }
+      spark: SparkSession, path: String, ids: DataFrame): Long =
+    deleteFrom(IvfKind, spark, path, ids)
 
   /** Fold an IVF model's tombstones out of the inverted lists (one
     * table — the simplest vacuum). Swap/retention/graveyard as the
@@ -2177,27 +2029,8 @@ object IndexStore {
   def vacuumIvf(
       spark: SparkSession, path: String,
       retainGenerations: Int = 1,
-      retainAge: Option[java.time.Duration] = None): Long = {
-    withIndexLease(spark, path, "vacuumIvf") {
-      metaOf(spark, path, "ivf")
-      val dir = tableDirs(spark, path)
-      readDeletes(spark, path, dir) match {
-        case None => 0L
-        case Some(del0) =>
-          val del = del0.toDF("id").localCheckpoint(true)
-          val assign = readTable(spark, path, dir, "assign")
-          val unfolded = assign.join(del, Seq("id"), "left_semi").count()
-          if (unfolded == 0L) 0L
-          else {
-            swapGenerations(spark, path, retainGenerations, retainAge)(Seq(
-              "assign" -> (d => assign.join(del, Seq("id"), "left_anti")
-                .repartition(col("list_id"))
-                .write.mode("overwrite").parquet(d))))
-            unfolded
-          }
-      }
-    }
-  }
+      retainAge: Option[java.time.Duration] = None): Long =
+    vacuum(IvfKind, spark, path, retainGenerations, retainAge)
 
   /** Kind-dispatching takedown: read the index's kind from `meta/` and
     * route to the right deleteFrom*Index — the one-call surface a
@@ -2207,18 +2040,7 @@ object IndexStore {
     */
   def deleteFromIndex(
       spark: SparkSession, path: String, ids: DataFrame): Long =
-    readMeta(spark, path).getOrElse("kind",
-      throw new IllegalArgumentException(
-        s"IndexStore.deleteFromIndex: $path/meta carries no index kind")
-    ) match {
-      case "text" => deleteFromTextIndex(spark, path, ids)
-      case "media" => deleteFromMediaIndex(spark, path, ids)
-      case "vector" => deleteFromVectorIndex(spark, path, ids)
-      case "corpus" => deleteFromCorpusIndex(spark, path, ids)
-      case "ivf" => deleteFromIvf(spark, path, ids)
-      case k => throw new IllegalArgumentException(
-        s"IndexStore.deleteFromIndex: unknown index kind '$k'")
-    }
+    deleteFrom(kindOf(spark, path, "deleteFromIndex"), spark, path, ids)
 
   /** Kind-dispatching RECTIFICATION — [[deleteFromIndex]]'s replace
     * twin, for compliance tooling that holds only a path: routes to
@@ -2230,20 +2052,8 @@ object IndexStore {
   def replaceInIndex(
       spark: SparkSession, path: String, newRows: DataFrame,
       idCol: String, valueCol: String, oldIds: DataFrame): (Long, Long) =
-    readMeta(spark, path).getOrElse("kind",
-      throw new IllegalArgumentException(
-        s"IndexStore.replaceInIndex: $path/meta carries no index kind")
-    ) match {
-      case "text" => replaceTextDocs(newRows, idCol, valueCol, path, oldIds)
-      case "media" =>
-        replaceMediaAssets(newRows, idCol, valueCol, path, oldIds)
-      case "vector" =>
-        replaceVectorMembers(newRows, idCol, valueCol, path, oldIds)
-      case "corpus" => replaceCorpusDocs(newRows, idCol, valueCol, path, oldIds)
-      case "ivf" => replaceIvfMembers(newRows, idCol, valueCol, path, oldIds)
-      case k => throw new IllegalArgumentException(
-        s"IndexStore.replaceInIndex: unknown index kind '$k'")
-    }
+    replace(kindOf(spark, path, "replaceInIndex"), newRows, idCol, valueCol,
+      path, oldIds)
 
   /** Kind-dispatching vacuum — [[deleteFromIndex]]'s fold twin, for
     * the maintenance cadence that sweeps a directory of indexes.
@@ -2252,22 +2062,8 @@ object IndexStore {
       spark: SparkSession, path: String,
       retainGenerations: Int = 1,
       retainAge: Option[java.time.Duration] = None): Long =
-    readMeta(spark, path).getOrElse("kind",
-      throw new IllegalArgumentException(
-        s"IndexStore.vacuumIndex: $path/meta carries no index kind")
-    ) match {
-      case "text" =>
-        vacuumTextIndex(spark, path, retainGenerations, retainAge)
-      case "media" =>
-        vacuumMediaIndex(spark, path, retainGenerations, retainAge)
-      case "vector" =>
-        vacuumVectorIndex(spark, path, retainGenerations, retainAge)
-      case "corpus" =>
-        vacuumCorpusIndex(spark, path, retainGenerations, retainAge)
-      case "ivf" => vacuumIvf(spark, path, retainGenerations, retainAge)
-      case k => throw new IllegalArgumentException(
-        s"IndexStore.vacuumIndex: unknown index kind '$k'")
-    }
+    vacuum(kindOf(spark, path, "vacuumIndex"), spark, path,
+      retainGenerations, retainAge)
 
   /** Kind-dispatching merge — completes the path-only compliance/
     * maintenance tooling symmetry ([[deleteFromIndex]] /
@@ -2287,24 +2083,174 @@ object IndexStore {
       spark: SparkSession, shardPaths: Seq[String], outPath: String,
       ttlMs: Long = DefaultLeaseTtlMs): Long = {
     require(shardPaths.nonEmpty, "IndexStore.mergeIndexes: no shards")
-    readMeta(spark, shardPaths.head).getOrElse("kind",
-      throw new IllegalArgumentException(
-        s"IndexStore.mergeIndexes: ${shardPaths.head}/meta carries no " +
-          "index kind")
-    ) match {
-      case "text" => mergeTextIndexes(spark, shardPaths, outPath, ttlMs)
-      case "media" => mergeMediaIndexes(spark, shardPaths, outPath, ttlMs)
-      case "vector" => mergeVectorIndexes(spark, shardPaths, outPath, ttlMs)
-      case "corpus" => mergeCorpusIndexes(spark, shardPaths, outPath, ttlMs)
-      case "ivf" => throw new IllegalArgumentException(
+    val merge = kindOf(spark, shardPaths.head, "mergeIndexes").merge
+      .getOrElse(throw new IllegalArgumentException(
         "IndexStore.mergeIndexes: IVF indexes have NO merge by design — " +
           "separately trained quantizers assign the same vector to " +
           "incomparable lists. Run rebuildIvf over the concatenated " +
-          "corpus instead (one retrain + one reassign; that IS the merge)")
-      case k => throw new IllegalArgumentException(
-        s"IndexStore.mergeIndexes: unknown index kind '$k'")
-    }
+          "corpus instead (one retrain + one reassign; that IS the merge)"))
+    merge(spark, shardPaths, outPath, ttlMs)
   }
+
+  // ---------------------------------------------------------------
+  // Index kinds: what each kind stores, and the verbs written once
+  // over it
+  // ---------------------------------------------------------------
+
+  /** How [[vacuum]] folds tombstones out of one raw table. */
+  private sealed trait Fold
+  /** Anti-join on the member id: one row per member. */
+  private case object DropDeleted extends Fold
+  /** Semi-join on `key` against the live members' `key`s: per-family
+    * rows (shared by an exact-dup family) fold only when the family
+    * has no live member left.
+    */
+  private final case class KeepLiveFamilies(key: String) extends Fold
+  /** Never rewritten by a vacuum (the IVF centroids are a training
+    * snapshot; sustained deletion skew is [[rebuildIvf]]'s job).
+    */
+  private case object Untouched extends Fold
+
+  /** One index kind's storage facts — the single statement the
+    * kind-generic verbs ([[deleteFrom]], [[vacuum]], [[replace]],
+    * [[compactIndex]], [[describeIndex]]) and the kind dispatch
+    * ([[kindOf]]) read:
+    *  - `tables`: each raw table with its probe join key — the key it
+    *    is clustered by on every write, kept by compaction's and
+    *    vacuum's rewrites — and its [[Fold]]. Listed in compaction
+    *    order; a vacuum rewrites them in REVERSE (the live-id table
+    *    first).
+    *  - `idTable`.`idCol`: where the LIVE member ids are read; `idCol`
+    *    (doc_id / member_id / id) also names the tombstone column.
+    *    Every kind has the OPTIONAL `deletes` table keyed by it —
+    *    absent until the first delete, so [[compactIndex]] and
+    *    [[describeIndex]] tolerate its missing dir ([[allTables]]).
+    *  - the public op names its lease and error messages carry.
+    *  - `appendBody`: the kind's append with the lease already held
+    *    (what [[replace]] composes); `merge`: its shard merge (none for
+    *    IVF — see [[mergeIndexes]]).
+    */
+  private final case class IndexKind(
+      name: String,
+      tables: Seq[(String, String, Fold)],
+      idTable: String,
+      idCol: String,
+      deleteOp: String,
+      vacuumOp: String,
+      replaceOp: String,
+      appendBody: (SparkSession, DataFrame, String, String, String, String) => Unit,
+      merge: Option[(SparkSession, Seq[String], String, Long) => Long]) {
+    def allTables: Seq[(String, String)] =
+      tables.map { case (t, key, _) => t -> key } :+ ("deletes" -> idCol)
+  }
+
+  private val CorpusKind = IndexKind("corpus",
+    Seq(("bands", "band_hash", KeepLiveFamilies("corpus_id")),
+      ("sets", "corpus_id", KeepLiveFamilies("corpus_id")),
+      ("members", "corpus_id", DropDeleted)),
+    "members", "member_id",
+    "deleteFromCorpusIndex", "vacuumCorpusIndex", "replaceCorpusDocs",
+    appendCorpusIndexBody, Some(mergeCorpusIndexes _))
+
+  private val MediaKind = IndexKind("media",
+    Seq(("bands", "band_hash", KeepLiveFamilies("dh")),
+      ("members", "dh", DropDeleted)),
+    "members", "member_id",
+    "deleteFromMediaIndex", "vacuumMediaIndex", "replaceMediaAssets",
+    appendMediaIndexBody, Some(mergeMediaIndexes _))
+
+  private val VectorKind = IndexKind("vector",
+    Seq(("blocks", "band_hash", KeepLiveFamilies("rep_id")),
+      ("reps", "rep_id", KeepLiveFamilies("rep_id")),
+      ("members", "rep_id", DropDeleted)),
+    "members", "member_id",
+    "deleteFromVectorIndex", "vacuumVectorIndex", "replaceVectorMembers",
+    appendVectorIndexBody, Some(mergeVectorIndexes _))
+
+  private val IvfKind = IndexKind("ivf",
+    Seq(("assign", "list_id", DropDeleted),
+      ("centroids", "list_id", Untouched)),
+    "assign", "id",
+    "deleteFromIvf", "vacuumIvf", "replaceIvfMembers",
+    appendIvfBody, None)
+
+  private val TextKind = IndexKind("text",
+    Seq(("postings", "term", DropDeleted), ("doclen", "doc_id", DropDeleted)),
+    "doclen", "doc_id",
+    "deleteFromTextIndex", "vacuumTextIndex", "replaceTextDocs",
+    appendTextIndexBody, Some(mergeTextIndexes _))
+
+  private val kinds: Map[String, IndexKind] =
+    Seq(CorpusKind, MediaKind, VectorKind, IvfKind, TextKind)
+      .map(k => k.name -> k).toMap
+
+  /** The [[IndexKind]] that `path`'s meta records; raises naming `op`
+    * when meta carries no kind or one this build does not know.
+    */
+  private def kindOf(spark: SparkSession, path: String, op: String): IndexKind = {
+    val k = readMeta(spark, path).getOrElse("kind",
+      throw new IllegalArgumentException(
+        s"IndexStore.$op: $path/meta carries no index kind"))
+    kinds.getOrElse(k, throw new IllegalArgumentException(
+      s"IndexStore.$op: unknown index kind '$k'"))
+  }
+
+  /** Every kind's deleteFrom* op: under the lease, the kind's live ids
+    * (id table minus tombstones) validate the id set and
+    * [[tombstoneDelete]] appends it to `deletes`.
+    */
+  private def deleteFrom(
+      kind: IndexKind, spark: SparkSession, path: String,
+      ids: DataFrame): Long =
+    withIndexLease(spark, path, kind.deleteOp) {
+      metaOf(spark, path, kind.name)
+      val (resolved, dir) = resolvedDirs(spark, path)
+      val live = applyDeletes(
+        readTable(spark, path, dir, kind.idTable).select(col(kind.idCol)),
+        readDeletes(spark, path, dir), kind.idCol)
+      tombstoneDelete(spark, path, kind.deleteOp, kind.idCol, ids, live,
+        dir, resolved)
+    }
+
+  /** Every kind's vacuum* op: count the tombstoned ids that still have
+    * id-table rows (0 ⇒ no-op, nothing swapped), then rewrite each
+    * table its [[Fold]] names — clustered by its key, in its save-time
+    * column order — and publish them all with one atomic
+    * [[swapGenerations]]. The `deletes` graveyard is kept. Returns the
+    * number of id-table rows folded out.
+    */
+  private def vacuum(
+      kind: IndexKind, spark: SparkSession, path: String,
+      retainGenerations: Int, retainAge: Option[java.time.Duration]): Long =
+    withIndexLease(spark, path, kind.vacuumOp) {
+      metaOf(spark, path, kind.name)
+      val dir = tableDirs(spark, path)
+      readDeletes(spark, path, dir).fold(0L) { del0 =>
+        val del = del0.toDF(kind.idCol).localCheckpoint(true)
+        val ids = readTable(spark, path, dir, kind.idTable)
+        val unfolded = ids.join(del, Seq(kind.idCol), "left_semi").count()
+        if (unfolded == 0L) 0L
+        else {
+          def dropDeleted(t: DataFrame) =
+            joinKeepingShape(t, del, kind.idCol, "left_anti")
+          val live = dropDeleted(ids)
+          val writes = kind.tables.reverse.collect {
+            case (t, key, fold) if fold != Untouched =>
+              val src =
+                if (t == kind.idTable) ids else readTable(spark, path, dir, t)
+              val kept = fold match {
+                case KeepLiveFamilies(fam) => joinKeepingShape(src,
+                  live.select(col(fam)).distinct(), fam, "left_semi")
+                case _ => dropDeleted(src)
+              }
+              t -> ((d: String) => kept.repartition(col(key))
+                .write.mode("overwrite").parquet(d))
+          }
+          swapGenerations(spark, path, retainGenerations, retainAge)(writes)
+          unfolded
+        }
+      }
+    }
 
   // ---------------------------------------------------------------
   // Table generations + maintenance (compaction, reap)
@@ -2315,26 +2261,6 @@ object IndexStore {
     */
   case class CompactStat(
       table: String, filesBefore: Long, filesAfter: Long, bytes: Long)
-
-  /** The raw tables of each index kind with their probe join key —
-    * the key each table is clustered by on write, preserved by
-    * [[compactIndex]]'s rewrite.
-    */
-  // every kind's `deletes` table is OPTIONAL (absent until the first
-  // deleteFrom*Index) — compactIndex/describeIndex tolerate a missing
-  // live dir
-  private val OptionalTables = Set("deletes")
-  private val tablesByKind: Map[String, Seq[(String, String)]] = Map(
-    "corpus" -> Seq("bands" -> "band_hash", "sets" -> "corpus_id",
-      "members" -> "corpus_id", "deletes" -> "member_id"),
-    "media" -> Seq("bands" -> "band_hash", "members" -> "dh",
-      "deletes" -> "member_id"),
-    "vector" -> Seq("blocks" -> "band_hash", "reps" -> "rep_id",
-      "members" -> "rep_id", "deletes" -> "member_id"),
-    "ivf" -> Seq("assign" -> "list_id", "centroids" -> "list_id",
-      "deletes" -> "id"),
-    "text" -> Seq("postings" -> "term", "doclen" -> "doc_id",
-      "deletes" -> "doc_id"))
 
   /** The generation manifest: a single small file under the index root
     * naming the ACTIVE generation of every raw table. Generation 0 is
@@ -2448,34 +2374,6 @@ object IndexStore {
     readLeaseAt(fs, new org.apache.hadoop.fs.Path(path, LeaseFile))
   }
 
-  /** Acquire the single-writer LEASE on the index at `path` —
-    * PREVENTION for the exclusivity contract the append-commit fence
-    * can only DETECT after the work is spent. Every mutating op here
-    * (the append family, compactIndex, repairTextIndex, rebuildIvf,
-    * and the save* builders) acquires
-    * it for the duration of its writes; a second concurrent writer
-    * raises AT ACQUIRE, before reading a row. Acquisition PUBLISHES
-    * [[LeaseFile]] by write-tmp-then-rename-no-overwrite — one atomic
-    * step that is both the create-if-absent lock primitive and a
-    * full-content publish, so no reader or crash window can ever
-    * observe a half-written lease (atomic on HDFS and local
-    * filesystems; object stores need atomic-rename/conditional-PUT
-    * support — where absent, the lease degrades to advisory and the
-    * fence remains the detector, stated honestly). A lease left by a
-    * CRASHED holder expires after its TTL: the next acquire STEALS it
-    * by atomic claim-rename — of N concurrent stealers exactly one
-    * wins, and the claimed bytes are re-checked for expiry (a FRESH
-    * lease acquired inside the inspection window is restored, never
-    * stolen) — then publishes its own (epoch + 1), so a crash never
-    * wedges the index.
-    *
-    * The lease is cooperative (writers that bypass this API — raw
-    * parquet writes into the table dirs — are invisible to it) and
-    * TTL-bounded: an op outliving its TTL can lose the lease to a
-    * steal, at which point the generation fence and the monotone-id
-    * guards are the backstop, exactly as before round 13. Returns the
-    * held lease; pass it to [[releaseIndexLease]] when done.
-    */
   /** Write a lease body to a private tmp file and atomically RENAME it
     * over [[LeaseFile]] WITHOUT overwrite — one step that is both the
     * create-if-absent lock primitive and a full-content publish (a
@@ -2623,6 +2521,34 @@ object IndexStore {
     }
   }
 
+  /** Acquire the single-writer LEASE on the index at `path` —
+    * PREVENTION for the exclusivity contract the append-commit fence
+    * can only DETECT after the work is spent. Every mutating op here
+    * (the append family, compactIndex, repairTextIndex, rebuildIvf,
+    * and the save* builders) acquires
+    * it for the duration of its writes; a second concurrent writer
+    * raises AT ACQUIRE, before reading a row. Acquisition PUBLISHES
+    * [[LeaseFile]] by write-tmp-then-rename-no-overwrite — one atomic
+    * step that is both the create-if-absent lock primitive and a
+    * full-content publish, so no reader or crash window can ever
+    * observe a half-written lease (atomic on HDFS and local
+    * filesystems; object stores need atomic-rename/conditional-PUT
+    * support — where absent, the lease degrades to advisory and the
+    * fence remains the detector, stated honestly). A lease left by a
+    * CRASHED holder expires after its TTL: the next acquire STEALS it
+    * by atomic claim-rename — of N concurrent stealers exactly one
+    * wins, and the claimed bytes are re-checked for expiry (a FRESH
+    * lease acquired inside the inspection window is restored, never
+    * stolen) — then publishes its own (epoch + 1), so a crash never
+    * wedges the index.
+    *
+    * The lease is cooperative (writers that bypass this API — raw
+    * parquet writes into the table dirs — are invisible to it) and
+    * TTL-bounded: an op outliving its TTL can lose the lease to a
+    * steal, at which point the generation fence and the monotone-id
+    * guards are the backstop, exactly as before round 13. Returns the
+    * held lease; pass it to [[releaseIndexLease]] when done.
+    */
   def acquireIndexLease(
       spark: SparkSession,
       path: String,
@@ -2908,6 +2834,7 @@ object IndexStore {
     val root = new org.apache.hadoop.fs.Path(path)
     if (!fs.exists(root)) return
     fs.delete(new org.apache.hadoop.fs.Path(path, "meta"), true): Unit
+    evictMeta(path)
     fs.delete(new org.apache.hadoop.fs.Path(path, GenManifest), false): Unit
     // OPTIONAL tables no builder rewrites (the text kind's tombstones):
     // a stale graveyard surviving the rebuild would silently delete the
@@ -2970,12 +2897,7 @@ object IndexStore {
     * it). Works for every index kind.
     */
   def describeIndex(spark: SparkSession, path: String): Seq[TableStat] = {
-    val kind = readMeta(spark, path).getOrElse("kind",
-      throw new IllegalArgumentException(
-        s"IndexStore.describeIndex: $path/meta carries no index kind"))
-    val tables = tablesByKind.getOrElse(kind,
-      throw new IllegalArgumentException(
-        s"IndexStore.describeIndex: unknown index kind '$kind'"))
+    val tables = kindOf(spark, path, "describeIndex").allTables
     val fs = fsOf(spark, path)
     val gens = readGenerations(fs, path)
     val root = new org.apache.hadoop.fs.Path(path)
@@ -2988,7 +2910,7 @@ object IndexStore {
       // manifest entry — e.g. deletes on a never-deleted index) gets
       // no report row; a MANDATORY table's missing dir still reports
       // 0 files, which is the diagnostic a torn index wants
-      if (OptionalTables(t) && !gens.contains(t) && !fs.exists(dir)) None
+      if (t == "deletes" && !gens.contains(t) && !fs.exists(dir)) None
       else Some {
       val data =
         if (!fs.exists(dir)) Array.empty[org.apache.hadoop.fs.FileStatus]
@@ -3457,12 +3379,7 @@ object IndexStore {
       retainAge: Option[java.time.Duration] = None): Seq[CompactStat] = {
     import org.apache.hadoop.fs.Path
     requireRetention(retainGenerations, retainAge)
-    val kind = readMeta(spark, path).getOrElse("kind",
-      throw new IllegalArgumentException(
-        s"IndexStore.compactIndex: $path/meta carries no index kind"))
-    val tables = tablesByKind.getOrElse(kind,
-      throw new IllegalArgumentException(
-        s"IndexStore.compactIndex: unknown index kind '$kind'"))
+    val tables = kindOf(spark, path, "compactIndex").allTables
     val fs = fsOf(spark, path)
     def dataFiles(dir: Path) =
       fs.listStatus(dir).filter(s => s.isFile && {
@@ -3485,7 +3402,7 @@ object IndexStore {
       // simply don't participate; a MANDATORY table's missing dir must
       // still fail loudly below (spark.read throws) — silently
       // skipping it would let compaction "succeed" on a torn index
-      if (OptionalTables(t) && !fs.exists(dir)) None
+      if (t == "deletes" && !fs.exists(dir)) None
       else Some {
         val before = dataFiles(dir)
         val bytes = before.map(_.getLen).sum
@@ -3615,19 +3532,8 @@ object IndexStore {
     */
   def replaceTextDocs(
       newDocs: DataFrame, idCol: String, textCol: String, path: String,
-      oldIds: DataFrame): (Long, Long) = {
-    val spark = newDocs.sparkSession
-    withIndexLease(spark, path, "replaceTextDocs") {
-      metaOf(spark, path, "text")
-      val (resolved, dir) = resolvedDirs(spark, path)
-      replaceCore(spark, path, "replaceTextDocs", "deleteFromTextIndex",
-        "doc_id", oldIds, newDocs.select(col(idCol)),
-        readTable(spark, path, dir, "doclen").select(col("doc_id")),
-        dir, resolved)(
-        () => appendTextIndexBody(spark, newDocs, idCol, textCol, path,
-          "replaceTextDocs"))
-    }
-  }
+      oldIds: DataFrame): (Long, Long) =
+    replace(TextKind, newDocs, idCol, textCol, path, oldIds)
 
   /** [[replaceTextDocs]] for the MEDIA index — tombstone the old asset
     * ids, append the replacement hashes under fresh ids, one lease,
@@ -3635,202 +3541,161 @@ object IndexStore {
     */
   def replaceMediaAssets(
       newHashes: DataFrame, idCol: String, hashCol: String, path: String,
-      oldIds: DataFrame): (Long, Long) = {
-    val spark = newHashes.sparkSession
-    withIndexLease(spark, path, "replaceMediaAssets") {
-      metaOf(spark, path, "media")
-      val (resolved, dir) = resolvedDirs(spark, path)
-      replaceCore(spark, path, "replaceMediaAssets",
-        "deleteFromMediaIndex", "member_id", oldIds,
-        newHashes.select(col(idCol)),
-        readTable(spark, path, dir, "members").select(col("member_id")),
-        dir, resolved)(
-        () => appendMediaIndexBody(spark, newHashes, idCol, hashCol,
-          path, "replaceMediaAssets"))
-    }
-  }
+      oldIds: DataFrame): (Long, Long) =
+    replace(MediaKind, newHashes, idCol, hashCol, path, oldIds)
 
   /** [[replaceTextDocs]] for the VECTOR index. */
   def replaceVectorMembers(
       newVecs: DataFrame, idCol: String, vecCol: String, path: String,
-      oldIds: DataFrame): (Long, Long) = {
-    val spark = newVecs.sparkSession
-    withIndexLease(spark, path, "replaceVectorMembers") {
-      metaOf(spark, path, "vector")
-      val (resolved, dir) = resolvedDirs(spark, path)
-      replaceCore(spark, path, "replaceVectorMembers",
-        "deleteFromVectorIndex", "member_id", oldIds,
-        newVecs.select(col(idCol)),
-        readTable(spark, path, dir, "members").select(col("member_id")),
-        dir, resolved)(
-        () => appendVectorIndexBody(spark, newVecs, idCol, vecCol,
-          path, "replaceVectorMembers"))
-    }
-  }
+      oldIds: DataFrame): (Long, Long) =
+    replace(VectorKind, newVecs, idCol, vecCol, path, oldIds)
 
   /** [[replaceTextDocs]] for the CORPUS (MinHash-LSH) index. */
   def replaceCorpusDocs(
       newDocs: DataFrame, idCol: String, textCol: String, path: String,
-      oldIds: DataFrame): (Long, Long) = {
-    val spark = newDocs.sparkSession
-    withIndexLease(spark, path, "replaceCorpusDocs") {
-      metaOf(spark, path, "corpus")
-      val (resolved, dir) = resolvedDirs(spark, path)
-      replaceCore(spark, path, "replaceCorpusDocs",
-        "deleteFromCorpusIndex", "member_id", oldIds,
-        newDocs.select(col(idCol)),
-        readTable(spark, path, dir, "members").select(col("member_id")),
-        dir, resolved)(
-        () => appendCorpusIndexBody(spark, newDocs, idCol, textCol,
-          path, "replaceCorpusDocs"))
-    }
-  }
+      oldIds: DataFrame): (Long, Long) =
+    replace(CorpusKind, newDocs, idCol, textCol, path, oldIds)
 
   /** [[replaceTextDocs]] for the IVF model — assignment against the
     * FROZEN centroids, like [[appendIvf]].
     */
   def replaceIvfMembers(
       newVecs: DataFrame, idCol: String, vecCol: String, path: String,
-      oldIds: DataFrame): (Long, Long) = {
-    val spark = newVecs.sparkSession
-    withIndexLease(spark, path, "replaceIvfMembers") {
-      metaOf(spark, path, "ivf")
-      val (resolved, dir) = resolvedDirs(spark, path)
-      replaceCore(spark, path, "replaceIvfMembers", "deleteFromIvf",
-        "id", oldIds, newVecs.select(col(idCol)),
-        readTable(spark, path, dir, "assign").select(col("id")),
-        dir, resolved)(
-        () => appendIvfBody(spark, newVecs, idCol, vecCol, path,
-          "replaceIvfMembers"))
-    }
-  }
+      oldIds: DataFrame): (Long, Long) =
+    replace(IvfKind, newVecs, idCol, vecCol, path, oldIds)
 
-  /** The shared rectification core behind the replace* family, lease
-    * assumed HELD: classify `oldIds` with one aggregate (all live ⇒
-    * fresh run; all tombstoned AND no new id present ⇒ the
-    * crash-retry, append only; MIX ⇒ raise), validate the replacement
+  /** Every kind's replace* op, under ONE lease: classify `oldIds` with
+    * one aggregate (all live ⇒ fresh run; all tombstoned AND no new id
+    * present ⇒ the crash-retry, append only; MIX ⇒ raise), validate
+    * the replacement
     * ids FRESH against live ∪ graveyard with a second aggregate,
     * tombstone on the fresh path ([[tombstoneDelete]]'s fused
     * validation), then run the kind's append body. See
     * [[replaceTextDocs]]'s scaladoc for the full contract.
     */
-  private def replaceCore(
-      spark: SparkSession, path: String, op: String, deleteOp: String,
-      idColName: String, oldIds: DataFrame, rawNewIds: DataFrame,
-      allIds: DataFrame, dir: String => String,
-      resolved: Map[String, Long])(append: () => Unit): (Long, Long) = {
-    val dead = readDeletes(spark, path, dir)
-    val liveIds = applyDeletes(allIds, dead, idColName)
-    val old = oldIds.select(col(oldIds.columns.head)
-        .cast(allIds.schema.head.dataType).as(idColName))
-      .localCheckpoint(true)
-    val newIds = rawNewIds.select(col(rawNewIds.columns.head)
-        .cast(allIds.schema.head.dataType).as(idColName))
-      .localCheckpoint(true)
-    // ONE classification aggregate: old ids vs live/graveyard; one
-    // more for new ids vs everything ever seen (live ∪ graveyard
-    // covers vacuumed ids too)
-    val oldTag = old
-      .join(liveIds.distinct().withColumn("__live", lit(1)),
-        Seq(idColName), "left")
-      .join(dead.fold(allIds.limit(0))(_.toDF(idColName)).distinct()
-          .withColumn("__dead", lit(1)),
-        Seq(idColName), "left")
-      .agg(count(lit(1)).as("__n"), count(col("__live")).as("__nlive"),
-        count(col("__dead")).as("__ndead")).head()
-    val (nOld, nOldLive, nOldDead) =
-      (oldTag.getLong(0), oldTag.getLong(1), oldTag.getLong(2))
-    require(nOld > 0L,
-      s"IndexStore.$op: empty oldIds — a rectification that replaces " +
-        "nothing is almost certainly a filter bug")
-    val everIds = graveyardUnion(spark, path, dir, allIds)
-    val newTag = newIds
-      .join(everIds.distinct().withColumn("__seen", lit(1)),
-        Seq(idColName), "left")
-      .agg(count(lit(1)).as("__n"),
-        count(col(idColName)).as("__nnn"), // non-null (count skips nulls)
-        count(col("__seen")).as("__nseen"))
-      .head()
-    val (nNew, nNewPresent) = (newTag.getLong(0), newTag.getLong(2))
-    require(nNew > 0L,
-      s"IndexStore.$op: empty replacement batch — to erase without " +
-        s"replacing, use $deleteOp")
-    // NULL replacement ids pass the freshness join vacuously (null keys
-    // match nothing) and would erase the old docs then append rows the
-    // delete side can never take down — the delete-side NULL guard's
-    // exact mirror, BEFORE anything mutates
-    require(newTag.getLong(1) == nNew,
-      s"IndexStore.$op: replacement batch carries " +
-        s"${nNew - newTag.getLong(1)} NULL id(s) — typically a failed " +
-        "cast from an incompatible id type (the live column is " +
-        s"${allIds.schema.head.dataType.sql}) or a join that missed; " +
-        "fix the id derivation and re-run (nothing was tombstoned)")
-    if (nNewPresent > 0L) {
-      val sample = newIds.join(everIds, Seq(idColName), "left_semi")
-        .limit(5).collect().map(_.get(0)).mkString(", ")
-      throw new IllegalArgumentException(
-        s"IndexStore.$op: $nNewPresent replacement id(s) already " +
-          s"exist in the index at $path (live, tombstoned, or " +
-          s"half-appended; e.g. $sample) — replacements must carry " +
-          "FRESH ids (ids are never reused). If a prior replace " +
-          "crashed INSIDE its append, run checkIndex/repair first, " +
-          "then re-run")
-    }
-    if (nOldLive == nOld) {
-      // fresh run: tombstone, then append. `old` is already cast and
-      // checkpointed, and the classification aggregate above already
-      // proved every id LIVE — skip the delete core's second pass over
-      // the live id relation (null/duplicate checks still run; a
-      // duplicated live id classifies as all-live here and raises in
-      // the core's duplicate check)
-      val nDel = tombstoneDeletePrepared(spark, path, op, idColName,
-        old, liveIds, dir, resolved, liveProven = true)
-      append()
-      (nDel, nNew)
-    } else if (nOldDead == nOld) {
-      // the crash-retry shape: the tombstone landed, the append did
-      // not (new ids proven absent above) — finish the append only.
-      // This branch cannot DISTINGUISH a genuine retry from an operator
-      // error where the old ids were tombstoned earlier by an unrelated
-      // takedown (the deletes table records ids, not op names) — the
-      // append would then add docs nobody requested, so make the path
-      // AUDITABLE: warn loudly before proceeding (documented tradeoff;
-      // the alternative — refusing — would wedge every real crash
-      // retry behind a manual repair)
-      leaseWarnSink(
-        s"IndexStore.$op: all $nOld old id(s) are already tombstoned " +
-          "and every replacement id is fresh — treating this as a " +
-          s"CRASH-RETRY of a previous $op and running the append only " +
-          "(nothing tombstoned this run). If these ids were taken down " +
-          s"by an unrelated $deleteOp rather than a crashed $op, this " +
-          "append adds documents nobody requested — verify the id set " +
-          "before trusting the result")
-      // DURABLE audit twin of the warning (round-16 ADVICE): the
-      // warning is the only trail for the indistinguishable
-      // unrelated-takedown case, and sinks that drop stderr (the
-      // default in batch jobs) lose it with the process — so the
-      // classification also lands as one row in an append-only
-      // `crash_retries` parquet log beside the deletes table, BEFORE
-      // the append runs (a crash inside the append must not erase the
-      // record that the ambiguous branch was taken). Plain
-      // non-generation dir by design: an audit log is never
-      // compacted, swapped, or reset by a rebuild.
-      locally {
-        import spark.implicits._
-        Seq((System.currentTimeMillis(), op, idColName, nOld, nNew))
-          .toDF("ts_millis", "op", "id_col", "n_old", "n_new")
-          .coalesce(1).write.mode("append")
-          .parquet(s"$path/crash_retries")
+  private def replace(
+      kind: IndexKind, newRows: DataFrame, idCol: String, valueCol: String,
+      path: String, oldIds: DataFrame): (Long, Long) = {
+    val spark = newRows.sparkSession
+    val (op, deleteOp, idColName) = (kind.replaceOp, kind.deleteOp, kind.idCol)
+    withIndexLease(spark, path, op) {
+      metaOf(spark, path, kind.name)
+      val (resolved, dir) = resolvedDirs(spark, path)
+      val allIds =
+        readTable(spark, path, dir, kind.idTable).select(col(idColName))
+      val dead = readDeletes(spark, path, dir)
+      val liveIds = applyDeletes(allIds, dead, idColName)
+      val old = oldIds.select(col(oldIds.columns.head)
+          .cast(allIds.schema.head.dataType).as(idColName))
+        .localCheckpoint(true)
+      val newIds = newRows.select(col(idCol)
+          .cast(allIds.schema.head.dataType).as(idColName))
+        .localCheckpoint(true)
+      // ONE classification aggregate: old ids vs live/graveyard; one
+      // more for new ids vs everything ever seen (live ∪ graveyard
+      // covers vacuumed ids too)
+      val oldTag = old
+        .join(liveIds.distinct().withColumn("__live", lit(1)),
+          Seq(idColName), "left")
+        .join(dead.fold(allIds.limit(0))(_.toDF(idColName)).distinct()
+            .withColumn("__dead", lit(1)),
+          Seq(idColName), "left")
+        .agg(count(lit(1)).as("__n"), count(col("__live")).as("__nlive"),
+          count(col("__dead")).as("__ndead")).head()
+      val (nOld, nOldLive, nOldDead) =
+        (oldTag.getLong(0), oldTag.getLong(1), oldTag.getLong(2))
+      require(nOld > 0L,
+        s"IndexStore.$op: empty oldIds — a rectification that replaces " +
+          "nothing is almost certainly a filter bug")
+      val everIds = graveyardUnion(spark, path, dir, allIds)
+      val newTag = newIds
+        .join(everIds.distinct().withColumn("__seen", lit(1)),
+          Seq(idColName), "left")
+        .agg(count(lit(1)).as("__n"),
+          count(col(idColName)).as("__nnn"), // non-null (count skips nulls)
+          count(col("__seen")).as("__nseen"))
+        .head()
+      val (nNew, nNewPresent) = (newTag.getLong(0), newTag.getLong(2))
+      require(nNew > 0L,
+        s"IndexStore.$op: empty replacement batch — to erase without " +
+          s"replacing, use $deleteOp")
+      // NULL replacement ids pass the freshness join vacuously (null keys
+      // match nothing) and would erase the old docs then append rows the
+      // delete side can never take down — the delete-side NULL guard's
+      // exact mirror, BEFORE anything mutates
+      require(newTag.getLong(1) == nNew,
+        s"IndexStore.$op: replacement batch carries " +
+          s"${nNew - newTag.getLong(1)} NULL id(s) — typically a failed " +
+          "cast from an incompatible id type (the live column is " +
+          s"${allIds.schema.head.dataType.sql}) or a join that missed; " +
+          "fix the id derivation and re-run (nothing was tombstoned)")
+      if (nNewPresent > 0L) {
+        val sample = newIds.join(everIds, Seq(idColName), "left_semi")
+          .limit(5).collect().map(_.get(0)).mkString(", ")
+        throw new IllegalArgumentException(
+          s"IndexStore.$op: $nNewPresent replacement id(s) already " +
+            s"exist in the index at $path (live, tombstoned, or " +
+            s"half-appended; e.g. $sample) — replacements must carry " +
+            "FRESH ids (ids are never reused). If a prior replace " +
+            "crashed INSIDE its append, run checkIndex/repair first, " +
+            "then re-run")
       }
-      append()
-      (0L, nNew)
-    } else {
-      throw new IllegalArgumentException(
-        s"IndexStore.$op: oldIds are a MIX — of $nOld ids, $nOldLive " +
-          s"are live, $nOldDead are tombstoned and " +
-          s"${nOld - nOldLive - nOldDead} were never indexed. A fresh " +
-          "replace needs ALL old ids live; a crash-retry needs ALL " +
-          "tombstoned. Fix the id set (or split it) and re-run")
+      if (nOldLive == nOld) {
+        // fresh run: tombstone, then append. `old` is already cast and
+        // checkpointed, and the classification aggregate above already
+        // proved every id LIVE — skip the delete core's second pass over
+        // the live id relation (null/duplicate checks still run; a
+        // duplicated live id classifies as all-live here and raises in
+        // the core's duplicate check)
+        val nDel = tombstoneDeletePrepared(spark, path, op, idColName,
+          old, liveIds, dir, resolved, liveProven = true)
+        kind.appendBody(spark, newRows, idCol, valueCol, path, op)
+        (nDel, nNew)
+      } else if (nOldDead == nOld) {
+        // the crash-retry shape: the tombstone landed, the append did
+        // not (new ids proven absent above) — finish the append only.
+        // This branch cannot DISTINGUISH a genuine retry from an operator
+        // error where the old ids were tombstoned earlier by an unrelated
+        // takedown (the deletes table records ids, not op names) — the
+        // append would then add docs nobody requested, so make the path
+        // AUDITABLE: warn loudly before proceeding (documented tradeoff;
+        // the alternative — refusing — would wedge every real crash
+        // retry behind a manual repair)
+        leaseWarnSink(
+          s"IndexStore.$op: all $nOld old id(s) are already tombstoned " +
+            "and every replacement id is fresh — treating this as a " +
+            s"CRASH-RETRY of a previous $op and running the append only " +
+            "(nothing tombstoned this run). If these ids were taken down " +
+            s"by an unrelated $deleteOp rather than a crashed $op, this " +
+            "append adds documents nobody requested — verify the id set " +
+            "before trusting the result")
+        // DURABLE audit twin of the warning: the
+        // warning is the only trail for the indistinguishable
+        // unrelated-takedown case, and sinks that drop stderr (the
+        // default in batch jobs) lose it with the process — so the
+        // classification also lands as one row in an append-only
+        // `crash_retries` parquet log beside the deletes table, BEFORE
+        // the append runs (a crash inside the append must not erase the
+        // record that the ambiguous branch was taken). Plain
+        // non-generation dir by design: an audit log is never
+        // compacted, swapped, or reset by a rebuild.
+        locally {
+          import spark.implicits._
+          Seq((System.currentTimeMillis(), op, idColName, nOld, nNew))
+            .toDF("ts_millis", "op", "id_col", "n_old", "n_new")
+            .coalesce(1).write.mode("append")
+            .parquet(s"$path/crash_retries")
+        }
+        kind.appendBody(spark, newRows, idCol, valueCol, path, op)
+        (0L, nNew)
+      } else {
+        throw new IllegalArgumentException(
+          s"IndexStore.$op: oldIds are a MIX — of $nOld ids, $nOldLive " +
+            s"are live, $nOldDead are tombstoned and " +
+            s"${nOld - nOldLive - nOldDead} were never indexed. A fresh " +
+            "replace needs ALL old ids live; a crash-retry needs ALL " +
+            "tombstoned. Fix the id set (or split it) and re-run")
+      }
     }
   }
 
@@ -3953,9 +3818,13 @@ object IndexStore {
       .localCheckpoint(true)
     // check = false here, NOT unchecked: the torn-state identity rides
     // the guardrail-estimate action below instead (round-17 fusion —
-    // same sums, same raise, one driver action fewer per round); it
-    // still gates the replay-skip path, because it is verified before
-    // any screen result is materialized or the append runs
+    // same sums, same raise, one driver action fewer per round). It is
+    // verified before the screen's matches, the verdict or the append
+    // run, so it still gates the replay-skip path and nothing is
+    // written from a torn index. Under maxScorePrune the candidate set
+    // (candDocs) IS materialized from the possibly torn index first —
+    // wasted work on a torn index, never a write; checking before it
+    // would cost the action the fusion saved
     val idx = loadTextIndex(spark, path, check = false)
     val mn = batch.agg(min(col("doc_id")).as("__batch_min"))
     def preBatch(t: DataFrame): DataFrame = t.crossJoin(broadcast(mn))
