@@ -1,23 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // static broadcast planning OFF, AQE runtime broadcast ON: size
-      // ESTIMATES lie after explode/distinct (a candidate-pair table
-      // once estimated under 10 MB at 27M rows and was statically
-      // broadcast — AQE never demotes a static broadcast); exact
-      // runtime sizes decide instead. See SCALING.md "Join strategy".
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "10485760")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus, cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     GraftExtensions.register(spark)
     // untimed warmup: spin up executor threads and JIT the shared

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators._
 
@@ -21,18 +20,7 @@ object ScaleProbe {
     // 100 ⇒ 500k docs / 200k vectors — the "would this survive another
     // decade of corpus growth" probe)
     val mult = if (args.length > 1) args(1).toInt else 10
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      // static broadcast planning OFF, AQE runtime broadcast ON: size
-      // ESTIMATES lie after explode/distinct (a candidate-pair table
-      // once estimated under 10 MB at 27M rows and was statically
-      // broadcast — AQE never demotes a static broadcast); exact
-      // runtime sizes decide instead. See SCALING.md "Join strategy".
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "10485760")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder("32", "32").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     if (!new java.io.File(s"$dir/documents.parquet").exists()) {
       val sf = "/root/testdata/sf0.1"

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -13,21 +12,7 @@ object Verify {
         (n: String) => pats.exists(n.contains) }
       else _ => true
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // static broadcast planning OFF, AQE runtime broadcast ON: size
-      // ESTIMATES lie after explode/distinct (a candidate-pair table
-      // once estimated under 10 MB at 27M rows and was statically
-      // broadcast — AQE never demotes a static broadcast); exact
-      // runtime sizes decide instead. See SCALING.md "Join strategy".
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "10485760")
-      // events.ts is parquet TIMESTAMP(NANOS) — Spark reads it as long
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus, cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     GraftExtensions.register(spark)
     new java.io.File(outDir).mkdirs()

@@ -498,18 +498,26 @@ object Dedup {
     * pair list is usually orders of magnitude smaller than the corpus,
     * so this runs on the pair-touched vertex set only.
     * Deterministic: labels only ever decrease, fixpoint is unique.
+    * A null id names no record: it links nothing and is not output
+    * (a pair with one null end keeps only its other id, a singleton
+    * unless another pair links it).
     *
-    * @return (id, group_id) for every id appearing in `pairs`, where
-    *         group_id = min id of the component.
+    * @return (id, group_id) for every non-null id appearing in `pairs`,
+    *         where group_id = min id of the component.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 0): DataFrame = {
     // bidirectional edge list — materialized ONCE: it is consumed by
     // every loop iteration (join + convergence count), and leaving it
     // lazy would re-execute the upstream candidate-generation pipeline
     // per pass. The pair list is small by construction (candidates, not
-    // corpus), so a localCheckpoint is safe.
-    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
+    // corpus), so a localCheckpoint is safe. A null end becomes the
+    // other end (a harmless self-loop) and an all-null pair is dropped,
+    // so a null id links nothing on every path and id type.
+    val ends = pairs.select(coalesce(col("id_a"), col("id_b")).as("a"),
+        coalesce(col("id_b"), col("id_a")).as("b"))
+      .where(col("a").isNotNull)
+    val edges = ends.select(col("a").as("src"), col("b").as("dst"))
+      .union(ends.select(col("b").as("src"), col("a").as("dst")))
       .distinct()
       .localCheckpoint(true)
     // PARTITION-LOCAL UNION-FIND PRE-PASS (round-17; guide §2 — shrink

@@ -50,10 +50,12 @@ object KMeansQ {
       seed: Long): DataFrame =
     core(df, idCol, embCol, k, maxIter, seed)._1
 
-  /** The Lloyd loop, returning the final assignment plus the final
-    * (cid, pos, cv) centroid relation — [[KMeansQEstimator]] collects
-    * the k·dim centroid rows into its model; the plain [[fit]] keeps
-    * only the assignment (the [[KPrototypes.core]] split).
+  /** KMeansQ's front end to [[KPrototypes.lloyd]] (the numeric-only
+    * case): the quantize/posexplode prep, the seeded init on its ids,
+    * the clamp and the empty-input return. Returns the final assignment
+    * plus the final (cid, pos, cv) centroid relation —
+    * [[KMeansQEstimator]] collects the k·dim centroid rows into its
+    * model; the plain [[fit]] keeps only the assignment.
     */
   private[operators] def core(
       df: DataFrame,
@@ -64,26 +66,15 @@ object KMeansQ {
       seed: Long): (DataFrame, DataFrame) = {
     require(k >= 2 && k <= 1024, "k in [2, 1024]")
     require(maxIter >= 1 && maxIter <= 64, "maxIter in [1, 64]")
-    import org.apache.spark.sql.expressions.Window
+    // an empty embedding explodes to no rows, so the fit omits it like
+    // a NULL one
     val q = df.where(col(embCol).isNotNull)
       .select(col(idCol).cast("long").as("id"),
         posexplode(transform(col(embCol).cast("array<double>"),
           x => floor(x * lit(1000000.0)).cast("long")))
           .as(Seq("pos", "qv")))
       .localCheckpoint(true)
-    // seed ranking: orderBy+limit compiles to a DISTRIBUTED top-k
-    // (TakeOrderedAndProject), so the rank window only ever sorts the
-    // k survivors — never a single-partition pass over the full id set
-    // (round-15 fix, same recipe as KPrototypes; ordering unchanged)
-    val ids = q.select(col("id")).distinct()
-      .select(col("id"),
-        graft.functions.PortableHash.hash60(col("id"), seed.toString)
-          .as("__h"))
-    val seedRank = Window.orderBy(col("__h").asc, col("id").asc)
-    val seeds = ids.orderBy(col("__h").asc, col("id").asc).limit(k)
-      .withColumn("__r", row_number().over(seedRank))
-      .select(col("id"), (col("__r") - 1).cast("long").as("cid"))
-      .localCheckpoint(true)
+    val (seeds, nSeeds) = KPrototypes.seedIds(q, k, seed)
     // Fewer distinct vectors than k: CLAMP k to the seed count and
     // proceed (kEff clusters, cids 0..kEff−1) — the pre-round-15
     // contract, restored per the round-15 ADVICE: the phantom-cluster
@@ -91,66 +82,18 @@ object KMeansQ {
     // conditional-sum plan with unseeded cids (a sum over nothing is 0
     // and would beat every real distance), and clamping the sum count
     // removes it without breaking n < k callers. Zero vectors degrade
-    // to an empty assignment, the same as pre-15. (One bounded ≤k-row
-    // count on the reused checkpoint.)
-    val kEff = math.min(k.toLong, seeds.count()).toInt
+    // to an empty assignment, the same as pre-15.
+    val kEff = math.min(k.toLong, nSeeds).toInt
     if (kEff == 0)
-      return (q.select(col("id"), col("pos").cast("long").as("cluster"),
+      (q.select(col("id"), col("pos").cast("long").as("cluster"),
         col("qv").as("dist")).where(lit(false)),
         q.select(col("pos").cast("long").as("cid"), col("pos"),
           col("qv").as("cv")).where(lit(false)))
-    var centroids = q.join(seeds, Seq("id"))
-      .select(col("cid"), col("pos"), col("qv").as("cv"))
-      .localCheckpoint(true)
-    // Assignment plan (the probe-tuned KPrototypes recipe, same
-    // semantics by q204's full-replay hash oracle): for k ≤
-    // [[KPrototypes.condSumMaxK]] the whole assignment is ONE
-    // groupBy(id) with k conditional sums and an array-arithmetic
-    // argmin (first-position min = ties to the lowest cid) — no
-    // (id × k) intermediate; larger k falls back to the two-level
-    // min_by plan ordered by struct(__d, cid), the same (dist ASC,
-    // cid ASC) rule.
-    def assign(c: DataFrame): DataFrame = {
-      val terms = q.join(c, Seq("pos"))
-        .select(col("id"), col("cid"),
-          ((col("qv") - col("cv")) * (col("qv") - col("cv"))).as("__t"))
-      if (kEff <= KPrototypes.condSumMaxK) {
-        val sums = (0 until kEff).map(i =>
-          sum(when(col("cid") === i.toLong, col("__t"))
-            .otherwise(lit(0L))).as(s"__d$i"))
-        val dArr = array((0 until kEff).map(i => col(s"__d$i")): _*)
-        terms.groupBy(col("id"))
-          .agg(sums.head, sums.tail: _*)
-          .select(col("id"),
-            graft.functions.Distances.argminIndex(dArr)
-              .cast("long").as("cid"),
-            array_min(dArr).as("dist"))
-      } else {
-        terms.groupBy(col("id"), col("cid"))
-          .agg(sum(col("__t")).as("__d"))
-          .groupBy(col("id"))
-          .agg(min_by(struct(col("cid"), col("__d")),
-            struct(col("__d"), col("cid"))).as("__best"))
-          .select(col("id"), col("__best.cid").as("cid"),
-            col("__best.__d").as("dist"))
-      }
+    else {
+      val (asg, cn, _) =
+        KPrototypes.lloyd(q, null, seeds, kEff, 0L, maxIter)
+      (asg, cn)
     }
-    var i = 0
-    while (i < maxIter) {
-      val asg = assign(centroids)
-      val updated = q.join(asg.select(col("id"), col("cid")), Seq("id"))
-        .groupBy(col("cid"), col("pos"))
-        .agg(floor(sum(col("qv")).cast("double") /
-          count(lit(1)).cast("double")).cast("long").as("__new"))
-      // stale-center rule: clusters that lost every member keep their
-      // previous coordinates rather than reseeding nondeterministically
-      centroids = centroids.join(updated, Seq("cid", "pos"), "left")
-        .select(col("cid"), col("pos"),
-          coalesce(col("__new"), col("cv")).as("cv"))
-        .localCheckpoint(true)
-      i += 1
-    }
-    (assign(centroids).withColumnRenamed("cid", "cluster"), centroids)
   }
 }
 
@@ -164,18 +107,18 @@ object KMeansQ {
   * all-built-in expression (no join, no shuffle — the
   * [[KPrototypesModel]] `distArray` shape on an ARRAY column), with
   * fit-identical distance and (dist ASC, cid ASC) tie semantics
-  * (spec-pinned). Rows with a NULL embedding get a NULL prediction
-  * (fit drops them); a row with NULL ELEMENTS or a length differing
-  * from the centroids' scores on the overlapping non-null positions —
-  * EXACTLY what the fit's own assignment does (its long-format sum
-  * skips null terms and its pos-join skips absent positions), so the
-  * "transform over training rows ≡ fit assignment" pin holds on
-  * degenerate rows too (round-16 review finding; the null-filtered
-  * aggregate in `distArray` is that alignment). With fewer than k
-  * distinct training vectors the fit CLAMPS (the [[KMeansQ.fit]]
-  * contract) and the model carries the effective cluster count; an
-  * effective count below 2 raises — a 1-cluster model answers
-  * nothing.
+  * (spec-pinned). Rows with a NULL or empty embedding get a NULL
+  * prediction (fit drops them); a row with NULL ELEMENTS or a length
+  * differing from the centroids' scores on the overlapping non-null
+  * positions — EXACTLY what the fit's own assignment does (its
+  * long-format sum skips null terms and its pos-join skips absent
+  * positions), so the "transform over training rows ≡ fit assignment"
+  * pin holds on degenerate rows too (round-16 review finding; the
+  * null-filtered aggregate in `distArray` is that alignment). With
+  * fewer than k distinct training vectors the fit CLAMPS (the
+  * [[KMeansQ.fit]] contract) and the model carries the effective
+  * cluster count; an effective count below 2 raises — a 1-cluster
+  * model answers nothing.
   */
 trait KMeansQParams extends org.apache.spark.ml.param.Params {
   import org.apache.spark.ml.param._
@@ -232,19 +175,14 @@ class KMeansQEstimator(override val uid: String)
     val (asg, cn) = KMeansQ.core(dataset.toDF(), $(idCol), $(embCol),
       $(k), $(maxIter), $(seed))
     // k·dim rows + one 2-column aggregate: the bounded driver collects
-    val byCid = cn.collect().groupBy(_.getLong(0))
+    val byCid = KPrototypes.collectCentroids(cn)(_.getLong(2))
     val kEff = byCid.size
     require(kEff >= 2,
       s"KMeansQEstimator.fit: the clamped fit produced $kEff " +
         "cluster(s) — a model needs at least 2 distinct training " +
         "vectors (KMeansQ.fit alone handles the degenerate cases)")
-    val centers: Array[Array[Long]] = Array.tabulate(kEff)(i =>
-      byCid(i.toLong).sortBy(_.getInt(1)).map(_.getLong(2)))
-    val agg = asg.agg(count(lit(1)), sum(col("dist"))).head()
-    val cost =
-      if (agg.getLong(0) == 0L) 0.0
-      else agg.getLong(1).toDouble / agg.getLong(0).toDouble
-    val model = new KMeansQModel(uid, centers, cost)
+    val model = new KMeansQModel(uid,
+      Array.tabulate(kEff)(i => byCid(i.toLong)), KPrototypes.meanDist(asg))
     copyValues(model.setParent(this))
     // the model's k is the EFFECTIVE count (clamp survives persistence)
     model.set(model.k, kEff)
@@ -298,24 +236,24 @@ class KMeansQModel(
         lit(0L), (acc, x) => acc + x))
   }
 
+  /** The rows fit clusters: a non-NULL, non-empty embedding. */
+  private def embPresent: org.apache.spark.sql.Column =
+    col($(embCol)).isNotNull && size(col($(embCol))) > 0
+
   override def transform(
       dataset: org.apache.spark.sql.Dataset[_]): DataFrame = {
     transformSchema(dataset.schema)
     dataset.withColumn($(predictionCol),
-      when(col($(embCol)).isNotNull,
-        graft.functions.Distances.argminIndex(distArray))
+      when(embPresent, graft.functions.Distances.argminIndex(distArray))
         .otherwise(lit(null)))
   }
 
   /** Mean exact squared-L2 of `dataset` to its assigned centroid
-    * (null-embedding rows excluded, as in fit); 0.0 when no row is
-    * scorable.
+    * (NULL- and empty-embedding rows excluded, as in fit); 0.0 when no
+    * row is scorable.
     */
-  def computeCost(dataset: org.apache.spark.sql.Dataset[_]): Double = {
-    val r = dataset.where(col($(embCol)).isNotNull)
-      .select(avg(array_min(distArray))).head
-    if (r.isNullAt(0)) 0.0 else r.getDouble(0)
-  }
+  def computeCost(dataset: org.apache.spark.sql.Dataset[_]): Double =
+    KPrototypes.meanMinDist(dataset, embPresent, distArray)
 }
 
 object KMeansQModel

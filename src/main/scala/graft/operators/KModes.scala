@@ -4,7 +4,7 @@ import graft.functions.Distances
 import org.apache.spark.ml.{Estimator, Model}
 import org.apache.spark.ml.param._
 import org.apache.spark.ml.util.Identifiable
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.types._
@@ -20,7 +20,7 @@ import org.apache.spark.sql.types._
   *    narrow, codegen-friendly assignment stage (centers are a literal —
   *    k ≤ 64 tiny arrays folded into the expression, the degenerate
   *    broadcast join) + ONE shuffle (`groupBy(prediction)` with the
-  *    one-pass [[ArrayModeAggregator]], map-side partial aggregation ⇒
+  *    one-pass [[ModeArrayAgg]], map-side partial aggregation ⇒
   *    shuffle volume bounded by k × n_features × |vocab| counters, not by
   *    row count). Deterministic and partition-invariant — this is the
   *    variant that scales to 100 TB: per-iteration cost is one scan + one
@@ -81,6 +81,10 @@ trait KModesParams extends Params {
   def getDistance: String = $(distance)
   def getInitHash: String = $(initHash)
 
+  /** Null-normalized features column (null is its own category, SURVEY §2). */
+  private[operators] def feats: Column =
+    F.transform(col($(featuresCol)), x => coalesce(x, lit(ArrayModeAggregator.NullSentinel)))
+
   protected def validateSchema(schema: StructType): StructType = {
     val f = schema($(featuresCol))
     require(f.dataType == ArrayType(StringType, true) ||
@@ -115,10 +119,6 @@ class KModes(override val uid: String) extends Estimator[KModesModel] with KMode
     }
     copyValues(model.setParent(this))
   }
-
-  /** Null-normalized features column (null is its own category, SURVEY §2). */
-  private def feats =
-    F.transform(col($(featuresCol)), x => coalesce(x, lit(ArrayModeAggregator.NullSentinel)))
 
   /** Init/reseed ranking hash over the features column `f` (see
     * [[KModesParams.initHash]]): md5 of chr(1)-joined `seed, f₁, …, fₙ`
@@ -202,11 +202,8 @@ class KModes(override val uid: String) extends Estimator[KModesModel] with KMode
     // Cost above is measured against the PREVIOUS iteration's centers; when
     // the loop exits at maxIter (or maxIter=0) it would not correspond to
     // the returned centers. One extra narrow pass fixes that.
-    if (!converged) {
-      val cLit = typedlit(centers.map(_.toSeq).toSeq)
-      val d = Distances.assign(col("f"), cLit).getField("min_dist")
-      cost = input.select(avg(d)).head.getDouble(0)
-    }
+    if (!converged)
+      cost = KModes.meanHamming(input, col("f"), typedlit(centers.map(_.toSeq).toSeq))
 
     new KModesModel(uid, centers.map(_.toArray), cost, iter)
   }
@@ -251,23 +248,22 @@ class KModes(override val uid: String) extends Estimator[KModesModel] with KMode
       useFrequency = $(distance) == "frequency")
 
     // Final cost = mean Hamming distance to assigned metamode (R13).
-    val cLit = typedlit(meta.centers.map(_.toSeq).toSeq)
-    val d = Distances.assign(col("f"), cLit).getField("min_dist")
-    val cost = input.toDF("f").select(avg(d)).head.getDouble(0)
+    val cost = KModes.meanHamming(input.toDF("f"), col("f"),
+      typedlit(meta.centers.map(_.toSeq).toSeq))
 
     new KModesModel(uid, meta.centers, cost, meta.iterations)
   }
 }
 
-/** Fitted model: cluster centers + `transform` adding the prediction column
-  * (single narrow stage, centers folded into the expression — R12).
-  */
 /** Training summary, mirroring the reference's fitted attributes
   * (`model.clusters` → centers, `.mean_cost` → cost
   * [UP EnsembleKModes attrs ~L280-360 | conf=M-H]).
   */
 case class KModesSummary(k: Int, cost: Double, iterations: Int)
 
+/** Fitted model: cluster centers + `transform` adding the prediction column
+  * (single narrow stage, centers folded into the expression — R12).
+  */
 class KModesModel(
     override val uid: String,
     val clusterCenters: Array[Array[String]],
@@ -295,10 +291,8 @@ class KModesModel(
 
   override def transform(dataset: Dataset[_]): DataFrame = {
     transformSchema(dataset.schema)
-    val f = F.transform(col($(featuresCol)),
-      x => coalesce(x, lit(ArrayModeAggregator.NullSentinel)))
     dataset.withColumn($(predictionCol),
-      Distances.assign(f, centersLit).getField("prediction"))
+      Distances.assign(feats, centersLit).getField("prediction"))
   }
 
   /** Reference-fidelity alias for the fitted centers
@@ -324,12 +318,8 @@ class KModesModel(
   }
 
   /** Mean Hamming distance of `dataset` to its assigned centers (R13). */
-  def computeCost(dataset: Dataset[_]): Double = {
-    val f = F.transform(col($(featuresCol)),
-      x => coalesce(x, lit(ArrayModeAggregator.NullSentinel)))
-    dataset.select(avg(Distances.assign(f, centersLit).getField("min_dist")))
-      .head.getDouble(0)
-  }
+  def computeCost(dataset: Dataset[_]): Double =
+    KModes.meanHamming(dataset, feats, centersLit)
 }
 
 object KModes {
@@ -340,6 +330,12 @@ object KModes {
   def assemble(cols: org.apache.spark.sql.Column*): org.apache.spark.sql.Column =
     array(cols.map(c => coalesce(c.cast("string"),
       lit(ArrayModeAggregator.NullSentinel))): _*)
+
+  /** Mean Hamming distance of the rows of `ds` (features `f`) to their
+    * nearest center of the literal `centers` — one narrow aggregate.
+    */
+  private[operators] def meanHamming(ds: Dataset[_], f: Column, centers: Column): Double =
+    ds.select(avg(Distances.assign(f, centers).getField("min_dist"))).head.getDouble(0)
 }
 
 /** Discoverability alias mirroring the reference's entry point

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -127,11 +127,13 @@ object KPrototypes {
     math.floor(0.5 * meanVar).toLong
   }
 
-  /** The Lloyd loop, returning the final assignment plus the final
-    * centroid relations ((cid, pos, cv) numeric / (cid, cpos, cw)
-    * categorical; null when that attribute kind is absent) — the
-    * [[KPrototypesEstimator]] collects the k·dims centroid rows into
-    * its model, the plain [[fit]] keeps only the assignment.
+  /** KPrototypes' front end to [[lloyd]]: column prep, the null-numeric
+    * drop, the seeded init and the raise on fewer than k seeds. Returns
+    * the final assignment plus the final centroid relations ((cid, pos,
+    * cv) numeric / (cid, cpos, cw) categorical; null when that attribute
+    * kind is absent) — the [[KPrototypesEstimator]] collects the k·dims
+    * centroid rows into its model, the plain [[fit]] keeps only the
+    * assignment.
     */
   private[operators] def core(
       df: DataFrame,
@@ -168,32 +170,54 @@ object KPrototypes {
         posexplode(array(catCols.map(c => col(s"__c_$c")): _*))
           .as(Seq("cpos", "cv")))
         .localCheckpoint(true)
+    // k clusters need k distinct records: with fewer, the conditional-
+    // sum assignment would manufacture PHANTOM zero-distance clusters
+    // for the unseeded cids (sum of nothing = 0 beats every real
+    // distance) — raise instead of silently mis-clustering
+    val (seeds, nSeeds) = seedIds(base, k, seed)
+    require(nSeeds == k.toLong,
+      s"KPrototypes.fit: k=$k clusters need at least k distinct " +
+        s"non-null-numeric records, got $nSeeds")
+    lloyd(qn, qc, seeds, k, gammaE12, maxIter)
+  }
 
-    // seeded portable init on ids — the KMeansQ recipe (same hash,
-    // same ties), so the γ = 0 degenerate case lands on the SAME
-    // seeds. Plan note: orderBy+limit compiles to a DISTRIBUTED
-    // top-k (TakeOrderedAndProject); the rank window then runs over
-    // the k survivors only — never a single-partition sort of the
-    // full id set (the probe showed that window at 2M ids).
-    val ids = base.select(col("id")).distinct()
+  /** Seeded portable init on the distinct ids of `ids`: the `k` ids with
+    * the smallest `md5(seed ␁ id)` (ties → id ASC) become cids 0..k−1.
+    * Plan note: orderBy+limit compiles to a DISTRIBUTED top-k
+    * (TakeOrderedAndProject); the rank window then runs over the k
+    * survivors only — never a single-partition sort of the full id set
+    * (the probe showed that window at 2M ids). Returns the checkpointed
+    * (id, cid) seeds and their count (≤ k) — one bounded action, and
+    * the checkpoint is reused by the centroid joins.
+    */
+  private[operators] def seedIds(
+      ids: DataFrame, k: Int, seed: Long): (DataFrame, Long) = {
+    val hashed = ids.select(col("id")).distinct()
       .select(col("id"),
         graft.functions.PortableHash.hash60(col("id"), seed.toString)
           .as("__h"))
     val seedRank = Window.orderBy(col("__h").asc, col("id").asc)
-    val seeds = ids.orderBy(col("__h").asc, col("id").asc).limit(k)
+    val seeds = hashed.orderBy(col("__h").asc, col("id").asc).limit(k)
       .withColumn("__r", row_number().over(seedRank))
       .select(col("id"), (col("__r") - 1).cast("long").as("cid"))
       .localCheckpoint(true)
-    // k clusters need k distinct records: with fewer, the conditional-
-    // sum assignment would manufacture PHANTOM zero-distance clusters
-    // for the unseeded cids (sum of nothing = 0 beats every real
-    // distance) — raise instead of silently mis-clustering. One
-    // bounded action (the seed relation is ≤ k rows, and the
-    // checkpoint is reused by the centroid joins below).
-    val nSeeds = seeds.count()
-    require(nSeeds == k.toLong,
-      s"KPrototypes.fit: k=$k clusters need at least k distinct " +
-        s"non-null-numeric records, got $nSeeds")
+    (seeds, seeds.count())
+  }
+
+  /** The relational Lloyd loop over long-format numeric (id, pos, qv)
+    * and categorical (id, cpos, cv) components — either may be null,
+    * not both — from the (id, cid) `seeds` (cids 0..k−1, all present).
+    * Returns the final (id, cluster, dist) assignment and the final
+    * numeric (cid, pos, cv) / categorical (cid, cpos, cw) centroid
+    * relations (null where the side is null).
+    */
+  private[operators] def lloyd(
+      qn: DataFrame,
+      qc: DataFrame,
+      seeds: DataFrame,
+      k: Int,
+      gammaE12: Long,
+      maxIter: Int): (DataFrame, DataFrame, DataFrame) = {
     var cn = if (qn == null) null
       else qn.join(seeds, Seq("id"))
         .select(col("cid"), col("pos"), col("qv").as("cv"))
@@ -207,7 +231,7 @@ object KPrototypes {
     // categorical per-(id, cid) TERMS are unioned BEFORE one map-side-
     // combined aggregation (the γ weight folds into each mismatch
     // term, so the mixed distance is a plain Σ). For k ≤
-    // [[KPrototypes.CondSumMaxK]] (the common case, and every oracled
+    // [[KPrototypes.condSumMaxK]] (the common case, and every oracled
     // fit) the whole assignment is ONE groupBy(id) with k conditional
     // sums — 2M groups instead of a 16M-row (id, cid) intermediate
     // plus a second aggregate — and the argmin is array-expression
@@ -216,7 +240,7 @@ object KPrototypes {
     // Larger k falls back to the two-level plan whose argmin is a
     // min_by ordered by struct(__d, cid) (the same (dist ASC, cid ASC)
     // rule — the spec forces this path and pins it equal). Same
-    // totals, same ties either way (q276's hash oracle; γ=0 ≡ KMeansQ).
+    // totals, same ties either way (q204's and q276's hash oracles).
     def assign(cnC: DataFrame, ccC: DataFrame): DataFrame = {
       val ndRows = if (qn == null) null
         else qn.join(cnC, Seq("pos"))
@@ -253,20 +277,22 @@ object KPrototypes {
       }
     }
 
-    var i = 0
-    while (i < maxIter) {
-      // materialize the assignment ONCE per pass (2 id-grain columns):
-      // without this, the numeric and categorical update checkpoints
-      // would each recompute the full id×k aggregation — the probe
-      // measured that as ~2× the whole fit
-      val asg = assign(cn, cc).select(col("id"), col("cid"))
-        .localCheckpoint(true)
+    for (_ <- 1 to maxIter) {
+      // with both sides, materialize the assignment ONCE per pass (2
+      // id-grain columns): without this, the numeric and categorical
+      // update checkpoints would each recompute the full id×k
+      // aggregation — the probe measured that as ~2× the whole fit. One
+      // side reads it once, so a checkpoint would only add a job.
+      val asg0 = assign(cn, cc).select(col("id"), col("cid"))
+      val asg = if (qn != null && qc != null) asg0.localCheckpoint(true)
+        else asg0
       if (qn != null) {
         val updated = qn.join(asg, Seq("id"))
           .groupBy(col("cid"), col("pos"))
           .agg(floor(sum(col("qv")).cast("double") /
             count(lit(1)).cast("double")).cast("long").as("__new"))
-        // stale-center rule (empty cluster keeps its coordinates)
+        // stale-center rule: clusters that lost every member keep their
+        // previous coordinates rather than reseeding nondeterministically
         cn = cn.join(updated, Seq("cid", "pos"), "left")
           .select(col("cid"), col("pos"),
             coalesce(col("__new"), col("cv")).as("cv"))
@@ -286,9 +312,37 @@ object KPrototypes {
             coalesce(col("__new"), col("cw")).as("cw"))
           .localCheckpoint(true)
       }
-      i += 1
     }
     (assign(cn, cc).withColumnRenamed("cid", "cluster"), cn, cc)
+  }
+
+  /** Mean `dist` of an (id, cluster, dist) assignment — the estimators'
+    * training cost (one aggregate); 0 when the assignment is empty.
+    */
+  private[operators] def meanDist(asg: DataFrame): Double = {
+    val agg = asg.agg(count(lit(1)), sum(col("dist"))).head()
+    if (agg.getLong(0) == 0L) 0.0
+    else agg.getLong(1).toDouble / agg.getLong(0).toDouble
+  }
+
+  /** A centroid relation's (cid, position, value) rows, collected per
+    * cid in position order (k·dims rows: the bounded driver collect);
+    * empty for a null relation.
+    */
+  private[operators] def collectCentroids[T: scala.reflect.ClassTag](
+      c: DataFrame)(value: Row => T): Map[Long, Array[T]] =
+    if (c == null) Map.empty
+    else c.collect().groupBy(_.getLong(0))
+      .map { case (cid, rs) => cid -> rs.sortBy(_.getInt(1)).map(value) }
+
+  /** A model's `computeCost`: the mean over the rows of `ds` where
+    * `present` holds of the smallest entry of `dists` (the distance to
+    * every center); 0.0 when no row is scorable.
+    */
+  private[operators] def meanMinDist(
+      ds: Dataset[_], present: Column, dists: Column): Double = {
+    val r = ds.where(present).select(avg(array_min(dists))).head
+    if (r.isNullAt(0)) 0.0 else r.getDouble(0)
   }
 }
 
@@ -371,30 +425,14 @@ class KPrototypesEstimator(override val uid: String)
       $(catCols).toSeq, $(numCols).toSeq, $(k), $(gammaE12), $(maxIter),
       $(seed))
     // k·dims rows + one 2-column aggregate: the bounded driver collects
-    val numCenters: Array[Array[Long]] =
-      if (cn == null) Array.fill($(k))(Array.empty[Long])
-      else {
-        val m = cn.collect()
-          .groupBy(_.getLong(0))
-          .map { case (cid, rs) =>
-            cid -> rs.sortBy(_.getInt(1)).map(_.getLong(2)) }
-        Array.tabulate($(k))(i => m.getOrElse(i.toLong, Array.empty[Long]))
-      }
-    val catCenters: Array[Array[String]] =
-      if (cc == null) Array.fill($(k))(Array.empty[String])
-      else {
-        val m = cc.collect()
-          .groupBy(_.getLong(0))
-          .map { case (cid, rs) =>
-            cid -> rs.sortBy(_.getInt(1)).map(_.getString(2)) }
-        Array.tabulate($(k))(i =>
-          m.getOrElse(i.toLong, Array.empty[String]))
-      }
-    val agg = asg.agg(count(lit(1)), sum(col("dist"))).head()
-    val cost =
-      if (agg.getLong(0) == 0L) 0.0
-      else agg.getLong(1).toDouble / agg.getLong(0).toDouble
-    val model = new KPrototypesModel(uid, numCenters, catCenters, cost)
+    val num = KPrototypes.collectCentroids(cn)(_.getLong(2))
+    val cat = KPrototypes.collectCentroids(cc)(_.getString(2))
+    val numCenters = Array.tabulate($(k))(i =>
+      num.getOrElse(i.toLong, Array.empty[Long]))
+    val catCenters = Array.tabulate($(k))(i =>
+      cat.getOrElse(i.toLong, Array.empty[String]))
+    val model = new KPrototypesModel(uid, numCenters, catCenters,
+      KPrototypes.meanDist(asg))
     copyValues(model.setParent(this))
   }
 }
@@ -470,11 +508,8 @@ class KPrototypesModel(
     * prototype (numeric-null rows excluded, as in fit); 0.0 when no
     * row is scorable (every row null-numeric, or empty input).
     */
-  def computeCost(dataset: org.apache.spark.sql.Dataset[_]): Double = {
-    val r = dataset.where(numsPresent)
-      .select(avg(array_min(distArray))).head
-    if (r.isNullAt(0)) 0.0 else r.getDouble(0)
-  }
+  def computeCost(dataset: org.apache.spark.sql.Dataset[_]): Double =
+    KPrototypes.meanMinDist(dataset, numsPresent, distArray)
 }
 
 object KPrototypesModel

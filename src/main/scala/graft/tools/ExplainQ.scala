@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-capture harness (measurement only): writes
   * `<outDir>/<query>_<tag>.txt` with `.explain("formatted")` output for
   * every registered query matching a name substring. Usage:
@@ -17,15 +15,7 @@ object ExplainQ {
     val Array(sfDir, outDir, tag, pat) = args.take(4)
     val pats = pat.split(',')
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "10485760")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder(cpus, cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.GraftExtensions.register(spark)
     new java.io.File(outDir).mkdirs()

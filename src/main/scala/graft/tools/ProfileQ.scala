@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round measurement harness (NOT part of the engine;
   * guide §1 "measure first"). Runs one or more registered queries
@@ -78,14 +77,7 @@ object ProfileQ {
       .flatMap(_.split(';')).map(_.split("=", 2)).collect {
         case Array(k, v) => (k, v)
       }
-    val spark0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "10485760")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val spark0 = graft.GraftSession.builder(cpus, cpus)
     val spark = extra.foldLeft(spark0) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

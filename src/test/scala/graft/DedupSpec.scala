@@ -126,6 +126,20 @@ class DedupSpec extends SparkSuite {
     assert(got.forall(_._2 == 0L))
   }
 
+  test("connectedComponents: a null id links nothing, on every path and id type") {
+    val pairs = Seq((Some(1L), Some(2L)), (Some(2L), None), (None, Some(3L)),
+      (Some(4L), Some(5L)), (None, None)).toDF("id_a", "id_b")
+    def cc(p: org.apache.spark.sql.DataFrame, maxIter: Int): Seq[(String, String)] =
+      Dedup.connectedComponents(p, maxIter).collect()
+        .map(r => (String.valueOf(r.get(0)), String.valueOf(r.get(1)))).toSeq.sorted
+    def as(t: String) = pairs.select($"id_a".cast(t).as("id_a"), $"id_b".cast(t).as("id_b"))
+    val want = Seq(("1", "1"), ("2", "1"), ("3", "3"), ("4", "4"), ("5", "4"))
+    assert(cc(pairs, 0) == want, "Long auto")
+    assert(cc(as("int"), 0) == want, "Int auto")
+    assert(cc(as("string"), 0) == want, "String auto")
+    assert(cc(pairs, 20) == want, "Long direct loop")
+  }
+
   test("deduplicate keeps one canonical doc per near-dup group, nulls survive") {
     val corpus = Seq(
       (1L, "the quick brown fox jumps over the lazy dog again and again"),

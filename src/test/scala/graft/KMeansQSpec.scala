@@ -138,4 +138,23 @@ class KMeansQSpec extends SparkSuite {
       viaTransform.toSeq.map { case (id, c) => (id, c) },
       "a loaded model must transform identically (id col not needed)")
   }
+
+  test("empty embedding is treated like NULL: fit omits it, transform " +
+      "predicts NULL, computeCost over the training rows equals cost") {
+    val rows = ((1L to 40L)
+      .map(i => (i, vec((i % 7).toDouble, (i % 5).toDouble, 0.3 * i))) :+
+      ((41L, Seq.empty[Float])))
+      .toDF("vec_id", "embedding")
+    val fit = KMeansQ.fit(rows, "vec_id", "embedding", 3, 4, 42L)
+      .select("id").as[Long].collect()
+    assert(fit.length == 40 && !fit.contains(41L), fit.toSeq.toString)
+    val model = new graft.operators.KMeansQEstimator()
+      .setK(3).setMaxIter(4).setSeed(42L)
+      .setIdCol("vec_id").setEmbCol("embedding")
+      .fit(rows)
+    val pred = model.transform(rows).where($"vec_id" === 41L)
+      .select("prediction").head()
+    assert(pred.isNullAt(0), s"empty embedding must yield NULL: $pred")
+    assert(model.computeCost(rows) == model.cost)
+  }
 }

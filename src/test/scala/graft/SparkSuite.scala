@@ -6,19 +6,10 @@ import org.scalatest.BeforeAndAfterAll
 
 /** Shared local SparkSession for all suites (one JVM, forked by sbt). */
 object SparkSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
+  lazy val spark: SparkSession = GraftSession.builder("2", "4")
     .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    // mirror the production session: no static broadcasts (estimates
-    // lie past explodes), AQE runtime broadcasts from exact sizes
-    .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-    .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "10485760")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 }
 
