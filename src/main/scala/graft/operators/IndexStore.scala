@@ -3,10 +3,13 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Parquet persistence + incremental maintenance for the three ANN /
-  * near-dup indexes (SURVEY §3.3 "100 TB posture"): the MinHash-LSH
-  * corpus index ([[Dedup.CorpusIndex]]), the sign-pattern vector index
-  * ([[Similarity.VectorIndex]]), and the IVF model ([[IvfIndex.Model]]).
+/** Parquet persistence + incremental maintenance for the five ANN /
+  * near-dup / lexical indexes (SURVEY §3.3 "100 TB posture"): the
+  * MinHash-LSH corpus index ([[Dedup.CorpusIndex]]), the perceptual-hash
+  * media index ([[Dedup.MediaIndex]]), the sign-pattern vector index
+  * ([[Similarity.VectorIndex]]), the IVF model ([[IvfIndex.Model]]) and
+  * the BM25 text index ([[TextAnalysis.TextIndex]]). Each kind's storage
+  * facts are stated once in its [[IndexKind]].
   *
   * At 100 TB you do not rebuild an index per job: you build it ONCE,
   * persist it, and probe it from every batch and stream forever,
@@ -151,8 +154,9 @@ object IndexStore {
     metaCache.remove(new org.apache.hadoop.fs.Path(path, "meta").toString): Unit
   }
 
-  /** `ddl_<table> -> schema DDL` meta entries, recorded by every save*
-    * builder (round-16 optimization): with the write-time schema in
+  /** `ddl_<table> -> schema DDL` meta entries, recorded by [[publish]],
+    * the one writer behind every save* builder and merge (round-16
+    * optimization): with the write-time schema in
     * meta, every internal table read can pass an explicit schema and
     * skip the per-read footer-inference Spark job — ~1 scheduler
     * round-trip per read, ~20 reads per lifecycle op (the delete/merge
@@ -162,14 +166,40 @@ object IndexStore {
     * the save-time DDL stays valid for the index's whole life; a
     * rebuild rewrites meta with it.
     */
-  private def ddlEntries(tables: (String, DataFrame)*): Seq[(String, String)] =
+  private def ddlEntries(tables: Seq[(String, DataFrame)]): Seq[(String, String)] =
     tables.map { case (t, df) => s"ddl_$t" -> df.schema.toDDL }
+
+  /** The one build-and-publish writer behind every save* builder and
+    * shard merge. Under `path`'s single-writer lease for `op` (once it
+    * is held, `verify` runs first — the merges' shard-lease re-check):
+    * reset `path` to the generation-0 layout ([[resetGenerations]] —
+    * meta is deleted first), write `tables` (the kind's raw tables in
+    * [[IndexKind]] descriptor order, evaluated after the reset) each
+    * clustered by its descriptor key, then write meta LAST — the
+    * rebuild's commit record: the kind, its build `params` and every
+    * table's schema ([[ddlEntries]]). Table order does not matter: a
+    * crash before the final meta write leaves no meta, so loads fail
+    * loudly.
+    */
+  private def publish(
+      kind: IndexKind, spark: SparkSession, path: String, op: String,
+      params: Seq[(String, String)], ttlMs: Long = DefaultLeaseTtlMs,
+      verify: () => Unit = () => ())(tables: => Seq[DataFrame]): Unit =
+    withIndexLease(spark, path, op, ttlMs) {
+      verify()
+      resetGenerations(spark, path)
+      val named = kind.tables.zip(tables).map { case ((t, key, _), df) =>
+        df.repartition(col(key)).write.mode("overwrite").parquet(s"$path/$t")
+        t -> df
+      }
+      writeMeta(spark, path, (("kind" -> kind.name) +: params) ++ ddlEntries(named))
+    }
 
   /** Read an index raw table through the generation-resolved `dir`,
     * with the save-time recorded schema when meta carries one (see
     * [[ddlEntries]]) — falls back to normal schema inference for
-    * tables without a recording (pre-recording indexes, `deletes`,
-    * graveyards, merged-index metas that predate their tables).
+    * tables without a recording (indexes written before the recording,
+    * `deletes`, graveyards).
     */
   private def readTable(
       spark: SparkSession, path: String, dir: String => String,
@@ -431,26 +461,9 @@ object IndexStore {
       path: String,
       shingleSize: Int = 3,
       numHashes: Int = 64,
-      numBands: Int = 16): Unit = {
-    val spark = corpus.sparkSession
-    withIndexLease(spark, path, "saveCorpusIndex") {
-      resetGenerations(spark, path)
-      val gc = Dedup.textGroups(corpus, idCol, textCol)
-      val (bands, sets, members) =
-        Dedup.corpusTablesFromGroups(gc, shingleSize, numHashes, numBands)
-      bands.repartition(col("band_hash"))
-        .write.mode("overwrite").parquet(s"$path/bands")
-      sets.repartition(col("corpus_id"))
-        .write.mode("overwrite").parquet(s"$path/sets")
-      members.repartition(col("corpus_id"))
-        .write.mode("overwrite").parquet(s"$path/members")
-      // meta LAST — the rebuild's commit record (see [[resetGenerations]])
-      writeMeta(spark, path, Seq(
-        "kind" -> "corpus", "shingle_size" -> shingleSize.toString,
-        "num_hashes" -> numHashes.toString, "num_bands" -> numBands.toString)
-        ++ ddlEntries("bands" -> bands, "sets" -> sets, "members" -> members))
-    }
-  }
+      numBands: Int = 16): Unit =
+    saveFamily(CorpusFamily, corpus, idCol, textCol, path, "saveCorpusIndex",
+      shingleSize, numHashes, numBands)
 
   /** Load a persisted corpus index, applying the bucket cap over the
     * CURRENT (post-append) band table — see the class doc for why the
@@ -467,19 +480,8 @@ object IndexStore {
       spark: SparkSession,
       path: String,
       maxBucketSize: Int = 1000,
-      check: Boolean = true): Dedup.CorpusIndex = {
-    metaOf(spark, path, "corpus")
-    val dir = tableDirs(spark, path)
-    val sets = readTable(spark, path, dir, "sets")
-    val members = readTable(spark, path, dir, "members")
-    // coverage on the RAW members (see [[loadVectorIndex]]: a
-    // fully-deleted group is a tombstone state, not a torn append)
-    if (check) requireMemberCoverage(members, sets, "corpus_id", "sets", path)
-    Dedup.capCorpusTables(
-      readTable(spark, path, dir, "bands"), sets,
-      applyDeletes(members, readDeletes(spark, path, dir), "member_id"),
-      maxBucketSize)
-  }
+      check: Boolean = true): Dedup.CorpusIndex =
+    loadFamily(CorpusFamily, spark, path, maxBucketSize, check)
 
   /** Append a batch of new documents to a persisted corpus index (pure
     * parquet appends — nothing existing is rewritten). New docs whose
@@ -507,102 +509,8 @@ object IndexStore {
       newDocs: DataFrame,
       idCol: String,
       textCol: String,
-      path: String): Unit = {
-    val spark = newDocs.sparkSession
-    withIndexLease(spark, path, "appendCorpusIndex") {
-      appendCorpusIndexBody(spark, newDocs, idCol, textCol, path,
-        "appendCorpusIndex")
-    }
-  }
-
-  /** [[appendCorpusIndex]]'s body, lease assumed HELD by the caller
-    * ([[replaceCorpusDocs]] composes it under its one lease).
-    */
-  private def appendCorpusIndexBody(
-      spark: SparkSession, newDocs: DataFrame, idCol: String,
-      textCol: String, path: String, op: String): Unit = {
-      val m = metaOf(spark, path, "corpus")
-      val (shingleSize, numHashes, numBands) =
-        (m("shingle_size").toInt, m("num_hashes").toInt, m("num_bands").toInt)
-      // one manifest resolution for the whole append: reads and writes
-      // must hit the SAME generation (the exclusivity-vs-compaction
-      // contract of [[compactIndex]]; the fence after the writes converts
-      // a violation to a loud raise instead of silent row loss)
-      val (resolved, dir) = resolvedDirs(spark, path)
-      appendFenceTestHook()
-      val oldSets = readTable(spark, path, dir, "sets")
-      val oldMembers = readTable(spark, path, dir, "members")
-      val gn = Dedup.textGroups(newDocs, idCol, textCol)
-      val idsGuard = idsAfterAgg(graveyardUnion(spark, path, dir,
-          oldMembers.select(col("member_id"))),
-        gn.select(explode(col("members")).as("member_id")))
-      // exact-text merge: members of matched groups file under the
-      // EXISTING rep (no new band/set rows — identical text means the
-      // stored ones already cover it)
-      val matched = gn
-        .join(oldSets.select(col("text").as("__text"), col("corpus_id")),
-          Seq("__text"))
-        .select(col("corpus_id"), explode(col("members")).as("member_id"))
-      val novel = gn
-        .join(oldSets.select(col("text").as("__text")), Seq("__text"), "left_anti")
-        // consumed by all three table derivations below — materialize the
-        // anti-join once
-        .localCheckpoint(true)
-      // torn-append heal: stored sets with no band rows (a crash between
-      // a prior sets append and its bands append) are invisible to every
-      // probe but carry their text — recompute their bands with the
-      // builder's own derivation. Fast path first: every group with ≥1
-      // shingle has exactly numBands band rows, so
-      // count(bands) == numBands × count(sets with shingles) proves full
-      // coverage with two shuffle-free counts and the heal anti-join is
-      // skipped entirely (filter-false prunes it to an empty relation —
-      // the stored files are never even listed, so there is no re-list
-      // race with the writes below). A shingle-less set legitimately
-      // owns zero band rows, so it is excluded from BOTH the identity
-      // and the heal anti-join — one such row must not permanently
-      // demote every future append to the slow path. (This library's
-      // own writers never produce one: null text is dropped at collapse
-      // and shingling non-null text always yields ≥1 shingle — the
-      // filter is defense against external/legacy table writers.) On an
-      // identity mismatch the anti-join is materialized BEFORE the
-      // directory-mutating writes (same race rationale as `novel`).
-      val oldBands = readTable(spark, path, dir, "bands")
-      val bandedSets = oldSets.where(size(col("sh")) > 0)
-      // ONE driver action carries BOTH pre-write guards (round-17,
-      // guide §2.4): the monotone-id aggregate and the band-coverage
-      // count identity evaluate in a single head(); the id guard is
-      // checked first, exactly as the sequential form raised it first —
-      // both still fire before anything mutates.
-      val covered = idsGuard
-        .crossJoin(oldBands.select(lit(0).as("__t"))
-          .unionByName(bandedSets.select(lit(1).as("__t")))
-          .agg(count(when(col("__t") === 0, lit(1))).as("__b"),
-            count(when(col("__t") === 1, lit(1))).as("__s")))
-        .head()
-      requireIdsAfterChecked(covered.getBoolean(0), op)
-      val orphanedSets0 = bandedSets
-        .select(col("corpus_id").as("id"), col("text").as("__text"))
-        .join(oldBands.select(col("corpus_id").as("id")).distinct(),
-          Seq("id"), "left_anti")
-      val orphanedSets =
-        if (covered.getLong(1) == numBands.toLong * covered.getLong(2))
-          orphanedSets0.where(lit(false))
-        else orphanedSets0.localCheckpoint(true)
-      val (bands, sets, members) =
-        Dedup.corpusTablesFromGroups(novel, shingleSize, numHashes, numBands)
-      // members FIRST — see crash posture in the scaladoc
-      members.unionByName(matched).repartition(col("corpus_id"))
-        .write.mode("append").parquet(dir("members"))
-      sets.repartition(col("corpus_id"))
-        .write.mode("append").parquet(dir("sets"))
-      bands
-        .unionByName(
-          Dedup.corpusBandRows(orphanedSets, shingleSize, numHashes, numBands))
-        .repartition(col("band_hash"))
-        .write.mode("append").parquet(dir("bands"))
-      requireGenerationsUnmoved(spark, path, resolved,
-        Seq("members", "sets", "bands"), op)
-  }
+      path: String): Unit =
+    appendFamily(CorpusFamily, newDocs, idCol, textCol, path)
 
   /** One INGEST ROUND against the persisted corpus (MinHash-LSH) index
     * — the lexical member of the ingest-round family ([[ingestMedia]]
@@ -695,29 +603,18 @@ object IndexStore {
       hashes: DataFrame,
       idCol: String,
       hashCol: String,
-      path: String): Unit = {
-    val spark = hashes.sparkSession
-    withIndexLease(spark, path, "saveMediaIndex") {
-      resetGenerations(spark, path)
-      // materialized ONCE: the projection feeds BOTH writes below, and
-      // lazy it would re-run the upstream plan (typically a per-asset
-      // perceptual decode — the expensive part) for the bands write too,
-      // violating the decode-once contract the q245 lifecycle documents
+      path: String): Unit =
+    publish(MediaKind, hashes.sparkSession, path, "saveMediaIndex", Nil) {
+      // materialized ONCE: the projection feeds BOTH writes, and lazy it
+      // would re-run the upstream plan (typically a per-asset perceptual
+      // decode — the expensive part) for the bands write too, violating
+      // the decode-once contract the q245 lifecycle documents
       val members = hashes
-        .select(col(hashCol).cast("long").as("dh"),
-          col(idCol).as("member_id"))
+        .select(col(hashCol).cast("long").as("dh"), col(idCol).as("member_id"))
         .where(col("dh").isNotNull)
         .localCheckpoint(true)
-      members.repartition(col("dh"))
-        .write.mode("overwrite").parquet(s"$path/members")
-      val bandRows = Dedup.hashBandRows(members, "dh")
-      bandRows.repartition(col("band_hash"))
-        .write.mode("overwrite").parquet(s"$path/bands")
-      // meta LAST — the rebuild's commit record (see [[resetGenerations]])
-      writeMeta(spark, path, Seq("kind" -> "media")
-        ++ ddlEntries("members" -> members, "bands" -> bandRows))
+      Seq(Dedup.hashBandRows(members, "dh"), members)
     }
-  }
 
   /** Load a persisted media index, applying the bucket cap over the
     * CURRENT (post-append) band table — same placement rationale as
@@ -906,28 +803,9 @@ object IndexStore {
       dim: Int,
       numBlocks: Int = 8,
       planesPerBlock: Int = 8,
-      seed: Long = 42L): Unit = {
-    val spark = corpus.sparkSession
-    withIndexLease(spark, path, "saveVectorIndex") {
-      resetGenerations(spark, path)
-      val groups = vecGroups(corpus, idCol, vecCol)
-      val (blocks, reps, members) = Similarity.vectorTablesFromGroups(
-        groups, dim, numBlocks, planesPerBlock, seed)
-      blocks.repartition(col("band_hash"))
-        .write.mode("overwrite").parquet(s"$path/blocks")
-      reps.repartition(col("rep_id"))
-        .write.mode("overwrite").parquet(s"$path/reps")
-      members.repartition(col("rep_id"))
-        .write.mode("overwrite").parquet(s"$path/members")
-      // meta LAST — the rebuild's commit record (see [[resetGenerations]])
-      writeMeta(spark, path, Seq(
-        "kind" -> "vector", "dim" -> dim.toString,
-        "num_blocks" -> numBlocks.toString,
-        "planes_per_block" -> planesPerBlock.toString, "seed" -> seed.toString)
-        ++ ddlEntries("blocks" -> blocks, "reps" -> reps,
-          "members" -> members))
-    }
-  }
+      seed: Long = 42L): Unit =
+    saveFamily(VectorFamily, corpus, idCol, vecCol, path, "saveVectorIndex",
+      dim, numBlocks, planesPerBlock, seed)
 
   /** Load a persisted vector index (cap-at-load, like
     * [[loadCorpusIndex]]). With `check` on (the default), raises on the
@@ -942,20 +820,8 @@ object IndexStore {
       spark: SparkSession,
       path: String,
       maxBucketSize: Int = 10000,
-      check: Boolean = true): Similarity.VectorIndex = {
-    metaOf(spark, path, "vector")
-    val dir = tableDirs(spark, path)
-    val reps = readTable(spark, path, dir, "reps")
-    val members = readTable(spark, path, dir, "members")
-    // torn-state coverage runs on the RAW members: a fully-deleted rep
-    // group legitimately has a reps row and zero LIVE members — that is
-    // a tombstone state, not a torn append (vacuum prunes the group)
-    if (check) requireMemberCoverage(members, reps, "rep_id", "reps", path)
-    Similarity.capVectorTables(
-      readTable(spark, path, dir, "blocks"), reps,
-      applyDeletes(members, readDeletes(spark, path, dir), "member_id"),
-      maxBucketSize)
-  }
+      check: Boolean = true): Similarity.VectorIndex =
+    loadFamily(VectorFamily, spark, path, maxBucketSize, check)
 
   /** Append new vectors to a persisted vector index; exact-duplicate
     * vectors merge into their existing rep group (equi-join on the
@@ -972,72 +838,8 @@ object IndexStore {
       newVecs: DataFrame,
       idCol: String,
       vecCol: String,
-      path: String): Unit = {
-    val spark = newVecs.sparkSession
-    withIndexLease(spark, path, "appendVectorIndex") {
-      appendVectorIndexBody(spark, newVecs, idCol, vecCol, path,
-        "appendVectorIndex")
-    }
-  }
-
-  /** [[appendVectorIndex]]'s body, lease assumed HELD by the caller
-    * ([[replaceVectorMembers]] composes it under its one lease).
-    */
-  private def appendVectorIndexBody(
-      spark: SparkSession, newVecs: DataFrame, idCol: String,
-      vecCol: String, path: String, op: String): Unit = {
-      val m = metaOf(spark, path, "vector")
-      val (resolved, dir) = resolvedDirs(spark, path)
-      appendFenceTestHook()
-      val oldReps = readTable(spark, path, dir, "reps")
-      val oldMembers = readTable(spark, path, dir, "members")
-      val gn = vecGroups(newVecs, idCol, vecCol)
-      val matched = gn.join(oldReps.withColumnRenamed("rep_id", "__rep"), Seq("v"))
-        .select(col("__rep").as("rep_id"), explode(col("members")).as("member_id"))
-      val novel = gn.join(oldReps.select(col("v")), Seq("v"), "left_anti")
-        .localCheckpoint(true)
-      // torn-append heal: stored reps with no block rows get them
-      // recomputed from their stored vector. Same fast path as
-      // [[appendCorpusIndex]] — every rep has exactly numBlocks block
-      // rows, so the count identity proves coverage without the
-      // anti-join shuffle; on mismatch the anti-join is materialized
-      // BEFORE the directory-mutating writes below. ONE driver action
-      // carries BOTH pre-write guards (round-17, the
-      // [[appendCorpusIndexBody]] fusion): monotone-id aggregate ×
-      // coverage identity, id guard checked first.
-      val oldBlocks = readTable(spark, path, dir, "blocks")
-      val covered = idsAfterAgg(graveyardUnion(spark, path, dir,
-          oldMembers.select(col("member_id"))),
-        gn.select(explode(col("members")).as("member_id")))
-        .crossJoin(oldBlocks.select(lit(0).as("__t"))
-          .unionByName(oldReps.select(lit(1).as("__t")))
-          .agg(count(when(col("__t") === 0, lit(1))).as("__b"),
-            count(when(col("__t") === 1, lit(1))).as("__r")))
-        .head()
-      requireIdsAfterChecked(covered.getBoolean(0), op)
-      val orphanedReps0 = oldReps.select(col("rep_id").as("id"), col("v"))
-        .join(oldBlocks.select(col("rep_id").as("id")).distinct(),
-          Seq("id"), "left_anti")
-      val orphanedReps =
-        if (covered.getLong(1) == m("num_blocks").toLong * covered.getLong(2))
-          orphanedReps0.where(lit(false))
-        else orphanedReps0.localCheckpoint(true)
-      val (blocks, reps, members) = Similarity.vectorTablesFromGroups(
-        novel, m("dim").toInt, m("num_blocks").toInt,
-        m("planes_per_block").toInt, m("seed").toLong)
-      // members FIRST — same crash posture as [[appendCorpusIndex]]
-      members.unionByName(matched).repartition(col("rep_id"))
-        .write.mode("append").parquet(dir("members"))
-      reps.repartition(col("rep_id"))
-        .write.mode("append").parquet(dir("reps"))
-      blocks
-        .unionByName(Similarity.vectorBlockRows(orphanedReps, m("dim").toInt,
-          m("num_blocks").toInt, m("planes_per_block").toInt, m("seed").toLong))
-        .repartition(col("band_hash"))
-        .write.mode("append").parquet(dir("blocks"))
-      requireGenerationsUnmoved(spark, path, resolved,
-        Seq("members", "reps", "blocks"), op)
-  }
+      path: String): Unit =
+    appendFamily(VectorFamily, newVecs, idCol, vecCol, path)
 
   /** One INGEST ROUND against the persisted vector index — the
     * semantic twin of [[ingestMedia]], same contract shape: screen the
@@ -1122,23 +924,26 @@ object IndexStore {
     */
   def saveIvf(model: IvfIndex.Model, path: String): Unit = {
     val spark = model.assignments.sparkSession
-    withIndexLease(spark, path, "saveIvf") {
-      import spark.implicits._
-      resetGenerations(spark, path)
-      val centroidRows = model.centroids.zipWithIndex
-        .map { case (c, i) => (i, c.toSeq) }.toSeq
-        .toDF("list_id", "centroid")
-      centroidRows.coalesce(1)
-        .write.mode("overwrite").parquet(s"$path/centroids")
-      model.assignments.repartition(col("list_id"))
-        .write.mode("overwrite").parquet(s"$path/assign")
-      // meta LAST — the rebuild's commit record (see [[resetGenerations]])
-      writeMeta(spark, path, Seq(
-        "kind" -> "ivf", "n_lists" -> model.centroids.length.toString)
-        ++ ddlEntries("centroids" -> centroidRows,
-          "assign" -> model.assignments))
-    }
+    publish(IvfKind, spark, path, "saveIvf",
+      Seq("n_lists" -> model.centroids.length.toString))(
+      Seq(model.assignments, centroidRows(spark, model.centroids)))
   }
+
+  /** The centroids table rows (list_id, centroid) of a centroid matrix. */
+  private def centroidRows(
+      spark: SparkSession, centroids: Array[Array[Double]]): DataFrame = {
+    import spark.implicits._
+    centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
+      .toDF("list_id", "centroid")
+  }
+
+  /** The centroid matrix back from the resolved centroids table. */
+  private def readCentroids(
+      spark: SparkSession, path: String,
+      dir: String => String): Array[Array[Double]] =
+    readTable(spark, path, dir, "centroids")
+      .orderBy("list_id").collect()
+      .map(_.getAs[Seq[Double]]("centroid").toArray)
 
   /** Load a persisted IVF model. The centroid collect is O(nLists) —
     * the model-sized driver collect this library allows everywhere.
@@ -1146,13 +951,10 @@ object IndexStore {
   def loadIvf(spark: SparkSession, path: String): IvfIndex.Model = {
     metaOf(spark, path, "ivf")
     val dir = tableDirs(spark, path)
-    val centroids = readTable(spark, path, dir, "centroids")
-      .orderBy("list_id").collect()
-      .map(_.getAs[Seq[Double]]("centroid").toArray)
     // tombstones ([[deleteFromIvf]]): a deleted id leaves the inverted
     // lists at load, so no probe can select it — searches hydrate
     // vectors from the caller's corpus BY these assignments
-    IvfIndex.Model(centroids,
+    IvfIndex.Model(readCentroids(spark, path, dir),
       applyDeletes(readTable(spark, path, dir, "assign"),
         readDeletes(spark, path, dir), "id"))
   }
@@ -1193,9 +995,7 @@ object IndexStore {
       // the two reads would mix generations)
       val (resolved, dir) = resolvedDirs(spark, path)
       appendFenceTestHook()
-      val centroids = readTable(spark, path, dir, "centroids")
-        .orderBy("list_id").collect()
-        .map(_.getAs[Seq[Double]]("centroid").toArray)
+      val centroids = readCentroids(spark, path, dir)
       val assignments = readTable(spark, path, dir, "assign")
       val assign = IvfIndex.assign(newVecs, idCol, vecCol, centroids)
       // overlap guard over live ids ∪ the tombstone graveyard: a
@@ -1227,20 +1027,11 @@ object IndexStore {
     * Overwrites.
     */
   def saveTextIndex(
-      docs: DataFrame, idCol: String, textCol: String, path: String): Unit = {
-    val spark = docs.sparkSession
-    withIndexLease(spark, path, "saveTextIndex") {
-      resetGenerations(spark, path)
+      docs: DataFrame, idCol: String, textCol: String, path: String): Unit =
+    publish(TextKind, docs.sparkSession, path, "saveTextIndex", Nil) {
       val idx = TextAnalysis.textIndex(docs, idCol, textCol)
-      idx.postings.repartition(col("term"))
-        .write.mode("overwrite").parquet(s"$path/postings")
-      idx.doclen.repartition(col("doc_id"))
-        .write.mode("overwrite").parquet(s"$path/doclen")
-      // meta LAST — the rebuild's commit record (see [[resetGenerations]])
-      writeMeta(spark, path, Seq("kind" -> "text")
-        ++ ddlEntries("postings" -> idx.postings, "doclen" -> idx.doclen))
+      Seq(idx.postings, idx.doclen)
     }
-  }
 
   /** Load a persisted text index. With `check` on (the default),
     * raises on the text kind's one torn-append shape: doclen rows
@@ -1684,6 +1475,27 @@ object IndexStore {
     c.getLong(0)
   }
 
+  /** The merge skeleton every merge* op shares: the path guards
+    * ([[requireShardPaths]]), then under every shard's lease
+    * ([[withShardLeases]]) run `derive` — the merged member count, the
+    * output's build params and its tables in [[IndexKind]] descriptor
+    * order — and [[publish]] the result under `outPath`'s own lease,
+    * re-verifying the shard leases at the last instant before the
+    * output becomes real (an over-TTL merge aborts loudly there).
+    */
+  private def mergeShards(
+      kind: IndexKind, op: String, spark: SparkSession,
+      shardPaths: Seq[String], outPath: String, ttlMs: Long)(
+      derive: => (Long, Seq[(String, String)], Seq[DataFrame])): Long = {
+    requireShardPaths(spark, op, shardPaths, outPath)
+    withShardLeases(spark, shardPaths, op, ttlMs) { verifyShardLeases =>
+      val (n, params, tables) = derive
+      publish(kind, spark, outPath, op, params, ttlMs, verifyShardLeases)(
+        tables)
+      n
+    }
+  }
+
   /** MERGE shard text indexes into one — the shard-parallel BUILD path
     * at 100 TB: no single job tokenizes a 100 TB corpus in one go, so
     * K builders each [[saveTextIndex]] a disjoint id range
@@ -1720,28 +1532,14 @@ object IndexStore {
     */
   def mergeTextIndexes(
       spark: SparkSession, shardPaths: Seq[String], outPath: String,
-      ttlMs: Long = DefaultLeaseTtlMs): Long = {
-    requireShardPaths(spark, "mergeTextIndexes", shardPaths, outPath)
-    withShardLeases(spark, shardPaths, "mergeTextIndexes", ttlMs) { verifyShardLeases =>
+      ttlMs: Long = DefaultLeaseTtlMs): Long =
+    mergeShards(TextKind, "mergeTextIndexes", spark, shardPaths, outPath,
+        ttlMs) {
       val shards = shardPaths.map(p => loadTextIndex(spark, p))
-      val postings = shards.map(_.postings).reduce(_.unionByName(_))
       val doclen = shards.map(_.doclen).reduce(_.unionByName(_))
-      val n = requireDisjointMembers("mergeTextIndexes", doclen, "doc_id")
-      withIndexLease(spark, outPath, "mergeTextIndexes", ttlMs) {
-        // shard leases re-verified at the last instant before the
-        // output becomes real — an over-TTL merge aborts loudly here
-        verifyShardLeases()
-        resetGenerations(spark, outPath)
-        postings.repartition(col("term"))
-          .write.mode("overwrite").parquet(s"$outPath/postings")
-        doclen.repartition(col("doc_id"))
-          .write.mode("overwrite").parquet(s"$outPath/doclen")
-        // meta LAST — the rebuild's commit record (see [[resetGenerations]])
-        writeMeta(spark, outPath, Seq("kind" -> "text"))
-      }
-      n
+      (requireDisjointMembers("mergeTextIndexes", doclen, "doc_id"), Nil,
+        Seq(shards.map(_.postings).reduce(_.unionByName(_)), doclen))
     }
-  }
 
   /** MERGE shard MEDIA indexes — [[mergeTextIndexes]]'s perceptual
     * sibling: union the live member rows (shard tombstones applied,
@@ -1757,9 +1555,9 @@ object IndexStore {
     */
   def mergeMediaIndexes(
       spark: SparkSession, shardPaths: Seq[String], outPath: String,
-      ttlMs: Long = DefaultLeaseTtlMs): Long = {
-    requireShardPaths(spark, "mergeMediaIndexes", shardPaths, outPath)
-    withShardLeases(spark, shardPaths, "mergeMediaIndexes", ttlMs) { verifyShardLeases =>
+      ttlMs: Long = DefaultLeaseTtlMs): Long =
+    mergeShards(MediaKind, "mergeMediaIndexes", spark, shardPaths, outPath,
+        ttlMs) {
       shardPaths.foreach(p => metaOf(spark, p, "media"))
       val members = shardPaths.map { p =>
         val dir = tableDirs(spark, p)
@@ -1767,23 +1565,9 @@ object IndexStore {
           readDeletes(spark, p, dir), "member_id")
           .select(col("dh"), col("member_id"))
       }.reduce(_.unionByName(_))
-      val n = requireDisjointMembers("mergeMediaIndexes", members,
-        "member_id")
-      withIndexLease(spark, outPath, "mergeMediaIndexes", ttlMs) {
-        // shard leases re-verified at the last instant before the
-        // output becomes real — an over-TTL merge aborts loudly here
-        verifyShardLeases()
-        resetGenerations(spark, outPath)
-        members.repartition(col("dh"))
-          .write.mode("overwrite").parquet(s"$outPath/members")
-        Dedup.hashBandRows(members, "dh").repartition(col("band_hash"))
-          .write.mode("overwrite").parquet(s"$outPath/bands")
-        // meta LAST — the rebuild's commit record (see [[resetGenerations]])
-        writeMeta(spark, outPath, Seq("kind" -> "media"))
-      }
-      n
+      (requireDisjointMembers("mergeMediaIndexes", members, "member_id"),
+        Nil, Seq(Dedup.hashBandRows(members, "dh"), members))
     }
-  }
 
   /** MERGE shard VECTOR indexes. The one step beyond a union: shards
     * elected their OWN exact-dup family reps, so the same vector value
@@ -1803,49 +1587,9 @@ object IndexStore {
     */
   def mergeVectorIndexes(
       spark: SparkSession, shardPaths: Seq[String], outPath: String,
-      ttlMs: Long = DefaultLeaseTtlMs): Long = {
-    requireShardPaths(spark, "mergeVectorIndexes", shardPaths, outPath)
-    withShardLeases(spark, shardPaths, "mergeVectorIndexes", ttlMs) { verifyShardLeases =>
-      val metas = shardPaths.map(p => metaOf(spark, p, "vector"))
-      val geomKeys = Seq("dim", "num_blocks", "planes_per_block", "seed")
-      require(metas.map(m => geomKeys.map(m)).distinct.size == 1,
-        "IndexStore.mergeVectorIndexes: shards were built with different " +
-          "hyperplane geometry (dim/num_blocks/planes_per_block/seed " +
-          "must match — block keys are only comparable under one set of " +
-          "planes); rebuild the divergent shard with the shared geometry")
-      val m = metas.head
-      val pairs = shardPaths.map { p =>
-        val dir = tableDirs(spark, p)
-        val reps = readTable(spark, p, dir, "reps")
-        val rawMembers = readTable(spark, p, dir, "members")
-        requireMemberCoverage(rawMembers, reps, "rep_id", "reps", p)
-        applyDeletes(rawMembers, readDeletes(spark, p, dir), "member_id")
-          .join(reps, Seq("rep_id"))
-          .select(col("v"), col("member_id"))
-      }.reduce(_.unionByName(_))
-      val n = requireDisjointMembers("mergeVectorIndexes", pairs,
-        "member_id")
-      val groups = vecGroups(pairs, "member_id", "v")
-      val (blocks, reps, members) = Similarity.vectorTablesFromGroups(
-        groups, m("dim").toInt, m("num_blocks").toInt,
-        m("planes_per_block").toInt, m("seed").toLong)
-      withIndexLease(spark, outPath, "mergeVectorIndexes", ttlMs) {
-        // shard leases re-verified at the last instant before the
-        // output becomes real — an over-TTL merge aborts loudly here
-        verifyShardLeases()
-        resetGenerations(spark, outPath)
-        blocks.repartition(col("band_hash"))
-          .write.mode("overwrite").parquet(s"$outPath/blocks")
-        reps.repartition(col("rep_id"))
-          .write.mode("overwrite").parquet(s"$outPath/reps")
-        members.repartition(col("rep_id"))
-          .write.mode("overwrite").parquet(s"$outPath/members")
-        // meta LAST — the rebuild's commit record (see [[resetGenerations]])
-        writeMeta(spark, outPath, m.toSeq)
-      }
-      n
-    }
-  }
+      ttlMs: Long = DefaultLeaseTtlMs): Long =
+    mergeFamily(VectorFamily, "mergeVectorIndexes", spark, shardPaths,
+      outPath, ttlMs)
 
   /** MERGE shard CORPUS (MinHash-LSH) indexes —
     * [[mergeVectorIndexes]]' lexical twin: consolidate cross-shard
@@ -1865,48 +1609,9 @@ object IndexStore {
     */
   def mergeCorpusIndexes(
       spark: SparkSession, shardPaths: Seq[String], outPath: String,
-      ttlMs: Long = DefaultLeaseTtlMs): Long = {
-    requireShardPaths(spark, "mergeCorpusIndexes", shardPaths, outPath)
-    withShardLeases(spark, shardPaths, "mergeCorpusIndexes", ttlMs) { verifyShardLeases =>
-      val metas = shardPaths.map(p => metaOf(spark, p, "corpus"))
-      val lshKeys = Seq("shingle_size", "num_hashes", "num_bands")
-      require(metas.map(m => lshKeys.map(m)).distinct.size == 1,
-        "IndexStore.mergeCorpusIndexes: shards were built with different " +
-          "LSH parameters (shingle_size/num_hashes/num_bands must match " +
-          "— band keys are only comparable under one signature scheme); " +
-          "rebuild the divergent shard with the shared parameters")
-      val m = metas.head
-      val pairs = shardPaths.map { p =>
-        val dir = tableDirs(spark, p)
-        val sets = readTable(spark, p, dir, "sets")
-        val rawMembers = readTable(spark, p, dir, "members")
-        requireMemberCoverage(rawMembers, sets, "corpus_id", "sets", p)
-        applyDeletes(rawMembers, readDeletes(spark, p, dir), "member_id")
-          .join(sets.select(col("corpus_id"), col("text")), Seq("corpus_id"))
-          .select(col("text"), col("member_id"))
-      }.reduce(_.unionByName(_))
-      val n = requireDisjointMembers("mergeCorpusIndexes", pairs,
-        "member_id")
-      val gc = Dedup.textGroups(pairs, "member_id", "text")
-      val (bands, sets, members) = Dedup.corpusTablesFromGroups(gc,
-        m("shingle_size").toInt, m("num_hashes").toInt, m("num_bands").toInt)
-      withIndexLease(spark, outPath, "mergeCorpusIndexes", ttlMs) {
-        // shard leases re-verified at the last instant before the
-        // output becomes real — an over-TTL merge aborts loudly here
-        verifyShardLeases()
-        resetGenerations(spark, outPath)
-        bands.repartition(col("band_hash"))
-          .write.mode("overwrite").parquet(s"$outPath/bands")
-        sets.repartition(col("corpus_id"))
-          .write.mode("overwrite").parquet(s"$outPath/sets")
-        members.repartition(col("corpus_id"))
-          .write.mode("overwrite").parquet(s"$outPath/members")
-        // meta LAST — the rebuild's commit record (see [[resetGenerations]])
-        writeMeta(spark, outPath, m.toSeq)
-      }
-      n
-    }
-  }
+      ttlMs: Long = DefaultLeaseTtlMs): Long =
+    mergeFamily(CorpusFamily, "mergeCorpusIndexes", spark, shardPaths,
+      outPath, ttlMs)
 
   // ---------------------------------------------------------------
   // Tombstone deletes — every index kind (takedown / right-to-erasure)
@@ -2112,14 +1817,14 @@ object IndexStore {
   private case object Untouched extends Fold
 
   /** One index kind's storage facts — the single statement the
-    * kind-generic verbs ([[deleteFrom]], [[vacuum]], [[replace]],
-    * [[compactIndex]], [[describeIndex]]) and the kind dispatch
-    * ([[kindOf]]) read:
+    * kind-generic verbs ([[publish]], [[deleteFrom]], [[vacuum]],
+    * [[replace]], [[compactIndex]], [[describeIndex]], [[checkIndex]])
+    * and the kind dispatch ([[kindOf]]) read:
     *  - `tables`: each raw table with its probe join key — the key it
     *    is clustered by on every write, kept by compaction's and
-    *    vacuum's rewrites — and its [[Fold]]. Listed in compaction
-    *    order; a vacuum rewrites them in REVERSE (the live-id table
-    *    first).
+    *    vacuum's rewrites — and its [[Fold]]. Listed in publish and
+    *    compaction order; a vacuum rewrites them in REVERSE (the
+    *    live-id table first).
     *  - `idTable`.`idCol`: where the LIVE member ids are read; `idCol`
     *    (doc_id / member_id / id) also names the tombstone column.
     *    Every kind has the OPTIONAL `deletes` table keyed by it —
@@ -2150,7 +1855,8 @@ object IndexStore {
       ("members", "corpus_id", DropDeleted)),
     "members", "member_id",
     "deleteFromCorpusIndex", "vacuumCorpusIndex", "replaceCorpusDocs",
-    appendCorpusIndexBody, Some(mergeCorpusIndexes _))
+    appendFamilyBody(CorpusFamily, _, _, _, _, _, _),
+    Some(mergeCorpusIndexes _))
 
   private val MediaKind = IndexKind("media",
     Seq(("bands", "band_hash", KeepLiveFamilies("dh")),
@@ -2165,7 +1871,8 @@ object IndexStore {
       ("members", "rep_id", DropDeleted)),
     "members", "member_id",
     "deleteFromVectorIndex", "vacuumVectorIndex", "replaceVectorMembers",
-    appendVectorIndexBody, Some(mergeVectorIndexes _))
+    appendFamilyBody(VectorFamily, _, _, _, _, _, _),
+    Some(mergeVectorIndexes _))
 
   private val IvfKind = IndexKind("ivf",
     Seq(("assign", "list_id", DropDeleted),
@@ -2179,6 +1886,87 @@ object IndexStore {
     "doclen", "doc_id",
     "deleteFromTextIndex", "vacuumTextIndex", "replaceTextDocs",
     appendTextIndexBody, Some(mergeTextIndexes _))
+
+  /** The facts that make the corpus and vector kinds ONE exact-dup
+    * family lifecycle — the same algorithm under different names. A
+    * group table holds one row per family: its rep id (`groupKey`) and
+    * the exact `value` every member shares (the equi-join key appends
+    * merge on); the band table holds `bandsKey` (a meta param) rows per
+    * group that `bandOwners` keeps; members are (groupKey, member_id).
+    *  - `params`: the build parameters meta records, in save order;
+    *    `paramMismatch` is the merge's raise when shards disagree.
+    *  - `group`: the grouping rule, (rows, idCol, valueCol) →
+    *    (id, `grouped`, members) with rep = min member id; `tables`
+    *    derives (bands, groups, members) from groups and `bandRows` the
+    *    band rows alone (the torn-append heal), both from meta params.
+    *  - `cap`: the load-time bucket cap assembling the probe index.
+    *  - `appendOp`: the public append's op (its lease and the healable
+    *    finding's recovery); `valueNoun` names what an orphan lost.
+    * [[saveFamily]], [[loadFamily]], [[appendFamilyBody]],
+    * [[mergeFamily]] and [[familyFindings]] are written once over it.
+    */
+  private final case class DupFamily[I](
+      kind: IndexKind,
+      groupTable: String,
+      groupKey: String,
+      value: String,
+      grouped: String,
+      bandTable: String,
+      bandsKey: String,
+      params: Seq[String],
+      paramMismatch: String,
+      group: (DataFrame, String, String) => DataFrame,
+      tables: (DataFrame, Map[String, String]) => (DataFrame, DataFrame, DataFrame),
+      bandRows: (DataFrame, Map[String, String]) => DataFrame,
+      bandOwners: DataFrame => DataFrame,
+      cap: (DataFrame, DataFrame, DataFrame, Int) => I,
+      appendOp: String,
+      valueNoun: String) {
+    /** `tables` in [[IndexKind]] descriptor order. */
+    def build(groups: DataFrame, m: Map[String, String]): Seq[DataFrame] = {
+      val (bands, groupRows, members) = tables(groups, m)
+      Seq(bands, groupRows, members)
+    }
+  }
+
+  // A shingle-less set legitimately owns zero band rows, so it is
+  // excluded from the band-coverage identity, the heal and the finding
+  // (this library's own writers never produce one: null text is dropped
+  // at collapse and shingling non-null text always yields ≥1 shingle —
+  // the filter is defense against external/legacy table writers).
+  private val CorpusFamily: DupFamily[Dedup.CorpusIndex] = DupFamily(
+    CorpusKind,
+    "sets", "corpus_id", "text", "__text", "bands", "num_bands",
+    Seq("shingle_size", "num_hashes", "num_bands"),
+    "IndexStore.mergeCorpusIndexes: shards were built with different " +
+      "LSH parameters (shingle_size/num_hashes/num_bands must match " +
+      "— band keys are only comparable under one signature scheme); " +
+      "rebuild the divergent shard with the shared parameters",
+    Dedup.textGroups,
+    (g, m) => Dedup.corpusTablesFromGroups(g, m("shingle_size").toInt,
+      m("num_hashes").toInt, m("num_bands").toInt),
+    (g, m) => Dedup.corpusBandRows(g, m("shingle_size").toInt,
+      m("num_hashes").toInt, m("num_bands").toInt),
+    _.where(size(col("sh")) > 0),
+    Dedup.capCorpusTables,
+    "appendCorpusIndex", "text")
+
+  private val VectorFamily: DupFamily[Similarity.VectorIndex] = DupFamily(
+    VectorKind,
+    "reps", "rep_id", "v", "v", "blocks", "num_blocks",
+    Seq("dim", "num_blocks", "planes_per_block", "seed"),
+    "IndexStore.mergeVectorIndexes: shards were built with different " +
+      "hyperplane geometry (dim/num_blocks/planes_per_block/seed " +
+      "must match — block keys are only comparable under one set of " +
+      "planes); rebuild the divergent shard with the shared geometry",
+    vecGroups,
+    (g, m) => Similarity.vectorTablesFromGroups(g, m("dim").toInt,
+      m("num_blocks").toInt, m("planes_per_block").toInt, m("seed").toLong),
+    (g, m) => Similarity.vectorBlockRows(g, m("dim").toInt,
+      m("num_blocks").toInt, m("planes_per_block").toInt, m("seed").toLong),
+    identity,
+    Similarity.capVectorTables,
+    "appendVectorIndex", "vector")
 
   private val kinds: Map[String, IndexKind] =
     Seq(CorpusKind, MediaKind, VectorKind, IvfKind, TextKind)
@@ -2250,6 +2038,161 @@ object IndexStore {
           unfolded
         }
       }
+    }
+
+  /** Every exact-dup family's save* op: group the rows, derive the
+    * tables with `values` as the build params (in `params` order) and
+    * [[publish]] them under the lease `op` names.
+    */
+  private def saveFamily(
+      f: DupFamily[_], rows: DataFrame, idCol: String, valueCol: String,
+      path: String, op: String, values: Any*): Unit = {
+    val params = f.params.zip(values.map(_.toString))
+    publish(f.kind, rows.sparkSession, path, op, params)(
+      f.build(f.group(rows, idCol, valueCol), params.toMap))
+  }
+
+  /** Every exact-dup family's load: member coverage checked on the RAW
+    * members when `check` is on — a fully-deleted group legitimately
+    * has a group row and zero LIVE members, a tombstone state, not a
+    * torn append (vacuum prunes the group) — then the bucket cap over
+    * the current band table with tombstoned members dropped.
+    */
+  private def loadFamily[I](
+      f: DupFamily[I], spark: SparkSession, path: String,
+      maxBucketSize: Int, check: Boolean): I = {
+    metaOf(spark, path, f.kind.name)
+    val dir = tableDirs(spark, path)
+    val groups = readTable(spark, path, dir, f.groupTable)
+    val members = readTable(spark, path, dir, "members")
+    if (check)
+      requireMemberCoverage(members, groups, f.groupKey, f.groupTable, path)
+    f.cap(readTable(spark, path, dir, f.bandTable), groups,
+      applyDeletes(members, readDeletes(spark, path, dir), "member_id"),
+      maxBucketSize)
+  }
+
+  /** Every exact-dup family's public append: [[appendFamilyBody]] under
+    * the lease `appendOp` names.
+    */
+  private def appendFamily(
+      f: DupFamily[_], newRows: DataFrame, idCol: String, valueCol: String,
+      path: String): Unit = {
+    val spark = newRows.sparkSession
+    withIndexLease(spark, path, f.appendOp) {
+      appendFamilyBody(f, spark, newRows, idCol, valueCol, path, f.appendOp)
+    }
+  }
+
+  /** Every exact-dup family's append body, lease assumed HELD by the
+    * caller ([[replace]] composes it under its one lease). Crash
+    * posture as [[appendCorpusIndex]]'s scaladoc states: members
+    * FIRST, then groups, then bands, with the torn groups-without-bands
+    * shape healed by every append.
+    */
+  private def appendFamilyBody(
+      f: DupFamily[_], spark: SparkSession, newRows: DataFrame,
+      idCol: String, valueCol: String, path: String, op: String): Unit = {
+    val m = metaOf(spark, path, f.kind.name)
+    // one manifest resolution for the whole append: reads and writes
+    // must hit the SAME generation (the exclusivity-vs-compaction
+    // contract of [[compactIndex]]; the fence after the writes converts
+    // a violation to a loud raise instead of silent row loss)
+    val (resolved, dir) = resolvedDirs(spark, path)
+    appendFenceTestHook()
+    val oldGroups = readTable(spark, path, dir, f.groupTable)
+    val oldMembers = readTable(spark, path, dir, "members")
+    val gn = f.group(newRows, idCol, valueCol)
+    val idsGuard = idsAfterAgg(graveyardUnion(spark, path, dir,
+        oldMembers.select(col("member_id"))),
+      gn.select(explode(col("members")).as("member_id")))
+    // exact-value merge: members of matched groups file under the
+    // EXISTING rep (no new band/group rows — an identical value means
+    // the stored ones already cover it)
+    val matched = gn
+      .join(oldGroups.select(col(f.value).as(f.grouped), col(f.groupKey)),
+        Seq(f.grouped))
+      .select(col(f.groupKey), explode(col("members")).as("member_id"))
+    val novel = gn
+      .join(oldGroups.select(col(f.value).as(f.grouped)), Seq(f.grouped),
+        "left_anti")
+      // consumed by all three table derivations below — materialize the
+      // anti-join once
+      .localCheckpoint(true)
+    // torn-append heal: stored groups with no band rows (a crash between
+    // a prior groups append and its bands append) are invisible to every
+    // probe but carry their value — recompute their bands with the
+    // builder's own derivation. Fast path first: every band-owning
+    // group has exactly `bandsKey` band rows, so
+    // count(bands) == bandsKey × count(owners) proves full coverage
+    // with two shuffle-free counts and the heal anti-join is skipped
+    // entirely (filter-false prunes it to an empty relation — the
+    // stored files are never even listed, so there is no re-list race
+    // with the writes below). On an identity mismatch the anti-join is
+    // materialized BEFORE the directory-mutating writes (same race
+    // rationale as `novel`).
+    val oldBands = readTable(spark, path, dir, f.bandTable)
+    val owners = f.bandOwners(oldGroups)
+    // ONE driver action carries BOTH pre-write guards (round-17,
+    // guide §2.4): the monotone-id aggregate and the band-coverage
+    // count identity evaluate in a single head(); the id guard is
+    // checked first, exactly as the sequential form raised it first —
+    // both still fire before anything mutates.
+    val covered = idsGuard
+      .crossJoin(oldBands.select(lit(0).as("__t"))
+        .unionByName(owners.select(lit(1).as("__t")))
+        .agg(count(when(col("__t") === 0, lit(1))).as("__b"),
+          count(when(col("__t") === 1, lit(1))).as("__g")))
+      .head()
+    requireIdsAfterChecked(covered.getBoolean(0), op)
+    val orphaned0 = owners
+      .select(col(f.groupKey).as("id"), col(f.value).as(f.grouped))
+      .join(oldBands.select(col(f.groupKey).as("id")).distinct(),
+        Seq("id"), "left_anti")
+    val orphaned =
+      if (covered.getLong(1) == m(f.bandsKey).toLong * covered.getLong(2))
+        orphaned0.where(lit(false))
+      else orphaned0.localCheckpoint(true)
+    val (bands, groups, members) = f.tables(novel, m)
+    // members FIRST — see crash posture in [[appendCorpusIndex]]
+    members.unionByName(matched).repartition(col(f.groupKey))
+      .write.mode("append").parquet(dir("members"))
+    groups.repartition(col(f.groupKey))
+      .write.mode("append").parquet(dir(f.groupTable))
+    bands.unionByName(f.bandRows(orphaned, m))
+      .repartition(col("band_hash"))
+      .write.mode("append").parquet(dir(f.bandTable))
+    requireGenerationsUnmoved(spark, path, resolved,
+      Seq("members", f.groupTable, f.bandTable), op)
+  }
+
+  /** Every exact-dup family's shard merge (see [[mergeVectorIndexes]]):
+    * shards must agree on the build params; each shard's member
+    * coverage is checked on RAW members, as loads do; the live
+    * (value, member) pairs are regrouped with the single build's own
+    * rule and the tables re-derived with its own builder, so merge ≡
+    * save over the concatenated rows, table for table.
+    */
+  private def mergeFamily(
+      f: DupFamily[_], op: String, spark: SparkSession,
+      shardPaths: Seq[String], outPath: String, ttlMs: Long): Long =
+    mergeShards(f.kind, op, spark, shardPaths, outPath, ttlMs) {
+      val metas = shardPaths.map(p => metaOf(spark, p, f.kind.name))
+      require(metas.map(m => f.params.map(m)).distinct.size == 1,
+        f.paramMismatch)
+      val m = metas.head
+      val pairs = shardPaths.map { p =>
+        val dir = tableDirs(spark, p)
+        val groups = readTable(spark, p, dir, f.groupTable)
+        val rawMembers = readTable(spark, p, dir, "members")
+        requireMemberCoverage(rawMembers, groups, f.groupKey, f.groupTable, p)
+        applyDeletes(rawMembers, readDeletes(spark, p, dir), "member_id")
+          .join(groups.select(col(f.groupKey), col(f.value)), Seq(f.groupKey))
+          .select(col(f.value), col("member_id"))
+      }.reduce(_.unionByName(_))
+      (requireDisjointMembers(op, pairs, "member_id"),
+        f.params.map(k => k -> m(k)),
+        f.build(f.group(pairs, "member_id", f.value), m))
     }
 
   // ---------------------------------------------------------------
@@ -2816,13 +2759,13 @@ object IndexStore {
   }
 
   /** Reset an index root to the generation-0 layout before a full
-    * rebuild (every save* builder): drop `meta/`, then the manifest —
-    * the plain table dirs the builder is about to overwrite become
-    * active again — then clear stale generation dirs and legacy
-    * compaction debris. META FIRST, and the builders re-write it LAST
-    * (their commit record): every load resolves the kind through
-    * `meta/`, so a crash anywhere between this reset and the builder's
-    * final writeMeta makes loads fail loudly on the missing meta
+    * rebuild ([[publish]]: every save* builder and merge): drop
+    * `meta/`, then the manifest — the plain table dirs the builder is
+    * about to overwrite become active again — then clear stale
+    * generation dirs and legacy compaction debris. META FIRST, and
+    * [[publish]] re-writes it LAST (the commit record): every load
+    * resolves the kind through `meta/`, so a crash anywhere between
+    * this reset and the final writeMeta makes loads fail loudly on the missing meta
     * instead of silently serving the reactivated generation-0 dirs —
     * which, after a compaction, are stale (missing every
     * post-compaction append) or gone entirely. A crash mid-reset
@@ -2956,51 +2899,14 @@ object IndexStore {
     * cadence, not per probe (loads already fast-path the same checks).
     */
   def checkIndex(spark: SparkSession, path: String): Seq[CheckFinding] = {
-    val kind = readMeta(spark, path).getOrElse("kind",
-      throw new IllegalArgumentException(
-        s"IndexStore.checkIndex: $path/meta carries no index kind"))
+    val kind = kindOf(spark, path, "checkIndex")
     val dir = tableDirs(spark, path)
-    def orphanCount(
-        members: DataFrame, keyCol: String, groups: DataFrame): Long =
-      members.select(col(keyCol)).distinct()
-        .join(groups.select(col(keyCol)), Seq(keyCol), "left_anti")
-        .count()
-    kind match {
-      case "corpus" =>
-        val sets = readTable(spark, path, dir, "sets")
-        val members = readTable(spark, path, dir, "members")
-        val bands = readTable(spark, path, dir, "bands")
-        val lost = orphanCount(members, "corpus_id", sets)
-        val unbanded = orphanCount(
-          sets.where(size(col("sh")) > 0), "corpus_id",
-          bands.select(col("corpus_id")).distinct())
-        Seq(
-          if (lost > 0) Some(CheckFinding("members", "group-key-coverage",
-            "unhealable", s"$lost member group(s) have no sets row — " +
-              "group text lost; rebuild or prune")) else None,
-          if (unbanded > 0) Some(CheckFinding("sets", "band-coverage",
-            "healable", s"$unbanded set(s) lack band rows — " +
-              "the next appendCorpusIndex heals them")) else None).flatten
-      case "vector" =>
-        val reps = readTable(spark, path, dir, "reps")
-        val members = readTable(spark, path, dir, "members")
-        val blocks = readTable(spark, path, dir, "blocks")
-        val lost = orphanCount(members, "rep_id", reps)
-        val unblocked = orphanCount(reps, "rep_id",
-          blocks.select(col("rep_id")).distinct())
-        Seq(
-          if (lost > 0) Some(CheckFinding("members", "group-key-coverage",
-            "unhealable", s"$lost member group(s) have no reps row — " +
-              "group vector lost; rebuild or prune")) else None,
-          if (unblocked > 0) Some(CheckFinding("reps", "block-coverage",
-            "healable", s"$unblocked rep(s) lack block rows — " +
-              "the next appendVectorIndex heals them")) else None).flatten
+    kind.name match {
+      case "corpus" => familyFindings(CorpusFamily, spark, path, dir)
+      case "vector" => familyFindings(VectorFamily, spark, path, dir)
       case "media" =>
-        val members = readTable(spark, path, dir, "members")
-        val bands = readTable(spark, path, dir, "bands")
-        val unbanded = members.select(col("dh")).distinct()
-          .join(bands.select(col("dh")).distinct(), Seq("dh"), "left_anti")
-          .count()
+        val unbanded = orphanCount(readTable(spark, path, dir, "members"),
+          "dh", readTable(spark, path, dir, "bands").select(col("dh")).distinct())
         if (unbanded > 0) Seq(CheckFinding("members", "band-coverage",
           "healable", s"$unbanded signature(s) lack band rows — " +
             "the next appendMediaIndex heals them"))
@@ -3047,9 +2953,7 @@ object IndexStore {
         // referential integrity: an assignment pointing at a list with
         // no centroid row can never be probed (search selects lists by
         // centroid distance) — its vector silently vanished from recall
-        val badRefs = assign.select(col("list_id")).distinct()
-          .join(centroids.select(col("list_id")), Seq("list_id"),
-            "left_anti").count()
+        val badRefs = orphanCount(assign, "list_id", centroids)
         // meta n_lists is informational (loads derive the true count
         // from the centroids table), but a drifted label misleads the
         // operator sizing nProbe — e.g. a crash between rebuildIvf's
@@ -3073,9 +2977,42 @@ object IndexStore {
                 "label is informational), but rerun rebuildIvf or fix " +
                 "the meta row so operators sizing nProbe see the truth"))
           else None).flatten
-      case k => throw new IllegalArgumentException(
-        s"IndexStore.checkIndex: unknown index kind '$k'")
     }
+  }
+
+  /** How many distinct `keyCol` values of `rows` have no row in
+    * `targets` — the coverage count behind [[checkIndex]]'s findings.
+    */
+  private def orphanCount(
+      rows: DataFrame, keyCol: String, targets: DataFrame): Long =
+    rows.select(col(keyCol)).distinct()
+      .join(targets.select(col(keyCol)), Seq(keyCol), "left_anti")
+      .count()
+
+  /** An exact-dup family's [[checkIndex]] findings: member groups with
+    * no group row (`unhealable` — the group value is lost) and
+    * band-owning groups with no band rows (`healable` — the next
+    * append backfills them).
+    */
+  private def familyFindings(
+      f: DupFamily[_], spark: SparkSession, path: String,
+      dir: String => String): Seq[CheckFinding] = {
+    val groups = readTable(spark, path, dir, f.groupTable)
+    val members = readTable(spark, path, dir, "members")
+    val bands = readTable(spark, path, dir, f.bandTable)
+    val lost = orphanCount(members, f.groupKey, groups)
+    val unbanded = orphanCount(f.bandOwners(groups), f.groupKey,
+      bands.select(col(f.groupKey)).distinct())
+    // singular nouns: sets → set, blocks → block, …
+    val (group, band) =
+      (f.groupTable.stripSuffix("s"), f.bandTable.stripSuffix("s"))
+    Seq(
+      if (lost > 0) Some(CheckFinding("members", "group-key-coverage",
+        "unhealable", s"$lost member group(s) have no ${f.groupTable} " +
+          s"row — group ${f.valueNoun} lost; rebuild or prune")) else None,
+      if (unbanded > 0) Some(CheckFinding(f.groupTable, s"$band-coverage",
+        "healable", s"$unbanded $group(s) lack $band rows — " +
+          s"the next ${f.appendOp} heals them")) else None).flatten
   }
 
   /** Rewrite the given tables as their NEXT generations and publish
@@ -3270,14 +3207,11 @@ object IndexStore {
       retainAge: Option[java.time.Duration] = None): Unit = {
     val spark = corpus.sparkSession
     withIndexLease(spark, path, "rebuildIvf") {
-      import spark.implicits._
       val m = metaOf(spark, path, "ivf")
       val k = if (nLists > 0) nLists else m("n_lists").toInt
       val model = IvfIndex.build(corpus, idCol, vecCol, k, seed,
         trainFraction, maxTrainRows, kmeansMaxIter)
-      val cdf = model.centroids.zipWithIndex
-        .map { case (c, i) => (i, c.toSeq) }.toSeq
-        .toDF("list_id", "centroid").coalesce(1)
+      val cdf = centroidRows(spark, model.centroids).coalesce(1)
       swapGenerations(spark, path, retainGenerations, retainAge)(Seq(
         "centroids" -> (d => cdf.write.mode("overwrite").parquet(d)),
         "assign" -> (d => model.assignments.repartition(col("list_id"))

@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
   * kinds: the path-only dispatchers delete and vacuum every kind, the
   * vacuum folds each tombstone once, and a vacuumed index equals a
   * fresh save over its live rows — table for table, in the save-time
-  * column order. A kindless or unknown meta raises naming the op.
+  * column order. A merged index records the same meta as a single
+  * build. A kindless or unknown meta raises naming the op.
   */
 class IndexKindSpec extends SparkSuite {
   import spark.implicits._
@@ -101,6 +102,47 @@ class IndexKindSpec extends SparkSuite {
       }
     }
 
+  for (k <- Seq("text", "media", "vector", "corpus"))
+    test(s"$k: a merged index records the same meta keys and table " +
+        "schemas as a single build") {
+      val kind = kinds.find(_.name == k).get
+      val (lo, hi, single, out) = (tmp(), tmp(), tmp(), tmp())
+      kind.save(kind.rows.where(col("id") <= 3), lo)
+      kind.save(kind.rows.where(col("id") > 3), hi)
+      kind.save(kind.rows, single)
+      assert(IndexStore.mergeIndexes(spark, Seq(lo, hi), out) ==
+        kind.rows.count())
+      val (got, want) =
+        (IndexStore.readMeta(spark, out), IndexStore.readMeta(spark, single))
+      assert(got.keySet == want.keySet, s"$k meta keys")
+      def fields(ddl: String) =
+        org.apache.spark.sql.types.StructType.fromDDL(ddl).fields
+          .map(f => (f.name, f.dataType)).toSeq
+      for (key <- want.keys.filter(_.startsWith("ddl_")))
+        assert(fields(got(key)) == fields(want(key)), s"$k $key")
+      assert(kind.tables.forall(t => want.contains(s"ddl_$t")))
+    }
+
+  test("vector: checkIndex reports members without reps as unhealable " +
+      "and reps without blocks as healable") {
+    val path = tmp()
+    kinds.find(_.name == "vector").get.save(withFamilies(vec).toDF("id", "v"),
+      path)
+    assert(IndexStore.checkIndex(spark, path).isEmpty)
+    def findings() = IndexStore.checkIndex(spark, path)
+      .map(f => (f.table, f.check, f.severity, f.detail))
+    val lost = ("members", "group-key-coverage", "unhealable",
+      "1 member group(s) have no reps row — group vector lost; rebuild or " +
+        "prune")
+    Seq((99L, 99L)).toDF("rep_id", "member_id").write.mode("append")
+      .parquet(IndexStore.tableDir(spark, path, "members"))
+    assert(findings() == Seq(lost))
+    Seq((98L, vec(9))).toDF("rep_id", "v").write.mode("append")
+      .parquet(IndexStore.tableDir(spark, path, "reps"))
+    assert(findings() == Seq(lost, ("reps", "block-coverage", "healable",
+      "1 rep(s) lack block rows — the next appendVectorIndex heals them")))
+  }
+
   test("a kindless or unknown meta raises naming the dispatching op") {
     def indexWithMeta(kv: (String, String)): String = {
       val p = tmp()
@@ -116,7 +158,8 @@ class IndexKindSpec extends SparkSuite {
       "mergeIndexes" -> (p => IndexStore.mergeIndexes(spark, Seq(p, tmp()),
         tmp())),
       "compactIndex" -> (p => IndexStore.compactIndex(spark, p)),
-      "describeIndex" -> (p => IndexStore.describeIndex(spark, p)))
+      "describeIndex" -> (p => IndexStore.describeIndex(spark, p)),
+      "checkIndex" -> (p => IndexStore.checkIndex(spark, p)))
     for ((op, run) <- ops) {
       val kindless = indexWithMeta("built_by" -> "hand")
       val e1 = intercept[IllegalArgumentException](run(kindless))
