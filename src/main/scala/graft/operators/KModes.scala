@@ -1,13 +1,15 @@
 package graft.operators
 
-import graft.functions.Distances
+import graft.functions.{Distances, HammingKernels}
 import org.apache.spark.ml.{Estimator, Model}
 import org.apache.spark.ml.param._
 import org.apache.spark.ml.util.Identifiable
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** K-modes clustering for categorical data, Spark-native.
   *
@@ -16,15 +18,18 @@ import org.apache.spark.sql.types._
   * (mirrors `ml.clustering.KMeans` shape, SURVEY.md §8.1). Two fit
   * algorithms behind `initMode`:
   *
-  *  - `global` (default): plain distributed Lloyd. Per iteration: one
-  *    narrow, codegen-friendly assignment stage (centers are a literal —
-  *    k ≤ 64 tiny arrays folded into the expression, the degenerate
-  *    broadcast join) + ONE shuffle (`groupBy(prediction)` with the
-  *    one-pass [[ModeArrayAgg]], map-side partial aggregation ⇒
-  *    shuffle volume bounded by k × n_features × |vocab| counters, not by
-  *    row count). Deterministic and partition-invariant — this is the
-  *    variant that scales to 100 TB: per-iteration cost is one scan + one
-  *    bounded shuffle; driver only ever sees k rows.
+  *  - `global` (default): plain distributed Lloyd. Each iteration is
+  *    ONE job with no shuffle: a `treeAggregate` over the scan in which
+  *    every partition assigns its rows to the nearest of the k centers
+  *    (the same [[graft.functions.HammingKernels]] `transform` runs) and
+  *    folds them into per-cluster row counts, distance sums and
+  *    [[ModeCounts]] tables. A partition's result is bounded by
+  *    k × n_features × the distinct values in that partition, never by
+  *    its row count. At a few partitions the driver merges them all; at
+  *    many, depth 2 adds one executor-side merge level (a shuffle of
+  *    partition results, not of rows) so the driver merges ~√P.
+  *    Deterministic and partition-invariant — this is the variant that
+  *    scales to 100 TB: per-iteration cost is one scan.
   *
   *  - `ensemble` (reference fidelity): stage 1 runs [[LocalKModes]]
   *    independently inside each partition via `mapPartitions`
@@ -112,7 +117,9 @@ class KModes(override val uid: String) extends Estimator[KModesModel] with KMode
 
   override def fit(dataset: Dataset[_]): KModesModel = {
     transformSchema(dataset.schema)
-    val df = dataset.toDF()
+    // A row whose features array is null has no category to count: both
+    // fits skip it, as `transform` (null prediction) and `computeCost` do.
+    val df = dataset.toDF().where(col($(featuresCol)).isNotNull)
     val model = $(initMode) match {
       case "ensemble" => fitEnsemble(df)
       case _          => fitGlobal(df)
@@ -140,10 +147,12 @@ class KModes(override val uid: String) extends Estimator[KModesModel] with KMode
     import spark.implicits._
 
     // Deterministic seeded init (R9 global form): k distinct feature rows in
-    // seeded-hash order. One job; the distinct is a bounded shuffle of the
-    // (tiny) feature-vocabulary cross-product, not of raw rows.
-    var centers: Array[Seq[String]] = df
-      .select(feats.as("f"))
+    // seeded-hash order. The distinct shuffles the feature arrays of all
+    // rows, and most rows are distinct once there are several features
+    // (62,258 of the benchmark table's 100,000). Unless a cluster empties
+    // and is reseeded, this exchange is the fit's only row shuffle.
+    val input = df.select(feats.as("f"))
+    var centers: Array[Seq[String]] = input
       .distinct()
       .orderBy(initOrderKeys: _*)
       .limit($(k))
@@ -154,34 +163,29 @@ class KModes(override val uid: String) extends Estimator[KModesModel] with KMode
     var iter = 0
     var converged = false
     var cost = 0.0
-    val input = df.select(feats.as("f"))
+    val rows = input.queryExecution.toRdd
     while (iter < $(maxIter) && !converged) {
-      val cLit = typedlit(centers.map(_.toSeq).toSeq)
-      val a = Distances.assign(col("f"), cLit)
-      // one shuffle: groupBy(prediction) + one-pass multi-column mode
-      val stats = input
-        .select(col("f"), a.getField("prediction").as("p"), a.getField("min_dist").as("d"))
-        .groupBy(col("p"))
-        .agg(
-          ArrayModeAggregator.modeArray(col("f")).as("center"),
-          count(lit(1)).as("n"),
-          sum(col("d")).as("sumd"))
-        .collect()
+      // one job: each partition folds its rows into a LloydPass; the
+      // driver merges the partition results
+      val cs = KModes.centersData(centers)
+      val pass = rows.treeAggregate(new LloydPass(centers.length))(
+        (s, r) => s.add(r.getArray(0), cs), _.merge(_), depth = 2)
 
-      val byId = stats.map(r => r.getInt(0) -> r).toMap
-      val n = stats.map(_.getLong(2)).sum.toDouble
-      cost = if (n == 0) 0.0 else stats.map(_.getLong(3)).sum / n
+      val n = pass.n.sum.toDouble
+      cost = if (n == 0) 0.0 else pass.dist.sum / n
 
       val newCenters = centers.indices.map { i =>
-        byId.get(i).map(_.getSeq[String](1)).getOrElse(centers(i))
+        if (pass.n(i) == 0) centers(i)
+        else ModeCounts.modes(pass.tables(i)).map(_.toString).toSeq
       }.toArray
 
-      val emptyIds = centers.indices.filterNot(byId.contains)
+      val emptyIds = centers.indices.filter(pass.n(_) == 0)
       val reseeded =
         if (emptyIds.isEmpty) newCenters
         else {
           // deterministic reseed: records farthest from their center,
           // (min_dist DESC, hash ASC), distinct, one bounded job (SURVEY §8.3)
+          val a = Distances.assign(col("f"), typedlit(centers.map(_.toSeq).toSeq))
           val far = input
             .select(col("f"), a.getField("min_dist").as("d"))
             .distinct()
@@ -235,6 +239,7 @@ class KModes(override val uid: String) extends Estimator[KModesModel] with KMode
         }
       }
       .collect()
+    require(stage1.exists(_._2 > 0), "KModes.fit: no rows")
     val undersized = stage1.filter(t => t._2 >= 0 && t._2 < kk)
     require(undersized.isEmpty,
       s"ensemble fit: every partition needs >= k=$kk records, got " +
@@ -308,13 +313,9 @@ class KModesModel(
     * executes, so distance and tie-break semantics cannot diverge.
     */
   def predict(features: Seq[String]): Int = {
-    import org.apache.spark.sql.catalyst.util.GenericArrayData
-    import org.apache.spark.unsafe.types.UTF8String
-    val f = new GenericArrayData(features.map(v => UTF8String.fromString(
-      if (v == null) ArrayModeAggregator.NullSentinel else v)).toArray[Any])
-    val cs = new GenericArrayData(clusterCenters.map(c =>
-      new GenericArrayData(c.map(UTF8String.fromString).toArray[Any])).toArray[Any])
-    graft.functions.HammingKernels.assign(f, cs).getInt(0)
+    val f = KModes.arrayData(features.map(v =>
+      if (v == null) ArrayModeAggregator.NullSentinel else v))
+    HammingKernels.assign(f, KModes.centersData(clusterCenters.map(_.toSeq))).getInt(0)
   }
 
   /** Mean Hamming distance of `dataset` to its assigned centers (R13). */
@@ -336,6 +337,45 @@ object KModes {
     */
   private[operators] def meanHamming(ds: Dataset[_], f: Column, centers: Column): Double =
     ds.select(avg(Distances.assign(f, centers).getField("min_dist"))).head.getDouble(0)
+
+  private[operators] def arrayData(values: Seq[String]): ArrayData =
+    new GenericArrayData(values.map(UTF8String.fromString).toArray[Any])
+
+  /** Centers in the internal form [[HammingKernels.assign]] reads. */
+  private[operators] def centersData(centers: Seq[Seq[String]]): ArrayData =
+    new GenericArrayData(centers.map(arrayData).toArray[Any])
+}
+
+/** One global Lloyd pass over some rows: per cluster, the row count, the
+  * sum of Hamming distances to the assigned center and the
+  * [[ModeCounts]] tables of the rows' features. Its size is bounded by
+  * k × n_features × the distinct values seen, never by the row count.
+  */
+private final class LloydPass(k: Int) extends Serializable {
+  val n = new Array[Long](k)
+  val dist = new Array[Long](k)
+  val tables: Array[ModeCounts.Tables] = Array.fill(k)(Array.empty)
+
+  /** Assign `f` to its nearest center (ties to the lowest id) and count it. */
+  def add(f: ArrayData, centers: ArrayData): LloydPass = {
+    val a = HammingKernels.assign(f, centers)
+    val c = a.getInt(0)
+    n(c) += 1
+    dist(c) += a.getInt(1)
+    tables(c) = ModeCounts.add(tables(c), f)
+    this
+  }
+
+  def merge(o: LloydPass): LloydPass = {
+    var c = 0
+    while (c < k) {
+      n(c) += o.n(c)
+      dist(c) += o.dist(c)
+      tables(c) = ModeCounts.merge(tables(c), o.tables(c))
+      c += 1
+    }
+    this
+  }
 }
 
 /** Discoverability alias mirroring the reference's entry point

@@ -1,8 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.{Column, Encoder, functions => F}
+import org.apache.spark.sql.Column
 
 /** One-pass multi-column mode aggregation (SURVEY.md §5 "custom pieces",
   * §8.2 M3).
@@ -13,64 +11,15 @@ import org.apache.spark.sql.{Column, Encoder, functions => F}
   * The reference tie-breaks by Python dict iteration order
   * (nondeterministic); we define the deterministic rule
   * **(count DESC, value ASC)** so results are oracle-hashable (SURVEY §2).
-  *
-  * Spark-first design: a typed `Aggregator` whose buffer is one frequency
-  * map per attribute. Used through `functions.udaf` it runs as
-  * ObjectHashAggregate with map-side partial aggregation, so one
-  * `groupBy(cluster).agg(modeArray(features))` costs a single shuffle of
-  * k × n_features × |vocab| counters — not of the data. This is the
-  * scale-critical property at 100 TB: the shuffle volume is bounded by the
-  * (tiny) cardinality of the frequency tables, never by row count.
+  * The tables and the rule are [[ModeCounts]].
   */
-class ArrayModeAggregator
-    extends Aggregator[Seq[String], Seq[Map[String, Long]], Seq[String]] {
-
-  /** Arity is unknown until the first record; empty marks "no data yet". */
-  def zero: Seq[Map[String, Long]] = Seq.empty
-
-  def reduce(b: Seq[Map[String, Long]], a: Seq[String]): Seq[Map[String, Long]] =
-    if (a == null) b
-    else {
-      val base = if (b.isEmpty) Seq.fill(a.length)(Map.empty[String, Long]) else b
-      base.lazyZip(a).map { (m, v) =>
-        val key = if (v == null) ArrayModeAggregator.NullSentinel else v
-        m.updated(key, m.getOrElse(key, 0L) + 1L)
-      }
-    }
-
-  def merge(b1: Seq[Map[String, Long]], b2: Seq[Map[String, Long]]): Seq[Map[String, Long]] =
-    if (b1.isEmpty) b2
-    else if (b2.isEmpty) b1
-    else b1.lazyZip(b2).map { (m1, m2) =>
-      m2.foldLeft(m1) { case (m, (k, v)) => m.updated(k, m.getOrElse(k, 0L) + v) }
-    }
-
-  /** Deterministic tie-break: highest count wins, ties to the smallest value. */
-  def finish(b: Seq[Map[String, Long]]): Seq[String] =
-    b.map { m =>
-      if (m.isEmpty) null
-      else m.minBy { case (v, c) => (-c, v) }._1
-    }
-
-  def bufferEncoder: Encoder[Seq[Map[String, Long]]] = ExpressionEncoder()
-  def outputEncoder: Encoder[Seq[String]] = ExpressionEncoder()
-}
-
 object ArrayModeAggregator {
   val NullSentinel = "∅" // "∅" — null is its own category (SURVEY §2)
   val NullSentinelUtf8: org.apache.spark.unsafe.types.UTF8String =
     org.apache.spark.unsafe.types.UTF8String.fromString(NullSentinel)
 
-  /** Column form: `modeArray(featuresCol)` usable in `groupBy(...).agg`.
-    * Delegates to the native [[ModeArrayAgg]]; the typed-Aggregator
-    * implementation above is kept as the readable specification and as
-    * the cross-check in FunctionsSpec.
+  /** Column form: `modeArray(featuresCol)` usable in `groupBy(...).agg`;
+    * the native [[ModeArrayAgg]].
     */
   def modeArray(features: Column): Column = ModeArrayAgg.modeArray(features)
-
-  /** The original typed-Aggregator form (encoder-based, ~2 µs/row
-    * slower) — used by tests to cross-check the native aggregate.
-    */
-  def modeArrayUdaf(features: Column): Column =
-    F.udaf(new ArrayModeAggregator()).apply(features)
 }

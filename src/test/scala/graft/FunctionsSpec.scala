@@ -232,7 +232,7 @@ class FunctionsSpec extends SparkSuite {
     val df = rows.toDF("g", "features")
     val native = df.groupBy("g").agg(ArrayModeAggregator.modeArray(col("features")).as("m"))
       .orderBy("g").collect().map(_.getSeq[String](1)).toSeq
-    val udaf = df.groupBy("g").agg(ArrayModeAggregator.modeArrayUdaf(col("features")).as("m"))
+    val udaf = df.groupBy("g").agg(TypedArrayModeAggregator.modeArrayUdaf(col("features")).as("m"))
       .orderBy("g").collect().map(_.getSeq[String](1)).toSeq
     assert(native == udaf)
   }

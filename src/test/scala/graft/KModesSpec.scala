@@ -10,12 +10,12 @@ import scala.util.Random
 class KModesSpec extends SparkSuite {
   import spark.implicits._
 
-  private def plantedDf(n: Int, f: Int, groups: Int, seed: Int) = {
+  private def plantedDf(n: Int, f: Int, groups: Int, seed: Int, signal: Double = 0.9) = {
     val rnd = new Random(seed)
     val rows = Seq.tabulate(n) { i =>
       val g = i % groups
       Seq.tabulate(f) { j =>
-        if (rnd.nextDouble() < 0.9) s"g${g}v$j" else s"n${rnd.nextInt(3)}"
+        if (rnd.nextDouble() < signal) s"g${g}v$j" else s"n${rnd.nextInt(3)}"
       }
     }
     rows.toDF("features")
@@ -183,5 +183,75 @@ class KModesSpec extends SparkSuite {
     val a = model.transform(df).select("prediction").as[Int].collect().toSeq
     val b = loaded.transform(df).select("prediction").as[Int].collect().toSeq
     assert(a == b)
+  }
+
+  private def fitted(m: graft.operators.KModesModel) =
+    (m.clusterCenters.map(_.toSeq).toSeq, m.cost, m.iterations)
+
+  /** Spark jobs `body` submits, counted through its job group. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"kmodes-spec-${java.util.UUID.randomUUID}"
+    sc.setJobGroup(group, group)
+    try body finally sc.clearJobGroup()
+    // the status store fills from the listener bus in order: once a job
+    // submitted afterwards shows up, every job of `group` has too
+    val marker = s"$group-marker"
+    sc.setJobGroup(marker, marker)
+    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (sc.statusTracker.getJobIdsForGroup(marker).isEmpty &&
+      System.nanoTime() < deadline) Thread.sleep(10)
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
+  test("null feature arrays are skipped by both fits, like computeCost skips them") {
+    val clean = plantedDf(200, 4, 2, 71)
+    val nulls = Seq.fill(7)(null: Seq[String]).toDF("features")
+    val withNulls = clean.union(nulls)
+    val global = new KModes().setK(2).setMaxIter(10).setSeed(7L)
+    val m = global.fit(withNulls)
+    assert(fitted(m) == fitted(global.fit(clean)))
+    assert(math.abs(m.summary.cost - m.computeCost(withNulls)) < 1e-12)
+
+    val ens = new KModes().setK(2).setMaxIter(10).setSeed(7L).setInitMode("ensemble")
+    val parts = withNulls.repartition(2)
+    val e = ens.fit(parts)
+    assert(fitted(e) == fitted(ens.fit(parts.where(col("features").isNotNull))))
+    assert(math.abs(e.summary.cost - e.computeCost(parts)) < 1e-12)
+  }
+
+  test("empty input raises one error on both fits") {
+    val empty = Seq.empty[Seq[String]].toDF("features")
+    val allNull = Seq.fill(3)(null: Seq[String]).toDF("features")
+    for (df <- Seq(empty, empty.repartition(2), allNull);
+         mode <- Seq("global", "ensemble")) {
+      val err = intercept[IllegalArgumentException] {
+        new KModes().setK(2).setSeed(7L).setInitMode(mode).fit(df)
+      }
+      assert(err.getMessage.contains("KModes.fit: no rows"), s"$mode: ${err.getMessage}")
+    }
+  }
+
+  test("global fit is partition-invariant, through maxIter exits and reseeds") {
+    val df = plantedDf(120, 4, 2, 7, signal = 0.7)
+    def kmodes(maxIter: Int) = new KModes().setK(4).setMaxIter(maxIter).setSeed(7L)
+    // after one pass two centers are equal, so pass 2 finds the higher id
+    // empty and reseeds it
+    val first = kmodes(1).fit(df).clusterCenters.map(_.toSeq)
+    assert(first.distinct.length < first.length)
+    for (maxIter <- Seq(1, 2, 10)) {
+      val byLayout = Seq(df.coalesce(1), df.repartition(4), df.repartition(16))
+        .map(d => fitted(kmodes(maxIter).fit(d)))
+      assert(byLayout.distinct.length == 1, s"maxIter=$maxIter: $byLayout")
+    }
+  }
+
+  test("each global Lloyd pass is one Spark job") {
+    val df = plantedDf(200, 4, 3, 43)
+    def fit(maxIter: Int) = new KModes().setK(3).setMaxIter(maxIter).setSeed(7L).fit(df)
+    assert(fit(20).iterations > 3) // still unconverged after pass 3
+    val jobs = (1 to 3).map(i => jobsOf(fit(i)))
+    assert(jobs(1) - jobs(0) == 1 && jobs(2) - jobs(1) == 1, s"jobs by maxIter: $jobs")
   }
 }
