@@ -281,11 +281,67 @@ object IndexStore {
     * same contract. One broadcast 1-row aggregate, no extra shuffle.
     */
   private[graft] def preBatchMatches(
-      matches: DataFrame, batch: DataFrame, idCol: String): DataFrame = {
-    val mn = batch.agg(min(col(idCol)).as("__batch_min"))
-    matches.crossJoin(broadcast(mn))
-      .where(col("corpus_id") < col("__batch_min"))
-      .drop("__batch_min")
+      matches: DataFrame, batch: DataFrame, idCol: String): DataFrame =
+    preBatch(batch, idCol)(matches, "corpus_id")
+
+  /** The pre-batch filter behind [[preBatchMatches]] and
+    * [[ingestText]]'s relation-level restriction: the returned function
+    * keeps a relation's rows whose given column sorts strictly below
+    * the batch's minimum `idCol`. Every relation it filters shares the
+    * one broadcast min aggregate.
+    */
+  private def preBatch(
+      batch: DataFrame, idCol: String): (DataFrame, String) => DataFrame = {
+    val mn = broadcast(batch.agg(min(col(idCol)).as("__batch_min")))
+    (t, tCol) => t.crossJoin(mn)
+      .where(col(tCol) < col("__batch_min")).drop("__batch_min")
+  }
+
+  /** Per screened id of `matches` ((id, corpus_id, `score`) rows, id
+    * first), the match count and the best match as (`idCol`,
+    * n_matches, best_corpus_id, best_`score`): the lexicographic min of
+    * (score, corpus_id), the score negated when `higherBetter` — best =
+    * highest (else lowest) score, ties to the smallest corpus_id.
+    */
+  private def bestMatches(
+      matches: DataFrame, idCol: String, score: String,
+      higherBetter: Boolean): DataFrame = {
+    def key(c: org.apache.spark.sql.Column) = if (higherBetter) -c else c
+    matches.groupBy(col(matches.columns.head).as(idCol))
+      .agg(count(lit(1)).as("n_matches"),
+        min(struct(key(col(score)).as("__k"), col("corpus_id"))).as("__best"))
+      .select(col(idCol), col("n_matches"),
+        col("__best.corpus_id").as("best_corpus_id"),
+        key(col("__best.__k")).as(s"best_$score"))
+  }
+
+  /** The tail every ingest round shares, after its own screen: one
+    * verdict row per `batch` row — (`idCol`, status admitted|duplicate,
+    * n_matches, best_corpus_id, best_`score`) from [[bestMatches]] over
+    * the pre-batch-restricted `matches`, nulls for admitted —
+    * checkpointed, then the admitted rows appended through
+    * [[appendAdmittedIdempotent]] against `existingIds` under `op`.
+    */
+  private def ingestRound(
+      batch: DataFrame, idCol: String, matches: DataFrame, score: String,
+      higherBetter: Boolean, existingIds: DataFrame, op: String)(
+      append: DataFrame => Unit): DataFrame = {
+    // materialized BEFORE the append mutates the index directories — a
+    // lazy verdict would re-list post-append files and re-screen
+    // against an index containing the batch itself
+    val verdict = batch
+      .join(bestMatches(matches, idCol, score, higherBetter), Seq(idCol), "left")
+      .select(col(idCol),
+        when(col("n_matches").isNull, lit("admitted"))
+          .otherwise(lit("duplicate")).as("status"),
+        coalesce(col("n_matches"), lit(0L)).as("n_matches"),
+        col("best_corpus_id"), col(s"best_$score"))
+      .localCheckpoint(true)
+    val admitted = batch.join(
+      verdict.where(col("status") === "admitted").select(col(idCol)),
+      Seq(idCol))
+    appendAdmittedIdempotent(admitted, idCol, existingIds, op)(append)
+    verdict
   }
 
   /** Run `append` (called with the subset of `admitted` to index) for
@@ -510,7 +566,7 @@ object IndexStore {
       idCol: String,
       textCol: String,
       path: String): Unit =
-    appendFamily(CorpusFamily, newDocs, idCol, textCol, path)
+    append(CorpusKind, newDocs, idCol, textCol, path)
 
   /** One INGEST ROUND against the persisted corpus (MinHash-LSH) index
     * — the lexical member of the ingest-round family ([[ingestMedia]]
@@ -520,9 +576,10 @@ object IndexStore {
     * against an indexed doc, append the admissions
     * ([[appendCorpusIndex]] — exact-text copies merge under their
     * existing representative), and return one verdict row per
-    * NON-NULL-TEXT batch doc (null-text docs are dropped up front, no
-    * verdict row — the [[ingestVector]] posture; they can never be
-    * indexed, so an "admitted" verdict would be a phantom):
+    * NON-NULL-ID, NON-NULL-TEXT batch doc (NULL-id and null-text docs
+    * are dropped up front, no verdict row — the [[ingestVector]]
+    * posture; they can never be indexed, so an "admitted" verdict
+    * would be a phantom):
     * (doc_id, status admitted|duplicate, n_matches,
     * best_corpus_id, best_jaccard) with best = highest jaccard, ties
     * to the smallest corpus_id. Dedup is against the index only;
@@ -549,14 +606,14 @@ object IndexStore {
       maxBucketSize: Int = 1000): DataFrame = {
     val spark = newDocs.sparkSession
     val m = metaOf(spark, path, "corpus")
-    // null-text docs are dropped up front (no verdict row — the
-    // [[ingestVector]] null/wrong-dim posture): they yield no shingles,
-    // so left in they would be silently "admitted" yet never indexed
-    // (the group collapse drops null texts), leaving a phantom verdict
-    // with no index entry behind it
+    // NULL-id and null-text docs are dropped up front (no verdict row —
+    // the [[ingestVector]] null/wrong-dim posture): a null text yields
+    // no shingles and a NULL id never survives the admitted equi-join,
+    // so left in either would be silently "admitted" yet never indexed,
+    // leaving a phantom verdict with no index entry behind it
     val batch = newDocs
       .select(col(idCol).as("doc_id"), col(textCol).as("text"))
-      .where(col("text").isNotNull)
+      .where(col("doc_id").isNotNull && col("text").isNotNull)
       .localCheckpoint(true)
     // loaded once: the screen probes it, and the replay disposition
     // reuses its members relation instead of re-listing the table
@@ -565,26 +622,9 @@ object IndexStore {
       idx, "doc_id", "text",
       m("shingle_size").toInt, m("num_hashes").toInt,
       m("num_bands").toInt, threshold, maxBucketSize), batch, "doc_id")
-    val agg = matches.groupBy(col("new_id").as("doc_id"))
-      .agg(count(lit(1)).as("__n"),
-        min(struct((-col("jaccard")).as("negj"), col("corpus_id"))).as("__best"))
-    // materialized BEFORE the append mutates the index directories
-    val verdict = batch.join(agg, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(col("__n").isNull, lit("admitted"))
-          .otherwise(lit("duplicate")).as("status"),
-        coalesce(col("__n"), lit(0L)).as("n_matches"),
-        col("__best.corpus_id").as("best_corpus_id"),
-        (-col("__best.negj")).as("best_jaccard"))
-      .localCheckpoint(true)
-    val admitted = batch.join(
-      verdict.where(col("status") === "admitted").select(col("doc_id")),
-      Seq("doc_id"))
-    appendAdmittedIdempotent(admitted, "doc_id",
-      idx.members.select(col("member_id")), "ingestCorpus") { adm =>
-      appendCorpusIndex(adm, "doc_id", "text", path)
-    }
-    verdict
+    ingestRound(batch, "doc_id", matches, "jaccard", higherBetter = true,
+      idx.members.select(col("member_id")), "ingestCorpus")(
+      appendCorpusIndex(_, "doc_id", "text", path))
   }
 
   // ---------------------------------------------------------------
@@ -662,51 +702,38 @@ object IndexStore {
       newHashes: DataFrame,
       idCol: String,
       hashCol: String,
-      path: String): Unit = {
-    val spark = newHashes.sparkSession
-    withIndexLease(spark, path, "appendMediaIndex") {
-      appendMediaIndexBody(spark, newHashes, idCol, hashCol, path,
-        "appendMediaIndex")
-    }
-  }
+      path: String): Unit =
+    append(MediaKind, newHashes, idCol, hashCol, path)
 
-  /** [[appendMediaIndex]]'s body, lease assumed HELD by the caller
-    * ([[replaceMediaAssets]] composes it under its one lease).
+  /** [[appendMediaIndex]]'s guards and writes inside the append frame
+    * ([[fencedAppend]]). Members FIRST, then bands.
     */
-  private def appendMediaIndexBody(
-      spark: SparkSession, newHashes: DataFrame, idCol: String,
-      hashCol: String, path: String, op: String): Unit = {
-      metaOf(spark, path, "media")
-      val incoming = newHashes
-        .select(col(hashCol).cast("long").as("dh"),
-          col(idCol).as("member_id"))
-        .where(col("dh").isNotNull)
-        .localCheckpoint(true)
-      val (resolved, dir) = resolvedDirs(spark, path)
-      appendFenceTestHook()
-      val oldMembers = readTable(spark, path, dir, "members")
-      requireIdsAfter(graveyardUnion(spark, path, dir,
-          oldMembers.select(col("member_id"))),
-        incoming.select(col("member_id")), op)
-      // anti-join against BANDS (not members): a signature with member
-      // rows but no band rows — the torn-append orphan — is invisible to
-      // hammingJoinIndexed, so band-presence is the correctness-bearing
-      // predicate; membership alone is not. Materialized BEFORE the
-      // members append below: novel reads the pre-append listings, and
-      // leaving it lazy would race the directory mutation (append ≠
-      // rebuild if re-listed files double the anti-join inputs).
-      val novel = incoming.select(col("dh"))
-        .unionByName(oldMembers.select(col("dh")))
-        .distinct()
-        .join(readTable(spark, path, dir, "bands").select(col("dh")).distinct(),
-          Seq("dh"), "left_anti")
-        .localCheckpoint(true)
-      incoming.repartition(col("dh"))
-        .write.mode("append").parquet(dir("members"))
-      Dedup.hashBandRows(novel, "dh").repartition(col("band_hash"))
-        .write.mode("append").parquet(dir("bands"))
-      requireGenerationsUnmoved(spark, path, resolved,
-        Seq("members", "bands"), op)
+  private def appendMediaBody(a: Append): Unit = {
+    val incoming = a.rows
+      .select(col(a.valueCol).cast("long").as("dh"),
+        col(a.idCol).as("member_id"))
+      .where(col("dh").isNotNull)
+      .localCheckpoint(true)
+    val oldMembers = a.read("members")
+    requireIdsAfter(a.withGraveyard(oldMembers.select(col("member_id"))),
+      incoming.select(col("member_id")), a.op)
+    // anti-join against BANDS (not members): a signature with member
+    // rows but no band rows — the torn-append orphan — is invisible to
+    // hammingJoinIndexed, so band-presence is the correctness-bearing
+    // predicate; membership alone is not. Materialized BEFORE the
+    // members append below: novel reads the pre-append listings, and
+    // leaving it lazy would race the directory mutation (append ≠
+    // rebuild if re-listed files double the anti-join inputs).
+    val novel = incoming.select(col("dh"))
+      .unionByName(oldMembers.select(col("dh")))
+      .distinct()
+      .join(a.read("bands").select(col("dh")).distinct(), Seq("dh"),
+        "left_anti")
+      .localCheckpoint(true)
+    incoming.repartition(col("dh"))
+      .write.mode("append").parquet(a.dir("members"))
+    Dedup.hashBandRows(novel, "dh").repartition(col("band_hash"))
+      .write.mode("append").parquet(a.dir("bands"))
   }
 
   /** One INGEST ROUND against the persisted media index — the
@@ -718,7 +745,10 @@ object IndexStore {
     * return one verdict row per batch asset:
     * (asset_id, status admitted|duplicate, n_matches,
     * best_corpus_id, best_hamming) with best = (hamming, corpus_id)
-    * lexicographic min, nulls for admitted. Because admitted assets
+    * lexicographic min, nulls for admitted. NULL-id assets and null
+    * hashes are dropped up front (no verdict row: neither can be
+    * indexed, so an "admitted" verdict would be a phantom). Because
+    * admitted assets
     * enter the index, a later ingest's duplicates include THIS batch's
     * admissions — cross-batch dedup through the growing index, with no
     * corpus rescan ever. Contract notes: dedup is against the INDEX
@@ -759,33 +789,14 @@ object IndexStore {
     // feeds the screen, the verdict join, and the admitted append
     val batch = newHashes
       .select(col(idCol).as("asset_id"), col(hashCol).cast("long").as("dh"))
-      .where(col("dh").isNotNull)
+      .where(col("asset_id").isNotNull && col("dh").isNotNull)
       .localCheckpoint(true)
     val idx = loadMediaIndex(spark, path, maxBucketSize)
     val matches = preBatchMatches(Dedup.hammingJoinIndexed(batch,
       idx, "asset_id", "dh", maxDist), batch, "asset_id")
-    val agg = matches.groupBy(col("new_id").as("asset_id"))
-      .agg(count(lit(1)).as("__n"),
-        min(struct(col("hamming"), col("corpus_id"))).as("__best"))
-    // materialized BEFORE the append below mutates the index
-    // directories — a lazy verdict would re-list post-append files and
-    // re-screen against an index containing the batch itself
-    val verdict = batch.join(agg, Seq("asset_id"), "left")
-      .select(col("asset_id"),
-        when(col("__n").isNull, lit("admitted"))
-          .otherwise(lit("duplicate")).as("status"),
-        coalesce(col("__n"), lit(0L)).as("n_matches"),
-        col("__best.corpus_id").as("best_corpus_id"),
-        col("__best.hamming").as("best_hamming"))
-      .localCheckpoint(true)
-    val admitted = batch.join(
-      verdict.where(col("status") === "admitted").select(col("asset_id")),
-      Seq("asset_id"))
-    appendAdmittedIdempotent(admitted, "asset_id",
-      idx.members.select(col("member_id")), "ingestMedia") { adm =>
-      appendMediaIndex(adm, "asset_id", "dh", path)
-    }
-    verdict
+    ingestRound(batch, "asset_id", matches, "hamming", higherBetter = false,
+      idx.members.select(col("member_id")), "ingestMedia")(
+      appendMediaIndex(_, "asset_id", "dh", path))
   }
 
   // ---------------------------------------------------------------
@@ -839,7 +850,7 @@ object IndexStore {
       idCol: String,
       vecCol: String,
       path: String): Unit =
-    appendFamily(VectorFamily, newVecs, idCol, vecCol, path)
+    append(VectorKind, newVecs, idCol, vecCol, path)
 
   /** One INGEST ROUND against the persisted vector index — the
     * semantic twin of [[ingestMedia]], same contract shape: screen the
@@ -854,11 +865,12 @@ object IndexStore {
     * [[Similarity.cosineNearDupPairs]] on the batch first if wanted);
     * recall is the index's sign-block recall, the documented
     * approximation. Monotone-id append contract on the admitted ids.
-    * Null or wrong-dimension embeddings are dropped up front (no
-    * verdict row — the [[ingestMedia]] null-hash posture): they yield
-    * no block keys, so left in they would be silently "admitted" and
-    * appended as permanently dead index members. Idempotent under
-    * at-least-once replay, like [[ingestMedia]].
+    * NULL ids and null or wrong-dimension embeddings are dropped up
+    * front (no verdict row — the [[ingestMedia]] null-hash posture):
+    * the embeddings yield no block keys and the ids never reach the
+    * append, so left in they would be silently "admitted" — the
+    * embeddings appended as permanently dead index members.
+    * Idempotent under at-least-once replay, like [[ingestMedia]].
     */
   def ingestVector(
       newVecs: DataFrame,
@@ -871,36 +883,18 @@ object IndexStore {
     val m = metaOf(spark, path, "vector")
     val batch = newVecs
       .select(col(idCol).as("vec_id"), col(vecCol).cast("array<double>").as("v"))
-      .where(col("v").isNotNull && size(col("v")) === m("dim").toInt)
+      .where(col("vec_id").isNotNull && col("v").isNotNull &&
+        size(col("v")) === m("dim").toInt)
       .localCheckpoint(true)
     val idx = loadVectorIndex(spark, path, maxBucketSize)
     val matches = preBatchMatches(Similarity.cosineJoinIndexed(
       idx, batch, "vec_id", "v",
       m("dim").toInt, threshold, m("num_blocks").toInt,
       m("planes_per_block").toInt, m("seed").toLong), batch, "vec_id")
-    val agg = matches.groupBy(col("new_id").as("vec_id"))
-      .agg(count(lit(1)).as("__n"),
-        // lexicographic min over (-cos, corpus_id) = best match by
-        // highest (rounded, as emitted) cos, smallest id on ties
-        min(struct((-col("cos")).as("negcos"), col("corpus_id"))).as("__best"))
-    // materialized BEFORE the append mutates the index directories —
-    // same race rationale as [[ingestMedia]]
-    val verdict = batch.join(agg, Seq("vec_id"), "left")
-      .select(col("vec_id"),
-        when(col("__n").isNull, lit("admitted"))
-          .otherwise(lit("duplicate")).as("status"),
-        coalesce(col("__n"), lit(0L)).as("n_matches"),
-        col("__best.corpus_id").as("best_corpus_id"),
-        (-col("__best.negcos")).as("best_cos"))
-      .localCheckpoint(true)
-    val admitted = batch.join(
-      verdict.where(col("status") === "admitted").select(col("vec_id")),
-      Seq("vec_id"))
-    appendAdmittedIdempotent(admitted, "vec_id",
-      idx.members.select(col("member_id")), "ingestVector") { adm =>
-      appendVectorIndex(adm, "vec_id", "v", path)
-    }
-    verdict
+    // best = highest (rounded, as emitted) cos, smallest id on ties
+    ingestRound(batch, "vec_id", matches, "cos", higherBetter = true,
+      idx.members.select(col("member_id")), "ingestVector")(
+      appendVectorIndex(_, "vec_id", "v", path))
   }
 
   /** Collapsed (id, v, members) vector groups — the vector twin of
@@ -962,7 +956,8 @@ object IndexStore {
   /** Append new vectors to a persisted IVF model: assign them to the
     * EXISTING centroids (no retrain — see class doc) and append to the
     * inverted lists. Raises if any new id already exists in the index
-    * (a duplicate id would double-count its vector in every probe).
+    * or repeats within the batch (a duplicate id would double-count its
+    * vector in every probe).
     *
     * Crash posture (audited round 10): this append touches exactly ONE
     * table — the assign/ inverted lists — so there is no multi-table
@@ -976,41 +971,37 @@ object IndexStore {
       newVecs: DataFrame,
       idCol: String,
       vecCol: String,
-      path: String): Unit = {
-    val spark = newVecs.sparkSession
-    withIndexLease(spark, path, "appendIvf") {
-      appendIvfBody(spark, newVecs, idCol, vecCol, path, "appendIvf")
-    }
-  }
+      path: String): Unit =
+    append(IvfKind, newVecs, idCol, vecCol, path)
 
-  /** [[appendIvf]]'s body, lease assumed HELD by the caller
-    * ([[replaceIvfMembers]] composes it under its one lease).
+  /** [[appendIvf]]'s guard and write inside the append frame
+    * ([[fencedAppend]]), against the frame's one manifest resolution
+    * (the loadIvf convenience would resolve separately — a rebuild
+    * landing between the two reads would mix generations).
     */
-  private def appendIvfBody(
-      spark: SparkSession, newVecs: DataFrame, idCol: String,
-      vecCol: String, path: String, op: String): Unit = {
-      metaOf(spark, path, "ivf")
-      // one manifest resolution for the read AND the write (the loadIvf
-      // convenience would resolve separately — a rebuild landing between
-      // the two reads would mix generations)
-      val (resolved, dir) = resolvedDirs(spark, path)
-      appendFenceTestHook()
-      val centroids = readCentroids(spark, path, dir)
-      val assignments = readTable(spark, path, dir, "assign")
-      val assign = IvfIndex.assign(newVecs, idCol, vecCol, centroids)
-      // overlap guard over live ids ∪ the tombstone graveyard: a
-      // vacuumed delete's rows leave assign/, but re-admitting its id
-      // would resurrect a taken-down vector under the same identity
-      require(assign.join(graveyardUnion(spark, path, dir,
-            assignments.select(col("id"))), Seq("id"),
-          "left_semi").limit(1).count() == 0,
-        s"IndexStore.$op: a new id already exists in the index " +
-          "(or its graveyard); appending it would double-count its " +
-          "vector in every probe (or resurrect a deleted id)")
-      assign.repartition(col("list_id"))
-        .write.mode("append").parquet(dir("assign"))
-      requireGenerationsUnmoved(spark, path, resolved,
-        Seq("assign", "centroids"), op)
+  private def appendIvfBody(a: Append): Unit = {
+    val centroids = readCentroids(a.spark, a.path, a.dir)
+    val assign = IvfIndex.assign(a.rows, a.idCol, a.valueCol, centroids)
+    // ONE action for both id guards: overlap with live ids ∪ the
+    // tombstone graveyard (a vacuumed delete's rows leave assign/, but
+    // re-admitting its id would resurrect a taken-down vector under the
+    // same identity) and an id repeated within the batch (count vs
+    // distinct) — either would double-count a vector in every probe
+    val c = assign.select(col("id"))
+      .join(a.withGraveyard(a.read("assign").select(col("id"))).distinct()
+        .withColumn("__seen", lit(1)), Seq("id"), "left")
+      .agg(count(col("id")), count_distinct(col("id")), count(col("__seen")))
+      .head()
+    require(c.getLong(2) == 0L,
+      s"IndexStore.${a.op}: a new id already exists in the index " +
+        "(or its graveyard); appending it would double-count its " +
+        "vector in every probe (or resurrect a deleted id)")
+    require(c.getLong(0) == c.getLong(1),
+      s"IndexStore.${a.op}: the batch repeats " +
+        s"${c.getLong(0) - c.getLong(1)} id(s); appending it would " +
+        "double-count their vectors in every probe — dedupe the batch")
+    assign.repartition(col("list_id"))
+      .write.mode("append").parquet(a.dir("assign"))
   }
 
   // ---------------------------------------------------------------
@@ -1817,22 +1808,30 @@ object IndexStore {
   private case object Untouched extends Fold
 
   /** One index kind's storage facts — the single statement the
-    * kind-generic verbs ([[publish]], [[deleteFrom]], [[vacuum]],
-    * [[replace]], [[compactIndex]], [[describeIndex]], [[checkIndex]])
-    * and the kind dispatch ([[kindOf]]) read:
+    * kind-generic verbs ([[publish]], [[append]], [[deleteFrom]],
+    * [[vacuum]], [[replace]], [[compactIndex]], [[describeIndex]],
+    * [[checkIndex]]) and the kind dispatch ([[kindOf]]) read:
     *  - `tables`: each raw table with its probe join key — the key it
     *    is clustered by on every write, kept by compaction's and
     *    vacuum's rewrites — and its [[Fold]]. Listed in publish and
     *    compaction order; a vacuum rewrites them in REVERSE (the
-    *    live-id table first).
+    *    live-id table first). Every append fences its commit over all
+    *    of them ([[fencedAppend]]).
     *  - `idTable`.`idCol`: where the LIVE member ids are read; `idCol`
     *    (doc_id / member_id / id) also names the tombstone column.
     *    Every kind has the OPTIONAL `deletes` table keyed by it —
     *    absent until the first delete, so [[compactIndex]] and
     *    [[describeIndex]] tolerate its missing dir ([[allTables]]).
-    *  - the public op names its lease and error messages carry.
-    *  - `appendBody`: the kind's append with the lease already held
-    *    (what [[replace]] composes); `merge`: its shard merge (none for
+    *  - the public op names its lease and error messages carry:
+    *    `appendOp` (also what the family kinds' healable
+    *    [[checkIndex]] finding names as the heal), `deleteOp`,
+    *    `vacuumOp`, `replaceOp`.
+    *  - `appendBody`: the kind's append guards and writes, run inside
+    *    the one append frame ([[fencedAppend]]: meta, one manifest
+    *    resolution, the fence test seam, then the generation fence) —
+    *    under the `appendOp` lease by [[append]], composed under its
+    *    own lease by [[replace]]. Guard order, write order and crash
+    *    posture are the kind's own. `merge`: its shard merge (none for
     *    IVF — see [[mergeIndexes]]).
     */
   private final case class IndexKind(
@@ -1840,52 +1839,65 @@ object IndexStore {
       tables: Seq[(String, String, Fold)],
       idTable: String,
       idCol: String,
+      appendOp: String,
       deleteOp: String,
       vacuumOp: String,
       replaceOp: String,
-      appendBody: (SparkSession, DataFrame, String, String, String, String) => Unit,
+      appendBody: Append => Unit,
       merge: Option[(SparkSession, Seq[String], String, Long) => Long]) {
     def allTables: Seq[(String, String)] =
       tables.map { case (t, key, _) => t -> key } :+ ("deletes" -> idCol)
+  }
+
+  /** What an [[IndexKind]]'s `appendBody` sees inside the append frame:
+    * the batch `rows` with its id and value columns, the op its raises
+    * name, the index's `meta` and the frame's generation-resolved
+    * table dirs (reads and writes must hit ONE generation).
+    */
+  private final case class Append(
+      rows: DataFrame, idCol: String, valueCol: String, path: String,
+      op: String, meta: Map[String, String], dir: String => String) {
+    def spark: SparkSession = rows.sparkSession
+    def read(t: String): DataFrame = readTable(spark, path, dir, t)
+    def withGraveyard(existing: DataFrame): DataFrame =
+      graveyardUnion(spark, path, dir, existing)
   }
 
   private val CorpusKind = IndexKind("corpus",
     Seq(("bands", "band_hash", KeepLiveFamilies("corpus_id")),
       ("sets", "corpus_id", KeepLiveFamilies("corpus_id")),
       ("members", "corpus_id", DropDeleted)),
-    "members", "member_id",
+    "members", "member_id", "appendCorpusIndex",
     "deleteFromCorpusIndex", "vacuumCorpusIndex", "replaceCorpusDocs",
-    appendFamilyBody(CorpusFamily, _, _, _, _, _, _),
-    Some(mergeCorpusIndexes _))
+    appendFamilyBody(CorpusFamily, _), Some(mergeCorpusIndexes _))
 
   private val MediaKind = IndexKind("media",
     Seq(("bands", "band_hash", KeepLiveFamilies("dh")),
       ("members", "dh", DropDeleted)),
-    "members", "member_id",
+    "members", "member_id", "appendMediaIndex",
     "deleteFromMediaIndex", "vacuumMediaIndex", "replaceMediaAssets",
-    appendMediaIndexBody, Some(mergeMediaIndexes _))
+    appendMediaBody, Some(mergeMediaIndexes _))
 
   private val VectorKind = IndexKind("vector",
     Seq(("blocks", "band_hash", KeepLiveFamilies("rep_id")),
       ("reps", "rep_id", KeepLiveFamilies("rep_id")),
       ("members", "rep_id", DropDeleted)),
-    "members", "member_id",
+    "members", "member_id", "appendVectorIndex",
     "deleteFromVectorIndex", "vacuumVectorIndex", "replaceVectorMembers",
-    appendFamilyBody(VectorFamily, _, _, _, _, _, _),
-    Some(mergeVectorIndexes _))
+    appendFamilyBody(VectorFamily, _), Some(mergeVectorIndexes _))
 
   private val IvfKind = IndexKind("ivf",
     Seq(("assign", "list_id", DropDeleted),
       ("centroids", "list_id", Untouched)),
-    "assign", "id",
+    "assign", "id", "appendIvf",
     "deleteFromIvf", "vacuumIvf", "replaceIvfMembers",
     appendIvfBody, None)
 
   private val TextKind = IndexKind("text",
     Seq(("postings", "term", DropDeleted), ("doclen", "doc_id", DropDeleted)),
-    "doclen", "doc_id",
+    "doclen", "doc_id", "appendTextIndex",
     "deleteFromTextIndex", "vacuumTextIndex", "replaceTextDocs",
-    appendTextIndexBody, Some(mergeTextIndexes _))
+    appendTextBody, Some(mergeTextIndexes _))
 
   /** The facts that make the corpus and vector kinds ONE exact-dup
     * family lifecycle — the same algorithm under different names. A
@@ -1900,8 +1912,7 @@ object IndexStore {
     *    derives (bands, groups, members) from groups and `bandRows` the
     *    band rows alone (the torn-append heal), both from meta params.
     *  - `cap`: the load-time bucket cap assembling the probe index.
-    *  - `appendOp`: the public append's op (its lease and the healable
-    *    finding's recovery); `valueNoun` names what an orphan lost.
+    *  - `valueNoun` names what an orphan lost.
     * [[saveFamily]], [[loadFamily]], [[appendFamilyBody]],
     * [[mergeFamily]] and [[familyFindings]] are written once over it.
     */
@@ -1920,7 +1931,6 @@ object IndexStore {
       bandRows: (DataFrame, Map[String, String]) => DataFrame,
       bandOwners: DataFrame => DataFrame,
       cap: (DataFrame, DataFrame, DataFrame, Int) => I,
-      appendOp: String,
       valueNoun: String) {
     /** `tables` in [[IndexKind]] descriptor order. */
     def build(groups: DataFrame, m: Map[String, String]): Seq[DataFrame] = {
@@ -1949,7 +1959,7 @@ object IndexStore {
       m("num_hashes").toInt, m("num_bands").toInt),
     _.where(size(col("sh")) > 0),
     Dedup.capCorpusTables,
-    "appendCorpusIndex", "text")
+    "text")
 
   private val VectorFamily: DupFamily[Similarity.VectorIndex] = DupFamily(
     VectorKind,
@@ -1966,7 +1976,7 @@ object IndexStore {
       m("num_blocks").toInt, m("planes_per_block").toInt, m("seed").toLong),
     identity,
     Similarity.capVectorTables,
-    "appendVectorIndex", "vector")
+    "vector")
 
   private val kinds: Map[String, IndexKind] =
     Seq(CorpusKind, MediaKind, VectorKind, IvfKind, TextKind)
@@ -1981,6 +1991,36 @@ object IndexStore {
         s"IndexStore.$op: $path/meta carries no index kind"))
     kinds.getOrElse(k, throw new IllegalArgumentException(
       s"IndexStore.$op: unknown index kind '$k'"))
+  }
+
+  /** Every kind's public append*: [[fencedAppend]] under the lease the
+    * kind's `appendOp` names.
+    */
+  private def append(
+      kind: IndexKind, rows: DataFrame, idCol: String, valueCol: String,
+      path: String): Unit =
+    withIndexLease(rows.sparkSession, path, kind.appendOp) {
+      fencedAppend(kind, rows, idCol, valueCol, path, kind.appendOp)
+    }
+
+  /** The one append frame, lease assumed HELD by the caller ([[append]],
+    * or [[replace]] under its own): the kind's meta, ONE manifest
+    * resolution for the whole append — reads and writes must hit the
+    * SAME generation (the exclusivity-vs-compaction contract of
+    * [[compactIndex]]) — the fence test seam, the kind's `appendBody`,
+    * then the generation fence over every kind table
+    * ([[requireGenerationsUnmoved]]: a violation becomes a loud raise
+    * instead of silent row loss).
+    */
+  private def fencedAppend(
+      kind: IndexKind, rows: DataFrame, idCol: String, valueCol: String,
+      path: String, op: String): Unit = {
+    val spark = rows.sparkSession
+    val meta = metaOf(spark, path, kind.name)
+    val (resolved, dir) = resolvedDirs(spark, path)
+    appendFenceTestHook()
+    kind.appendBody(Append(rows, idCol, valueCol, path, op, meta, dir))
+    requireGenerationsUnmoved(spark, path, resolved, kind.tables.map(_._1), op)
   }
 
   /** Every kind's deleteFrom* op: under the lease, the kind's live ids
@@ -2072,39 +2112,17 @@ object IndexStore {
       maxBucketSize)
   }
 
-  /** Every exact-dup family's public append: [[appendFamilyBody]] under
-    * the lease `appendOp` names.
-    */
-  private def appendFamily(
-      f: DupFamily[_], newRows: DataFrame, idCol: String, valueCol: String,
-      path: String): Unit = {
-    val spark = newRows.sparkSession
-    withIndexLease(spark, path, f.appendOp) {
-      appendFamilyBody(f, spark, newRows, idCol, valueCol, path, f.appendOp)
-    }
-  }
-
-  /** Every exact-dup family's append body, lease assumed HELD by the
-    * caller ([[replace]] composes it under its one lease). Crash
-    * posture as [[appendCorpusIndex]]'s scaladoc states: members
+  /** Every exact-dup family's append body ([[IndexKind]] `appendBody`).
+    * Crash posture as [[appendCorpusIndex]]'s scaladoc states: members
     * FIRST, then groups, then bands, with the torn groups-without-bands
     * shape healed by every append.
     */
-  private def appendFamilyBody(
-      f: DupFamily[_], spark: SparkSession, newRows: DataFrame,
-      idCol: String, valueCol: String, path: String, op: String): Unit = {
-    val m = metaOf(spark, path, f.kind.name)
-    // one manifest resolution for the whole append: reads and writes
-    // must hit the SAME generation (the exclusivity-vs-compaction
-    // contract of [[compactIndex]]; the fence after the writes converts
-    // a violation to a loud raise instead of silent row loss)
-    val (resolved, dir) = resolvedDirs(spark, path)
-    appendFenceTestHook()
-    val oldGroups = readTable(spark, path, dir, f.groupTable)
-    val oldMembers = readTable(spark, path, dir, "members")
-    val gn = f.group(newRows, idCol, valueCol)
-    val idsGuard = idsAfterAgg(graveyardUnion(spark, path, dir,
-        oldMembers.select(col("member_id"))),
+  private def appendFamilyBody(f: DupFamily[_], a: Append): Unit = {
+    val oldGroups = a.read(f.groupTable)
+    val oldMembers = a.read("members")
+    val gn = f.group(a.rows, a.idCol, a.valueCol)
+    val idsGuard = idsAfterAgg(
+      a.withGraveyard(oldMembers.select(col("member_id"))),
       gn.select(explode(col("members")).as("member_id")))
     // exact-value merge: members of matched groups file under the
     // EXISTING rep (no new band/group rows — an identical value means
@@ -2131,7 +2149,7 @@ object IndexStore {
     // with the writes below). On an identity mismatch the anti-join is
     // materialized BEFORE the directory-mutating writes (same race
     // rationale as `novel`).
-    val oldBands = readTable(spark, path, dir, f.bandTable)
+    val oldBands = a.read(f.bandTable)
     val owners = f.bandOwners(oldGroups)
     // ONE driver action carries BOTH pre-write guards (round-17,
     // guide §2.4): the monotone-id aggregate and the band-coverage
@@ -2144,26 +2162,24 @@ object IndexStore {
         .agg(count(when(col("__t") === 0, lit(1))).as("__b"),
           count(when(col("__t") === 1, lit(1))).as("__g")))
       .head()
-    requireIdsAfterChecked(covered.getBoolean(0), op)
+    requireIdsAfterChecked(covered.getBoolean(0), a.op)
     val orphaned0 = owners
       .select(col(f.groupKey).as("id"), col(f.value).as(f.grouped))
       .join(oldBands.select(col(f.groupKey).as("id")).distinct(),
         Seq("id"), "left_anti")
     val orphaned =
-      if (covered.getLong(1) == m(f.bandsKey).toLong * covered.getLong(2))
+      if (covered.getLong(1) == a.meta(f.bandsKey).toLong * covered.getLong(2))
         orphaned0.where(lit(false))
       else orphaned0.localCheckpoint(true)
-    val (bands, groups, members) = f.tables(novel, m)
+    val (bands, groups, members) = f.tables(novel, a.meta)
     // members FIRST — see crash posture in [[appendCorpusIndex]]
     members.unionByName(matched).repartition(col(f.groupKey))
-      .write.mode("append").parquet(dir("members"))
+      .write.mode("append").parquet(a.dir("members"))
     groups.repartition(col(f.groupKey))
-      .write.mode("append").parquet(dir(f.groupTable))
-    bands.unionByName(f.bandRows(orphaned, m))
+      .write.mode("append").parquet(a.dir(f.groupTable))
+    bands.unionByName(f.bandRows(orphaned, a.meta))
       .repartition(col("band_hash"))
-      .write.mode("append").parquet(dir(f.bandTable))
-    requireGenerationsUnmoved(spark, path, resolved,
-      Seq("members", f.groupTable, f.bandTable), op)
+      .write.mode("append").parquet(a.dir(f.bandTable))
   }
 
   /** Every exact-dup family's shard merge (see [[mergeVectorIndexes]]):
@@ -3012,13 +3028,12 @@ object IndexStore {
           s"row — group ${f.valueNoun} lost; rebuild or prune")) else None,
       if (unbanded > 0) Some(CheckFinding(f.groupTable, s"$band-coverage",
         "healable", s"$unbanded $group(s) lack $band rows — " +
-          s"the next ${f.appendOp} heals them")) else None).flatten
+          s"the next ${f.kind.appendOp} heals them")) else None).flatten
   }
 
   /** Rewrite the given tables as their NEXT generations and publish
     * them with one atomic manifest swap — the shared write-aside
-    * machinery of the maintenance ops ([[compactIndex]] inlines the
-    * same flow to collect per-table stats). Each `write` callback
+    * machinery of the maintenance ops. Each `write` callback
     * receives the next-generation directory to write into; nothing
     * live is touched until every write has finished and the manifest
     * rename publishes them all together. Grace-reaps all but the
@@ -3312,7 +3327,6 @@ object IndexStore {
       retainGenerations: Int = 1,
       retainAge: Option[java.time.Duration] = None): Seq[CompactStat] = {
     import org.apache.hadoop.fs.Path
-    requireRetention(retainGenerations, retainAge)
     val tables = kindOf(spark, path, "compactIndex").allTables
     val fs = fsOf(spark, path)
     def dataFiles(dir: Path) =
@@ -3320,50 +3334,41 @@ object IndexStore {
         val n = s.getPath.getName
         !n.startsWith("_") && !n.startsWith(".")
       })
-    val gens = readGenerations(fs, path)
-    val results = tables.flatMap { case (t, key) =>
-      val cur = gens.getOrElse(t, 0L)
-      val dir = new Path(s"$path/${genDirName(t, cur)}")
+    val dir = tableDirs(spark, path)
+    val stats = Seq.newBuilder[CompactStat]
+    val writes = tables.flatMap { case (t, key) =>
+      val cur = new Path(dir(t))
       // recover debris from a pre-round-11 compact that crashed
       // between its two DIRECTORY renames (the old design's one
       // unsafe window): the live dir is absent, the aside dir intact
       val legacyAside = new Path(s"$path/${t}__old")
-      if (!fs.exists(dir) && fs.exists(legacyAside)) {
-        require(fs.rename(legacyAside, dir),
-          s"IndexStore.compactIndex: could not restore $legacyAside to $dir")
+      if (!fs.exists(cur) && fs.exists(legacyAside)) {
+        require(fs.rename(legacyAside, cur),
+          s"IndexStore.compactIndex: could not restore $legacyAside to $cur")
       }
       // OPTIONAL tables (deletes, absent until the first tombstone)
       // simply don't participate; a MANDATORY table's missing dir must
       // still fail loudly below (spark.read throws) — silently
       // skipping it would let compaction "succeed" on a torn index
-      if (t == "deletes" && !fs.exists(dir)) None
-      else Some {
-        val before = dataFiles(dir)
+      if (t == "deletes" && !fs.exists(cur)) None
+      else Some(t -> { (next: String) =>
+        val before = dataFiles(cur)
         val bytes = before.map(_.getLen).sum
         val nParts =
           math.max(1L, (bytes + targetBytesPerFile - 1) / targetBytesPerFile)
             .min(1 << 20).toInt
-        val next = cur + 1
-        spark.read.parquet(dir.toString)
+        spark.read.parquet(cur.toString)
           .repartition(nParts, col(key))
-          .write.mode("overwrite")
-          .parquet(s"$path/${genDirName(t, next)}")
-        (t, next,
-          CompactStat(t, before.length.toLong,
-            dataFiles(new Path(s"$path/${genDirName(t, next)}"))
-              .length.toLong,
-            bytes))
-      }
+          .write.mode("overwrite").parquet(next)
+        stats += CompactStat(t, before.length.toLong,
+          dataFiles(new Path(next)).length.toLong, bytes): Unit
+      })
     }
     // one atomic publish for ALL tables — readers see a consistent
-    // all-old or all-new set of generations, never a mix
-    writeGenerations(fs, path,
-      gens ++ results.map { case (t, g, _) => t -> g })
-    // grace reap: count-based (keep the `retainGenerations` most
-    // recent retired generations) or age-based when retainAge is set —
-    // see [[reapRetired]]; plus legacy __compacting debris
-    results.foreach { case (t, next, _) =>
-      reapRetired(fs, path, t, next, retainGenerations, retainAge)
+    // all-old or all-new set of generations, never a mix — then the
+    // grace reap; plus legacy __compacting debris
+    swapGenerations(spark, path, retainGenerations, retainAge)(writes)
+    writes.foreach { case (t, _) =>
       fs.delete(new Path(s"$path/${t}__compacting"), true): Unit
     }
     // lease debris from CRASHED acquires/releases/probes: a
@@ -3380,7 +3385,7 @@ object IndexStore {
             System.currentTimeMillis() - DefaultLeaseTtlMs)
         fs.delete(s.getPath, false): Unit
     }
-    results.map(_._3)
+    stats.result()
   }
 
   /** Append new documents' postings to a persisted text index
@@ -3397,46 +3402,30 @@ object IndexStore {
     * ids.
     */
   def appendTextIndex(
-      newDocs: DataFrame, idCol: String, textCol: String, path: String): Unit = {
-    val spark = newDocs.sparkSession
-    withIndexLease(spark, path, "appendTextIndex") {
-      metaOf(spark, path, "text")
-      appendTextIndexBody(spark, newDocs, idCol, textCol, path,
-        "appendTextIndex")
-    }
-  }
+      newDocs: DataFrame, idCol: String, textCol: String, path: String): Unit =
+    append(TextKind, newDocs, idCol, textCol, path)
 
-  /** [[appendTextIndex]]'s body, lease assumed HELD by the caller —
-    * split out so composite leased ops ([[replaceTextDocs]]) can
-    * append under the ONE lease they already hold.
+  /** [[appendTextIndex]]'s guard and writes inside the append frame
+    * ([[fencedAppend]]).
     */
-  private def appendTextIndexBody(
-      spark: SparkSession, newDocs: DataFrame, idCol: String,
-      textCol: String, path: String, op: String): Unit = {
-    val (resolved, dir) = resolvedDirs(spark, path)
-    appendFenceTestHook()
+  private def appendTextBody(a: Append): Unit = {
     // the union covers BOTH stored tables (crash-retry, see above)
     // AND the tombstone graveyard: a vacuumed delete's rows leave
     // doclen/postings, but its id must stay unreusable forever
     // ([[deleteFromTextIndex]]'s contract) — without the deletes
     // union, deleting and vacuuming the max-id docs would re-open
     // their range to the next append
-    val existingIds = (Seq(
-        readTable(spark, path, dir, "doclen").select(col("doc_id")),
-        readTable(spark, path, dir, "postings").select(col("doc_id"))) ++
-        readDeletes(spark, path, dir))
-      .reduce(_.unionByName(_))
-    val idx = TextAnalysis.textIndex(newDocs, idCol, textCol)
-    requireIdsAfter(existingIds, idx.doclen.select(col("doc_id")), op)
+    val existingIds = a.withGraveyard(a.read("doclen").select(col("doc_id"))
+      .unionByName(a.read("postings").select(col("doc_id"))))
+    val idx = TextAnalysis.textIndex(a.rows, a.idCol, a.valueCol)
+    requireIdsAfter(existingIds, idx.doclen.select(col("doc_id")), a.op)
     // doclen FIRST: a crash after it leaves ids visible to the retry
     // guard via the union above; a half-appended postings table alone
     // would under-score the batch silently
     idx.doclen.repartition(col("doc_id"))
-      .write.mode("append").parquet(dir("doclen"))
+      .write.mode("append").parquet(a.dir("doclen"))
     idx.postings.repartition(col("term"))
-      .write.mode("append").parquet(dir("postings"))
-    requireGenerationsUnmoved(spark, path, resolved,
-      Seq("doclen", "postings"), op)
+      .write.mode("append").parquet(a.dir("postings"))
   }
 
   /** REPLACE documents in a persisted text index — the RECTIFICATION
@@ -3583,7 +3572,7 @@ object IndexStore {
         // the core's duplicate check)
         val nDel = tombstoneDeletePrepared(spark, path, op, idColName,
           old, liveIds, dir, resolved, liveProven = true)
-        kind.appendBody(spark, newRows, idCol, valueCol, path, op)
+        fencedAppend(kind, newRows, idCol, valueCol, path, op)
         (nDel, nNew)
       } else if (nOldDead == nOld) {
         // the crash-retry shape: the tombstone landed, the append did
@@ -3620,7 +3609,7 @@ object IndexStore {
             .coalesce(1).write.mode("append")
             .parquet(s"$path/crash_retries")
         }
-        kind.appendBody(spark, newRows, idCol, valueCol, path, op)
+        fencedAppend(kind, newRows, idCol, valueCol, path, op)
         (0L, nNew)
       } else {
         throw new IllegalArgumentException(
@@ -3645,10 +3634,11 @@ object IndexStore {
     * per TOKEN-BEARING batch doc: (doc_id, status admitted|duplicate,
     * n_matches, best_corpus_id, best_score_e6) with best = highest
     * score, ties to the smallest corpus_id; nulls for admitted.
-    * Null/token-less texts are dropped up front (no verdict row — the
-    * [[ingestCorpus]] phantom-verdict posture: [[TextAnalysis.textIndex]]
-    * writes no rows for them, so an "admitted" verdict would have no
-    * index entry behind it). Unlike the LSH-family screens this one
+    * NULL ids and null/token-less texts are dropped up front (no
+    * verdict row — the [[ingestCorpus]] phantom-verdict posture: a
+    * NULL id never reaches the append and [[TextAnalysis.textIndex]]
+    * writes no rows for a token-less text, so an "admitted" verdict
+    * would have no index entry behind it). Unlike the LSH-family screens this one
     * has NO probabilistic recall — every (query-term ∩ postings) pair
     * is scored exactly.
     *
@@ -3729,7 +3719,6 @@ object IndexStore {
       collapseFirst: Boolean = false,
       maxDfPpm: Option[Long] = None,
       maxScorePrune: Boolean = false): DataFrame = {
-    import graft.functions.TextFunctions
     val spark = newDocs.sparkSession
     metaOf(spark, path, "text")
     require(maxScreenPairs > 0L,
@@ -3745,11 +3734,7 @@ object IndexStore {
     // one number, so a dense batch the prune makes cheap no longer
     // refuses under the default budget.
     val pruneThr = if (maxScorePrune) Some(minScoreE6) else None
-    val batch = newDocs
-      .select(col(idCol).as("doc_id"), col(textCol).as("text"))
-      .where(col("text").isNotNull &&
-        size(TextFunctions.tokens(col("text"))) > 0)
-      .localCheckpoint(true)
+    val batch = textBatch(newDocs, idCol, textCol).localCheckpoint(true)
     // check = false here, NOT unchecked: the torn-state identity rides
     // the guardrail-estimate action below instead (round-17 fusion —
     // same sums, same raise, one driver action fewer per round). It is
@@ -3760,44 +3745,34 @@ object IndexStore {
     // wasted work on a torn index, never a write; checking before it
     // would cost the action the fusion saved
     val idx = loadTextIndex(spark, path, check = false)
-    val mn = batch.agg(min(col("doc_id")).as("__batch_min"))
-    def preBatch(t: DataFrame): DataFrame = t.crossJoin(broadcast(mn))
-      .where(col("doc_id") < col("__batch_min")).drop("__batch_min")
-    val pre = TextAnalysis.TextIndex(
-      preBatch(idx.postings), preBatch(idx.doclen))
-    // the shared relation-side query tokenization (batch docs are
-    // already null-filtered upstream; the helper's own filter is a
-    // no-op here)
-    def queryTermsOf(docs: DataFrame): DataFrame =
-      TextAnalysis.queryTermsOf(docs, "doc_id", "text")
+    val pre = preBatchText(idx, batch)
     // intra-batch collapse (the q258 composition, integrated): index
     // the batch in memory, screen it against itself, smaller-id
     // partners only — family heads go on to the index screen
     val (screened, collapsed) = if (collapseFirst) {
       val selfPairs = TextAnalysis
         .bm25ScoredIndexed(TextAnalysis.textIndex(batch, "doc_id", "text"),
-          queryTermsOf(batch), k1, b, broadcastQueries = false,
-          maxDfPpm = maxDfPpm, pruneThresholdE6 = pruneThr)
+          TextAnalysis.queryTermsOf(batch, "doc_id", "text"), k1, b,
+          broadcastQueries = false, maxDfPpm = maxDfPpm,
+          pruneThresholdE6 = pruneThr)
         .where(col("score_e6") >= minScoreE6 &&
           col("doc_id") < col("query_id"))
         .select(col("query_id").as("doc_id"),
           col("doc_id").as("corpus_id"), col("score_e6"))
         .localCheckpoint(true)
-      val coll = selfPairs.groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_matches"),
-          min(struct((-col("score_e6")).as("negs"), col("corpus_id")))
-            .as("__best"))
-        .select(col("doc_id"), lit("collapsed").as("status"),
-          col("n_matches"), col("__best.corpus_id").as("best_corpus_id"),
-          (-col("__best.negs")).as("best_score_e6"))
+      // unioned by name into the verdict below
+      val coll = bestMatches(selfPairs, "doc_id", "score_e6",
+        higherBetter = true).withColumn("status", lit("collapsed"))
       val heads = batch.join(selfPairs.select(col("doc_id")).distinct(),
           Seq("doc_id"), "left_anti")
         .localCheckpoint(true)
       (heads, Some(coll))
     } else (batch, None)
     // screened is checkpointed either way (batch, or the collapse's
-    // heads), so the estimate and the screen re-derive qt cheaply
-    val qt = queryTermsOf(screened)
+    // heads), so the estimate and the screen re-derive qt cheaply; the
+    // shared relation-side query tokenization's own null filter is a
+    // no-op on the text batch
+    val qt = TextAnalysis.queryTermsOf(screened, "doc_id", "text")
     // the guardrail: exact screen volume as one narrow agg join. The
     // decision math runs in DECIMAL from the per-term MULTIPLY up (at
     // the 100 TB shape a single stopword-class term's df × queries can
@@ -3861,31 +3836,11 @@ object IndexStore {
       .where(col("score_e6") >= minScoreE6)
       .select(col("query_id").as("doc_id"),
         col("doc_id").as("corpus_id"), col("score_e6"))
-    val agg = matches.groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("__n"),
-        // lexicographic min over (-score, corpus_id) = best match by
-        // highest score, smallest id on ties — the family convention
-        min(struct((-col("score_e6")).as("negs"), col("corpus_id")))
-          .as("__best"))
-    // materialized BEFORE the append mutates the index directories —
-    // same re-list race rationale as [[ingestMedia]]
-    val verdict = screened.join(agg, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(col("__n").isNull, lit("admitted"))
-          .otherwise(lit("duplicate")).as("status"),
-        coalesce(col("__n"), lit(0L)).as("n_matches"),
-        col("__best.corpus_id").as("best_corpus_id"),
-        (-col("__best.negs")).as("best_score_e6"))
-      .localCheckpoint(true)
-    val admitted = screened.join(
-      verdict.where(col("status") === "admitted").select(col("doc_id")),
-      Seq("doc_id"))
     // doclen ids suffice for the replay disposition: doclen is written
     // FIRST by appendTextIndex, so its id set always covers postings'
-    appendAdmittedIdempotent(admitted, "doc_id",
-      idx.doclen.select(col("doc_id")), "ingestText") { adm =>
-      appendTextIndex(adm, "doc_id", "text", path)
-    }
+    val verdict = ingestRound(screened, "doc_id", matches, "score_e6",
+      higherBetter = true, idx.doclen.select(col("doc_id")), "ingestText")(
+      appendTextIndex(_, "doc_id", "text", path))
     collapsed.fold(verdict)(verdict.unionByName(_))
   }
 
@@ -3937,20 +3892,30 @@ object IndexStore {
       textCol: String,
       path: String,
       maxDfPpm: Option[Long] = None): DataFrame = {
-    import graft.functions.TextFunctions
     val spark = newDocs.sparkSession
     metaOf(spark, path, "text")
-    val batch = newDocs
-      .select(col(idCol).as("doc_id"), col(textCol).as("text"))
-      .where(col("text").isNotNull &&
-        size(TextFunctions.tokens(col("text"))) > 0)
-    val idx = loadTextIndex(spark, path)
-    val mn = batch.agg(min(col("doc_id")).as("__batch_min"))
-    def preBatch(t: DataFrame): DataFrame = t.crossJoin(broadcast(mn))
-      .where(col("doc_id") < col("__batch_min")).drop("__batch_min")
-    val qt = batch.select(col("doc_id").as("query_id"),
-      explode(array_distinct(TextFunctions.tokens(col("text")))).as("term"))
-    screenPairEstimate(preBatch(idx.postings), qt, maxDfPpm,
-      preBatch(idx.doclen))
+    val batch = textBatch(newDocs, idCol, textCol)
+    val pre = preBatchText(loadTextIndex(spark, path), batch)
+    screenPairEstimate(pre.postings,
+      TextAnalysis.queryTermsOf(batch, "doc_id", "text"), maxDfPpm, pre.doclen)
+  }
+
+  /** The text ingest batch ([[ingestText]], [[estimateTextScreen]]):
+    * (doc_id, text) with NULL ids and null or token-less texts dropped.
+    */
+  private def textBatch(
+      newDocs: DataFrame, idCol: String, textCol: String): DataFrame =
+    newDocs.select(col(idCol).as("doc_id"), col(textCol).as("text"))
+      .where(col("doc_id").isNotNull && col("text").isNotNull &&
+        size(graft.functions.TextFunctions.tokens(col("text"))) > 0)
+
+  /** `idx` with postings and doclen restricted to pre-batch doc ids —
+    * [[preBatchMatches]]' filter at the relation level (see
+    * [[ingestText]] for why BM25 needs it there).
+    */
+  private def preBatchText(
+      idx: TextAnalysis.TextIndex, batch: DataFrame): TextAnalysis.TextIndex = {
+    val pre = preBatch(batch, "doc_id")
+    TextAnalysis.TextIndex(pre(idx.postings, "doc_id"), pre(idx.doclen, "doc_id"))
   }
 }

@@ -9,7 +9,10 @@ import org.apache.spark.sql.functions._
   * vacuum folds each tombstone once, and a vacuumed index equals a
   * fresh save over its live rows — table for table, in the save-time
   * column order. A merged index records the same meta as a single
-  * build. A kindless or unknown meta raises naming the op.
+  * build. The one ingest round gives every kind the same verdict
+  * shape, replay and append ≡ rebuild, and indexes no NULL id; an IVF
+  * append refuses a batch that repeats an id. A kindless or unknown
+  * meta raises naming the op.
   */
 class IndexKindSpec extends SparkSuite {
   import spark.implicits._
@@ -122,6 +125,113 @@ class IndexKindSpec extends SparkSuite {
         assert(fields(got(key)) == fields(want(key)), s"$k $key")
       assert(kind.tables.forall(t => want.contains(s"ddl_$t")))
     }
+
+  /** One ingest round under test: the kind's batch — id 7 an exact
+    * copy of base family 2 (a duplicate), ids 8 and 9 one novel value
+    * (both admitted: a round dedups against the index only) and a NULL
+    * id carrying a second novel value — the round itself, and the
+    * verdict's fixed DDL.
+    */
+  private case class Round(
+      batch: DataFrame, ingest: (DataFrame, String) => DataFrame, ddl: String)
+
+  private def batchOf[V: scala.reflect.runtime.universe.TypeTag](
+      dup: V, novel: V, nullIdNovel: V): DataFrame =
+    Seq((Option(7L), dup), (Option(8L), novel), (Option(9L), novel),
+      (Option.empty[Long], nullIdNovel)).toDF("id", "v")
+
+  // no word of the base vocabulary: no BM25 term, no LSH match
+  private val novelTexts = ("omega psi chi phi upsilon tau sigma rho",
+    "nu xi omicron pi nu xi omicron pi")
+
+  private def verdictDdl(id: String, best: String): String =
+    s"$id BIGINT,status STRING,n_matches BIGINT,best_corpus_id BIGINT,$best"
+
+  private lazy val rounds = Map(
+    "text" -> Round(batchOf(text(2), novelTexts._1, novelTexts._2),
+      (df, p) => IndexStore.ingestText(df, "id", "v", p, minScoreE6 = 1L),
+      verdictDdl("doc_id", "best_score_e6 BIGINT")),
+    "media" -> Round(batchOf(0x1111L * 2, 0x7F7F000000000000L,
+        0x00007F7F00000000L),
+      (df, p) => IndexStore.ingestMedia(df, "id", "v", p),
+      verdictDdl("asset_id", "best_hamming INT")),
+    "vector" -> Round(batchOf(vec(2), Seq.fill(8)(-1.0),
+        Seq.tabulate(8)(d => -1.0 - d)),
+      (df, p) => IndexStore.ingestVector(df, "id", "v", p, threshold = 0.9),
+      verdictDdl("vec_id", "best_cos DOUBLE")),
+    "corpus" -> Round(batchOf(text(2), novelTexts._1, novelTexts._2),
+      (df, p) => IndexStore.ingestCorpus(df, "id", "v", p),
+      verdictDdl("doc_id", "best_jaccard DOUBLE")))
+
+  private def statuses(verdict: DataFrame): Map[Any, String] =
+    verdict.collect().map(r => r.get(0) -> r.getString(1)).toMap
+
+  test("a NULL batch id gets no verdict row on any ingest round, and is " +
+      "not indexed") {
+    for ((k, round) <- rounds) {
+      val kind = kinds.find(_.name == k).get
+      val path = tmp()
+      kind.save(kind.rows, path)
+      assert(statuses(round.ingest(round.batch, path)) ==
+        Map(7L -> "duplicate", 8L -> "admitted", 9L -> "admitted"), k)
+      assert(kind.liveIds(path) == (1L to 9L).toSet - 7L, k)
+    }
+  }
+
+  for (k <- Seq("text", "media", "vector", "corpus"))
+    test(s"$k: the ingest round's verdict has the fixed schema, a replay " +
+        "returns the same verdicts, and the index equals a fresh save over " +
+        "base ∪ admitted") {
+      val (kind, round) = (kinds.find(_.name == k).get, rounds(k))
+      val batch = round.batch.where(col("id").isNotNull)
+      val path = tmp()
+      kind.save(kind.rows, path)
+      val first = round.ingest(batch, path)
+      def fields(schema: org.apache.spark.sql.types.StructType) =
+        schema.fields.map(f => (f.name, f.dataType)).toSeq
+      assert(fields(first.schema) ==
+        fields(org.apache.spark.sql.types.StructType.fromDDL(round.ddl)))
+      val verdicts = first.collect().toSet
+      assert(round.ingest(batch, path).collect().toSet == verdicts,
+        "a replayed round reproduces its verdicts")
+      val admitted = verdicts.collect {
+        case r if r.getString(1) == "admitted" => r.getLong(0)
+      }
+      val fresh = tmp()
+      kind.save(kind.rows.unionByName(
+        batch.where(col("id").isin(admitted.toSeq: _*))), fresh)
+      kind.tables.foreach { t =>
+        val got = spark.read.parquet(IndexStore.tableDir(spark, path, t))
+        val want = spark.read.parquet(IndexStore.tableDir(spark, fresh, t))
+        assert(digest(got, want.columns.toSeq) ==
+          digest(want, want.columns.toSeq), s"$k/$t ingest ≢ fresh save")
+      }
+    }
+
+  test("appendIvf refuses a batch that repeats an id before writing; a " +
+      "replaceIvfMembers that trips it lands on its corrected retry") {
+    val kind = kinds.find(_.name == "ivf").get
+    val path = tmp()
+    kind.save(kind.rows, path)
+    val repeated = Seq((100L, vec(1)), (100L, vec(2))).toDF("id", "v")
+    val e = intercept[IllegalArgumentException](
+      IndexStore.appendIvf(repeated, "id", "v", path))
+    assert(e.getMessage == "requirement failed: IndexStore.appendIvf: " +
+      "the batch repeats 1 id(s); appending it would double-count their " +
+      "vectors in every probe — dedupe the batch")
+    assert(kind.liveIds(path) == (1L to 6L).toSet)
+    assert(IndexStore.checkIndex(spark, path).isEmpty)
+    // the replace tombstones 6, then its append raises; the corrected
+    // batch runs as the crash-retry shape (append only)
+    intercept[IllegalArgumentException](IndexStore.replaceIvfMembers(
+      repeated, "id", "v", path, Seq(6L).toDF("id")))
+    assert(kind.liveIds(path) == (1L to 5L).toSet)
+    assert(IndexStore.replaceIvfMembers(
+      Seq((100L, vec(1)), (101L, vec(2))).toDF("id", "v"), "id", "v", path,
+      Seq(6L).toDF("id")) == ((0L, 2L)))
+    assert(kind.liveIds(path) == (1L to 5L).toSet ++ Set(100L, 101L))
+    assert(IndexStore.checkIndex(spark, path).isEmpty)
+  }
 
   test("vector: checkIndex reports members without reps as unhealable " +
       "and reps without blocks as healable") {
