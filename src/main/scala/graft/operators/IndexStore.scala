@@ -3435,8 +3435,10 @@ object IndexStore {
     * and append `newDocs` as their replacements. The replacements must
     * carry FRESH ids (ids are never reused — the graveyard contract:
     * re-admitting an id would splice two documents' statistics under
-    * one identity across the index's history), and the standard
-    * monotone guard applies to them like any append.
+    * one identity across the index's history), none NULL and none
+    * repeated within the batch — all three checked before anything is
+    * tombstoned — and the standard monotone guard applies to them like
+    * any append.
     *
     * CRASH WINDOW between the tombstone landing and the append: the
     * retry is built in. A re-run classifies `oldIds` with one
@@ -3491,7 +3493,8 @@ object IndexStore {
     * one aggregate (all live ⇒ fresh run; all tombstoned AND no new id
     * present ⇒ the crash-retry, append only; MIX ⇒ raise), validate
     * the replacement
-    * ids FRESH against live ∪ graveyard with a second aggregate,
+    * ids FRESH against live ∪ graveyard, non-NULL and unrepeated with a
+    * second aggregate,
     * tombstone on the fresh path ([[tombstoneDelete]]'s fused
     * validation), then run the kind's append body. See
     * [[replaceTextDocs]]'s scaladoc for the full contract.
@@ -3536,7 +3539,8 @@ object IndexStore {
           Seq(idColName), "left")
         .agg(count(lit(1)).as("__n"),
           count(col(idColName)).as("__nnn"), // non-null (count skips nulls)
-          count(col("__seen")).as("__nseen"))
+          count(col("__seen")).as("__nseen"),
+          count_distinct(col(idColName)).as("__nd"))
         .head()
       val (nNew, nNewPresent) = (newTag.getLong(0), newTag.getLong(2))
       require(nNew > 0L,
@@ -3552,6 +3556,12 @@ object IndexStore {
           "cast from an incompatible id type (the live column is " +
           s"${allIds.schema.head.dataType.sql}) or a join that missed; " +
           "fix the id derivation and re-run (nothing was tombstoned)")
+      // a repeated replacement id would index one identity twice —
+      // raise here, BEFORE anything mutates
+      require(newTag.getLong(3) == nNew,
+        s"IndexStore.$op: replacement batch repeats " +
+          s"${nNew - newTag.getLong(3)} id(s) — dedupe the batch and " +
+          "re-run (nothing was tombstoned)")
       if (nNewPresent > 0L) {
         val sample = newIds.join(everIds, Seq(idColName), "left_semi")
           .limit(5).collect().map(_.get(0)).mkString(", ")

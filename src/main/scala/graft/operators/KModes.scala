@@ -1,15 +1,21 @@
 package graft.operators
 
-import graft.functions.{Distances, HammingKernels}
+import graft.functions.{HammingAssign, HammingKernels}
 import org.apache.spark.ml.{Estimator, Model}
 import org.apache.spark.ml.param._
 import org.apache.spark.ml.util.Identifiable
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, SortOrder}
+import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
+import org.apache.spark.sql.catalyst.plans.logical.Sort
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{functions => F}
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import scala.jdk.CollectionConverters._
 
 /** K-modes clustering for categorical data, Spark-native.
   *
@@ -18,10 +24,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * (mirrors `ml.clustering.KMeans` shape, SURVEY.md §8.1). Two fit
   * algorithms behind `initMode`:
   *
-  *  - `global` (default): plain distributed Lloyd. Each iteration is
-  *    ONE job with no shuffle: a `treeAggregate` over the scan in which
-  *    every partition assigns its rows to the nearest of the k centers
-  *    (the same [[graft.functions.HammingKernels]] `transform` runs) and
+  *  - `global` (default): plain distributed Lloyd with no row shuffle.
+  *    The seeded init (and an empty-cluster reseed) is one job: each
+  *    partition keeps its n smallest distinct rows in the seeded-hash
+  *    order and the driver merges the P×n rows
+  *    ([[KModes.smallestDistinct]]). Each iteration is ONE job: a
+  *    `treeAggregate` over the scan in which every partition assigns its
+  *    raw feature rows to the nearest of the k centers (the same
+  *    [[graft.functions.HammingKernels]] `transform`, `computeCost` and
+  *    `predict` run, a null element read as the null category) and
   *    folds them into per-cluster row counts, distance sums and
   *    [[ModeCounts]] tables. A partition's result is bounded by
   *    k × n_features × the distinct values in that partition, never by
@@ -86,7 +97,10 @@ trait KModesParams extends Params {
   def getDistance: String = $(distance)
   def getInitHash: String = $(initHash)
 
-  /** Null-normalized features column (null is its own category, SURVEY §2). */
+  /** Null-normalized features column (null is its own category, SURVEY §2):
+    * what the init ranks and the ensemble's local fits read. The Hamming
+    * kernel reads the raw column with the same null rule.
+    */
   private[operators] def feats: Column =
     F.transform(col($(featuresCol)), x => coalesce(x, lit(ArrayModeAggregator.NullSentinel)))
 
@@ -127,47 +141,29 @@ class KModes(override val uid: String) extends Estimator[KModesModel] with KMode
     copyValues(model.setParent(this))
   }
 
-  /** Init/reseed ranking hash over the features column `f` (see
-    * [[KModesParams.initHash]]): md5 of chr(1)-joined `seed, f₁, …, fₙ`
-    * in portable mode, else xxhash64(f, seed). The md5 tie-break key is
-    * the same joined string (not the array), so an external replay
-    * compares plain strings — equivalent for fixed-arity features.
-    */
-  private def initOrderKeys: Seq[org.apache.spark.sql.Column] =
-    $(initHash) match {
-      case "md5" =>
-        val joined = concat_ws("\u0001", lit($(seed).toString), col("f"))
-        Seq(md5(joined), concat_ws("\u0001", col("f")))
-      case _ => Seq(xxhash64(col("f"), lit($(seed))), col("f"))
-    }
+  private def initOrderKeys: Seq[Column] = KModes.initOrderKeys($(initHash), $(seed))
 
   // ---------------------------------------------------------------- global
   private def fitGlobal(df: DataFrame): KModesModel = {
-    val spark = df.sparkSession
-    import spark.implicits._
-
-    // Deterministic seeded init (R9 global form): k distinct feature rows in
-    // seeded-hash order. The distinct shuffles the feature arrays of all
-    // rows, and most rows are distinct once there are several features
-    // (62,258 of the benchmark table's 100,000). Unless a cluster empties
-    // and is reseeded, this exchange is the fit's only row shuffle.
-    val input = df.select(feats.as("f"))
-    var centers: Array[Seq[String]] = input
-      .distinct()
-      .orderBy(initOrderKeys: _*)
-      .limit($(k))
-      .as[Seq[String]]
-      .collect()
+    // Deterministic seeded init (R9 global form): the k smallest distinct
+    // null-normalized feature rows in seeded-hash order, in one job with
+    // no exchange — each partition sends at most k rows to the driver.
+    val ranked = df.select(feats.as("f"))
+    var centers: Array[Seq[String]] =
+      KModes.smallestDistinct(ranked, initOrderKeys, $(k)).map(_.getSeq[String](0))
     require(centers.nonEmpty, "KModes.fit: no rows")
 
     var iter = 0
     var converged = false
     var cost = 0.0
+    // the passes read the raw features; the kernel reads a null element
+    // as the null category
+    val input = df.select(col($(featuresCol)).as("f"))
     val rows = input.queryExecution.toRdd
     while (iter < $(maxIter) && !converged) {
       // one job: each partition folds its rows into a LloydPass; the
       // driver merges the partition results
-      val cs = KModes.centersData(centers)
+      val cs = KModes.decoded(centers.toSeq)
       val pass = rows.treeAggregate(new LloydPass(centers.length))(
         (s, r) => s.add(r.getArray(0), cs), _.merge(_), depth = 2)
 
@@ -184,17 +180,14 @@ class KModes(override val uid: String) extends Estimator[KModesModel] with KMode
         if (emptyIds.isEmpty) newCenters
         else {
           // deterministic reseed: records farthest from their center,
-          // (min_dist DESC, hash ASC), distinct, one bounded job (SURVEY §8.3)
-          val a = Distances.assign(col("f"), typedlit(centers.map(_.toSeq).toSeq))
-          val far = input
-            .select(col("f"), a.getField("min_dist").as("d"))
-            .distinct()
-            .orderBy(col("d").desc +: initOrderKeys: _*)
-            .limit(emptyIds.size)
-            .as[(Seq[String], Int)]
-            .collect()
+          // (min_dist DESC, hash ASC), distinct, one job with no exchange
+          // (SURVEY §8.3)
+          val a = KModes.assign(col("f"), typedlit(centers.toSeq))
+          val far = KModes.smallestDistinct(
+            ranked.select(col("f"), a.getField("min_dist").as("d")),
+            col("d").desc +: initOrderKeys, emptyIds.size)
           val upd = newCenters.clone()
-          emptyIds.zip(far).foreach { case (id, (row, _)) => upd(id) = row }
+          emptyIds.zip(far).foreach { case (id, r) => upd(id) = r.getSeq[String](0) }
           upd
         }
 
@@ -207,7 +200,7 @@ class KModes(override val uid: String) extends Estimator[KModesModel] with KMode
     // the loop exits at maxIter (or maxIter=0) it would not correspond to
     // the returned centers. One extra narrow pass fixes that.
     if (!converged)
-      cost = KModes.meanHamming(input, col("f"), typedlit(centers.map(_.toSeq).toSeq))
+      cost = KModes.meanHamming(input, col("f"), centers.toSeq)
 
     new KModesModel(uid, centers.map(_.toArray), cost, iter)
   }
@@ -253,8 +246,7 @@ class KModes(override val uid: String) extends Estimator[KModesModel] with KMode
       useFrequency = $(distance) == "frequency")
 
     // Final cost = mean Hamming distance to assigned metamode (R13).
-    val cost = KModes.meanHamming(input.toDF("f"), col("f"),
-      typedlit(meta.centers.map(_.toSeq).toSeq))
+    val cost = KModes.meanHamming(df, col($(featuresCol)), meta.centers.toSeq.map(_.toSeq))
 
     new KModesModel(uid, meta.centers, cost, meta.iterations)
   }
@@ -292,12 +284,14 @@ class KModesModel(
     copyValues(m, extra).setParent(parent)
   }
 
-  private def centersLit = typedlit(clusterCenters.map(_.toSeq).toSeq)
+  @transient private lazy val decodedCenters =
+    KModes.decoded(clusterCenters.toSeq.map(_.toSeq))
 
   override def transform(dataset: Dataset[_]): DataFrame = {
     transformSchema(dataset.schema)
     dataset.withColumn($(predictionCol),
-      Distances.assign(feats, centersLit).getField("prediction"))
+      KModes.assign(col($(featuresCol)), typedlit(clusterCenters.toSeq.map(_.toSeq)))
+        .getField("prediction"))
   }
 
   /** Reference-fidelity alias for the fitted centers
@@ -313,14 +307,14 @@ class KModesModel(
     * executes, so distance and tie-break semantics cannot diverge.
     */
   def predict(features: Seq[String]): Int = {
-    val f = KModes.arrayData(features.map(v =>
-      if (v == null) ArrayModeAggregator.NullSentinel else v))
-    HammingKernels.assign(f, KModes.centersData(clusterCenters.map(_.toSeq))).getInt(0)
+    val f = features.map(v =>
+      if (v == null) ArrayModeAggregator.NullSentinelUtf8 else UTF8String.fromString(v))
+    HammingKernels.prediction(HammingKernels.nearest(f.toArray, decodedCenters))
   }
 
   /** Mean Hamming distance of `dataset` to its assigned centers (R13). */
   def computeCost(dataset: Dataset[_]): Double =
-    KModes.meanHamming(dataset, feats, centersLit)
+    KModes.meanHamming(dataset, col($(featuresCol)), clusterCenters.toSeq.map(_.toSeq))
 }
 
 object KModes {
@@ -332,18 +326,93 @@ object KModes {
     array(cols.map(c => coalesce(c.cast("string"),
       lit(ArrayModeAggregator.NullSentinel))): _*)
 
-  /** Mean Hamming distance of the rows of `ds` (features `f`) to their
-    * nearest center of the literal `centers` — one narrow aggregate.
+  /** Init/reseed ranking keys over the null-normalized features column
+    * `f` (see [[KModesParams.initHash]]): md5 of chr(1)-joined
+    * `seed, f₁, …, fₙ` in portable mode, else xxhash64(f, seed). The md5
+    * tie-break key is the same joined string (not the array), so an
+    * external replay compares plain strings — equivalent for fixed-arity
+    * features.
     */
-  private[operators] def meanHamming(ds: Dataset[_], f: Column, centers: Column): Double =
-    ds.select(avg(Distances.assign(f, centers).getField("min_dist"))).head.getDouble(0)
+  private[graft] def initOrderKeys(initHash: String, seed: Long): Seq[Column] =
+    initHash match {
+      case "md5" =>
+        val joined = concat_ws("\u0001", lit(seed.toString), col("f"))
+        Seq(md5(joined), concat_ws("\u0001", col("f")))
+      case _ => Seq(xxhash64(col("f"), lit(seed)), col("f"))
+    }
 
-  private[operators] def arrayData(values: Seq[String]): ArrayData =
-    new GenericArrayData(values.map(UTF8String.fromString).toArray[Any])
+  /** The rows of `df.distinct().orderBy(order: _*).limit(n)`, in one job
+    * with no exchange: each partition keeps its n smallest distinct rows
+    * in a bounded set under Spark's own ordering of `order` (so ties,
+    * directions and nulls sort as in `orderBy`), and the driver merges
+    * the P×n rows. Exact, because the union of every partition's n
+    * smallest distinct rows holds the global n smallest. Rows tied on
+    * `order` are ranked by their own columns, ascending — the set must
+    * not fold two distinct rows, and `orderBy` leaves their order open.
+    */
+  private[graft] def smallestDistinct(df: DataFrame, order: Seq[Column], n: Int): Array[Row] = {
+    if (n <= 0) return Array.empty
+    val width = df.columns.length
+    // the analyzed `orderBy` resolves the keys, directions and null order;
+    // each key is computed once per row, next to the row's own columns
+    val sorts = df.orderBy(order: _*).queryExecution.analyzed
+      .collectFirst { case s: Sort => s.order }.get
+    val keyed = df.select(df.columns.map(col) ++
+      sorts.zipWithIndex.map { case (s, i) => Bridge.column(s.child).as(s"__order$i") }: _*)
+    val schema = keyed.schema
+    def ref(i: Int) = BoundReference(i, schema(i).dataType, schema(i).nullable)
+    val ordering = new LazilyGeneratedOrdering(
+      sorts.zipWithIndex.map { case (s, i) =>
+        SortOrder(ref(width + i), s.direction, s.nullOrdering, Seq.empty)
+      } ++ (0 until width).map(i => SortOrder(ref(i), Ascending)))
+    val perPartition = keyed.queryExecution.toRdd
+      .mapPartitions(rows => smallest(rows, n, ordering).iterator.asScala)
+      .collect()
+    val toScala = (0 until width).map(i =>
+      (schema(i).dataType, CatalystTypeConverters.createToScalaConverter(schema(i).dataType)))
+    smallest(perPartition.iterator, n, ordering).asScala.toArray.map(r =>
+      Row.fromSeq(toScala.zipWithIndex.map { case ((t, conv), i) => conv(r.get(i, t)) }))
+  }
 
-  /** Centers in the internal form [[HammingKernels.assign]] reads. */
-  private[operators] def centersData(centers: Seq[Seq[String]]): ArrayData =
-    new GenericArrayData(centers.map(arrayData).toArray[Any])
+  /** The n smallest distinct rows of `rows` under `ord`, in order. */
+  private def smallest(rows: Iterator[InternalRow], n: Int,
+      ord: Ordering[InternalRow]): java.util.TreeSet[InternalRow] = {
+    val set = new java.util.TreeSet[InternalRow](ord)
+    rows.foreach { r =>
+      if (set.size < n || ord.compare(r, set.last) < 0) {
+        if (set.add(r.copy()) && set.size > n) set.pollLast()
+      }
+    }
+    set
+  }
+
+  /** struct(prediction, min_dist) of the nearest center, reading a null
+    * feature element as the null category: K-modes' assignment over the
+    * raw features column.
+    */
+  private[operators] def assign(f: Column, centers: Column): Column =
+    Bridge.column(HammingAssign(Bridge.expression(f), Bridge.expression(centers),
+      nullsAsSentinel = true))
+
+  /** Mean Hamming distance of the rows of `ds` (raw features `f`; a null
+    * array is skipped, a null element is the null category) to their
+    * nearest center — one job with no exchange; 0 when no row counts.
+    */
+  private[operators] def meanHamming(ds: Dataset[_], f: Column,
+      centers: Seq[Seq[String]]): Double = {
+    val cs = decoded(centers)
+    val (n, sum) = ds.select(f).queryExecution.toRdd.aggregate((0L, 0L))(
+      (acc, r) =>
+        if (r.isNullAt(0)) acc
+        else (acc._1 + 1, acc._2 + HammingKernels.minDist(HammingKernels.nearest(
+          HammingKernels.values(r.getArray(0), ArrayModeAggregator.NullSentinelUtf8), cs))),
+      (a, b) => (a._1 + b._1, a._2 + b._2))
+    if (n == 0) 0.0 else sum.toDouble / n
+  }
+
+  /** Centers in the form [[HammingKernels.nearest]] reads. */
+  private[operators] def decoded(centers: Seq[Seq[String]]): Array[Array[UTF8String]] =
+    centers.map(_.map(UTF8String.fromString).toArray).toArray
 }
 
 /** One global Lloyd pass over some rows: per cluster, the row count, the
@@ -356,13 +425,16 @@ private final class LloydPass(k: Int) extends Serializable {
   val dist = new Array[Long](k)
   val tables: Array[ModeCounts.Tables] = Array.fill(k)(Array.empty)
 
-  /** Assign `f` to its nearest center (ties to the lowest id) and count it. */
-  def add(f: ArrayData, centers: ArrayData): LloydPass = {
-    val a = HammingKernels.assign(f, centers)
-    val c = a.getInt(0)
+  /** Assign the raw features `f` to their nearest center (ties to the
+    * lowest id, a null element read as the null category) and count them.
+    */
+  def add(f: ArrayData, centers: Array[Array[UTF8String]]): LloydPass = {
+    val v = HammingKernels.values(f, ArrayModeAggregator.NullSentinelUtf8)
+    val a = HammingKernels.nearest(v, centers)
+    val c = HammingKernels.prediction(a)
     n(c) += 1
-    dist(c) += a.getInt(1)
-    tables(c) = ModeCounts.add(tables(c), f)
+    dist(c) += HammingKernels.minDist(a)
+    tables(c) = ModeCounts.add(tables(c), v)
     this
   }
 

@@ -1,9 +1,12 @@
 package graft
 
-import graft.functions.{Distances, TextFunctions, VectorFunctions}
+import graft.functions.{Distances, HammingAssign, HammingKernels, TextFunctions, VectorFunctions}
 import graft.operators.ArrayModeAggregator
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.Row
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Distance kernels, one-pass mode aggregation, text + vector functions
   * (SURVEY §6 tier 1).
@@ -194,6 +197,61 @@ class FunctionsSpec extends SparkSuite {
       assert(r.getStruct(0).getInt(0) == r.getStruct(1).getInt(0), r.toString)
       assert(r.getStruct(0).getInt(1) == r.getStruct(1).getInt(1), r.toString)
     }
+  }
+
+  // rows and centers for the decoded, early-stopping assignment kernel:
+  // null elements, the literal null-category value, length mismatches
+  // and rows equidistant from several centers (the centers share one
+  // length, and each row covers the position of a center's null: the
+  // composed form pads the shorter side with nulls, which match a null
+  // on the other side)
+  private val sentinel = ArrayModeAggregator.NullSentinel
+  private val kernelRows = Seq(
+    Seq("a", "b", "c"), Seq("a", "x", "c"), Seq("x", "y", "z"), Seq("a", "b"),
+    Seq[String](null, "b", "c"), Seq[String](null, null, null),
+    Seq(sentinel, "b", "c"), Seq(sentinel, "y", sentinel), Seq("b"),
+    Seq("a", "b", "c", "d", "e"), Seq("q", "q", "q"), Seq("a", "y", "q"))
+  private val kernelCenters = Seq(
+    Seq("a", "b", "c"), Seq("x", "y", "z"), Seq("a", "x", "c"),
+    Seq(sentinel, "y", sentinel), Seq[String](null, "b", "c"), Seq("a", "b", "c"))
+
+  private def arrayData(xs: Seq[String]) =
+    new GenericArrayData(xs.map(v => if (v == null) null else UTF8String.fromString(v)).toArray[Any])
+
+  test("decoded early-stop kernel equals the argmin of HammingKernels.hamming") {
+    val cs = kernelCenters.map(arrayData)
+    val decoded = HammingKernels.decode(new GenericArrayData(cs.toArray[Any]))
+    for (r <- kernelRows) {
+      val ds = cs.map(HammingKernels.hamming(arrayData(r), _))
+      val got = HammingKernels.nearest(HammingKernels.values(arrayData(r), null), decoded)
+      assert(HammingKernels.prediction(got) == ds.indexOf(ds.min), r.toString)
+      assert(HammingKernels.minDist(got) == ds.min, r.toString)
+    }
+  }
+
+  test("HammingAssign agrees with Distances.assignComposed for literal and " +
+      "column centers, and reads nulls as the null category when asked") {
+    val df = kernelRows.map(r => (r, kernelCenters)).toDF("f", "cs")
+    val normalized = transform(col("f"), x => coalesce(x, lit(sentinel)))
+    val cLit = typedlit(kernelCenters)
+    def sentinelAssign(c: org.apache.spark.sql.Column) = Bridge.column(
+      HammingAssign(Bridge.expression(col("f")), Bridge.expression(c), nullsAsSentinel = true))
+    val out = df.select(
+      Distances.assign(col("f"), cLit).as("lit"),
+      Distances.assign(col("f"), col("cs")).as("col"),
+      Distances.assignComposed(col("f"), cLit).as("composed"),
+      sentinelAssign(cLit).as("sLit"), sentinelAssign(col("cs")).as("sCol"),
+      Distances.assignComposed(normalized, cLit).as("sComposed")).collect()
+    def pair(r: Row, i: Int) = (r.getStruct(i).getInt(0), r.getStruct(i).getInt(1))
+    out.foreach { r =>
+      assert(pair(r, 0) == pair(r, 2) && pair(r, 1) == pair(r, 2), r.toString)
+      assert(pair(r, 3) == pair(r, 5) && pair(r, 4) == pair(r, 5), r.toString)
+    }
+    // a null row element matches a null center element, or the null
+    // category when asked
+    val nullRow = out(kernelRows.indexOf(Seq[String](null, "b", "c")))
+    assert(pair(nullRow, 0) == ((4, 0)))
+    assert(pair(nullRow, 3) == ((0, 1)))
   }
 
   test("SQL surface: graft_* functions usable from spark.sql after register") {

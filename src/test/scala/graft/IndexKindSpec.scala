@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
   * column order. A merged index records the same meta as a single
   * build. The one ingest round gives every kind the same verdict
   * shape, replay and append ≡ rebuild, and indexes no NULL id; an IVF
-  * append refuses a batch that repeats an id. A kindless or unknown
+  * append refuses a batch that repeats an id, and every kind's replace
+  * refuses one before it tombstones anything. A kindless or unknown
   * meta raises naming the op.
   */
 class IndexKindSpec extends SparkSuite {
@@ -221,17 +222,39 @@ class IndexKindSpec extends SparkSuite {
       "vectors in every probe — dedupe the batch")
     assert(kind.liveIds(path) == (1L to 6L).toSet)
     assert(IndexStore.checkIndex(spark, path).isEmpty)
-    // the replace tombstones 6, then its append raises; the corrected
-    // batch runs as the crash-retry shape (append only)
+    // the replace raises before its tombstone; the corrected batch runs
+    // as a fresh replace (tombstone + append)
     intercept[IllegalArgumentException](IndexStore.replaceIvfMembers(
       repeated, "id", "v", path, Seq(6L).toDF("id")))
-    assert(kind.liveIds(path) == (1L to 5L).toSet)
+    assert(kind.liveIds(path) == (1L to 6L).toSet)
     assert(IndexStore.replaceIvfMembers(
       Seq((100L, vec(1)), (101L, vec(2))).toDF("id", "v"), "id", "v", path,
-      Seq(6L).toDF("id")) == ((0L, 2L)))
+      Seq(6L).toDF("id")) == ((1L, 2L)))
     assert(kind.liveIds(path) == (1L to 5L).toSet ++ Set(100L, 101L))
     assert(IndexStore.checkIndex(spark, path).isEmpty)
   }
+
+  for (k <- Seq("text", "media", "vector", "corpus", "ivf"))
+    test(s"$k: a replace batch that repeats an id raises before the " +
+        "tombstone and leaves the index unchanged") {
+      val kind = kinds.find(_.name == k).get
+      val path = tmp()
+      kind.save(kind.rows, path)
+      def tables = kind.tables.map { t =>
+        val d = spark.read.parquet(IndexStore.tableDir(spark, path, t))
+        digest(d, d.columns.toSeq)
+      }
+      val before = tables
+      val repeated = kind.rows.where(col("id").isin(1L, 2L))
+        .withColumn("id", lit(100L))
+      val e = intercept[IllegalArgumentException](IndexStore.replaceInIndex(
+        spark, path, repeated, "id", "v", Seq(6L).toDF("id")))
+      assert(e.getMessage.contains("replacement batch repeats 1 id(s)"),
+        e.getMessage)
+      assert(kind.liveIds(path) == (1L to 6L).toSet)
+      assert(tables == before)
+      assert(IndexStore.checkIndex(spark, path).isEmpty)
+    }
 
   test("vector: checkIndex reports members without reps as unhealable " +
       "and reps without blocks as healable") {

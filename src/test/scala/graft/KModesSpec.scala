@@ -1,6 +1,8 @@
 package graft
 
-import graft.operators.{KModes, LocalKModes}
+import graft.functions.Distances
+import graft.operators.{ArrayModeAggregator, KModes, LocalKModes}
+import org.apache.spark.scheduler._
 import org.apache.spark.sql.functions._
 import scala.util.Random
 
@@ -188,22 +190,45 @@ class KModesSpec extends SparkSuite {
   private def fitted(m: graft.operators.KModesModel) =
     (m.clusterCenters.map(_.toSeq).toSeq, m.cost, m.iterations)
 
-  /** Spark jobs `body` submits, counted through its job group. */
-  private def jobsOf(body: => Unit): Int = {
+  /** Jobs `body` submits and the shuffle bytes their tasks write, seen by
+    * one listener through `body`'s job group.
+    */
+  private def jobsAndShuffleBytes(body: => Unit): (Int, Long) = {
     val sc = spark.sparkContext
     val group = s"kmodes-spec-${java.util.UUID.randomUUID}"
-    sc.setJobGroup(group, group)
-    try body finally sc.clearJobGroup()
-    // the status store fills from the listener bus in order: once a job
-    // submitted afterwards shows up, every job of `group` has too
-    val marker = s"$group-marker"
-    sc.setJobGroup(marker, marker)
-    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-    val deadline = System.nanoTime() + 30L * 1000000000L
-    while (sc.statusTracker.getJobIdsForGroup(marker).isEmpty &&
-      System.nanoTime() < deadline) Thread.sleep(10)
-    sc.statusTracker.getJobIdsForGroup(group).length
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val bytes = new java.util.concurrent.atomic.AtomicLong
+    val markerJob = new java.util.concurrent.atomic.AtomicInteger(-1)
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => jobs.incrementAndGet(); e.stageIds.foreach(stages.add)
+          case g if g == s"$group-marker" => markerJob.set(e.jobId)
+          case _ =>
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null)
+          bytes.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
+      // the bus delivers in order: once the marker job ends here, every
+      // event of `group` has been seen
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == markerJob.get) drained.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      (jobs.get, bytes.get)
+    } finally sc.removeSparkListener(listener)
   }
+
+  /** Spark jobs `body` submits, counted through its job group. */
+  private def jobsOf(body: => Unit): Int = jobsAndShuffleBytes(body)._1
 
   test("null feature arrays are skipped by both fits, like computeCost skips them") {
     val clean = plantedDf(200, 4, 2, 71)
@@ -253,5 +278,67 @@ class KModesSpec extends SparkSuite {
     assert(fit(20).iterations > 3) // still unconverged after pass 3
     val jobs = (1 to 3).map(i => jobsOf(fit(i)))
     assert(jobs(1) - jobs(0) == 1 && jobs(2) - jobs(1) == 1, s"jobs by maxIter: $jobs")
+  }
+
+  test("with maxIter = 0 the global fit is one init job and one cost job, " +
+      "and writes no shuffle bytes") {
+    val df = plantedDf(300, 4, 3, 43)
+    val (jobs, bytes) = jobsAndShuffleBytes(
+      new KModes().setK(3).setMaxIter(0).setSeed(7L).fit(df))
+    assert(jobs == 2, s"jobs $jobs")
+    assert(bytes == 0L, s"shuffle-write bytes $bytes")
+  }
+
+  test("smallestDistinct returns the rows of distinct().orderBy(keys).limit(n)") {
+    // every row three times, spread over the partitions by round robin
+    val base = plantedDf(120, 4, 3, 11, signal = 0.6).toDF("f")
+    val rows = base.union(base).union(base)
+    val nDistinct = base.distinct().count().toInt
+    val withDist = (d: org.apache.spark.sql.DataFrame) => d.select(col("f"),
+      Distances.assign(col("f"), typedlit(Seq(Seq("g0v0", "g0v1", "g0v2", "g0v3"),
+        Seq("g1v0", "n1", "g1v2", "n0")))).getField("min_dist").as("d"))
+    for (hash <- Seq("xxhash64", "md5");
+         parts <- Seq(1, 4, 16);
+         reseed <- Seq(false, true);
+         n <- Seq(1, 7, nDistinct + 10)) {
+      val df = if (parts == 1) rows.coalesce(1) else rows.repartition(parts)
+      val keys = KModes.initOrderKeys(hash, 7L)
+      val (in, order) =
+        if (reseed) (withDist(df), col("d").desc +: keys) else (df, keys)
+      val want = in.distinct().orderBy(order: _*).limit(n).collect().toSeq
+      val got = KModes.smallestDistinct(in, order, n).toSeq
+      assert(got == want, s"$hash, $parts partitions, reseed $reseed, n $n")
+      assert(got.length == math.min(n, nDistinct))
+    }
+  }
+
+  test("a fit on raw features with nulls equals the fit on " +
+      "KModes.assemble-normalized features") {
+    val rnd = new Random(83)
+    val cells = Seq.tabulate(400) { i =>
+      val g = i % 3
+      Seq.tabulate(4) { j =>
+        val r = rnd.nextDouble()
+        if (r < 0.1) null
+        else if (r < 0.15) ArrayModeAggregator.NullSentinel
+        else if (r < 0.85) s"g${g}v$j" else s"n${rnd.nextInt(3)}"
+      }
+    }
+    val df = cells.zipWithIndex.map { case (c, i) => (i, c(0), c(1), c(2), c(3)) }
+      .toDF("id", "c0", "c1", "c2", "c3")
+    val cs = Seq("c0", "c1", "c2", "c3").map(col)
+    val raw = df.select(col("id"), array(cs: _*).as("features"))
+    val norm = df.select(col("id"), KModes.assemble(cs: _*).as("features"))
+    for (maxIter <- Seq(0, 1, 20); hash <- Seq("xxhash64", "md5")) {
+      val est = new KModes().setK(3).setMaxIter(maxIter).setSeed(7L).setInitHash(hash)
+      val (mr, mn) = (est.fit(raw), est.fit(norm))
+      assert(fitted(mr) == fitted(mn), s"maxIter $maxIter, $hash")
+      assert(mr.computeCost(raw) == mn.computeCost(norm))
+      val pr = mr.transform(raw).orderBy("id").select("prediction").as[Int].collect()
+      val pn = mn.transform(norm).orderBy("id").select("prediction").as[Int].collect()
+      assert(pr.toSeq == pn.toSeq)
+      val rawRows = raw.orderBy("id").select("features").as[Seq[String]].collect()
+      assert(rawRows.map(mr.predict).toSeq == pr.toSeq)
+    }
   }
 }
