@@ -21,13 +21,19 @@ object Distances {
 
   /** Hamming (simple-matching) distance between two string arrays.
     * Null-safe: positions compare with <=> so a null sentinel that survived
-    * assembly still counts as its own category.
+    * assembly still counts as its own category. Each position one array
+    * lacks counts as one mismatch: the positions both hold are compared
+    * on their own, since `zip_with` would pad the shorter array with
+    * nulls that match a null element of the longer one.
     */
-  def hamming(a: Column, b: Column): Column =
+  def hamming(a: Column, b: Column): Column = {
+    val common = greatest(least(size(a), size(b)), lit(0))
     aggregate(
-      zip_with(a, b, (x, y) => when(x <=> y, 0).otherwise(1)),
+      zip_with(slice(a, lit(1), common), slice(b, lit(1), common),
+        (x, y) => when(x <=> y, 0).otherwise(1)),
       lit(0),
-      (acc, x) => acc + x)
+      (acc, x) => acc + x) + abs(size(a) - size(b))
+  }
 
   /** Distances from `features` to each center in a literal center list:
     * returns `array<int>` of length k.

@@ -12,10 +12,10 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Static kernel for nearest-mode assignment, shared by interpreted and
   * generated paths. Distance semantics = the built-in tree
-  * `aggregate(zip_with(a, c, (x,y) -> if(x <=> y, 0, 1)), ...)`:
-  * position-wise simple matching, null-safe (null == null matches),
-  * length difference counts one mismatch per missing position. Ties go
-  * to the LOWEST center index (numpy-argmin first-wins, SURVEY §3.1 R6).
+  * [[Distances.hamming]]: position-wise simple matching, null-safe
+  * (null == null matches), length difference counts one mismatch per
+  * missing position. Ties go to the LOWEST center index (numpy-argmin
+  * first-wins, SURVEY §3.1 R6).
   *
   * The assignment kernel reads decoded values: the centers are decoded
   * once (per pass or per task) and each row once, and a center stops

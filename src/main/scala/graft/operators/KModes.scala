@@ -43,13 +43,18 @@ import scala.jdk.CollectionConverters._
   *    scales to 100 TB: per-iteration cost is one scan.
   *
   *  - `ensemble` (reference fidelity): stage 1 runs [[LocalKModes]]
-  *    independently inside each partition via `mapPartitions`
-  *    [UP iter_k_modes / k_modes_partitioned ~L150-280 | conf=M], stage 2
-  *    collects the P×k local modes (tiny) and meta-clusters them on the
-  *    driver with our own local K-modes — the part upstream delegated to
-  *    the `kmodes` PyPI package [UP ~L295-330 | conf=H]. Embarrassingly
-  *    parallel (zero shuffles in stage 1), result depends on partitioning
-  *    exactly like the reference.
+  *    independently inside each partition [UP iter_k_modes /
+  *    k_modes_partitioned ~L150-280 | conf=M]: each partition reads its
+  *    raw feature arrays (a null element read as the null category) into
+  *    per-position dictionary codes — 4 bytes per feature and row, plus
+  *    the partition's distinct values — and fits them with the coded
+  *    local Lloyd loop. Stage 2 collects the P×k local modes (tiny) and
+  *    meta-clusters them on the driver with the same loop — the part
+  *    upstream delegated to the `kmodes` PyPI package [UP ~L295-330 |
+  *    conf=H]. Two jobs (stage 1, the final cost pass) and zero
+  *    shuffles; the result depends on partitioning exactly like the
+  *    reference. Local fits order values in Java `String` order, where
+  *    the global fit's [[ModeCounts]] use UTF-8 byte order.
   *
   * Determinism contract (required for the DuckDB oracle, SURVEY §2):
   * seeded hash-order init, assignment ties → lowest cluster id, mode ties
@@ -98,8 +103,9 @@ trait KModesParams extends Params {
   def getInitHash: String = $(initHash)
 
   /** Null-normalized features column (null is its own category, SURVEY §2):
-    * what the init ranks and the ensemble's local fits read. The Hamming
-    * kernel reads the raw column with the same null rule.
+    * read only by the global init and reseed ranking. The Lloyd passes,
+    * the ensemble's stage 1 and the Hamming kernel read the raw column
+    * with the same null rule.
     */
   private[operators] def feats: Column =
     F.transform(col($(featuresCol)), x => coalesce(x, lit(ArrayModeAggregator.NullSentinel)))
@@ -207,38 +213,36 @@ class KModes(override val uid: String) extends Estimator[KModesModel] with KMode
 
   // -------------------------------------------------------------- ensemble
   private def fitEnsemble(df: DataFrame): KModesModel = {
-    val spark = df.sparkSession
-    import spark.implicits._
     val kk = $(k)
     val mi = $(maxIter)
     val sd = $(seed)
 
     // Stage 1: local Lloyd per partition (zero shuffles), seeded per
     // partition id — deterministic for a fixed partitioning, exactly the
-    // reference's semantics (result depends on layout, SURVEY §5).
+    // reference's semantics (result depends on layout, SURVEY §5). Each
+    // partition codes its raw feature arrays (a null element read as the
+    // null category) and fits the codes.
     // R14 (every partition holds >= k records, the reference's fit()
     // precondition [UP ~L155-175 | conf=M]) rides along in the same pass
     // as a per-partition size marker instead of costing its own scan.
-    val input = df.select(feats.as("f")).as[Seq[String]]
-    val stage1: Array[(Int, Long, Seq[String])] = input
-      .mapPartitions { it =>
-        val data = it.map(_.toArray).toArray
-        val pid = org.apache.spark.TaskContext.getPartitionId()
-        if (data.isEmpty) Iterator.single((pid, 0L, null: Seq[String]))
-        else {
-          val r = LocalKModes.fit(data, kk, mi, sd + pid)
-          Iterator.single((pid, data.length.toLong, null: Seq[String])) ++
-            r.centers.iterator.map(c => (pid, -1L, c.toSeq))
+    val stage1: Array[(Int, Long, Array[String])] =
+      df.select(col($(featuresCol))).queryExecution.toRdd
+        .mapPartitionsWithIndex { (pid, rows) =>
+          val data = Coded(rows.map(_.getArray(0)), ArrayModeAggregator.NullSentinelUtf8)
+          if (data.rows == 0) Iterator.single((pid, 0L, null: Array[String]))
+          else {
+            val r = LocalKModes.fit(data, kk, mi, sd + pid, useFrequency = false)
+            Iterator.single((pid, data.rows.toLong, null: Array[String])) ++
+              r.centers.iterator.map(c => (pid, -1L, c))
+          }
         }
-      }
-      .collect()
+        .collect()
     require(stage1.exists(_._2 > 0), "KModes.fit: no rows")
     val undersized = stage1.filter(t => t._2 >= 0 && t._2 < kk)
     require(undersized.isEmpty,
       s"ensemble fit: every partition needs >= k=$kk records, got " +
         undersized.map(t => s"partition ${t._1}=${t._2}").mkString(", "))
-    val localModes: Array[Array[String]] =
-      stage1.collect { case (_, -1L, c) => c.toArray }
+    val localModes: Array[Array[String]] = stage1.collect { case (_, -1L, c) => c }
 
     // Stage 2: driver-local meta-clustering of P×k modes (R11) — our own
     // LocalKModes replaces the `kmodes` package upstream imported.

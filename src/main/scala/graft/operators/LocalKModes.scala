@@ -1,24 +1,37 @@
 package graft.operators
 
+import graft.functions.HammingKernels
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.unsafe.types.UTF8String
 import scala.collection.mutable
 import scala.util.hashing.MurmurHash3
 
-/** Driver-local / per-partition K-modes on plain arrays.
+/** Driver-local / per-partition K-modes on dictionary-coded rows.
   *
   * This is our own implementation of what the reference DELEGATED to the
   * external `kmodes` PyPI package for stage 2 (meta-clustering of the
   * collected per-partition modes) [UP pyspark_kmodes/pyspark_kmodes.py
   * ~L295-330 `from kmodes.kmodes import KModes` | conf=H], and of the
   * per-partition Lloyd pass of stage 1 [UP iter_k_modes ~L150-220 |
-  * conf=M]. ~100 LoC, zero Spark dependencies, fully deterministic:
-  *   - init: k distinct rows in (murmur3(row, seed)) order;
+  * conf=M]. Runs no Spark job, fully deterministic:
+  *   - init: k distinct rows in (murmur3(row, seed), row) order;
   *   - assignment ties → lowest cluster index (numpy-argmin first-wins);
   *   - mode ties → (count DESC, value ASC);
   *   - empty cluster → reseeded from the record farthest from its center
   *     (distance DESC, hash ASC) — SURVEY §8.3.
   *
-  * Also used as the brute-force test oracle for the distributed fit
-  * (same init order + same tie-breaks ⇒ identical centers).
+  * Value order is Java `String` order (`String.compareTo`, UTF-16 code
+  * units) — unlike [[ModeCounts]], which orders values by their UTF-8
+  * bytes; the two differ between a supplementary-plane character and
+  * U+E000–U+FFFF.
+  *
+  * One Lloyd loop runs every caller: the rows are held as [[Coded]]
+  * per-position int codes, assigned in that value order, so "value ASC"
+  * is "code ASC", a mode is an argmax over one count array per (cluster,
+  * position), and Hamming distance is int compares. Rows may differ in
+  * length: a missing position costs 1, and each position of a center is
+  * the mode of the cluster's rows that reach it, so a center is as long
+  * as the longest row in its cluster.
   */
 object LocalKModes {
 
@@ -29,7 +42,9 @@ object LocalKModes {
       iterations: Int)
 
   def rowHash(row: Array[String], seed: Long): Int =
-    MurmurHash3.arrayHash(row, MurmurHash3.stringHash(seed.toString))
+    MurmurHash3.arrayHash(row, seedHash(seed))
+
+  private def seedHash(seed: Long): Int = MurmurHash3.stringHash(seed.toString)
 
   def hamming(a: Array[String], b: Array[String]): Int = {
     var d = 0
@@ -45,7 +60,8 @@ object LocalKModes {
   /** Frequency-weighted dissimilarity (SURVEY §3.1 R5, conf=M): matching
     * positions contribute `1 - freq(center_value)/cluster_size` instead of
     * 0, so matches against "weak" (low-consensus) mode values still cost
-    * something. Used for stage-2 meta-clustering per the ensemble paper.
+    * something; a missing position costs 1. Used for stage-2
+    * meta-clustering per the ensemble paper.
     */
   def frequencyDissim(
       a: Array[String],
@@ -54,20 +70,20 @@ object LocalKModes {
       size: Long): Double = {
     var d = 0.0
     var i = 0
-    while (i < a.length) {
+    val n = math.min(a.length, center.length)
+    while (i < n) {
       if (a(i) != center(i)) d += 1.0
       else if (size > 0) d += 1.0 - freqs(i).getOrElse(a(i), 0L).toDouble / size
       i += 1
     }
-    d
+    d + math.abs(a.length - center.length)
   }
 
   /** Deterministic seeded init: k distinct rows in murmur-hash order. */
-  def initCenters(data: Array[Array[String]], k: Int, seed: Long): Array[Array[String]] =
-    data.distinctBy(_.toSeq)
-      .sortBy(r => (rowHash(r, seed), r.toSeq))(
-        Ordering.Tuple2(Ordering.Int, Ordering.Implicits.seqOrdering[Seq, String]))
-      .take(k)
+  def initCenters(data: Array[Array[String]], k: Int, seed: Long): Array[Array[String]] = {
+    val coded = Coded(data)
+    init(coded, k, seed).map(coded.decode)
+  }
 
   def fit(
       data: Array[Array[String]],
@@ -76,96 +92,7 @@ object LocalKModes {
       seed: Long,
       useFrequency: Boolean = false): Result = {
     require(data.nonEmpty, "LocalKModes.fit on empty data")
-    val nf = data(0).length
-    var centers = initCenters(data, k, seed)
-    val kEff = centers.length // may be < k when distinct rows < k
-    val assign = new Array[Int](data.length)
-    java.util.Arrays.fill(assign, -1)
-
-    var iter = 0
-    var moved = true
-    var cost = 0.0
-    // frequency tables of the PREVIOUS iteration, for R5's
-    // frequency-weighted dissimilarity (ensemble paper, stage 2);
-    // first pass has no history -> plain Hamming
-    var prevFreqs: Array[Array[collection.Map[String, Long]]] = null
-    var prevSizes: Array[Long] = null
-    // cluster stats, rebuilt each pass (batch Lloyd, matches R7 semantics)
-    while (iter < maxIter && moved) {
-      moved = false
-      cost = 0.0
-      val freqs = Array.fill(kEff, nf)(mutable.Map.empty[String, Long])
-      val sizes = new Array[Long](kEff)
-      // assignment pass
-      var r = 0
-      while (r < data.length) {
-        val row = data(r)
-        var best = 0
-        var bestD = Double.MaxValue
-        var c = 0
-        while (c < kEff) {
-          val d =
-            if (useFrequency && prevFreqs != null && prevSizes(c) > 0)
-              frequencyDissim(row, centers(c), prevFreqs(c), prevSizes(c))
-            else hamming(row, centers(c)).toDouble
-          if (d < bestD) { bestD = d; best = c }
-          c += 1
-        }
-        if (best != assign(r)) { moved = true; assign(r) = best }
-        cost += bestD
-        sizes(best) += 1
-        var f = 0
-        while (f < nf) {
-          val m = freqs(best)(f)
-          m.update(row(f), m.getOrElse(row(f), 0L) + 1L)
-          f += 1
-        }
-        r += 1
-      }
-      // update pass: per-attribute mode, tie-break (count DESC, value ASC)
-      var c = 0
-      while (c < kEff) {
-        if (sizes(c) == 0) {
-          // deterministic reseed: farthest record from its own center
-          val far = data.zipWithIndex.maxBy { case (row, i) =>
-            (hamming(row, centers(assign(i))), -rowHash(row, seed + c))
-          }._1
-          centers(c) = far.clone()
-          moved = true
-        } else {
-          val nc = Array.tabulate(nf) { f =>
-            freqs(c)(f).minBy { case (v, cnt) => (-cnt, v) }._1
-          }
-          if (!java.util.Arrays.equals(
-              nc.asInstanceOf[Array[AnyRef]],
-              centers(c).asInstanceOf[Array[AnyRef]])) {
-            centers(c) = nc
-            moved = true
-          }
-        }
-        c += 1
-      }
-      prevFreqs = freqs.map(_.map(m => m: collection.Map[String, Long]))
-      prevSizes = sizes
-      iter += 1
-    }
-    // final assignment against final centers (so cost matches centers)
-    cost = 0.0
-    var r = 0
-    while (r < data.length) {
-      var best = 0
-      var bestD = Int.MaxValue
-      var c = 0
-      while (c < kEff) {
-        val d = hamming(data(r), centers(c))
-        if (d < bestD) { bestD = d; best = c }
-        c += 1
-      }
-      assign(r) = best
-      cost += bestD
-      r += 1
-    }
-    Result(centers, assign, if (data.isEmpty) 0.0 else cost / data.length, iter)
+    fit(Coded(data), k, maxIter, seed, useFrequency)
   }
 
   /** Meta-cluster collected stage-1 modes (R11). `useFrequency` switches
@@ -182,4 +109,323 @@ object LocalKModes {
       seed: Long,
       useFrequency: Boolean = false): Result =
     fit(modes, k, maxIter, seed, useFrequency)
+
+  /** The Lloyd loop on coded rows (at least one). */
+  private[graft] def fit(
+      data: Coded,
+      k: Int,
+      maxIter: Int,
+      seed: Long,
+      useFrequency: Boolean): Result = {
+    val n = data.rows
+    val centers = init(data, k, seed)
+    val kEff = centers.length // may be < k when distinct rows < k
+    val assign = Array.fill(n)(-1)
+    // per cluster: row count, longest row, one count array per position;
+    // the previous pass's counts feed the frequency-weighted dissimilarity
+    // (ensemble paper, stage 2), so the first pass is plain Hamming
+    def tables = Array.fill(kEff)(data.values.map(v => new Array[Int](v.length)))
+    var counts = tables
+    var prevCounts = tables
+    var sizes = new Array[Int](kEff)
+    var prevSizes: Array[Int] = null
+    val longest = new Array[Int](kEff)
+
+    var iter = 0
+    var moved = true
+    while (iter < maxIter && moved) {
+      moved = false
+      counts.foreach(_.foreach(java.util.Arrays.fill(_, 0)))
+      java.util.Arrays.fill(longest, 0)
+      sizes = new Array[Int](kEff)
+      // assignment pass
+      var r = 0
+      while (r < n) {
+        val best =
+          if (useFrequency && prevSizes != null) nearestWeighted(data, r, centers, prevCounts, prevSizes)
+          else HammingKernels.prediction(nearest(data, r, centers))
+        if (best != assign(r)) { moved = true; assign(r) = best }
+        sizes(best) += 1
+        val from = data.start(r)
+        val len = data.start(r + 1) - from
+        if (len > longest(best)) longest(best) = len
+        val cs = counts(best)
+        var f = 0
+        while (f < len) { cs(f)(data.codes(from + f)) += 1; f += 1 }
+        r += 1
+      }
+      // update pass: per-position mode, tie-break (count DESC, code ASC);
+      // a reseed measures distances to the centers updated so far
+      var c = 0
+      while (c < kEff) {
+        if (sizes(c) == 0) {
+          centers(c) = farthest(data, centers, assign, seed + c)
+          moved = true
+        } else {
+          val nc = Array.tabulate(longest(c))(f => argmax(counts(c)(f)))
+          if (!java.util.Arrays.equals(nc, centers(c))) {
+            centers(c) = nc
+            moved = true
+          }
+        }
+        c += 1
+      }
+      val t = prevCounts; prevCounts = counts; counts = t
+      prevSizes = sizes
+      iter += 1
+    }
+    // final assignment against final centers (so cost matches centers)
+    var cost = 0L
+    var r = 0
+    while (r < n) {
+      val a = nearest(data, r, centers)
+      assign(r) = HammingKernels.prediction(a)
+      cost += HammingKernels.minDist(a)
+      r += 1
+    }
+    Result(centers.map(data.decode), assign, cost.toDouble / n, iter)
+  }
+
+  /** The k smallest distinct rows by (rowHash, codes), in order, kept in a
+    * bounded set.
+    */
+  private def init(data: Coded, k: Int, seed: Long): Array[Array[Int]] = {
+    val sh = seedHash(seed)
+    val hashes = Array.tabulate(data.rows)(data.rowHash(_, sh))
+    val ord: java.util.Comparator[Integer] = (a, b) => {
+      val h = Integer.compare(hashes(a), hashes(b))
+      if (h != 0) h else data.compareRows(a, b)
+    }
+    val set = new java.util.TreeSet[Integer](ord)
+    var r = 0
+    while (r < data.rows) {
+      if (set.size < k || ord.compare(r, set.last) < 0) {
+        if (set.add(r) && set.size > k) set.pollLast()
+      }
+      r += 1
+    }
+    Array.tabulate(set.size)(_ => data.row(set.pollFirst()))
+  }
+
+  /** The nearest center to row `r`, packed as `prediction << 32 | min_dist`
+    * (see [[HammingKernels.prediction]]). A center stops counting once it
+    * reaches the best distance so far: under the strict `<` it can no
+    * longer win.
+    */
+  private def nearest(data: Coded, r: Int, centers: Array[Array[Int]]): Long = {
+    var best = 0
+    var bestD = Int.MaxValue
+    var c = 0
+    while (c < centers.length) {
+      val d = hamming(data, r, centers(c), bestD)
+      if (d < bestD) { bestD = d; best = c }
+      c += 1
+    }
+    (best.toLong << 32) | bestD
+  }
+
+  /** Hamming distance of row `r` to `center`, counted up to `bound`. */
+  private def hamming(data: Coded, r: Int, center: Array[Int], bound: Int = Int.MaxValue): Int = {
+    val from = data.start(r)
+    val len = data.start(r + 1) - from
+    val m = math.min(len, center.length)
+    var d = math.abs(len - center.length)
+    var i = 0
+    while (i < m && d < bound) {
+      if (data.codes(from + i) != center(i)) d += 1
+      i += 1
+    }
+    d
+  }
+
+  /** The nearest center under [[frequencyDissim]] with the previous
+    * pass's tables, Hamming against a center that had no rows; ties to the
+    * lowest id.
+    */
+  private def nearestWeighted(data: Coded, r: Int, centers: Array[Array[Int]],
+      counts: Array[Array[Array[Int]]], sizes: Array[Int]): Int = {
+    val from = data.start(r)
+    val len = data.start(r + 1) - from
+    var best = 0
+    var bestD = Double.MaxValue
+    var c = 0
+    while (c < centers.length) {
+      val d =
+        if (sizes(c) == 0) hamming(data, r, centers(c)).toDouble
+        else {
+          val center = centers(c)
+          val size = sizes(c).toDouble
+          var s = 0.0
+          var i = 0
+          while (i < math.min(len, center.length)) {
+            val v = data.codes(from + i)
+            s += (if (v != center(i)) 1.0 else 1.0 - counts(c)(i)(v).toDouble / size)
+            i += 1
+          }
+          s + math.abs(len - center.length)
+        }
+      if (d < bestD) { bestD = d; best = c }
+      c += 1
+    }
+    best
+  }
+
+  /** The row farthest from its own center, ties by `-rowHash(row, seed)`
+    * DESC (an `Int` negation, so `Int.MinValue` keeps its sign) and then
+    * to the first row.
+    */
+  private def farthest(data: Coded, centers: Array[Array[Int]], assign: Array[Int],
+      seed: Long): Array[Int] = {
+    val sh = seedHash(seed)
+    var best = -1
+    var bestD = -1
+    var bestH = 0
+    var r = 0
+    while (r < data.rows) {
+      val d = hamming(data, r, centers(assign(r)))
+      if (d >= bestD) {
+        val h = -data.rowHash(r, sh)
+        if (d > bestD || h > bestH) { best = r; bestD = d; bestH = h }
+      }
+      r += 1
+    }
+    data.row(best)
+  }
+
+  /** The lowest code of the highest count. */
+  private def argmax(counts: Array[Int]): Int = {
+    var best = 0
+    var c = 1
+    while (c < counts.length) {
+      if (counts(c) > counts(best)) best = c
+      c += 1
+    }
+    best
+  }
+}
+
+/** Rows of strings as per-position dictionary codes. Row r is
+  * `codes(start(r) until start(r + 1))`; at position f, code c stands for
+  * `values(f)(c)`, and codes follow Java `String` order of the values (a
+  * null value first), so comparing codes compares values. A row holds
+  * 4 bytes per position, plus one offset.
+  */
+private[graft] final class Coded(
+    val codes: Array[Int],
+    val start: Array[Int],
+    val values: Array[Array[String]]) {
+
+  def rows: Int = start.length - 1
+
+  def row(r: Int): Array[Int] = java.util.Arrays.copyOfRange(codes, start(r), start(r + 1))
+
+  def decode(row: Array[Int]): Array[String] = Array.tabulate(row.length)(f => values(f)(row(f)))
+
+  /** Per position and code, the `##` of the value. */
+  private lazy val valueHashes: Array[Array[Int]] = values.map(_.map(_.##))
+
+  /** [[LocalKModes.rowHash]] of row r's values: `arrayHash` mixes only
+    * each element's `##`, so it is rebuilt bit-identically from the
+    * values' hashes.
+    */
+  def rowHash(r: Int, seedHash: Int): Int = {
+    val h = new Array[Int](start(r + 1) - start(r))
+    var f = 0
+    while (f < h.length) { h(f) = valueHashes(f)(codes(start(r) + f)); f += 1 }
+    MurmurHash3.arrayHash(h, seedHash)
+  }
+
+  /** Row order: values position by position, a prefix first. */
+  def compareRows(a: Int, b: Int): Int = {
+    val la = start(a + 1) - start(a)
+    val lb = start(b + 1) - start(b)
+    var f = 0
+    while (f < math.min(la, lb)) {
+      val c = Integer.compare(codes(start(a) + f), codes(start(b) + f))
+      if (c != 0) return c
+      f += 1
+    }
+    Integer.compare(la, lb)
+  }
+}
+
+private[graft] object Coded {
+  def apply(rows: Array[Array[String]]): Coded = {
+    val b = new Builder[String](identity, identity)
+    rows.foreach { row => row.foreach(b.add); b.endRow() }
+    b.result()
+  }
+
+  /** Feature arrays as read from Spark, a null element read as `nullAs`. */
+  def apply(rows: Iterator[ArrayData], nullAs: UTF8String): Coded = {
+    val b = new Builder[UTF8String](_.toString, _.clone())
+    rows.foreach { a =>
+      var i = 0
+      while (i < a.numElements()) {
+        b.add(if (a.isNullAt(i)) nullAs else a.getUTF8String(i))
+        i += 1
+      }
+      b.endRow()
+    }
+    b.result()
+  }
+
+  /** Codes values in order of first sight, then renumbers each position
+    * in `String` order of the values. `own` copies a value kept as a key
+    * (a Spark row's strings point into a reused buffer).
+    */
+  private final class Builder[K](str: K => String, own: K => K) {
+    private val ids = mutable.ArrayBuffer.empty[java.util.HashMap[K, Integer]]
+    private val keys = mutable.ArrayBuffer.empty[mutable.ArrayBuffer[K]]
+    private var codes = new Array[Int](1024)
+    private var used = 0
+    private val start = mutable.ArrayBuilder.make[Int]
+    private var rowStart = 0
+    start += 0
+
+    def add(v: K): Unit = {
+      val f = used - rowStart
+      if (f == ids.length) {
+        ids += new java.util.HashMap[K, Integer]
+        keys += mutable.ArrayBuffer.empty[K]
+      }
+      var id = ids(f).get(v)
+      if (id == null) {
+        id = keys(f).length
+        val key = own(v)
+        ids(f).put(key, id)
+        keys(f) += key
+      }
+      if (used == codes.length) codes = java.util.Arrays.copyOf(codes, used * 2)
+      codes(used) = id
+      used += 1
+    }
+
+    def endRow(): Unit = { start += used; rowStart = used }
+
+    def result(): Coded = {
+      val byString = Ordering.comparatorToOrdering(
+        java.util.Comparator.nullsFirst[String](Ordering.String))
+      val renumber = new Array[Array[Int]](keys.length)
+      val values = Array.tabulate(keys.length) { f =>
+        val strs = keys(f).map(str).toArray
+        // keys that decode to one string (malformed UTF-8) share its code
+        val distinct = mutable.ArrayBuffer.empty[String]
+        renumber(f) = new Array[Int](strs.length)
+        strs.indices.sortBy(strs(_))(byString).foreach { i =>
+          if (distinct.isEmpty || byString.compare(distinct.last, strs(i)) != 0) distinct += strs(i)
+          renumber(f)(i) = distinct.length - 1
+        }
+        distinct.toArray
+      }
+      val st = start.result()
+      var r = 0
+      while (r + 1 < st.length) {
+        var i = st(r)
+        while (i < st(r + 1)) { codes(i) = renumber(i - st(r))(codes(i)); i += 1 }
+        r += 1
+      }
+      new Coded(java.util.Arrays.copyOf(codes, used), st, values)
+    }
+  }
 }

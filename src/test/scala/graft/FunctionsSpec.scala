@@ -27,6 +27,24 @@ class FunctionsSpec extends SparkSuite {
     }
   }
 
+  test("hamming counts each position one array lacks as a mismatch") {
+    val rows = Seq(
+      (Seq("a", "b"), Seq("a", "b", "c"), 1),
+      (Seq("a", "b"), Seq[String]("a", "b", null), 1),
+      (Seq.empty[String], Seq[String](null, "b", "c"), 3),
+      (Seq[String](null), Seq[String](null, "b"), 1))
+    rows.foreach { case (a, b, want) =>
+      val got = Seq(1).toDF("x")
+        .select(Distances.hamming(typedlit(a), typedlit(b)).as("d"),
+          Distances.hamming(typedlit(b), typedlit(a)).as("r"))
+        .head
+      assert(got.getInt(0) == want && got.getInt(1) == want, s"$a vs $b")
+    }
+    val nullRow = Seq[Seq[String]](null).toDF("f")
+      .select(Distances.hamming(col("f"), typedlit(Seq("a")))).head
+    assert(nullRow.isNullAt(0))
+  }
+
   test("assignment ties go to the lowest cluster id (first-wins argmin)") {
     val centers = Seq(Seq("a", "x"), Seq("a", "y")) // equidistant from (a, z)
     val got = Seq(1).toDF("x")
@@ -201,10 +219,7 @@ class FunctionsSpec extends SparkSuite {
 
   // rows and centers for the decoded, early-stopping assignment kernel:
   // null elements, the literal null-category value, length mismatches
-  // and rows equidistant from several centers (the centers share one
-  // length, and each row covers the position of a center's null: the
-  // composed form pads the shorter side with nulls, which match a null
-  // on the other side)
+  // and rows equidistant from several centers
   private val sentinel = ArrayModeAggregator.NullSentinel
   private val kernelRows = Seq(
     Seq("a", "b", "c"), Seq("a", "x", "c"), Seq("x", "y", "z"), Seq("a", "b"),
@@ -252,6 +267,18 @@ class FunctionsSpec extends SparkSuite {
     val nullRow = out(kernelRows.indexOf(Seq[String](null, "b", "c")))
     assert(pair(nullRow, 0) == ((4, 0)))
     assert(pair(nullRow, 3) == ((0, 1)))
+  }
+
+  test("HammingAssign agrees with Distances.assignComposed on rows shorter " +
+      "than a center's null") {
+    val rows = Seq(Seq.empty[String], Seq("a"), Seq[String](null), Seq("q", "b"))
+    val out = rows.toDF("f").select(
+      Distances.assign(col("f"), typedlit(kernelCenters)).as("n"),
+      Distances.assignComposed(col("f"), typedlit(kernelCenters)).as("c")).collect()
+    def pair(r: Row, i: Int) = (r.getStruct(i).getInt(0), r.getStruct(i).getInt(1))
+    out.foreach(r => assert(pair(r, 0) == pair(r, 1), r.toString))
+    // the empty row is 3 from every center: the lowest id wins
+    assert(pair(out(0), 1) == ((0, 3)))
   }
 
   test("SQL surface: graft_* functions usable from spark.sql after register") {

@@ -341,4 +341,35 @@ class KModesSpec extends SparkSuite {
       assert(rawRows.map(mr.predict).toSeq == pr.toSeq)
     }
   }
+
+  test("an ensemble fit is 2 jobs with no shuffle, and a coded stage-1 " +
+      "partition retains fewer bytes per row than its string rows") {
+    // held in 4 partitions, as an ensemble's input is laid out before a fit
+    val df = plantedDf(2000, 8, 4, 89, signal = 0.7).repartition(4, col("features"))
+      .localCheckpoint(true)
+    val est = new KModes().setK(4).setMaxIter(10).setSeed(7L).setInitMode("ensemble")
+    val (jobs, bytes) = jobsAndShuffleBytes(est.fit(df))
+    assert(jobs == 2, s"jobs $jobs")
+    assert(bytes == 0L, s"shuffle-write bytes $bytes")
+
+    // one partition as stage 1 holds it, and as the string rows it replaces
+    val (rows, coded, strings) = df.select("features").queryExecution.toRdd
+      .mapPartitionsWithIndex { (pid, it) =>
+        if (pid != 0) Iterator.empty
+        else {
+          val arrays = it.map(_.getArray(0).copy()).toArray
+          val asStrings = arrays.map(_.toArray[org.apache.spark.unsafe.types.UTF8String](
+            org.apache.spark.sql.types.StringType).map(_.toString))
+          val asCodes = graft.operators.Coded(arrays.iterator, ArrayModeAggregator.NullSentinelUtf8)
+          Iterator.single((arrays.length, org.apache.spark.util.SizeEstimator.estimate(asCodes),
+            org.apache.spark.util.SizeEstimator.estimate(asStrings)))
+        }
+      }.collect().head
+    assert(rows > 100)
+    val (codedPerRow, stringPerRow) = (coded.toDouble / rows, strings.toDouble / rows)
+    info(f"$rows rows: coded $codedPerRow%.1f B/row, strings $stringPerRow%.1f B/row")
+    assert(codedPerRow < stringPerRow, s"coded $codedPerRow B/row, strings $stringPerRow B/row")
+    // 4 bytes per position and an offset, plus the dictionary spread over the rows
+    assert(codedPerRow < 2 * 4 * 8, s"coded $codedPerRow B/row")
+  }
 }

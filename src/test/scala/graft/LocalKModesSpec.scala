@@ -100,4 +100,100 @@ class LocalKModesSpec extends AnyFunSuite {
     val r = LocalKModes.metaCluster(modes, 3, 10, 42L)
     assert(r.centers.length == 3)
   }
+
+  /** Rows of `f` features over a `vocab`-value alphabet with `groups`
+    * planted modes and `1 - signal` noise.
+    */
+  private def noisy(n: Int, f: Int, groups: Int, vocab: Int, signal: Double,
+      seed: Int): Array[Array[String]] = {
+    val rnd = new Random(seed)
+    Array.tabulate(n) { i =>
+      Array.tabulate(f) { j =>
+        if (rnd.nextDouble() < signal) s"g${i % groups}v$j" else s"n${rnd.nextInt(vocab)}"
+      }
+    }
+  }
+
+  /** Asserts the coded fit equals the String oracle; the oracle's reseeds. */
+  private def sameAsOracle(data: Array[Array[String]], k: Int, maxIter: Int, seed: Long,
+      useFrequency: Boolean = false): Int = {
+    val got = LocalKModes.fit(data, k, maxIter, seed, useFrequency)
+    val (want, reseeds) = StringLocalKModes.fit(data, k, maxIter, seed, useFrequency)
+    val what = s"k $k, maxIter $maxIter, seed $seed, frequency $useFrequency"
+    assert(got.centers.map(_.toSeq).toSeq == want.centers.map(_.toSeq).toSeq, what)
+    assert(got.assignments.toSeq == want.assignments.toSeq, what)
+    assert(got.cost == want.cost, what)
+    assert(got.iterations == want.iterations, what)
+    assert(LocalKModes.initCenters(data, k, seed).map(_.toSeq).toSeq ==
+      StringLocalKModes.initCenters(data, k, seed).map(_.toSeq).toSeq, what)
+    reseeds
+  }
+
+  test("coded core equals the String oracle on 1/4/16-way random partitions, " +
+      "through empty-cluster reseeds") {
+    var reseeds = 0
+    for (seed <- 1 to 4; parts <- Seq(1, 4, 16)) {
+      val data = noisy(480, 6, 4, 5, signal = 0.6, seed)
+      val split = new Random(seed).shuffle(data.toSeq).grouped(data.length / parts)
+      for (part <- split; k <- Seq(3, 8); maxIter <- Seq(1, 3, 20))
+        reseeds += sameAsOracle(part.toArray, k, maxIter, seed + parts)
+    }
+    assert(reseeds > 0, "no case reseeded an empty cluster")
+  }
+
+  test("coded core equals the String oracle when k exceeds the distinct rows") {
+    val data = Array.tabulate(40)(i => Array(s"a${i % 3}", s"b${i % 2}", "c"))
+    assert(data.map(_.toSeq).distinct.length == 6)
+    for (k <- Seq(6, 7, 12); seed <- 1L to 5L) sameAsOracle(data, k, 10, seed)
+    assert(LocalKModes.fit(data, 12, 10, 1L).centers.length == 6)
+  }
+
+  test("coded metaCluster equals the String oracle with and without " +
+      "frequency weighting") {
+    for (seed <- 1 to 6; useFrequency <- Seq(false, true)) {
+      // a P×k matrix of noisy local modes
+      val modes = noisy(16 * 8, 8, 8, 3, signal = 0.5, seed)
+      val got = LocalKModes.metaCluster(modes, 8, 10, seed, useFrequency)
+      val (want, _) = StringLocalKModes.fit(modes, 8, 10, seed, useFrequency)
+      assert(got.centers.map(_.toSeq).toSeq == want.centers.map(_.toSeq).toSeq)
+      assert(got.assignments.toSeq == want.assignments.toSeq)
+      assert(got.cost == want.cost && got.iterations == want.iterations)
+    }
+  }
+
+  test("mode ties go to the smaller value in Java String order, " +
+      "not UTF-8 byte order") {
+    val supplementary = "\uD83D\uDE00" // U+1F600: UTF-8 F0 9F 98 80
+    val privateUse = "\uE000" // UTF-8 EE 80 80: smaller as bytes
+    assert(supplementary < privateUse)
+    val data = Array(Array(privateUse, "x"), Array(supplementary, "x"),
+      Array(supplementary, "y"), Array(privateUse, "y"))
+    for (seed <- 1L to 5L) {
+      sameAsOracle(data, 1, 10, seed)
+      assert(LocalKModes.fit(data, 1, 10, seed).centers.head.toSeq == Seq(supplementary, "x"))
+    }
+  }
+
+  test("rows of different lengths: both row orders fit the same centers, " +
+      "each position counted over the rows that reach it") {
+    val longFirst = Array(Array("a", "b", "c"), Array("a", "b"),
+      Array("x", "y", "z"), Array("x", "y", "z"))
+    val shortFirst = Array(Array("a", "b"), Array("a", "b", "c"),
+      Array("x", "y", "z"), Array("x", "y", "z"))
+    for (seed <- 1L to 8L) {
+      val a = LocalKModes.fit(longFirst, 2, 10, seed)
+      val b = LocalKModes.fit(shortFirst, 2, 10, seed)
+      assert(a.centers.map(_.toSeq).toSeq == b.centers.map(_.toSeq).toSeq, s"seed $seed")
+      assert(a.cost == b.cost)
+      sameAsOracle(longFirst, 2, 10, seed)
+      sameAsOracle(shortFirst, 2, 10, seed)
+    }
+    val centers = LocalKModes.fit(longFirst, 2, 10, 42L).centers.map(_.toSeq).toSet
+    assert(centers == Set(Seq("a", "b", "c"), Seq("x", "y", "z")))
+    // a missing position costs 1, also under frequency weighting
+    assert(LocalKModes.frequencyDissim(Array("a", "b"), Array("a", "b", "c"),
+      Array.fill(3)(Map("a" -> 2L, "b" -> 2L, "c" -> 1L)), 2L) == 1.0)
+    assert(LocalKModes.frequencyDissim(Array("a", "b", "c"), Array("a"),
+      Array.fill(3)(Map("a" -> 1L)), 2L) == 2.5)
+  }
 }

@@ -1,0 +1,95 @@
+package graft
+
+import graft.operators.LocalKModes
+import graft.operators.LocalKModes.{Result, frequencyDissim, hamming, rowHash}
+import scala.collection.mutable
+
+/** The String form of the local Lloyd loop: per-(cluster, position)
+  * frequency maps, modes by (count DESC, value ASC) under `String`
+  * order, a full sort for the init. It is the readable specification
+  * the dictionary-coded [[LocalKModes]] is cross-checked against
+  * (LocalKModesSpec); the engine itself never runs it.
+  */
+object StringLocalKModes {
+
+  /** Deterministic seeded init: k distinct rows in murmur-hash order. */
+  def initCenters(data: Array[Array[String]], k: Int, seed: Long): Array[Array[String]] =
+    data.distinctBy(_.toSeq)
+      .sortBy(r => (rowHash(r, seed), r.toSeq))(
+        Ordering.Tuple2(Ordering.Int, Ordering.Implicits.seqOrdering[Seq, String]))
+      .take(k)
+
+  /** The fit, and how many empty clusters it reseeded. */
+  def fit(
+      data: Array[Array[String]],
+      k: Int,
+      maxIter: Int,
+      seed: Long,
+      useFrequency: Boolean = false): (Result, Int) = {
+    require(data.nonEmpty, "StringLocalKModes.fit on empty data")
+    val nf = data.map(_.length).max
+    val centers = initCenters(data, k, seed)
+    val kEff = centers.length // may be < k when distinct rows < k
+    val assign = Array.fill(data.length)(-1)
+    var reseeds = 0
+
+    var iter = 0
+    var moved = true
+    // frequency tables of the PREVIOUS iteration (first pass: Hamming)
+    var prevFreqs: Array[Array[collection.Map[String, Long]]] = null
+    var prevSizes: Array[Long] = null
+    while (iter < maxIter && moved) {
+      moved = false
+      val freqs = Array.fill(kEff, nf)(mutable.Map.empty[String, Long])
+      val sizes = new Array[Long](kEff)
+      val longest = new Array[Int](kEff)
+      for ((row, r) <- data.zipWithIndex) {
+        var best = 0
+        var bestD = Double.MaxValue
+        for (c <- 0 until kEff) {
+          val d =
+            if (useFrequency && prevFreqs != null && prevSizes(c) > 0)
+              frequencyDissim(row, centers(c), prevFreqs(c), prevSizes(c))
+            else hamming(row, centers(c)).toDouble
+          if (d < bestD) { bestD = d; best = c }
+        }
+        if (best != assign(r)) { moved = true; assign(r) = best }
+        sizes(best) += 1
+        longest(best) = math.max(longest(best), row.length)
+        // each position counts the rows that reach it
+        row.indices.foreach(f => freqs(best)(f)(row(f)) = freqs(best)(f).getOrElse(row(f), 0L) + 1L)
+      }
+      // update pass, in cluster order: a reseed measures distances to the
+      // centers updated before it
+      for (c <- 0 until kEff) {
+        if (sizes(c) == 0) {
+          val far = data.zipWithIndex.maxBy { case (row, i) =>
+            (hamming(row, centers(assign(i))), -rowHash(row, seed + c))
+          }._1
+          centers(c) = far.clone()
+          reseeds += 1
+          moved = true
+        } else {
+          val nc = Array.tabulate(longest(c)) { f =>
+            freqs(c)(f).minBy { case (v, cnt) => (-cnt, v) }._1
+          }
+          if (nc.toSeq != centers(c).toSeq) {
+            centers(c) = nc
+            moved = true
+          }
+        }
+      }
+      prevFreqs = freqs.map(_.map(m => m: collection.Map[String, Long]))
+      prevSizes = sizes
+      iter += 1
+    }
+    // final assignment against final centers (so cost matches centers)
+    var cost = 0.0
+    for ((row, r) <- data.zipWithIndex) {
+      val ds = centers.map(hamming(row, _))
+      assign(r) = ds.indexOf(ds.min)
+      cost += ds.min
+    }
+    (Result(centers, assign, cost / data.length, iter), reseeds)
+  }
+}
