@@ -4,18 +4,18 @@ import graft.functions.{HammingAssign, HammingKernels}
 import org.apache.spark.ml.{Estimator, Model}
 import org.apache.spark.ml.param._
 import org.apache.spark.ml.util.Identifiable
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, SortOrder}
 import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
 import org.apache.spark.sql.catalyst.plans.logical.Sort
-import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.types.UTF8String
-import scala.jdk.CollectionConverters._
 
 /** K-modes clustering for categorical data, Spark-native.
   *
@@ -24,23 +24,28 @@ import scala.jdk.CollectionConverters._
   * (mirrors `ml.clustering.KMeans` shape, SURVEY.md §8.1). Two fit
   * algorithms behind `initMode`:
   *
-  *  - `global` (default): plain distributed Lloyd with no row shuffle.
-  *    The seeded init (and an empty-cluster reseed) is one job: each
-  *    partition keeps its n smallest distinct rows in the seeded-hash
-  *    order and the driver merges the P×n rows
-  *    ([[KModes.smallestDistinct]]). Each iteration is ONE job: a
-  *    `treeAggregate` over the scan in which every partition assigns its
-  *    raw feature rows to the nearest of the k centers (the same
-  *    [[graft.functions.HammingKernels]] `transform`, `computeCost` and
-  *    `predict` run, a null element read as the null category) and
-  *    folds them into per-cluster row counts, distance sums and
-  *    [[ModeCounts]] tables. A partition's result is bounded by
+  *  - `global` (default): plain distributed Lloyd with no row shuffle,
+  *    and the input plan runs once per fit. One job scans the input:
+  *    each partition keeps its k smallest distinct rows in the
+  *    seeded-hash order for the init (the driver merges the P×k rows,
+  *    [[KModes.smallestDistinct]]) and codes the same rows' features (a null
+  *    element read as the null category) into per-position dictionary
+  *    codes, one per distinct byte string ([[Coded]]), held
+  *    `MEMORY_AND_DISK` for the fit: 4 bytes per feature and row, plus
+  *    an offset and the partition's dictionaries. Each iteration is ONE
+  *    job over those cached codes: every partition maps the k centers
+  *    into its code space, assigns its rows to the nearest by int
+  *    Hamming (ties to the lowest id), counts them into int arrays and
+  *    returns per-cluster row counts, distance sums and [[ModeCounts]]
+  *    tables keyed by value. A partition's result is bounded by
   *    k × n_features × the distinct values in that partition, never by
   *    its row count. At a few partitions the driver merges them all; at
   *    many, depth 2 adds one executor-side merge level (a shuffle of
-  *    partition results, not of rows) so the driver merges ~√P.
-  *    Deterministic and partition-invariant — this is the variant that
-  *    scales to 100 TB: per-iteration cost is one scan.
+  *    partition results, not of rows) so the driver merges ~√P. The
+  *    final cost pass reads the codes too; an empty-cluster reseed ranks
+  *    by Spark hash expressions and so re-reads the input. `transform`,
+  *    `computeCost` and `predict` share [[graft.functions.HammingKernels]]
+  *    over the raw features. Deterministic and partition-invariant.
   *
   *  - `ensemble` (reference fidelity): stage 1 runs [[LocalKModes]]
   *    independently inside each partition [UP iter_k_modes /
@@ -103,9 +108,9 @@ trait KModesParams extends Params {
   def getInitHash: String = $(initHash)
 
   /** Null-normalized features column (null is its own category, SURVEY §2):
-    * read only by the global init and reseed ranking. The Lloyd passes,
-    * the ensemble's stage 1 and the Hamming kernel read the raw column
-    * with the same null rule.
+    * read only by the global fit's one scan (its init ranking and its
+    * codes) and its reseed ranking. The ensemble's stage 1 and the
+    * Hamming kernel read the raw column with the same null rule.
     */
   private[operators] def feats: Column =
     F.transform(col($(featuresCol)), x => coalesce(x, lit(ArrayModeAggregator.NullSentinel)))
@@ -152,63 +157,68 @@ class KModes(override val uid: String) extends Estimator[KModesModel] with KMode
   // ---------------------------------------------------------------- global
   private def fitGlobal(df: DataFrame): KModesModel = {
     // Deterministic seeded init (R9 global form): the k smallest distinct
-    // null-normalized feature rows in seeded-hash order, in one job with
-    // no exchange — each partition sends at most k rows to the driver.
+    // null-normalized feature rows in seeded-hash order. The init's one job
+    // also codes every partition's rows and keeps the codes, so the input
+    // plan runs once per fit (a reseed excepted).
     val ranked = df.select(feats.as("f"))
-    var centers: Array[Seq[String]] =
-      KModes.smallestDistinct(ranked, initOrderKeys, $(k)).map(_.getSeq[String](0))
-    require(centers.nonEmpty, "KModes.fit: no rows")
+    val init = new KModes.Ranked(ranked, initOrderKeys)
+    val parts = KModes.codedPartitions(init, $(k))
+    try {
+      var centers: Array[Seq[String]] =
+        init.merge(parts.flatMap(_._1).collect(), $(k)).map(_.getSeq[String](0))
+      require(centers.nonEmpty, "KModes.fit: no rows")
+      val coded = parts.map(_._2)
 
-    var iter = 0
-    var converged = false
-    var cost = 0.0
-    // the passes read the raw features; the kernel reads a null element
-    // as the null category
-    val input = df.select(col($(featuresCol)).as("f"))
-    val rows = input.queryExecution.toRdd
-    while (iter < $(maxIter) && !converged) {
-      // one job: each partition folds its rows into a LloydPass; the
-      // driver merges the partition results
-      val cs = KModes.decoded(centers.toSeq)
-      val pass = rows.treeAggregate(new LloydPass(centers.length))(
-        (s, r) => s.add(r.getArray(0), cs), _.merge(_), depth = 2)
+      var iter = 0
+      var converged = false
+      var cost = 0.0
+      while (iter < $(maxIter) && !converged) {
+        // one job: each partition counts its coded rows into a PassCounts;
+        // the driver merges the partition results
+        val cs = KModes.decoded(centers.toSeq)
+        val pass = coded.map(PassCounts.of(_, cs)).treeReduce(_.merge(_), depth = 2)
 
-      val n = pass.n.sum.toDouble
-      cost = if (n == 0) 0.0 else pass.dist.sum / n
+        val n = pass.n.sum.toDouble
+        cost = if (n == 0) 0.0 else pass.dist.sum / n
 
-      val newCenters = centers.indices.map { i =>
-        if (pass.n(i) == 0) centers(i)
-        else ModeCounts.modes(pass.tables(i)).map(_.toString).toSeq
-      }.toArray
+        val newCenters = centers.indices.map { i =>
+          if (pass.n(i) == 0) centers(i)
+          else ModeCounts.modes(pass.tables(i)).map(_.toString).toSeq
+        }.toArray
 
-      val emptyIds = centers.indices.filter(pass.n(_) == 0)
-      val reseeded =
-        if (emptyIds.isEmpty) newCenters
-        else {
-          // deterministic reseed: records farthest from their center,
-          // (min_dist DESC, hash ASC), distinct, one job with no exchange
-          // (SURVEY §8.3)
-          val a = KModes.assign(col("f"), typedlit(centers.toSeq))
-          val far = KModes.smallestDistinct(
-            ranked.select(col("f"), a.getField("min_dist").as("d")),
-            col("d").desc +: initOrderKeys, emptyIds.size)
-          val upd = newCenters.clone()
-          emptyIds.zip(far).foreach { case (id, r) => upd(id) = r.getSeq[String](0) }
-          upd
-        }
+        val emptyIds = centers.indices.filter(pass.n(_) == 0)
+        val reseeded =
+          if (emptyIds.isEmpty) newCenters
+          else {
+            // deterministic reseed: records farthest from their center,
+            // (min_dist DESC, hash ASC), distinct, one job with no exchange
+            // (SURVEY §8.3); it re-reads the input to rank by Spark's hashes
+            val a = KModes.assign(col("f"), typedlit(centers.toSeq))
+            val far = KModes.smallestDistinct(
+              ranked.select(col("f"), a.getField("min_dist").as("d")),
+              col("d").desc +: initOrderKeys, emptyIds.size)
+            val upd = newCenters.clone()
+            emptyIds.zip(far).foreach { case (id, r) => upd(id) = r.getSeq[String](0) }
+            upd
+          }
 
-      converged = reseeded.map(_.toSeq).toSeq == centers.map(_.toSeq).toSeq
-      centers = reseeded
-      iter += 1
-    }
+        converged = reseeded.map(_.toSeq).toSeq == centers.map(_.toSeq).toSeq
+        centers = reseeded
+        iter += 1
+      }
 
-    // Cost above is measured against the PREVIOUS iteration's centers; when
-    // the loop exits at maxIter (or maxIter=0) it would not correspond to
-    // the returned centers. One extra narrow pass fixes that.
-    if (!converged)
-      cost = KModes.meanHamming(input, col("f"), centers.toSeq)
+      // Cost above is measured against the PREVIOUS iteration's centers; when
+      // the loop exits at maxIter (or maxIter=0) it would not correspond to
+      // the returned centers. One extra pass over the codes fixes that.
+      if (!converged) {
+        val cs = KModes.decoded(centers.toSeq)
+        val (n, sum) = coded.map(PassCounts.distances(_, cs))
+          .reduce((a, b) => (a._1 + b._1, a._2 + b._2))
+        cost = if (n == 0) 0.0 else sum.toDouble / n
+      }
 
-    new KModesModel(uid, centers.map(_.toArray), cost, iter)
+      new KModesModel(uid, centers.map(_.toArray), cost, iter)
+    } finally parts.unpersist(blocking = false)
   }
 
   // -------------------------------------------------------------- ensemble
@@ -345,49 +355,80 @@ object KModes {
       case _ => Seq(xxhash64(col("f"), lit(seed)), col("f"))
     }
 
-  /** The rows of `df.distinct().orderBy(order: _*).limit(n)`, in one job
-    * with no exchange: each partition keeps its n smallest distinct rows
-    * in a bounded set under Spark's own ordering of `order` (so ties,
-    * directions and nulls sort as in `orderBy`), and the driver merges
-    * the P×n rows. Exact, because the union of every partition's n
-    * smallest distinct rows holds the global n smallest. Rows tied on
-    * `order` are ranked by their own columns, ascending — the set must
-    * not fold two distinct rows, and `orderBy` leaves their order open.
+  /** `df` with its `order` keys projected next to its columns, under
+    * Spark's own ordering of `order` (so ties, directions and nulls sort
+    * as in `orderBy`). Rows tied on `order` are ranked by their own
+    * columns, ascending: a bounded set of [[smallest]] rows must not fold
+    * two distinct rows, and `orderBy` leaves their order open.
     */
-  private[graft] def smallestDistinct(df: DataFrame, order: Seq[Column], n: Int): Array[Row] = {
-    if (n <= 0) return Array.empty
-    val width = df.columns.length
+  private[operators] final class Ranked(df: DataFrame, order: Seq[Column]) {
+    private val width = df.columns.length
     // the analyzed `orderBy` resolves the keys, directions and null order;
     // each key is computed once per row, next to the row's own columns
-    val sorts = df.orderBy(order: _*).queryExecution.analyzed
+    private val sorts = df.orderBy(order: _*).queryExecution.analyzed
       .collectFirst { case s: Sort => s.order }.get
-    val keyed = df.select(df.columns.map(col) ++
+    val keyed: DataFrame = df.select(df.columns.toSeq.map(col) ++
       sorts.zipWithIndex.map { case (s, i) => Bridge.column(s.child).as(s"__order$i") }: _*)
-    val schema = keyed.schema
-    def ref(i: Int) = BoundReference(i, schema(i).dataType, schema(i).nullable)
-    val ordering = new LazilyGeneratedOrdering(
+    private val schema = keyed.schema
+    private def ref(i: Int) = BoundReference(i, schema(i).dataType, schema(i).nullable)
+    val ordering: Ordering[InternalRow] = new LazilyGeneratedOrdering(
       sorts.zipWithIndex.map { case (s, i) =>
         SortOrder(ref(width + i), s.direction, s.nullOrdering, Seq.empty)
       } ++ (0 until width).map(i => SortOrder(ref(i), Ascending)))
-    val perPartition = keyed.queryExecution.toRdd
-      .mapPartitions(rows => smallest(rows, n, ordering).iterator.asScala)
-      .collect()
-    val toScala = (0 until width).map(i =>
-      (schema(i).dataType, CatalystTypeConverters.createToScalaConverter(schema(i).dataType)))
-    smallest(perPartition.iterator, n, ordering).asScala.toArray.map(r =>
-      Row.fromSeq(toScala.zipWithIndex.map { case ((t, conv), i) => conv(r.get(i, t)) }))
+
+    /** The n smallest distinct of `picks`, the [[smallest]] keyed rows of
+      * every partition, as rows of `df`, in order. Exact, because the
+      * union of every partition's n smallest distinct rows holds the global
+      * n smallest.
+      */
+    def merge(picks: Array[InternalRow], n: Int): Array[Row] = {
+      val toScala = (0 until width).map(i =>
+        (schema(i).dataType, CatalystTypeConverters.createToScalaConverter(schema(i).dataType)))
+      smallest(picks.iterator, n, ordering).map(r =>
+        Row.fromSeq(toScala.zipWithIndex.map { case ((t, conv), i) => conv(r.get(i, t)) }))
+    }
   }
 
-  /** The n smallest distinct rows of `rows` under `ord`, in order. */
+  /** The rows of `df.distinct().orderBy(order: _*).limit(n)`, in one job
+    * with no exchange: each partition keeps its n smallest distinct rows
+    * of [[Ranked]] `keyed` and the driver merges the P×n rows.
+    */
+  private[graft] def smallestDistinct(df: DataFrame, order: Seq[Column], n: Int): Array[Row] =
+    if (n <= 0) Array.empty
+    else {
+      val r = new Ranked(df, order)
+      val ord = r.ordering
+      r.merge(r.keyed.queryExecution.toRdd.mapPartitions(rows => smallest(rows, n, ord).iterator)
+        .collect(), n)
+    }
+
+  /** The n smallest distinct rows of `rows` under `ord`, in order, kept in
+    * a bounded set.
+    */
   private def smallest(rows: Iterator[InternalRow], n: Int,
-      ord: Ordering[InternalRow]): java.util.TreeSet[InternalRow] = {
+      ord: Ordering[InternalRow]): Array[InternalRow] = {
     val set = new java.util.TreeSet[InternalRow](ord)
     rows.foreach { r =>
       if (set.size < n || ord.compare(r, set.last) < 0) {
         if (set.add(r.copy()) && set.size > n) set.pollLast()
       }
     }
-    set
+    set.toArray(new Array[InternalRow](0))
+  }
+
+  /** The global fit's one scan of its input: per partition, the n smallest
+    * distinct `init.keyed` rows (as [[smallestDistinct]] picks them) and
+    * the partition's features (`keyed`'s first column, a null element read
+    * as the null category) as [[Coded]] `UTF8String` codes. Held
+    * `MEMORY_AND_DISK` until the caller unpersists it.
+    */
+  private def codedPartitions(init: Ranked, n: Int): RDD[(Array[InternalRow], Coded[UTF8String])] = {
+    val ord = init.ordering
+    init.keyed.queryExecution.toRdd.mapPartitions { rows =>
+      val b = new Coded.SparkRows(ArrayModeAggregator.NullSentinelUtf8)
+      val picks = smallest(rows.map { r => b.addRow(r.getArray(0)); r }, n, ord)
+      Iterator.single((picks, b.result()))
+    }.setName("KModes.fit coded partitions").persist(StorageLevel.MEMORY_AND_DISK)
   }
 
   /** struct(prediction, min_dist) of the nearest center, reading a null
@@ -421,28 +462,15 @@ object KModes {
 
 /** One global Lloyd pass over some rows: per cluster, the row count, the
   * sum of Hamming distances to the assigned center and the
-  * [[ModeCounts]] tables of the rows' features. Its size is bounded by
+  * [[ModeCounts]] tables of the rows' values. Its size is bounded by
   * k × n_features × the distinct values seen, never by the row count.
   */
-private final class LloydPass(k: Int) extends Serializable {
+private final class PassCounts(k: Int) extends Serializable {
   val n = new Array[Long](k)
   val dist = new Array[Long](k)
   val tables: Array[ModeCounts.Tables] = Array.fill(k)(Array.empty)
 
-  /** Assign the raw features `f` to their nearest center (ties to the
-    * lowest id, a null element read as the null category) and count them.
-    */
-  def add(f: ArrayData, centers: Array[Array[UTF8String]]): LloydPass = {
-    val v = HammingKernels.values(f, ArrayModeAggregator.NullSentinelUtf8)
-    val a = HammingKernels.nearest(v, centers)
-    val c = HammingKernels.prediction(a)
-    n(c) += 1
-    dist(c) += HammingKernels.minDist(a)
-    tables(c) = ModeCounts.add(tables(c), v)
-    this
-  }
-
-  def merge(o: LloydPass): LloydPass = {
+  def merge(o: PassCounts): PassCounts = {
     var c = 0
     while (c < k) {
       n(c) += o.n(c)
@@ -451,6 +479,56 @@ private final class LloydPass(k: Int) extends Serializable {
       c += 1
     }
     this
+  }
+}
+
+private object PassCounts {
+  /** `centers` in `data`'s code space. */
+  private def codes(data: Coded[UTF8String], centers: Array[Array[UTF8String]]) =
+    centers.map(c => Array.tabulate(c.length)(f => data.code(f, c(f))))
+
+  /** One partition's pass: its coded rows assigned to the nearest of
+    * `centers` (ties to the lowest id) and counted in one int array per
+    * (cluster, position), turned into tables keyed by value at the end.
+    * A cluster's tables are as long as its longest row.
+    */
+  def of(data: Coded[UTF8String], centers: Array[Array[UTF8String]]): PassCounts = {
+    val k = centers.length
+    val cs = codes(data, centers)
+    val counts = Array.fill(k)(data.values.map(v => new Array[Int](v.length)))
+    val longest = new Array[Int](k)
+    val p = new PassCounts(k)
+    var r = 0
+    while (r < data.rows) {
+      val a = data.nearest(r, cs)
+      val c = HammingKernels.prediction(a)
+      p.n(c) += 1
+      p.dist(c) += HammingKernels.minDist(a)
+      val from = data.start(r)
+      val len = data.start(r + 1) - from
+      if (len > longest(c)) longest(c) = len
+      var f = 0
+      while (f < len) { counts(c)(f)(data.codes(from + f)) += 1; f += 1 }
+      r += 1
+    }
+    for (c <- 0 until k)
+      p.tables(c) = Array.tabulate(longest(c)) { f =>
+        val t = new ModeCounts
+        val cf = counts(c)(f)
+        var v = 0
+        while (v < cf.length) { if (cf(v) > 0) t.add(data.values(f)(v), cf(v)); v += 1 }
+        t
+      }
+    p
+  }
+
+  /** (rows, sum of their Hamming distances to the nearest of `centers`). */
+  def distances(data: Coded[UTF8String], centers: Array[Array[UTF8String]]): (Long, Long) = {
+    val cs = codes(data, centers)
+    var sum = 0L
+    var r = 0
+    while (r < data.rows) { sum += HammingKernels.minDist(data.nearest(r, cs)); r += 1 }
+    (data.rows.toLong, sum)
   }
 }
 

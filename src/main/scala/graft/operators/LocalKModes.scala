@@ -4,6 +4,7 @@ import graft.functions.HammingKernels
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.unsafe.types.UTF8String
 import scala.collection.mutable
+import scala.reflect.ClassTag
 import scala.util.hashing.MurmurHash3
 
 /** Driver-local / per-partition K-modes on dictionary-coded rows.
@@ -112,7 +113,7 @@ object LocalKModes {
 
   /** The Lloyd loop on coded rows (at least one). */
   private[graft] def fit(
-      data: Coded,
+      data: Coded[String],
       k: Int,
       maxIter: Int,
       seed: Long,
@@ -143,7 +144,7 @@ object LocalKModes {
       while (r < n) {
         val best =
           if (useFrequency && prevSizes != null) nearestWeighted(data, r, centers, prevCounts, prevSizes)
-          else HammingKernels.prediction(nearest(data, r, centers))
+          else HammingKernels.prediction(data.nearest(r, centers))
         if (best != assign(r)) { moved = true; assign(r) = best }
         sizes(best) += 1
         val from = data.start(r)
@@ -178,7 +179,7 @@ object LocalKModes {
     var cost = 0L
     var r = 0
     while (r < n) {
-      val a = nearest(data, r, centers)
+      val a = data.nearest(r, centers)
       assign(r) = HammingKernels.prediction(a)
       cost += HammingKernels.minDist(a)
       r += 1
@@ -189,7 +190,7 @@ object LocalKModes {
   /** The k smallest distinct rows by (rowHash, codes), in order, kept in a
     * bounded set.
     */
-  private def init(data: Coded, k: Int, seed: Long): Array[Array[Int]] = {
+  private def init(data: Coded[String], k: Int, seed: Long): Array[Array[Int]] = {
     val sh = seedHash(seed)
     val hashes = Array.tabulate(data.rows)(data.rowHash(_, sh))
     val ord: java.util.Comparator[Integer] = (a, b) => {
@@ -207,42 +208,11 @@ object LocalKModes {
     Array.tabulate(set.size)(_ => data.row(set.pollFirst()))
   }
 
-  /** The nearest center to row `r`, packed as `prediction << 32 | min_dist`
-    * (see [[HammingKernels.prediction]]). A center stops counting once it
-    * reaches the best distance so far: under the strict `<` it can no
-    * longer win.
-    */
-  private def nearest(data: Coded, r: Int, centers: Array[Array[Int]]): Long = {
-    var best = 0
-    var bestD = Int.MaxValue
-    var c = 0
-    while (c < centers.length) {
-      val d = hamming(data, r, centers(c), bestD)
-      if (d < bestD) { bestD = d; best = c }
-      c += 1
-    }
-    (best.toLong << 32) | bestD
-  }
-
-  /** Hamming distance of row `r` to `center`, counted up to `bound`. */
-  private def hamming(data: Coded, r: Int, center: Array[Int], bound: Int = Int.MaxValue): Int = {
-    val from = data.start(r)
-    val len = data.start(r + 1) - from
-    val m = math.min(len, center.length)
-    var d = math.abs(len - center.length)
-    var i = 0
-    while (i < m && d < bound) {
-      if (data.codes(from + i) != center(i)) d += 1
-      i += 1
-    }
-    d
-  }
-
   /** The nearest center under [[frequencyDissim]] with the previous
     * pass's tables, Hamming against a center that had no rows; ties to the
     * lowest id.
     */
-  private def nearestWeighted(data: Coded, r: Int, centers: Array[Array[Int]],
+  private def nearestWeighted(data: Coded[String], r: Int, centers: Array[Array[Int]],
       counts: Array[Array[Array[Int]]], sizes: Array[Int]): Int = {
     val from = data.start(r)
     val len = data.start(r + 1) - from
@@ -251,7 +221,7 @@ object LocalKModes {
     var c = 0
     while (c < centers.length) {
       val d =
-        if (sizes(c) == 0) hamming(data, r, centers(c)).toDouble
+        if (sizes(c) == 0) data.hamming(r, centers(c)).toDouble
         else {
           val center = centers(c)
           val size = sizes(c).toDouble
@@ -274,7 +244,7 @@ object LocalKModes {
     * DESC (an `Int` negation, so `Int.MinValue` keeps its sign) and then
     * to the first row.
     */
-  private def farthest(data: Coded, centers: Array[Array[Int]], assign: Array[Int],
+  private def farthest(data: Coded[String], centers: Array[Array[Int]], assign: Array[Int],
       seed: Long): Array[Int] = {
     val sh = seedHash(seed)
     var best = -1
@@ -282,7 +252,7 @@ object LocalKModes {
     var bestH = 0
     var r = 0
     while (r < data.rows) {
-      val d = hamming(data, r, centers(assign(r)))
+      val d = data.hamming(r, centers(assign(r)))
       if (d >= bestD) {
         val h = -data.rowHash(r, sh)
         if (d > bestD || h > bestH) { best = r; bestD = d; bestH = h }
@@ -304,25 +274,39 @@ object LocalKModes {
   }
 }
 
-/** Rows of strings as per-position dictionary codes. Row r is
-  * `codes(start(r) until start(r + 1))`; at position f, code c stands for
-  * `values(f)(c)`, and codes follow Java `String` order of the values (a
-  * null value first), so comparing codes compares values. A row holds
-  * 4 bytes per position, plus one offset.
+/** Rows of values as per-position dictionary codes. Row r is
+  * `codes(start(r) until start(r + 1))`, and at position f code c stands
+  * for `values(f)(c)`. A row holds 4 bytes per position, plus one offset;
+  * each position's dictionary holds the distinct values seen there.
+  * [[nearest]] is the int Hamming kernel every coded Lloyd pass runs.
+  *
+  * Two value modes, each one fit's:
+  *  - `Coded[String]` (the local fits, [[LocalKModes]]): codes follow
+  *    Java `String` order of the values (a null value first), so
+  *    comparing codes compares values ([[compareRows]], "value ASC" mode
+  *    ties); byte strings that decode to one `String` (malformed UTF-8)
+  *    share a code.
+  *  - `Coded[UTF8String]` (a global fit's cached partitions, see
+  *    [[KModes]]): one code per distinct byte string, in order of first
+  *    sight, so the codes carry no value order; [[code]] maps a center's
+  *    values into a partition's code space.
+  *
+  * Serializable, so a persisted partition can spill to disk.
   */
-private[graft] final class Coded(
+private[graft] final class Coded[V <: AnyRef](
     val codes: Array[Int],
     val start: Array[Int],
-    val values: Array[Array[String]]) {
+    val values: Array[Array[V]]) extends Serializable {
 
   def rows: Int = start.length - 1
 
   def row(r: Int): Array[Int] = java.util.Arrays.copyOfRange(codes, start(r), start(r + 1))
 
-  def decode(row: Array[Int]): Array[String] = Array.tabulate(row.length)(f => values(f)(row(f)))
+  def decode(row: Array[Int])(implicit t: ClassTag[V]): Array[V] =
+    Array.tabulate(row.length)(f => values(f)(row(f)))
 
   /** Per position and code, the `##` of the value. */
-  private lazy val valueHashes: Array[Array[Int]] = values.map(_.map(_.##))
+  @transient private lazy val valueHashes: Array[Array[Int]] = values.map(_.map(_.##))
 
   /** [[LocalKModes.rowHash]] of row r's values: `arrayHash` mixes only
     * each element's `##`, so it is rebuilt bit-identically from the
@@ -335,7 +319,9 @@ private[graft] final class Coded(
     MurmurHash3.arrayHash(h, seedHash)
   }
 
-  /** Row order: values position by position, a prefix first. */
+  /** Row order: codes position by position, a prefix first (value order
+    * in the `String` mode).
+    */
   def compareRows(a: Int, b: Int): Int = {
     val la = start(a + 1) - start(a)
     val lb = start(b + 1) - start(b)
@@ -347,34 +333,95 @@ private[graft] final class Coded(
     }
     Integer.compare(la, lb)
   }
+
+  @transient private lazy val index: Array[java.util.HashMap[V, Integer]] =
+    values.map { vs =>
+      val m = new java.util.HashMap[V, Integer](vs.length * 2)
+      vs.indices.foreach(c => m.put(vs(c), c))
+      m
+    }
+
+  /** The code of `v` at position f, or -1 when no row holds `v` there (it
+    * then differs from every code).
+    */
+  def code(f: Int, v: V): Int =
+    if (f >= values.length) -1
+    else {
+      val c = index(f).get(v)
+      if (c == null) -1 else c
+    }
+
+  /** The nearest of `centers` (rows of codes) to row r, packed as
+    * `prediction << 32 | min_dist` (see [[HammingKernels.prediction]]). A
+    * center stops counting once it reaches the best distance so far:
+    * under the strict `<` it can no longer win, so ties go to the lowest
+    * id.
+    */
+  def nearest(r: Int, centers: Array[Array[Int]]): Long = {
+    var best = 0
+    var bestD = Int.MaxValue
+    var c = 0
+    while (c < centers.length) {
+      val d = hamming(r, centers(c), bestD)
+      if (d < bestD) { bestD = d; best = c }
+      c += 1
+    }
+    (best.toLong << 32) | bestD
+  }
+
+  /** Hamming distance of row r to `center`, counted up to `bound`; a
+    * missing position costs 1.
+    */
+  def hamming(r: Int, center: Array[Int], bound: Int = Int.MaxValue): Int = {
+    val from = start(r)
+    val len = start(r + 1) - from
+    val m = math.min(len, center.length)
+    var d = math.abs(len - center.length)
+    var i = 0
+    while (i < m && d < bound) {
+      if (codes(from + i) != center(i)) d += 1
+      i += 1
+    }
+    d
+  }
 }
 
 private[graft] object Coded {
-  def apply(rows: Array[Array[String]]): Coded = {
-    val b = new Builder[String](identity, identity)
+  /** Rows of strings in the `String` mode. */
+  def apply(rows: Array[Array[String]]): Coded[String] = {
+    val b = new Builder[String](identity)
     rows.foreach { row => row.foreach(b.add); b.endRow() }
-    b.result()
+    b.inStringOrder(identity)
   }
 
-  /** Feature arrays as read from Spark, a null element read as `nullAs`. */
-  def apply(rows: Iterator[ArrayData], nullAs: UTF8String): Coded = {
-    val b = new Builder[UTF8String](_.toString, _.clone())
-    rows.foreach { a =>
+  /** Feature arrays as read from Spark, a null element read as `nullAs`,
+    * in the `String` mode.
+    */
+  def apply(rows: Iterator[ArrayData], nullAs: UTF8String): Coded[String] = {
+    val b = new SparkRows(nullAs)
+    rows.foreach(b.addRow)
+    b.inStringOrder(_.toString)
+  }
+
+  /** Codes feature arrays as read from Spark, a null element read as
+    * `nullAs`. Its keys are copies: a Spark row's strings point into a
+    * reused buffer.
+    */
+  final class SparkRows(nullAs: UTF8String) extends Builder[UTF8String](_.clone()) {
+    def addRow(a: ArrayData): Unit = {
       var i = 0
       while (i < a.numElements()) {
-        b.add(if (a.isNullAt(i)) nullAs else a.getUTF8String(i))
+        add(if (a.isNullAt(i)) nullAs else a.getUTF8String(i))
         i += 1
       }
-      b.endRow()
+      endRow()
     }
-    b.result()
   }
 
-  /** Codes values in order of first sight, then renumbers each position
-    * in `String` order of the values. `own` copies a value kept as a key
-    * (a Spark row's strings point into a reused buffer).
+  /** Codes values in order of first sight. `own` copies a value kept as a
+    * key.
     */
-  private final class Builder[K](str: K => String, own: K => K) {
+  class Builder[K <: AnyRef](own: K => K)(implicit t: ClassTag[K]) {
     private val ids = mutable.ArrayBuffer.empty[java.util.HashMap[K, Integer]]
     private val keys = mutable.ArrayBuffer.empty[mutable.ArrayBuffer[K]]
     private var codes = new Array[Int](1024)
@@ -403,13 +450,19 @@ private[graft] object Coded {
 
     def endRow(): Unit = { start += used; rowStart = used }
 
-    def result(): Coded = {
+    /** The `UTF8String` mode: codes in order of first sight. */
+    def result(): Coded[K] =
+      new Coded(java.util.Arrays.copyOf(codes, used), start.result(), keys.map(_.toArray).toArray)
+
+    /** The `String` mode: each position renumbered in `String` order of
+      * `str` of its keys; keys with one `str` share a code.
+      */
+    def inStringOrder(str: K => String): Coded[String] = {
       val byString = Ordering.comparatorToOrdering(
         java.util.Comparator.nullsFirst[String](Ordering.String))
       val renumber = new Array[Array[Int]](keys.length)
       val values = Array.tabulate(keys.length) { f =>
         val strs = keys(f).map(str).toArray
-        // keys that decode to one string (malformed UTF-8) share its code
         val distinct = mutable.ArrayBuffer.empty[String]
         renumber(f) = new Array[Int](strs.length)
         strs.indices.sortBy(strs(_))(byString).foreach { i =>
@@ -419,13 +472,14 @@ private[graft] object Coded {
         distinct.toArray
       }
       val st = start.result()
+      val out = java.util.Arrays.copyOf(codes, used)
       var r = 0
       while (r + 1 < st.length) {
         var i = st(r)
-        while (i < st(r + 1)) { codes(i) = renumber(i - st(r))(codes(i)); i += 1 }
+        while (i < st(r + 1)) { out(i) = renumber(i - st(r))(out(i)); i += 1 }
         r += 1
       }
-      new Coded(java.util.Arrays.copyOf(codes, used), st, values)
+      new Coded(out, st, values)
     }
   }
 }

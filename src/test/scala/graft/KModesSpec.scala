@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.Distances
-import graft.operators.{ArrayModeAggregator, KModes, LocalKModes}
+import graft.operators.{ArrayModeAggregator, KModes, KModesModel, LocalKModes, Utf8GlobalKModes}
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.functions._
 import scala.util.Random
@@ -371,5 +371,110 @@ class KModesSpec extends SparkSuite {
     assert(codedPerRow < stringPerRow, s"coded $codedPerRow B/row, strings $stringPerRow B/row")
     // 4 bytes per position and an offset, plus the dictionary spread over the rows
     assert(codedPerRow < 2 * 4 * 8, s"coded $codedPerRow B/row")
+  }
+
+  test("the coded global fit equals the UTF8String oracle on 1/4/16-way random " +
+      "partitions: ragged rows, nulls next to literal ∅, reseeds, a UTF-8 mode " +
+      "tie and malformed byte strings") {
+    val rnd = new Random(97)
+    // one planted group's rows are all shorter than the other's
+    val ragged = Seq.tabulate(300) { i =>
+      Seq.tabulate(if (i % 2 == 0) 3 else 4 + rnd.nextInt(2)) { j =>
+        val r = rnd.nextDouble()
+        if (r < 0.05) null
+        else if (r < 0.1) ArrayModeAggregator.NullSentinel
+        else if (r < 0.7) s"g${i % 2}v$j" else s"n${rnd.nextInt(3)}"
+      }
+    }.toDF("features")
+    // U+1F600 sorts before U+E000 as UTF-16 and after it as UTF-8; bytes
+    // FF and FE are malformed UTF-8 and both decode to U+FFFD
+    val (supplementary, privateUse) = ("\uD83D\uDE00", "\uE000")
+    assert(new String(Array(0xFF.toByte), "UTF-8") == new String(Array(0xFE.toByte), "UTF-8"))
+    val malformed = (x: org.apache.spark.sql.Column) =>
+      when(x === "#FF", unhex(lit("FF")).cast("string"))
+        .when(x === "#FE", unhex(lit("FE")).cast("string")).otherwise(x)
+    val tie = (Seq.fill(3)(Seq(privateUse, "a", "b")) ++ Seq.fill(3)(Seq(supplementary, "a", "b")) ++
+      Seq.fill(2)(Seq("#FF", "z", "y")) ++ Seq.fill(2)(Seq("#FE", "z", "y")) ++
+      Seq.fill(3)(Seq("q", "z", "y")))
+      .toDF("features").select(transform(col("features"), malformed).as("features"))
+    var reseeds = 0
+    for ((df, k) <- Seq(ragged -> 4, tie -> 2); hash <- Seq("xxhash64", "md5");
+         maxIter <- Seq(0, 1, 20)) {
+      val want = Utf8GlobalKModes.fit(df, k, maxIter, 7L, hash)
+      reseeds += want.reseeds
+      for (parts <- Seq(1, 4, 16)) {
+        val layout = df.withColumn("key", rand(parts.toLong))
+          .repartition(parts, col("key")).drop("key")
+        val got = new KModes().setK(k).setMaxIter(maxIter).setSeed(7L).setInitHash(hash).fit(layout)
+        assert(fitted(got) == ((want.centers, want.cost, want.iterations)),
+          s"k $k, $hash, maxIter $maxIter, $parts partitions")
+      }
+    }
+    assert(reseeds > 0, "no case reseeded an empty cluster")
+    // the tie goes to the smaller UTF-8 value, and FF and FE count apart
+    // (as one string, 4 of them would outvote the 3 "q")
+    val m = new KModes().setK(2).setMaxIter(20).setSeed(7L).fit(tie)
+    assert(m.clusterCenters.map(_.toSeq).toSet == Set(Seq(privateUse, "a", "b"), Seq("q", "z", "y")))
+  }
+
+  test("a global fit runs its input plan once: an input that ends in an " +
+      "exchange is shuffled once per fit") {
+    val df = plantedDf(2000, 8, 4, 89, signal = 0.9).repartition(4, col("features"))
+    val want = Utf8GlobalKModes.fit(df, 4, 20, 7L, "xxhash64")
+    // a reseed ranks by Spark hashes and re-reads the input by design
+    assert(want.reseeds == 0 && want.iterations > 1, want.toString)
+    val (_, once) = jobsAndShuffleBytes(df.queryExecution.toRdd.count())
+    var m: KModesModel = null
+    val (_, bytes) = jobsAndShuffleBytes {
+      m = new KModes().setK(4).setMaxIter(20).setSeed(7L).fit(df)
+    }
+    assert(fitted(m) == ((want.centers, want.cost, want.iterations)))
+    assert(once > 0 && bytes == once, s"fit wrote $bytes shuffle bytes, one materialization $once")
+  }
+
+  test("a global fit unpersists its cached codes on every exit, and caches " +
+      "about 4·d + 4 bytes per row") {
+    val sc = spark.sparkContext
+    def persisted = sc.getPersistentRDDs.keySet
+    val (rows, d) = (2000, 8)
+    val df = plantedDf(rows, d, 4, 89, signal = 0.9).repartition(4, col("features"))
+      .localCheckpoint(true)
+    val est = new KModes().setK(4).setMaxIter(20).setSeed(7L)
+    val before = persisted
+
+    // sizes the block manager reports for the codes while a fit runs
+    val cached = new java.util.concurrent.atomic.AtomicLong
+    val fitting = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val poll = new Thread(() => while (fitting.get) {
+      sc.getRDDStorageInfo.filter(_.name == "KModes.fit coded partitions")
+        .foreach(i => cached.accumulateAndGet(i.memSize + i.diskSize, math.max))
+      Thread.sleep(1)
+    })
+    poll.start()
+    val converged = try est.fit(df) finally { fitting.set(false); poll.join() }
+    assert(converged.iterations < 20)
+    assert(persisted == before)
+
+    new KModes().setK(4).setMaxIter(0).setSeed(7L).fit(df)
+    assert(persisted == before)
+    val err = intercept[IllegalArgumentException](est.fit(Seq.empty[Seq[String]].toDF("features")))
+    assert(err.getMessage.contains("KModes.fit: no rows"))
+    assert(persisted == before)
+
+    val perRow = cached.get.toDouble / rows
+    info(f"cached $perRow%.1f B/row against 4·d + 4 = ${4 * d + 4} (d = $d)")
+    assert(perRow > 0 && perRow < 2 * (4 * d + 4), s"$perRow B/row")
+
+    // a spilled partition goes through the session's serializer
+    val coded = new graft.operators.Coded.SparkRows(ArrayModeAggregator.NullSentinelUtf8)
+    df.select("features").queryExecution.toRdd.map(_.copy()).collect()
+      .foreach(r => coded.addRow(r.getArray(0)))
+    val c = coded.result()
+    val ser = org.apache.spark.SparkEnv.get.serializer.newInstance()
+    val back = ser.deserialize[graft.operators.Coded[org.apache.spark.unsafe.types.UTF8String]](
+      ser.serialize(c))
+    assert(back.codes.toSeq == c.codes.toSeq && back.start.toSeq == c.start.toSeq)
+    assert(back.values.map(_.toSeq).toSeq == c.values.map(_.toSeq).toSeq)
+    assert(back.code(0, c.values(0)(1)) == 1)
   }
 }

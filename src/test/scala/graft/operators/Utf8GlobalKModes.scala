@@ -1,0 +1,75 @@
+package graft.operators
+
+import graft.functions.{Distances, HammingKernels}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
+
+/** The `UTF8String` form of the global Lloyd loop: every row's values
+  * decoded as `UTF8String`s (a null element read as the null category),
+  * assigned by [[HammingKernels.nearest]] and counted into [[ModeCounts]]
+  * tables, with the init and the empty-cluster reseed as
+  * `distinct().orderBy(keys).limit(n)`. It is the readable specification
+  * the coded global fit of [[KModes]] is checked against (KModesSpec); the
+  * engine itself never runs it.
+  */
+object Utf8GlobalKModes {
+
+  final case class Fit(centers: Seq[Seq[String]], cost: Double, iterations: Int, reseeds: Int)
+
+  def fit(df: DataFrame, k: Int, maxIter: Int, seed: Long, initHash: String): Fit = {
+    val rows = df.where(col("features").isNotNull)
+    val ranked = rows.select(transform(col("features"),
+      x => coalesce(x, lit(ArrayModeAggregator.NullSentinel))).as("f"))
+    val keys = KModes.initOrderKeys(initHash, seed)
+    var centers = ranked.distinct().orderBy(keys: _*).limit(k).collect()
+      .map(_.getSeq[String](0))
+    require(centers.nonEmpty, "Utf8GlobalKModes.fit: no rows")
+    val data = rows.select("features").queryExecution.toRdd
+      .map(r => HammingKernels.values(r.getArray(0), ArrayModeAggregator.NullSentinelUtf8)
+        .map(_.clone()))
+      .collect()
+    def decoded = centers.map(_.map(UTF8String.fromString).toArray)
+
+    var iter = 0
+    var converged = false
+    var cost = 0.0
+    var reseeds = 0
+    while (iter < maxIter && !converged) {
+      val cs = decoded
+      val n = new Array[Long](cs.length)
+      val dist = new Array[Long](cs.length)
+      val tables = Array.fill(cs.length)(Array.empty[ModeCounts])
+      data.foreach { v =>
+        val a = HammingKernels.nearest(v, cs)
+        val c = HammingKernels.prediction(a)
+        n(c) += 1
+        dist(c) += HammingKernels.minDist(a)
+        tables(c) = ModeCounts.add(tables(c), v)
+      }
+      cost = if (n.sum == 0) 0.0 else dist.sum.toDouble / n.sum
+
+      val next = centers.indices.map { i =>
+        if (n(i) == 0) centers(i) else ModeCounts.modes(tables(i)).map(_.toString).toSeq
+      }.toArray
+      val emptyIds = centers.indices.filter(n(_) == 0)
+      if (emptyIds.nonEmpty) {
+        // farthest rows from their center: (min_dist DESC, keys ASC), distinct
+        val d = Distances.assign(col("f"), typedlit(centers.toSeq)).getField("min_dist")
+        val far = ranked.select(col("f"), d.as("d")).distinct()
+          .orderBy(col("d").desc +: keys: _*).limit(emptyIds.size).collect()
+        emptyIds.zip(far).foreach { case (id, r) => next(id) = r.getSeq[String](0) }
+        reseeds += emptyIds.size
+      }
+      converged = next.toSeq == centers.toSeq
+      centers = next
+      iter += 1
+    }
+    if (!converged) {
+      val cs = decoded
+      cost = data.map(v => HammingKernels.minDist(HammingKernels.nearest(v, cs)).toLong).sum
+        .toDouble / data.length
+    }
+    Fit(centers.toSeq, cost, iter, reseeds)
+  }
+}
