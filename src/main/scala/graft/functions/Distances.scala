@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 /** Categorical dissimilarity kernels (SURVEY.md §3.1 R4-R6).
   *
@@ -56,7 +57,7 @@ object Distances {
     * Lloyd inner loop.
     */
   def assign(features: Column, centers: Column): Column =
-    HammingFunctions.assign(features, centers)
+    Bridge.column(HammingAssign(Bridge.expression(features), Bridge.expression(centers)))
 
   /** The pre-native composed form (pure built-ins); semantically
     * identical to [[assign]] — used by tests as a cross-check.

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.{HammingAssign, HammingKernels}
+import graft.functions.HammingAssign
 import org.apache.spark.ml.{Estimator, Model}
 import org.apache.spark.ml.param._
 import org.apache.spark.ml.util.Identifiable
@@ -10,6 +10,7 @@ import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, SortOrder}
 import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
 import org.apache.spark.sql.catalyst.plans.logical.Sort
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.graft.Bridge
@@ -44,8 +45,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *    partition results, not of rows) so the driver merges ~√P. The
   *    final cost pass reads the codes too; an empty-cluster reseed ranks
   *    by Spark hash expressions and so re-reads the input. `transform`,
-  *    `computeCost` and `predict` share [[graft.functions.HammingKernels]]
-  *    over the raw features. Deterministic and partition-invariant.
+  *    `computeCost` and `predict` code each raw feature row against the
+  *    centers ([[Coded.Centers]]) and run the same int kernel.
+  *    Deterministic and partition-invariant.
   *
   *  - `ensemble` (reference fidelity): stage 1 runs [[LocalKModes]]
   *    independently inside each partition [UP iter_k_modes /
@@ -59,7 +61,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *    conf=H]. Two jobs (stage 1, the final cost pass) and zero
   *    shuffles; the result depends on partitioning exactly like the
   *    reference. Local fits order values in Java `String` order, where
-  *    the global fit's [[ModeCounts]] use UTF-8 byte order.
+  *    the global fit's [[ModeCounts]] use UTF-8 byte order; both assign
+  *    with the one kernel [[Coded.nearest]], and so does the cost pass.
   *
   * Determinism contract (required for the DuckDB oracle, SURVEY §2):
   * seeded hash-order init, assignment ties → lowest cluster id, mode ties
@@ -174,8 +177,9 @@ class KModes(override val uid: String) extends Estimator[KModesModel] with KMode
       var cost = 0.0
       while (iter < $(maxIter) && !converged) {
         // one job: each partition counts its coded rows into a PassCounts;
-        // the driver merges the partition results
-        val cs = KModes.decoded(centers.toSeq)
+        // the driver merges the partition results (`cs`, a val, is what the
+        // closure ships)
+        val cs = centers
         val pass = coded.map(PassCounts.of(_, cs)).treeReduce(_.merge(_), depth = 2)
 
         val n = pass.n.sum.toDouble
@@ -211,8 +215,9 @@ class KModes(override val uid: String) extends Estimator[KModesModel] with KMode
       // the loop exits at maxIter (or maxIter=0) it would not correspond to
       // the returned centers. One extra pass over the codes fixes that.
       if (!converged) {
-        val cs = KModes.decoded(centers.toSeq)
-        val (n, sum) = coded.map(PassCounts.distances(_, cs))
+        val cs = centers
+        val (n, sum) = coded
+          .map(d => (d.rows.toLong, d.cost(PassCounts.codes(d, cs), new Array[Int](d.rows))))
           .reduce((a, b) => (a._1 + b._1, a._2 + b._2))
         cost = if (n == 0) 0.0 else sum.toDouble / n
       }
@@ -298,8 +303,7 @@ class KModesModel(
     copyValues(m, extra).setParent(parent)
   }
 
-  @transient private lazy val decodedCenters =
-    KModes.decoded(clusterCenters.toSeq.map(_.toSeq))
+  @transient private lazy val codedCenters = KModes.coded(clusterCenters.toSeq.map(_.toSeq))
 
   override def transform(dataset: Dataset[_]): DataFrame = {
     transformSchema(dataset.schema)
@@ -316,15 +320,15 @@ class KModesModel(
 
   /** Single-record assignment (upstream `model.predict` took one record
     * or an RDD [UP ~L330-350 | conf=H]; the RDD form is [[transform]]).
-    * Driver-side, no Spark job — delegates to the SAME
-    * [[graft.functions.HammingKernels]] the distributed transform
-    * executes, so distance and tie-break semantics cannot diverge.
+    * Driver-side, no Spark job — codes the record against the centers
+    * and runs the SAME kernel ([[Coded.Centers]]) the distributed
+    * transform executes, so distance and tie-break semantics cannot
+    * diverge.
     */
-  def predict(features: Seq[String]): Int = {
-    val f = features.map(v =>
-      if (v == null) ArrayModeAggregator.NullSentinelUtf8 else UTF8String.fromString(v))
-    HammingKernels.prediction(HammingKernels.nearest(f.toArray, decodedCenters))
-  }
+  def predict(features: Seq[String]): Int =
+    Coded.prediction(codedCenters.nearest(
+      CatalystTypeConverters.convertToCatalyst(features).asInstanceOf[ArrayData],
+      ArrayModeAggregator.NullSentinelUtf8))
 
   /** Mean Hamming distance of `dataset` to its assigned centers (R13). */
   def computeCost(dataset: Dataset[_]): Double =
@@ -402,19 +406,10 @@ object KModes {
         .collect(), n)
     }
 
-  /** The n smallest distinct rows of `rows` under `ord`, in order, kept in
-    * a bounded set.
-    */
+  /** The n smallest distinct rows of `rows` under `ord`, in order. */
   private def smallest(rows: Iterator[InternalRow], n: Int,
-      ord: Ordering[InternalRow]): Array[InternalRow] = {
-    val set = new java.util.TreeSet[InternalRow](ord)
-    rows.foreach { r =>
-      if (set.size < n || ord.compare(r, set.last) < 0) {
-        if (set.add(r.copy()) && set.size > n) set.pollLast()
-      }
-    }
-    set.toArray(new Array[InternalRow](0))
-  }
+      ord: Ordering[InternalRow]): Array[InternalRow] =
+    LocalKModes.smallest(rows, n, ord, (r: InternalRow) => r.copy())
 
   /** The global fit's one scan of its input: per partition, the n smallest
     * distinct `init.keyed` rows (as [[smallestDistinct]] picks them) and
@@ -445,19 +440,19 @@ object KModes {
     */
   private[operators] def meanHamming(ds: Dataset[_], f: Column,
       centers: Seq[Seq[String]]): Double = {
-    val cs = decoded(centers)
+    val cs = coded(centers)
     val (n, sum) = ds.select(f).queryExecution.toRdd.aggregate((0L, 0L))(
       (acc, r) =>
         if (r.isNullAt(0)) acc
-        else (acc._1 + 1, acc._2 + HammingKernels.minDist(HammingKernels.nearest(
-          HammingKernels.values(r.getArray(0), ArrayModeAggregator.NullSentinelUtf8), cs))),
+        else (acc._1 + 1, acc._2 + Coded.minDist(
+          cs.nearest(r.getArray(0), ArrayModeAggregator.NullSentinelUtf8))),
       (a, b) => (a._1 + b._1, a._2 + b._2))
     if (n == 0) 0.0 else sum.toDouble / n
   }
 
-  /** Centers in the form [[HammingKernels.nearest]] reads. */
-  private[operators] def decoded(centers: Seq[Seq[String]]): Array[Array[UTF8String]] =
-    centers.map(_.map(UTF8String.fromString).toArray).toArray
+  /** `centers` as the kernel reads them from Spark rows. */
+  private[operators] def coded(centers: Seq[Seq[String]]): Coded.Centers =
+    new Coded.Centers(CatalystTypeConverters.convertToCatalyst(centers).asInstanceOf[ArrayData])
 }
 
 /** One global Lloyd pass over some rows: per cluster, the row count, the
@@ -484,51 +479,38 @@ private final class PassCounts(k: Int) extends Serializable {
 
 private object PassCounts {
   /** `centers` in `data`'s code space. */
-  private def codes(data: Coded[UTF8String], centers: Array[Array[UTF8String]]) =
-    centers.map(c => Array.tabulate(c.length)(f => data.code(f, c(f))))
+  def codes(data: Coded[UTF8String], centers: Array[Seq[String]]): Array[Array[Int]] =
+    centers.map(c => Array.tabulate(c.length)(f => data.code(f, UTF8String.fromString(c(f)))))
 
   /** One partition's pass: its coded rows assigned to the nearest of
     * `centers` (ties to the lowest id) and counted in one int array per
     * (cluster, position), turned into tables keyed by value at the end.
     * A cluster's tables are as long as its longest row.
     */
-  def of(data: Coded[UTF8String], centers: Array[Array[UTF8String]]): PassCounts = {
+  def of(data: Coded[UTF8String], centers: Array[Seq[String]]): PassCounts = {
     val k = centers.length
     val cs = codes(data, centers)
-    val counts = Array.fill(k)(data.values.map(v => new Array[Int](v.length)))
-    val longest = new Array[Int](k)
+    val counts = new Coded.Counts(data, k)
     val p = new PassCounts(k)
     var r = 0
     while (r < data.rows) {
       val a = data.nearest(r, cs)
-      val c = HammingKernels.prediction(a)
-      p.n(c) += 1
-      p.dist(c) += HammingKernels.minDist(a)
-      val from = data.start(r)
-      val len = data.start(r + 1) - from
-      if (len > longest(c)) longest(c) = len
-      var f = 0
-      while (f < len) { counts(c)(f)(data.codes(from + f)) += 1; f += 1 }
+      val c = Coded.prediction(a)
+      p.dist(c) += Coded.minDist(a)
+      counts.add(r, c)
       r += 1
     }
-    for (c <- 0 until k)
-      p.tables(c) = Array.tabulate(longest(c)) { f =>
+    for (c <- 0 until k) {
+      p.n(c) = counts.size(c)
+      p.tables(c) = Array.tabulate(counts.longest(c)) { f =>
         val t = new ModeCounts
-        val cf = counts(c)(f)
+        val cf = counts.of(c)(f)
         var v = 0
         while (v < cf.length) { if (cf(v) > 0) t.add(data.values(f)(v), cf(v)); v += 1 }
         t
       }
+    }
     p
-  }
-
-  /** (rows, sum of their Hamming distances to the nearest of `centers`). */
-  def distances(data: Coded[UTF8String], centers: Array[Array[UTF8String]]): (Long, Long) = {
-    val cs = codes(data, centers)
-    var sum = 0L
-    var r = 0
-    while (r < data.rows) { sum += HammingKernels.minDist(data.nearest(r, cs)); r += 1 }
-    (data.rows.toLong, sum)
   }
 }
 

@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.functions.HammingKernels
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.unsafe.types.UTF8String
 import scala.collection.mutable
@@ -122,48 +121,34 @@ object LocalKModes {
     val centers = init(data, k, seed)
     val kEff = centers.length // may be < k when distinct rows < k
     val assign = Array.fill(n)(-1)
-    // per cluster: row count, longest row, one count array per position;
     // the previous pass's counts feed the frequency-weighted dissimilarity
     // (ensemble paper, stage 2), so the first pass is plain Hamming
-    def tables = Array.fill(kEff)(data.values.map(v => new Array[Int](v.length)))
-    var counts = tables
-    var prevCounts = tables
-    var sizes = new Array[Int](kEff)
-    var prevSizes: Array[Int] = null
-    val longest = new Array[Int](kEff)
+    var prev: Coded.Counts = null
 
     var iter = 0
     var moved = true
     while (iter < maxIter && moved) {
       moved = false
-      counts.foreach(_.foreach(java.util.Arrays.fill(_, 0)))
-      java.util.Arrays.fill(longest, 0)
-      sizes = new Array[Int](kEff)
+      val counts = new Coded.Counts(data, kEff)
       // assignment pass
       var r = 0
       while (r < n) {
         val best =
-          if (useFrequency && prevSizes != null) nearestWeighted(data, r, centers, prevCounts, prevSizes)
-          else HammingKernels.prediction(data.nearest(r, centers))
+          if (useFrequency && prev != null) nearestWeighted(data, r, centers, prev)
+          else Coded.prediction(data.nearest(r, centers))
         if (best != assign(r)) { moved = true; assign(r) = best }
-        sizes(best) += 1
-        val from = data.start(r)
-        val len = data.start(r + 1) - from
-        if (len > longest(best)) longest(best) = len
-        val cs = counts(best)
-        var f = 0
-        while (f < len) { cs(f)(data.codes(from + f)) += 1; f += 1 }
+        counts.add(r, best)
         r += 1
       }
       // update pass: per-position mode, tie-break (count DESC, code ASC);
       // a reseed measures distances to the centers updated so far
       var c = 0
       while (c < kEff) {
-        if (sizes(c) == 0) {
+        if (counts.size(c) == 0) {
           centers(c) = farthest(data, centers, assign, seed + c)
           moved = true
         } else {
-          val nc = Array.tabulate(longest(c))(f => argmax(counts(c)(f)))
+          val nc = Array.tabulate(counts.longest(c))(f => argmax(counts.of(c)(f)))
           if (!java.util.Arrays.equals(nc, centers(c))) {
             centers(c) = nc
             moved = true
@@ -171,25 +156,15 @@ object LocalKModes {
         }
         c += 1
       }
-      val t = prevCounts; prevCounts = counts; counts = t
-      prevSizes = sizes
+      prev = counts
       iter += 1
     }
     // final assignment against final centers (so cost matches centers)
-    var cost = 0L
-    var r = 0
-    while (r < n) {
-      val a = data.nearest(r, centers)
-      assign(r) = HammingKernels.prediction(a)
-      cost += HammingKernels.minDist(a)
-      r += 1
-    }
+    val cost = data.cost(centers, assign)
     Result(centers.map(data.decode), assign, cost.toDouble / n, iter)
   }
 
-  /** The k smallest distinct rows by (rowHash, codes), in order, kept in a
-    * bounded set.
-    */
+  /** The k smallest distinct rows by (rowHash, codes), in order. */
   private def init(data: Coded[String], k: Int, seed: Long): Array[Array[Int]] = {
     val sh = seedHash(seed)
     val hashes = Array.tabulate(data.rows)(data.rowHash(_, sh))
@@ -197,23 +172,29 @@ object LocalKModes {
       val h = Integer.compare(hashes(a), hashes(b))
       if (h != 0) h else data.compareRows(a, b)
     }
-    val set = new java.util.TreeSet[Integer](ord)
-    var r = 0
-    while (r < data.rows) {
-      if (set.size < k || ord.compare(r, set.last) < 0) {
-        if (set.add(r) && set.size > k) set.pollLast()
+    smallest(Iterator.range(0, data.rows).map(Int.box), k, ord).map(data.row(_))
+  }
+
+  /** The n smallest distinct of `xs` under `ord`, in order, kept in a
+    * bounded set; `own` copies an element the set keeps.
+    */
+  private[operators] def smallest[T <: AnyRef](xs: Iterator[T], n: Int, ord: java.util.Comparator[T],
+      own: T => T = (x: T) => x)(implicit t: ClassTag[T]): Array[T] = {
+    val set = new java.util.TreeSet[T](ord)
+    xs.foreach { x =>
+      if (set.size < n || ord.compare(x, set.last) < 0) {
+        if (set.add(own(x)) && set.size > n) set.pollLast()
       }
-      r += 1
     }
-    Array.tabulate(set.size)(_ => data.row(set.pollFirst()))
+    set.toArray[T](new Array[T](0))
   }
 
   /** The nearest center under [[frequencyDissim]] with the previous
-    * pass's tables, Hamming against a center that had no rows; ties to the
+    * pass's counts, Hamming against a center that had no rows; ties to the
     * lowest id.
     */
   private def nearestWeighted(data: Coded[String], r: Int, centers: Array[Array[Int]],
-      counts: Array[Array[Array[Int]]], sizes: Array[Int]): Int = {
+      counts: Coded.Counts): Int = {
     val from = data.start(r)
     val len = data.start(r + 1) - from
     var best = 0
@@ -221,15 +202,15 @@ object LocalKModes {
     var c = 0
     while (c < centers.length) {
       val d =
-        if (sizes(c) == 0) data.hamming(r, centers(c)).toDouble
+        if (counts.size(c) == 0) data.hamming(r, centers(c)).toDouble
         else {
           val center = centers(c)
-          val size = sizes(c).toDouble
+          val size = counts.size(c).toDouble
           var s = 0.0
           var i = 0
           while (i < math.min(len, center.length)) {
             val v = data.codes(from + i)
-            s += (if (v != center(i)) 1.0 else 1.0 - counts(c)(i)(v).toDouble / size)
+            s += (if (v != center(i)) 1.0 else 1.0 - counts.of(c)(i)(v).toDouble / size)
             i += 1
           }
           s + math.abs(len - center.length)
@@ -278,18 +259,23 @@ object LocalKModes {
   * `codes(start(r) until start(r + 1))`, and at position f code c stands
   * for `values(f)(c)`. A row holds 4 bytes per position, plus one offset;
   * each position's dictionary holds the distinct values seen there.
-  * [[nearest]] is the int Hamming kernel every coded Lloyd pass runs.
   *
-  * Two value modes, each one fit's:
+  * [[Coded.nearest]] is the engine's one Hamming assignment kernel: every
+  * coded Lloyd pass runs it on its rows, and [[Coded.Centers]] runs it on
+  * raw Spark rows (`transform`, `computeCost`, `predict`, the cost and
+  * reseed passes, `graft_hamming_assign`). [[Coded.Counts]] and [[cost]] are
+  * the passes' one count and one cost routine.
+  *
+  * Two value modes:
   *  - `Coded[String]` (the local fits, [[LocalKModes]]): codes follow
   *    Java `String` order of the values (a null value first), so
   *    comparing codes compares values ([[compareRows]], "value ASC" mode
   *    ties); byte strings that decode to one `String` (malformed UTF-8)
   *    share a code.
   *  - `Coded[UTF8String]` (a global fit's cached partitions, see
-  *    [[KModes]]): one code per distinct byte string, in order of first
-  *    sight, so the codes carry no value order; [[code]] maps a center's
-  *    values into a partition's code space.
+  *    [[KModes]], and a center list, [[Coded.Centers]]): one code per
+  *    distinct byte string, in order of first sight, so the codes carry
+  *    no value order; [[code]] maps a value into the code space.
   *
   * Serializable, so a persisted partition can spill to disk.
   */
@@ -351,30 +337,57 @@ private[graft] final class Coded[V <: AnyRef](
       if (c == null) -1 else c
     }
 
-  /** The nearest of `centers` (rows of codes) to row r, packed as
-    * `prediction << 32 | min_dist` (see [[HammingKernels.prediction]]). A
-    * center stops counting once it reaches the best distance so far:
-    * under the strict `<` it can no longer win, so ties go to the lowest
-    * id.
+  /** The nearest of `centers` (rows of codes) to row r (see
+    * [[Coded.nearest]]).
     */
-  def nearest(r: Int, centers: Array[Array[Int]]): Long = {
+  def nearest(r: Int, centers: Array[Array[Int]]): Long =
+    Coded.nearest(codes, start(r), start(r + 1) - start(r), centers)
+
+  /** Hamming distance of row r to `center`. */
+  def hamming(r: Int, center: Array[Int]): Int =
+    Coded.hamming(codes, start(r), start(r + 1) - start(r), center, Int.MaxValue)
+
+  /** Every row assigned to the nearest of `centers`, into `assign`; the
+    * sum of their distances.
+    */
+  def cost(centers: Array[Array[Int]], assign: Array[Int]): Long = {
+    var sum = 0L
+    var r = 0
+    while (r < rows) {
+      val a = nearest(r, centers)
+      assign(r) = Coded.prediction(a)
+      sum += Coded.minDist(a)
+      r += 1
+    }
+    sum
+  }
+}
+
+private[graft] object Coded {
+  /** The nearest of `centers` (rows of codes) to the row
+    * `codes(from until from + len)`, packed as `prediction << 32 |
+    * min_dist` ([[prediction]], [[minDist]]). Simple matching, a missing
+    * position costs 1; ties go to the lowest center id (numpy-argmin
+    * first-wins, SURVEY §3.1 R6). A center stops counting once it reaches
+    * the best distance so far: under the strict `<` it can no longer win,
+    * so the tie rule and the exact min distance are kept.
+    */
+  def nearest(codes: Array[Int], from: Int, len: Int, centers: Array[Array[Int]]): Long = {
     var best = 0
     var bestD = Int.MaxValue
     var c = 0
     while (c < centers.length) {
-      val d = hamming(r, centers(c), bestD)
+      val d = hamming(codes, from, len, centers(c), bestD)
       if (d < bestD) { bestD = d; best = c }
       c += 1
     }
     (best.toLong << 32) | bestD
   }
 
-  /** Hamming distance of row r to `center`, counted up to `bound`; a
-    * missing position costs 1.
+  /** Hamming distance of the row `codes(from until from + len)` to
+    * `center`, counted up to `bound`.
     */
-  def hamming(r: Int, center: Array[Int], bound: Int = Int.MaxValue): Int = {
-    val from = start(r)
-    val len = start(r + 1) - from
+  def hamming(codes: Array[Int], from: Int, len: Int, center: Array[Int], bound: Int): Int = {
     val m = math.min(len, center.length)
     var d = math.abs(len - center.length)
     var i = 0
@@ -384,9 +397,59 @@ private[graft] final class Coded[V <: AnyRef](
     }
     d
   }
-}
 
-private[graft] object Coded {
+  def prediction(nearest: Long): Int = (nearest >>> 32).toInt
+  def minDist(nearest: Long): Int = nearest.toInt
+
+  /** Per cluster of a pass over `data`'s rows: their codes counted in one
+    * int array per position, their number and the longest of them.
+    */
+  final class Counts(data: Coded[_], k: Int) {
+    val of: Array[Array[Array[Int]]] = Array.fill(k)(data.values.map(v => new Array[Int](v.length)))
+    val size = new Array[Int](k)
+    val longest = new Array[Int](k)
+
+    /** Counts row r in cluster c. */
+    def add(r: Int, c: Int): Unit = {
+      val from = data.start(r)
+      val len = data.start(r + 1) - from
+      size(c) += 1
+      if (len > longest(c)) longest(c) = len
+      val cs = of(c)
+      var f = 0
+      while (f < len) { cs(f)(data.codes(from + f)) += 1; f += 1 }
+    }
+  }
+
+  /** A center list as the kernel reads it from Spark: one dictionary over
+    * the centers' values (the `UTF8String` mode, a null element kept as a
+    * null key) and the centers as rows of codes. [[nearest]] codes a
+    * feature array against it, a value that no center holds at its
+    * position as -1, and runs [[Coded.nearest]].
+    */
+  final class Centers(centers: ArrayData) extends Serializable {
+    private val dict = {
+      val b = new SparkRows(null)
+      var c = 0
+      while (c < centers.numElements()) { b.addRow(centers.getArray(c)); c += 1 }
+      b.result()
+    }
+    private val rows = Array.tabulate(dict.rows)(dict.row)
+
+    /** The nearest center to `a`, a null element read as `nullAs` (null
+      * itself matches a null center element).
+      */
+    def nearest(a: ArrayData, nullAs: UTF8String): Long = {
+      val row = new Array[Int](a.numElements())
+      var i = 0
+      while (i < row.length) {
+        row(i) = dict.code(i, if (a.isNullAt(i)) nullAs else a.getUTF8String(i))
+        i += 1
+      }
+      Coded.nearest(row, 0, row.length, rows)
+    }
+  }
+
   /** Rows of strings in the `String` mode. */
   def apply(rows: Array[Array[String]]): Coded[String] = {
     val b = new Builder[String](identity)
@@ -407,7 +470,8 @@ private[graft] object Coded {
     * `nullAs`. Its keys are copies: a Spark row's strings point into a
     * reused buffer.
     */
-  final class SparkRows(nullAs: UTF8String) extends Builder[UTF8String](_.clone()) {
+  final class SparkRows(nullAs: UTF8String)
+      extends Builder[UTF8String](v => if (v == null) null else v.clone()) {
     def addRow(a: ArrayData): Unit = {
       var i = 0
       while (i < a.numElements()) {

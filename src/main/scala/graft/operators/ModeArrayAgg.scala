@@ -1,7 +1,6 @@
 package graft.operators
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
-import graft.functions.HammingKernels
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -63,14 +62,14 @@ private[operators] object ModeCounts {
     else Array.tabulate(n)(i => if (i < t.length) t(i) else new ModeCounts)
 
   /** Count one row's values; a null value counts as the null sentinel. */
-  def add(t: Tables, row: ArrayData): Tables =
-    add(t, HammingKernels.values(row, ArrayModeAggregator.NullSentinelUtf8))
-
-  /** Count one row's decoded values (see [[HammingKernels.values]]). */
-  def add(t: Tables, values: Array[UTF8String]): Tables = {
-    val b = ensure(t, values.length)
+  def add(t: Tables, row: ArrayData): Tables = {
+    val b = ensure(t, row.numElements())
     var i = 0
-    while (i < values.length) { b(i).add(values(i), 1L); i += 1 }
+    while (i < row.numElements()) {
+      val v = if (row.isNullAt(i)) ArrayModeAggregator.NullSentinelUtf8 else row.getUTF8String(i)
+      b(i).add(v, 1L)
+      i += 1
+    }
     b
   }
 

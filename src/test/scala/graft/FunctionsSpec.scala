@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.{Distances, HammingAssign, HammingKernels, TextFunctions, VectorFunctions}
-import graft.operators.ArrayModeAggregator
+import graft.operators.{ArrayModeAggregator, Coded}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
@@ -233,14 +233,34 @@ class FunctionsSpec extends SparkSuite {
   private def arrayData(xs: Seq[String]) =
     new GenericArrayData(xs.map(v => if (v == null) null else UTF8String.fromString(v)).toArray[Any])
 
-  test("decoded early-stop kernel equals the argmin of HammingKernels.hamming") {
-    val cs = kernelCenters.map(arrayData)
-    val decoded = HammingKernels.decode(new GenericArrayData(cs.toArray[Any]))
-    for (r <- kernelRows) {
-      val ds = cs.map(HammingKernels.hamming(arrayData(r), _))
-      val got = HammingKernels.nearest(HammingKernels.values(arrayData(r), null), decoded)
-      assert(HammingKernels.prediction(got) == ds.indexOf(ds.min), r.toString)
-      assert(HammingKernels.minDist(got) == ds.min, r.toString)
+  test("raw-row early-stop kernel equals the argmin of HammingKernels.hamming") {
+    // beyond the shared rows: values that no center holds, a row longer
+    // than every center, a null element next to the literal null category;
+    // and one more center with null elements
+    val rows = kernelRows ++ Seq(Seq("zz", "b", "c"),
+      Seq[String]("a", "b", "c", null, sentinel, "w"), Seq[String](sentinel, null, "zz"))
+    val centers = kernelCenters :+ Seq[String](null, null, "z")
+    val cs = centers.map(arrayData)
+    val folded = new Coded.Centers(new GenericArrayData(cs.toArray[Any]))
+    // the oracle reads a row's null as itself, or as the null category
+    def want(r: Seq[String], sentinelNulls: Boolean) = HammingKernels.nearest(
+      arrayData(if (sentinelNulls) r.map(v => if (v == null) sentinel else v) else r), cs)
+    for (r <- rows; sentinelNulls <- Seq(false, true)) {
+      val got = folded.nearest(arrayData(r),
+        if (sentinelNulls) ArrayModeAggregator.NullSentinelUtf8 else null)
+      assert((Coded.prediction(got), Coded.minDist(got)) == want(r, sentinelNulls),
+        s"$r sentinelNulls=$sentinelNulls")
+    }
+    // through the expression, on literal and on non-foldable column centers
+    def assign(c: org.apache.spark.sql.Column, sentinelNulls: Boolean) = Bridge.column(
+      HammingAssign(Bridge.expression(col("f")), Bridge.expression(c), sentinelNulls))
+    val out = rows.map(r => (r, centers)).toDF("f", "cs").select(
+      assign(typedlit(centers), false), assign(col("cs"), false),
+      assign(typedlit(centers), true), assign(col("cs"), true)).collect()
+    def pair(r: Row, i: Int) = (r.getStruct(i).getInt(0), r.getStruct(i).getInt(1))
+    rows.zip(out).foreach { case (r, o) =>
+      assert(pair(o, 0) == want(r, false) && pair(o, 1) == want(r, false), r.toString)
+      assert(pair(o, 2) == want(r, true) && pair(o, 3) == want(r, true), r.toString)
     }
   }
 

@@ -477,4 +477,37 @@ class KModesSpec extends SparkSuite {
     assert(back.values.map(_.toSeq).toSeq == c.values.map(_.toSeq).toSeq)
     assert(back.code(0, c.values(0)(1)) == 1)
   }
+
+  test("predict equals transform row by row and computeCost is the mean " +
+      "distance to transform's centers, for models from both fits") {
+    val s = ArrayModeAggregator.NullSentinel
+    // group 1's last position is mostly null, so its center holds "∅"
+    val train = plantedDf(400, 4, 2, 53).as[Seq[String]]
+      .map(f => if (f.head == "g1v0") f.updated(3, null) else f).toDF("features").repartition(2)
+    // values that no center holds, ragged lengths, null elements next to a
+    // literal "∅", and a null array
+    val odd = Seq(Seq("zz", "g0v1", "zz", "g0v3"), Seq("g1v0"), Seq.empty[String],
+      Seq("g0v0", "g0v1", "g0v2", "g0v3", "g0v4", "zz"),
+      Seq[String](null, s, "g1v2", null), Seq[String](s, null), null)
+    val df = train.union(odd.toDF("features"))
+    for (mode <- Seq("global", "ensemble")) {
+      val m = new KModes().setK(2).setMaxIter(10).setSeed(7L).setInitMode(mode).fit(train)
+      assert(m.clusterCenters.exists(_.contains(s)), mode)
+      val rows = m.transform(df).select("features", "prediction")
+        .as[(Seq[String], Option[Int])].collect()
+      val dists = rows.flatMap {
+        case (null, p) =>
+          assert(p.isEmpty, s"$mode: a null array gets no prediction")
+          None
+        case (f, p) =>
+          assert(p.contains(m.predict(f)), s"$mode: $f")
+          val ds = m.clusterCenters.map(
+            LocalKModes.hamming(f.map(v => if (v == null) s else v).toArray, _))
+          assert(ds(p.get) == ds.min, s"$mode: $f")
+          Some(ds(p.get))
+      }
+      assert(dists.length == rows.length - 1)
+      assert(math.abs(m.computeCost(df) - dists.sum.toDouble / dists.length) < 1e-12, mode)
+    }
+  }
 }

@@ -2,13 +2,14 @@ package graft.operators
 
 import graft.functions.{Distances, HammingKernels}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The `UTF8String` form of the global Lloyd loop: every row's values
-  * decoded as `UTF8String`s (a null element read as the null category),
-  * assigned by [[HammingKernels.nearest]] and counted into [[ModeCounts]]
-  * tables, with the init and the empty-cluster reseed as
+  * as `UTF8String`s (a null element read as the null category), assigned
+  * by the brute-force argmin [[HammingKernels.nearest]] and counted into
+  * [[ModeCounts]] tables, with the init and the empty-cluster reseed as
   * `distinct().orderBy(keys).limit(n)`. It is the readable specification
   * the coded global fit of [[KModes]] is checked against (KModesSpec); the
   * engine itself never runs it.
@@ -25,11 +26,9 @@ object Utf8GlobalKModes {
     var centers = ranked.distinct().orderBy(keys: _*).limit(k).collect()
       .map(_.getSeq[String](0))
     require(centers.nonEmpty, "Utf8GlobalKModes.fit: no rows")
-    val data = rows.select("features").queryExecution.toRdd
-      .map(r => HammingKernels.values(r.getArray(0), ArrayModeAggregator.NullSentinelUtf8)
-        .map(_.clone()))
-      .collect()
-    def decoded = centers.map(_.map(UTF8String.fromString).toArray)
+    val data: Array[ArrayData] = ranked.queryExecution.toRdd.map(_.getArray(0).copy()).collect()
+    def decoded: Seq[ArrayData] =
+      centers.map(c => new GenericArrayData(c.map(UTF8String.fromString).toArray[Any])).toSeq
 
     var iter = 0
     var converged = false
@@ -41,10 +40,9 @@ object Utf8GlobalKModes {
       val dist = new Array[Long](cs.length)
       val tables = Array.fill(cs.length)(Array.empty[ModeCounts])
       data.foreach { v =>
-        val a = HammingKernels.nearest(v, cs)
-        val c = HammingKernels.prediction(a)
+        val (c, d) = HammingKernels.nearest(v, cs)
         n(c) += 1
-        dist(c) += HammingKernels.minDist(a)
+        dist(c) += d
         tables(c) = ModeCounts.add(tables(c), v)
       }
       cost = if (n.sum == 0) 0.0 else dist.sum.toDouble / n.sum
@@ -67,8 +65,7 @@ object Utf8GlobalKModes {
     }
     if (!converged) {
       val cs = decoded
-      cost = data.map(v => HammingKernels.minDist(HammingKernels.nearest(v, cs)).toLong).sum
-        .toDouble / data.length
+      cost = data.map(v => HammingKernels.nearest(v, cs)._2.toLong).sum.toDouble / data.length
     }
     Fit(centers.toSeq, cost, iter, reseeds)
   }
