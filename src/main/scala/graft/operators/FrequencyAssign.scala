@@ -5,9 +5,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** One frequency-weighted assignment step against FIXED centers — the
-  * distributed front door for R5's frequency dissimilarity
-  * ([[LocalKModes.frequencyDissim]], ensemble paper stage 2): a
-  * mismatching position costs 1; a matching position costs
+  * distributed front door for R5's frequency dissimilarity (the coded
+  * kernel `nearestWeighted` of [[LocalKModes]], ensemble paper stage
+  * 2): a mismatching position costs 1; a matching position costs
   * `1 − freq(value)/|cluster|`, so matches on weak (low-consensus)
   * center values still cost something.
   *

@@ -4,15 +4,11 @@ import graft.functions.HammingAssign
 import org.apache.spark.ml.{Estimator, Model}
 import org.apache.spark.ml.param._
 import org.apache.spark.ml.util.Identifiable
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, SortOrder}
-import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
-import org.apache.spark.sql.catalyst.plans.logical.Sort
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
@@ -26,28 +22,29 @@ import org.apache.spark.unsafe.types.UTF8String
   * algorithms behind `initMode`:
   *
   *  - `global` (default): plain distributed Lloyd with no row shuffle,
-  *    and the input plan runs once per fit. One job scans the input:
-  *    each partition keeps its k smallest distinct rows in the
-  *    seeded-hash order for the init (the driver merges the P×k rows,
-  *    [[KModes.smallestDistinct]]) and codes the same rows' features (a null
-  *    element read as the null category) into per-position dictionary
-  *    codes, one per distinct byte string ([[Coded]]), held
-  *    `MEMORY_AND_DISK` for the fit: 4 bytes per feature and row, plus
-  *    an offset and the partition's dictionaries. Each iteration is ONE
-  *    job over those cached codes: every partition maps the k centers
-  *    into its code space, assigns its rows to the nearest by int
-  *    Hamming (ties to the lowest id), counts them into int arrays and
-  *    returns per-cluster row counts, distance sums and [[ModeCounts]]
-  *    tables keyed by value. A partition's result is bounded by
-  *    k × n_features × the distinct values in that partition, never by
-  *    its row count. At a few partitions the driver merges them all; at
-  *    many, depth 2 adds one executor-side merge level (a shuffle of
-  *    partition results, not of rows) so the driver merges ~√P. The
-  *    final cost pass reads the codes too; an empty-cluster reseed ranks
-  *    by Spark hash expressions and so re-reads the input. `transform`,
-  *    `computeCost` and `predict` code each raw feature row against the
-  *    centers ([[Coded.Centers]]) and run the same int kernel.
-  *    Deterministic and partition-invariant.
+  *    and the input plan runs once per fit. One job reads the raw
+  *    features column: each partition codes its rows (a null element read
+  *    as the null category) into per-position dictionary codes, one per
+  *    distinct byte string ([[Coded]]), ranks the coded rows in the
+  *    seeded-hash order, keyed from their values ([[InitOrder]]), and keeps
+  *    its k smallest distinct rows for the init (the driver merges the P×k
+  *    rows). The
+  *    codes are held `MEMORY_AND_DISK` for the fit: 4 bytes per feature
+  *    and row, plus an offset and the partition's dictionaries. Each
+  *    iteration is ONE job over those cached codes: every partition maps
+  *    the k centers into its code space, assigns its rows to the nearest
+  *    by int Hamming (ties to the lowest id), counts them into int arrays
+  *    and returns per-cluster row counts, distance sums and
+  *    [[ModeCounts]] tables keyed by value. A partition's result is
+  *    bounded by k × n_features × the distinct values in that partition,
+  *    never by its row count. At a few partitions the driver merges them
+  *    all; at many, depth 2 adds one executor-side merge level (a shuffle
+  *    of partition results, not of rows) so the driver merges ~√P. An
+  *    empty-cluster reseed ranks the cached codes in the same order,
+  *    farthest rows first, and the final cost pass reads them too.
+  *    `transform`, `computeCost` and `predict` code each raw feature row
+  *    against the centers ([[Coded.Centers]]) and run the same int
+  *    kernel. Deterministic and partition-invariant.
   *
   *  - `ensemble` (reference fidelity): stage 1 runs [[LocalKModes]]
   *    independently inside each partition [UP iter_k_modes /
@@ -110,14 +107,6 @@ trait KModesParams extends Params {
   def getDistance: String = $(distance)
   def getInitHash: String = $(initHash)
 
-  /** Null-normalized features column (null is its own category, SURVEY §2):
-    * read only by the global fit's one scan (its init ranking and its
-    * codes) and its reseed ranking. The ensemble's stage 1 and the
-    * Hamming kernel read the raw column with the same null rule.
-    */
-  private[operators] def feats: Column =
-    F.transform(col($(featuresCol)), x => coalesce(x, lit(ArrayModeAggregator.NullSentinel)))
-
   protected def validateSchema(schema: StructType): StructType = {
     val f = schema($(featuresCol))
     require(f.dataType == ArrayType(StringType, true) ||
@@ -155,20 +144,23 @@ class KModes(override val uid: String) extends Estimator[KModesModel] with KMode
     copyValues(model.setParent(this))
   }
 
-  private def initOrderKeys: Seq[Column] = KModes.initOrderKeys($(initHash), $(seed))
-
   // ---------------------------------------------------------------- global
   private def fitGlobal(df: DataFrame): KModesModel = {
     // Deterministic seeded init (R9 global form): the k smallest distinct
-    // null-normalized feature rows in seeded-hash order. The init's one job
-    // also codes every partition's rows and keeps the codes, so the input
-    // plan runs once per fit (a reseed excepted).
-    val ranked = df.select(feats.as("f"))
-    val init = new KModes.Ranked(ranked, initOrderKeys)
-    val parts = KModes.codedPartitions(init, $(k))
+    // null-normalized feature rows in seeded-hash order ([[InitOrder]]).
+    // One job reads the raw features column once: each partition codes its
+    // rows, ranks them from their values and holds the codes, so no later
+    // step of the fit (the passes, a reseed, the cost pass) reads the input.
+    val order = new InitOrder($(initHash), $(seed))
+    val kk = $(k)
+    val parts = df.select(col($(featuresCol))).queryExecution.toRdd.mapPartitions { rows =>
+      val b = new Coded.SparkRows(ArrayModeAggregator.NullSentinelUtf8)
+      rows.foreach(r => b.addRow(r.getArray(0)))
+      val data = b.result()
+      Iterator.single((order.picks(data, kk, null), data))
+    }.setName("KModes.fit coded partitions").persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      var centers: Array[Seq[String]] =
-        init.merge(parts.flatMap(_._1).collect(), $(k)).map(_.getSeq[String](0))
+      var centers: Array[Seq[String]] = order.merge(parts.flatMap(_._1).collect(), kk)
       require(centers.nonEmpty, "KModes.fit: no rows")
       val coded = parts.map(_._2)
 
@@ -194,19 +186,20 @@ class KModes(override val uid: String) extends Estimator[KModesModel] with KMode
         val reseeded =
           if (emptyIds.isEmpty) newCenters
           else {
-            // deterministic reseed: records farthest from their center,
-            // (min_dist DESC, hash ASC), distinct, one job with no exchange
-            // (SURVEY §8.3); it re-reads the input to rank by Spark's hashes
-            val a = KModes.assign(col("f"), typedlit(centers.toSeq))
-            val far = KModes.smallestDistinct(
-              ranked.select(col("f"), a.getField("min_dist").as("d")),
-              col("d").desc +: initOrderKeys, emptyIds.size)
+            // deterministic reseed: records farthest from this pass's
+            // centers, (min_dist DESC, keys, values), distinct; one job over
+            // the codes with no exchange (SURVEY §8.3)
+            val m = emptyIds.size
+            val far = order.merge(coded.flatMap { d =>
+              val dcs = PassCounts.codes(d, cs)
+              order.picks(d, m, Array.tabulate(d.rows)(r => Coded.minDist(d.nearest(r, dcs))))
+            }.collect(), m)
             val upd = newCenters.clone()
-            emptyIds.zip(far).foreach { case (id, r) => upd(id) = r.getSeq[String](0) }
+            emptyIds.zip(far).foreach { case (id, r) => upd(id) = r }
             upd
           }
 
-        converged = reseeded.map(_.toSeq).toSeq == centers.map(_.toSeq).toSeq
+        converged = reseeded.toSeq == centers.toSeq
         centers = reseeded
         iter += 1
       }
@@ -344,88 +337,6 @@ object KModes {
     array(cols.map(c => coalesce(c.cast("string"),
       lit(ArrayModeAggregator.NullSentinel))): _*)
 
-  /** Init/reseed ranking keys over the null-normalized features column
-    * `f` (see [[KModesParams.initHash]]): md5 of chr(1)-joined
-    * `seed, f₁, …, fₙ` in portable mode, else xxhash64(f, seed). The md5
-    * tie-break key is the same joined string (not the array), so an
-    * external replay compares plain strings — equivalent for fixed-arity
-    * features.
-    */
-  private[graft] def initOrderKeys(initHash: String, seed: Long): Seq[Column] =
-    initHash match {
-      case "md5" =>
-        val joined = concat_ws("\u0001", lit(seed.toString), col("f"))
-        Seq(md5(joined), concat_ws("\u0001", col("f")))
-      case _ => Seq(xxhash64(col("f"), lit(seed)), col("f"))
-    }
-
-  /** `df` with its `order` keys projected next to its columns, under
-    * Spark's own ordering of `order` (so ties, directions and nulls sort
-    * as in `orderBy`). Rows tied on `order` are ranked by their own
-    * columns, ascending: a bounded set of [[smallest]] rows must not fold
-    * two distinct rows, and `orderBy` leaves their order open.
-    */
-  private[operators] final class Ranked(df: DataFrame, order: Seq[Column]) {
-    private val width = df.columns.length
-    // the analyzed `orderBy` resolves the keys, directions and null order;
-    // each key is computed once per row, next to the row's own columns
-    private val sorts = df.orderBy(order: _*).queryExecution.analyzed
-      .collectFirst { case s: Sort => s.order }.get
-    val keyed: DataFrame = df.select(df.columns.toSeq.map(col) ++
-      sorts.zipWithIndex.map { case (s, i) => Bridge.column(s.child).as(s"__order$i") }: _*)
-    private val schema = keyed.schema
-    private def ref(i: Int) = BoundReference(i, schema(i).dataType, schema(i).nullable)
-    val ordering: Ordering[InternalRow] = new LazilyGeneratedOrdering(
-      sorts.zipWithIndex.map { case (s, i) =>
-        SortOrder(ref(width + i), s.direction, s.nullOrdering, Seq.empty)
-      } ++ (0 until width).map(i => SortOrder(ref(i), Ascending)))
-
-    /** The n smallest distinct of `picks`, the [[smallest]] keyed rows of
-      * every partition, as rows of `df`, in order. Exact, because the
-      * union of every partition's n smallest distinct rows holds the global
-      * n smallest.
-      */
-    def merge(picks: Array[InternalRow], n: Int): Array[Row] = {
-      val toScala = (0 until width).map(i =>
-        (schema(i).dataType, CatalystTypeConverters.createToScalaConverter(schema(i).dataType)))
-      smallest(picks.iterator, n, ordering).map(r =>
-        Row.fromSeq(toScala.zipWithIndex.map { case ((t, conv), i) => conv(r.get(i, t)) }))
-    }
-  }
-
-  /** The rows of `df.distinct().orderBy(order: _*).limit(n)`, in one job
-    * with no exchange: each partition keeps its n smallest distinct rows
-    * of [[Ranked]] `keyed` and the driver merges the P×n rows.
-    */
-  private[graft] def smallestDistinct(df: DataFrame, order: Seq[Column], n: Int): Array[Row] =
-    if (n <= 0) Array.empty
-    else {
-      val r = new Ranked(df, order)
-      val ord = r.ordering
-      r.merge(r.keyed.queryExecution.toRdd.mapPartitions(rows => smallest(rows, n, ord).iterator)
-        .collect(), n)
-    }
-
-  /** The n smallest distinct rows of `rows` under `ord`, in order. */
-  private def smallest(rows: Iterator[InternalRow], n: Int,
-      ord: Ordering[InternalRow]): Array[InternalRow] =
-    LocalKModes.smallest(rows, n, ord, (r: InternalRow) => r.copy())
-
-  /** The global fit's one scan of its input: per partition, the n smallest
-    * distinct `init.keyed` rows (as [[smallestDistinct]] picks them) and
-    * the partition's features (`keyed`'s first column, a null element read
-    * as the null category) as [[Coded]] `UTF8String` codes. Held
-    * `MEMORY_AND_DISK` until the caller unpersists it.
-    */
-  private def codedPartitions(init: Ranked, n: Int): RDD[(Array[InternalRow], Coded[UTF8String])] = {
-    val ord = init.ordering
-    init.keyed.queryExecution.toRdd.mapPartitions { rows =>
-      val b = new Coded.SparkRows(ArrayModeAggregator.NullSentinelUtf8)
-      val picks = smallest(rows.map { r => b.addRow(r.getArray(0)); r }, n, ord)
-      Iterator.single((picks, b.result()))
-    }.setName("KModes.fit coded partitions").persist(StorageLevel.MEMORY_AND_DISK)
-  }
-
   /** struct(prediction, min_dist) of the nearest center, reading a null
     * feature element as the null category: K-modes' assignment over the
     * raw features column.
@@ -453,6 +364,94 @@ object KModes {
   /** `centers` as the kernel reads them from Spark rows. */
   private[operators] def coded(centers: Seq[Seq[String]]): Coded.Centers =
     new Coded.Centers(CatalystTypeConverters.convertToCatalyst(centers).asInstanceOf[ArrayData])
+}
+
+/** The seeded order of the global fit's init and empty-cluster reseed
+  * ([[KModesParams.initHash]]) over coded rows. A row's keys are computed
+  * from its values, bit-identical to the Spark expressions an external
+  * replay orders by: `xxhash64(f, seed)`, or `md5(concat_ws("\u0001",
+  * seed, f))` then `concat_ws("\u0001", f)`. Ties go to the values in
+  * UTF-8 byte order, a prefix first, so only equal rows tie. A reseed ranks
+  * by distance DESC first.
+  */
+private[graft] final class InitOrder(initHash: String, seed: Long) extends Serializable {
+  private val md5 = initHash == "md5"
+  private val (sep, seedUtf8) = (UTF8String.fromString("\u0001"), UTF8String.fromString(seed.toString))
+  @transient private lazy val digest = java.security.MessageDigest.getInstance("MD5")
+
+  /** Row r's keys, into `to` at r (xxhash64) or 2r (md5): the steps of
+    * Spark's `xxhash64` (seed 42) over each value's bytes and then `seed`
+    * as a long, or the md5 digest of the joined seed and values.
+    */
+  def key(data: Coded[UTF8String], r: Int, to: Array[Long]): Unit =
+    if (md5) {
+      val d = java.nio.ByteBuffer.wrap(digest.digest(
+        UTF8String.concatWs(sep, seedUtf8 +: data.decode(data.row(r)): _*).getBytes))
+      to(2 * r) = d.getLong(0)
+      to(2 * r + 1) = d.getLong(8)
+    } else {
+      var h = 42L
+      var f = 0
+      while (f < data.length(r)) { h = XXH64.hashUTF8String(data.value(r, f), h); f += 1 }
+      to(r) = XXH64.hashLong(seed, h)
+    }
+
+  /** Row r's values joined by "\u0001", as `concat_ws` joins them. */
+  def joined(data: Coded[UTF8String], r: Int): UTF8String =
+    UTF8String.concatWs(sep, data.decode(data.row(r)): _*)
+
+  /** The n smallest distinct rows of `data` in (far DESC, keys, values)
+    * order, as (far, values); `far` holds every row's distance (null: all
+    * 0). Keys are computed for the rows compared.
+    */
+  def picks(data: Coded[UTF8String], n: Int, far: Array[Int]): Array[(Int, Array[UTF8String])] = {
+    val ks = new Array[Long](if (md5) 2 * data.rows else data.rows)
+    val known = new java.util.BitSet(data.rows)
+    def keyed(r: Int): Int = {
+      if (!known.get(r)) { key(data, r, ks); known.set(r) }
+      r
+    }
+    def dist(r: Int) = if (far == null) 0 else far(r)
+    val ord: java.util.Comparator[Integer] = (a, b) => {
+      val d = Integer.compare(dist(b), dist(a))
+      val c = if (d != 0) d else compareKeys(ks, keyed(a), keyed(b))
+      if (c != 0 || data.compareRows(a, b) == 0) c
+      else {
+        val j = if (md5) joined(data, a).binaryCompare(joined(data, b)) else 0
+        if (j != 0) j else compareValues(data, a, b)
+      }
+    }
+    LocalKModes.smallest(Iterator.range(0, data.rows).map(Int.box), n, ord)
+      .map(r => (dist(r), data.decode(data.row(r))))
+  }
+
+  /** The n smallest distinct of `all`, every partition's [[picks]], in
+    * order. Exact, because the union of every partition's n smallest
+    * distinct rows holds the n smallest of all.
+    */
+  def merge(all: Array[(Int, Array[UTF8String])], n: Int): Array[Seq[String]] = {
+    val b = new Coded.Builder[UTF8String](identity)
+    all.foreach { case (_, vs) => vs.foreach(b.add); b.endRow() }
+    picks(b.result(), n, all.map(_._1)).map(_._2.map(_.toString).toSeq)
+  }
+
+  /** A signed xxhash64, or an md5 digest as unsigned bytes (its hex order). */
+  private def compareKeys(ks: Array[Long], a: Int, b: Int): Int =
+    if (!md5) java.lang.Long.compare(ks(a), ks(b))
+    else {
+      val c = java.lang.Long.compareUnsigned(ks(2 * a), ks(2 * b))
+      if (c != 0) c else java.lang.Long.compareUnsigned(ks(2 * a + 1), ks(2 * b + 1))
+    }
+
+  private def compareValues(data: Coded[UTF8String], a: Int, b: Int): Int = {
+    var f = 0
+    while (f < math.min(data.length(a), data.length(b))) {
+      val c = data.value(a, f).binaryCompare(data.value(b, f))
+      if (c != 0) return c
+      f += 1
+    }
+    Integer.compare(data.length(a), data.length(b))
+  }
 }
 
 /** One global Lloyd pass over some rows: per cluster, the row count, the

@@ -46,45 +46,6 @@ object LocalKModes {
 
   private def seedHash(seed: Long): Int = MurmurHash3.stringHash(seed.toString)
 
-  def hamming(a: Array[String], b: Array[String]): Int = {
-    var d = 0
-    var i = 0
-    val n = math.min(a.length, b.length)
-    while (i < n) {
-      if (a(i) != b(i)) d += 1
-      i += 1
-    }
-    d + math.abs(a.length - b.length)
-  }
-
-  /** Frequency-weighted dissimilarity (SURVEY §3.1 R5, conf=M): matching
-    * positions contribute `1 - freq(center_value)/cluster_size` instead of
-    * 0, so matches against "weak" (low-consensus) mode values still cost
-    * something; a missing position costs 1. Used for stage-2
-    * meta-clustering per the ensemble paper.
-    */
-  def frequencyDissim(
-      a: Array[String],
-      center: Array[String],
-      freqs: Array[collection.Map[String, Long]],
-      size: Long): Double = {
-    var d = 0.0
-    var i = 0
-    val n = math.min(a.length, center.length)
-    while (i < n) {
-      if (a(i) != center(i)) d += 1.0
-      else if (size > 0) d += 1.0 - freqs(i).getOrElse(a(i), 0L).toDouble / size
-      i += 1
-    }
-    d + math.abs(a.length - center.length)
-  }
-
-  /** Deterministic seeded init: k distinct rows in murmur-hash order. */
-  def initCenters(data: Array[Array[String]], k: Int, seed: Long): Array[Array[String]] = {
-    val coded = Coded(data)
-    init(coded, k, seed).map(coded.decode)
-  }
-
   def fit(
       data: Array[Array[String]],
       k: Int,
@@ -176,22 +137,24 @@ object LocalKModes {
   }
 
   /** The n smallest distinct of `xs` under `ord`, in order, kept in a
-    * bounded set; `own` copies an element the set keeps.
+    * bounded set.
     */
-  private[operators] def smallest[T <: AnyRef](xs: Iterator[T], n: Int, ord: java.util.Comparator[T],
-      own: T => T = (x: T) => x)(implicit t: ClassTag[T]): Array[T] = {
+  private[operators] def smallest[T <: AnyRef](xs: Iterator[T], n: Int, ord: java.util.Comparator[T])(
+      implicit t: ClassTag[T]): Array[T] = {
     val set = new java.util.TreeSet[T](ord)
     xs.foreach { x =>
       if (set.size < n || ord.compare(x, set.last) < 0) {
-        if (set.add(own(x)) && set.size > n) set.pollLast()
+        if (set.add(x) && set.size > n) set.pollLast()
       }
     }
     set.toArray[T](new Array[T](0))
   }
 
-  /** The nearest center under [[frequencyDissim]] with the previous
-    * pass's counts, Hamming against a center that had no rows; ties to the
-    * lowest id.
+  /** The nearest center under the frequency-weighted dissimilarity of
+    * the ensemble paper (R5: a mismatch or a missing position costs 1, a
+    * match `1 - count/size` of the value in the center's cluster) with the
+    * previous pass's counts, Hamming against a center that had no rows;
+    * ties to the lowest id.
     */
   private def nearestWeighted(data: Coded[String], r: Int, centers: Array[Array[Int]],
       counts: Coded.Counts): Int = {
@@ -262,8 +225,8 @@ object LocalKModes {
   *
   * [[Coded.nearest]] is the engine's one Hamming assignment kernel: every
   * coded Lloyd pass runs it on its rows, and [[Coded.Centers]] runs it on
-  * raw Spark rows (`transform`, `computeCost`, `predict`, the cost and
-  * reseed passes, `graft_hamming_assign`). [[Coded.Counts]] and [[cost]] are
+  * raw Spark rows (`transform`, `computeCost`, `predict`, the ensemble's
+  * cost pass, `graft_hamming_assign`). [[Coded.Counts]] and [[cost]] are
   * the passes' one count and one cost routine.
   *
   * Two value modes:
@@ -287,6 +250,11 @@ private[graft] final class Coded[V <: AnyRef](
   def rows: Int = start.length - 1
 
   def row(r: Int): Array[Int] = java.util.Arrays.copyOfRange(codes, start(r), start(r + 1))
+
+  def length(r: Int): Int = start(r + 1) - start(r)
+
+  /** Row r's value at position f. */
+  def value(r: Int, f: Int): V = values(f)(codes(start(r) + f))
 
   def decode(row: Array[Int])(implicit t: ClassTag[V]): Array[V] =
     Array.tabulate(row.length)(f => values(f)(row(f)))

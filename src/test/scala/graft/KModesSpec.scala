@@ -141,7 +141,7 @@ class KModesSpec extends SparkSuite {
     // per candidate cluster with that cluster's tables (empty → Hamming)
     val rows = df.collect().map(_.getSeq[String](0).toArray)
     val hAssign = rows.map { r =>
-      centers.indices.minBy(c => (LocalKModes.hamming(r, centers(c)), c))
+      centers.indices.minBy(c => (StringLocalKModes.hamming(r, centers(c)), c))
     }
     val sizes = Array.tabulate(centers.length)(c => hAssign.count(_ == c).toLong)
     val freqs = Array.tabulate(centers.length) { c =>
@@ -151,8 +151,8 @@ class KModesSpec extends SparkSuite {
       }
     }
     def refDist(r: Array[String], c: Int): Double =
-      if (sizes(c) == 0) LocalKModes.hamming(r, centers(c)).toDouble
-      else LocalKModes.frequencyDissim(r, centers(c), freqs(c), sizes(c))
+      if (sizes(c) == 0) StringLocalKModes.hamming(r, centers(c)).toDouble
+      else StringLocalKModes.frequencyDissim(r, centers(c), freqs(c), sizes(c))
     out.foreach { row =>
       val f = row.getSeq[String](0).toArray
       val ds = centers.indices.map(refDist(f, _))
@@ -302,11 +302,11 @@ class KModesSpec extends SparkSuite {
          reseed <- Seq(false, true);
          n <- Seq(1, 7, nDistinct + 10)) {
       val df = if (parts == 1) rows.coalesce(1) else rows.repartition(parts)
-      val keys = KModes.initOrderKeys(hash, 7L)
+      val keys = Utf8GlobalKModes.initOrderKeys(hash, 7L)
       val (in, order) =
         if (reseed) (withDist(df), col("d").desc +: keys) else (df, keys)
       val want = in.distinct().orderBy(order: _*).limit(n).collect().toSeq
-      val got = KModes.smallestDistinct(in, order, n).toSeq
+      val got = Utf8GlobalKModes.smallestDistinct(in, order, n).toSeq
       assert(got == want, s"$hash, $parts partitions, reseed $reseed, n $n")
       assert(got.length == math.min(n, nDistinct))
     }
@@ -502,12 +502,61 @@ class KModesSpec extends SparkSuite {
         case (f, p) =>
           assert(p.contains(m.predict(f)), s"$mode: $f")
           val ds = m.clusterCenters.map(
-            LocalKModes.hamming(f.map(v => if (v == null) s else v).toArray, _))
+            StringLocalKModes.hamming(f.map(v => if (v == null) s else v).toArray, _))
           assert(ds(p.get) == ds.min, s"$mode: $f")
           Some(ds(p.get))
       }
       assert(dists.length == rows.length - 1)
       assert(math.abs(m.computeCost(df) - dists.sum.toDouble / dists.length) < 1e-12, mode)
     }
+  }
+
+  test("the init keys computed from a row's values equal Spark's xxhash64, " +
+      "md5 and concat_ws keys row by row: nulls next to literal ∅, empty and " +
+      "ragged rows, U+1F600 next to U+E000, malformed byte strings") {
+    val s = ArrayModeAggregator.NullSentinel
+    val malformed = (x: org.apache.spark.sql.Column) =>
+      when(x === "#FF", unhex(lit("FF")).cast("string"))
+        .when(x === "#FE", unhex(lit("FE")).cast("string")).otherwise(x)
+    val rows = Seq(Seq[String](null, "a"), Seq(s, "a"), Seq[String](null), Seq(s), Seq.empty[String],
+      Seq("a"), Seq("a", "b", "c"), Seq("a", "b"), Seq("\uD83D\uDE00", "x"), Seq("\uE000", "x"),
+      Seq("#FF", "y"), Seq("#FE", "y"), Seq("#FF", "#FE", null), Seq("", ""), Seq(""))
+    val df = rows.toDF("features").select(transform(col("features"), malformed).as("features"))
+    val f = transform(col("features"), x => coalesce(x, lit(s)))
+    for (seed <- Seq(7L, -3L, 0L)) {
+      val keyed = df.select(col("features"), xxhash64(f, lit(seed)),
+        md5(concat_ws("\u0001", lit(seed.toString), f)),
+        concat_ws("\u0001", f).cast("binary")).queryExecution.toRdd.map(_.copy()).collect()
+      assert(keyed.length == rows.length)
+      // the rows as the fit holds them: coded, a null element read as ∅
+      val coded = new graft.operators.Coded.SparkRows(ArrayModeAggregator.NullSentinelUtf8)
+      keyed.foreach(r => coded.addRow(r.getArray(0)))
+      val data = coded.result()
+      val (xx, md) = (new graft.operators.InitOrder("xxhash64", seed),
+        new graft.operators.InitOrder("md5", seed))
+      val (xxKeys, mdKeys) = (new Array[Long](rows.length), new Array[Long](2 * rows.length))
+      keyed.zipWithIndex.foreach { case (r, i) =>
+        val what = s"seed $seed, row ${rows(i)}"
+        xx.key(data, i, xxKeys)
+        md.key(data, i, mdKeys)
+        assert(xxKeys(i) == r.getLong(1), what)
+        assert(f"${mdKeys(2 * i)}%016x${mdKeys(2 * i + 1)}%016x" == r.getUTF8String(2).toString, what)
+        assert(md.joined(data, i).getBytes.toSeq == r.getBinary(3).toSeq, what)
+      }
+    }
+  }
+
+  test("a global fit that reseeds runs its input plan once: an input that " +
+      "ends in an exchange is shuffled once per fit") {
+    val df = plantedDf(120, 4, 2, 7, signal = 0.7).repartition(4, col("features"))
+    val want = Utf8GlobalKModes.fit(df, 4, 10, 7L, "xxhash64")
+    assert(want.reseeds > 0, want.toString)
+    val (_, once) = jobsAndShuffleBytes(df.queryExecution.toRdd.count())
+    var m: KModesModel = null
+    val (_, bytes) = jobsAndShuffleBytes {
+      m = new KModes().setK(4).setMaxIter(10).setSeed(7L).fit(df)
+    }
+    assert(fitted(m) == ((want.centers, want.cost, want.iterations)))
+    assert(once > 0 && bytes == once, s"fit wrote $bytes shuffle bytes, one materialization $once")
   }
 }

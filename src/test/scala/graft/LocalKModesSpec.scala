@@ -23,15 +23,15 @@ class LocalKModesSpec extends AnyFunSuite {
   }
 
   test("hamming: simple matching distance, length-diff padded") {
-    assert(LocalKModes.hamming(Array("a", "b"), Array("a", "b")) == 0)
-    assert(LocalKModes.hamming(Array("a", "b"), Array("a", "c")) == 1)
-    assert(LocalKModes.hamming(Array("a"), Array("a", "c")) == 1)
+    assert(StringLocalKModes.hamming(Array("a", "b"), Array("a", "b")) == 0)
+    assert(StringLocalKModes.hamming(Array("a", "b"), Array("a", "c")) == 1)
+    assert(StringLocalKModes.hamming(Array("a"), Array("a", "c")) == 1)
   }
 
   test("initCenters: deterministic, distinct, independent of input order") {
     val data = planted(100, 4, 3, 7)
-    val a = LocalKModes.initCenters(data, 5, 42L)
-    val b = LocalKModes.initCenters(new Random(1).shuffle(data.toSeq).toArray, 5, 42L)
+    val a = LocalKModesInit.initCenters(data, 5, 42L)
+    val b = LocalKModesInit.initCenters(new Random(1).shuffle(data.toSeq).toArray, 5, 42L)
     assert(a.map(_.toSeq).toSeq == b.map(_.toSeq).toSeq)
     assert(a.map(_.toSeq).distinct.length == a.length)
   }
@@ -66,7 +66,7 @@ class LocalKModesSpec extends AnyFunSuite {
     val data = planted(300, 4, 3, 17)
     val r = LocalKModes.fit(data, 3, 20, 42L)
     r.centers.zipWithIndex.foreach { case (ctr, i) =>
-      val dists = r.centers.map(LocalKModes.hamming(ctr, _))
+      val dists = r.centers.map(StringLocalKModes.hamming(ctr, _))
       assert(dists.indexOf(dists.min) == i)
     }
   }
@@ -124,7 +124,7 @@ class LocalKModesSpec extends AnyFunSuite {
     assert(got.assignments.toSeq == want.assignments.toSeq, what)
     assert(got.cost == want.cost, what)
     assert(got.iterations == want.iterations, what)
-    assert(LocalKModes.initCenters(data, k, seed).map(_.toSeq).toSeq ==
+    assert(LocalKModesInit.initCenters(data, k, seed).map(_.toSeq).toSeq ==
       StringLocalKModes.initCenters(data, k, seed).map(_.toSeq).toSeq, what)
     reseeds
   }
@@ -191,9 +191,9 @@ class LocalKModesSpec extends AnyFunSuite {
     val centers = LocalKModes.fit(longFirst, 2, 10, 42L).centers.map(_.toSeq).toSet
     assert(centers == Set(Seq("a", "b", "c"), Seq("x", "y", "z")))
     // a missing position costs 1, also under frequency weighting
-    assert(LocalKModes.frequencyDissim(Array("a", "b"), Array("a", "b", "c"),
+    assert(StringLocalKModes.frequencyDissim(Array("a", "b"), Array("a", "b", "c"),
       Array.fill(3)(Map("a" -> 2L, "b" -> 2L, "c" -> 1L)), 2L) == 1.0)
-    assert(LocalKModes.frequencyDissim(Array("a", "b", "c"), Array("a"),
+    assert(StringLocalKModes.frequencyDissim(Array("a", "b", "c"), Array("a"),
       Array.fill(3)(Map("a" -> 1L)), 2L) == 2.5)
   }
 }

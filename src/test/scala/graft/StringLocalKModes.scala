@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.LocalKModes
-import graft.operators.LocalKModes.{Result, frequencyDissim, hamming, rowHash}
+import graft.operators.LocalKModes.{Result, rowHash}
 import scala.collection.mutable
 
 /** The String form of the local Lloyd loop: per-(cluster, position)
@@ -11,6 +11,40 @@ import scala.collection.mutable
   * (LocalKModesSpec); the engine itself never runs it.
   */
 object StringLocalKModes {
+
+  /** Simple matching, a missing position costs 1. */
+  def hamming(a: Array[String], b: Array[String]): Int = {
+    var d = 0
+    var i = 0
+    val n = math.min(a.length, b.length)
+    while (i < n) {
+      if (a(i) != b(i)) d += 1
+      i += 1
+    }
+    d + math.abs(a.length - b.length)
+  }
+
+  /** Frequency-weighted dissimilarity (SURVEY §3.1 R5, conf=M): matching
+    * positions contribute `1 - freq(center_value)/cluster_size` instead of
+    * 0, so matches against "weak" (low-consensus) mode values still cost
+    * something; a missing position costs 1. Used for stage-2
+    * meta-clustering per the ensemble paper.
+    */
+  def frequencyDissim(
+      a: Array[String],
+      center: Array[String],
+      freqs: Array[collection.Map[String, Long]],
+      size: Long): Double = {
+    var d = 0.0
+    var i = 0
+    val n = math.min(a.length, center.length)
+    while (i < n) {
+      if (a(i) != center(i)) d += 1.0
+      else if (size > 0) d += 1.0 - freqs(i).getOrElse(a(i), 0L).toDouble / size
+      i += 1
+    }
+    d + math.abs(a.length - center.length)
+  }
 
   /** Deterministic seeded init: k distinct rows in murmur-hash order. */
   def initCenters(data: Array[Array[String]], k: Int, seed: Long): Array[Array[String]] =
@@ -92,4 +126,11 @@ object StringLocalKModes {
     }
     (Result(centers, assign, cost / data.length, iter), reseeds)
   }
+}
+
+/** The coded [[LocalKModes]]' init, decoded: its centers before any pass. */
+object LocalKModesInit {
+  /** Deterministic seeded init: k distinct rows in murmur-hash order. */
+  def initCenters(data: Array[Array[String]], k: Int, seed: Long): Array[Array[String]] =
+    LocalKModes.fit(data, k, 0, seed).centers
 }
