@@ -2,32 +2,25 @@ package graft.functions
 
 import graft.operators.Coded
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
-/** Codegen'd fused nearest-mode assignment: one pass over the k centers
-  * computing argmin + min distance together. The composed Column form
-  * (`struct(argminIndex(d), array_min(d))`) duplicates the distance
-  * array expression (computed twice per row) and every piece of it is a
-  * CodegenFallback higher-order function — this expression is the inner
-  * loop of `KModesModel.transform` and every cost pass, so it gets the
-  * native treatment like [[DotProduct]].
-  *
-  * Distance semantics = the built-in tree [[Distances.hamming]]:
-  * position-wise simple matching, null-safe (null == null matches),
-  * length difference counts one mismatch per missing position. Ties go to
-  * the LOWEST center index (numpy-argmin first-wins, SURVEY §3.1 R6).
+/** Nearest-center assignment, struct(prediction, min_dist), in one pass
+  * over the k centers: the native form of [[Distances.assignComposed]],
+  * whose interpreted higher-order functions build the distance array
+  * twice per row. Distance semantics = [[Distances.hamming]]: simple
+  * matching, null == null matches, one mismatch per missing position;
+  * ties go to the LOWEST center index (numpy-argmin first-wins, SURVEY
+  * §3.1 R6).
   *
   * The centers are coded as one dictionary ([[Coded.Centers]]) — literal
-  * (foldable) centers once per task, a centers column once per row — and
-  * each row is coded against it and assigned by the engine's one int
-  * Hamming kernel, [[Coded.nearest]]. With `nullsAsSentinel` a null
-  * feature element reads as K-modes' null category
-  * (`ArrayModeAggregator.NullSentinel`), so K-modes callers pass the raw
-  * features column instead of a null-normalized copy.
+  * centers once per task, a centers column once per row — and each row is
+  * assigned by the engine's Hamming kernel, [[Coded.nearest]]. With
+  * `nullsAsSentinel` a null feature element reads as K-modes' null
+  * category, so K-modes callers pass the raw features column.
   */
 case class HammingAssign(left: Expression, right: Expression,
     nullsAsSentinel: Boolean = false)
@@ -62,4 +55,39 @@ case class HammingAssign(left: Expression, right: Expression,
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): HammingAssign =
     copy(left = newLeft, right = newRight)
+}
+
+/** struct(prediction, min_dist) of the nearest of `centers` under the
+  * frequency-weighted kernel [[Coded.nearestWeighted]] with the match
+  * costs `cost`, a null feature element read as K-modes' null category:
+  * [[graft.operators.FrequencyAssign]]'s second pass. Null for a null
+  * array.
+  */
+case class WeightedAssign(child: Expression, centers: Coded.Centers,
+    cost: Array[Array[Double]])
+    extends UnaryExpression {
+
+  override def dataType: DataType = StructType(Seq(
+    StructField("prediction", IntegerType, nullable = false),
+    StructField("min_dist", DoubleType, nullable = false)))
+  override def prettyName: String = "graft_weighted_assign"
+  override def flatArguments: Iterator[Any] = Iterator(child)
+
+  /** struct(prediction, min_dist) of the nearest of the centers. */
+  def assign(features: ArrayData): InternalRow = {
+    val row = centers.code(features, graft.operators.ArrayModeAggregator.NullSentinelUtf8)
+    val p = Coded.nearestWeighted(row, 0, row.length, centers.rows, cost)
+    new GenericInternalRow(Array[Any](p,
+      Coded.weighted(row, 0, row.length, centers.rows(p), cost(p))))
+  }
+
+  override def nullSafeEval(f: Any): Any = assign(f.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("weightedAssign", this)
+    nullSafeCodeGen(ctx, ev, f => s"${ev.value} = $self.assign($f);")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): WeightedAssign =
+    copy(child = newChild)
 }

@@ -1,33 +1,24 @@
 package graft.operators
 
-import graft.functions.Distances
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import graft.functions.WeightedAssign
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graft.Bridge
 
-/** One frequency-weighted assignment step against FIXED centers — the
-  * distributed front door for R5's frequency dissimilarity (the coded
-  * kernel `nearestWeighted` of [[LocalKModes]], ensemble paper stage
-  * 2): a mismatching position costs 1; a matching position costs
-  * `1 − freq(value)/|cluster|`, so matches on weak (low-consensus)
-  * center values still cost something.
-  *
-  * Key reduction (what makes this one narrow pass + one bounded
-  * shuffle): at a MATCHING position the row's value IS the center's
-  * value, so the match cost depends only on (cluster, position) —
-  * `w(c,i) = freq of center_c[i] within cluster c`. The step is:
-  *   1. Hamming-assign rows to the fixed centers (defines the cluster
-  *      populations, exactly [[LocalKModes.fit]]'s previous-iteration
-  *      tables);
-  *   2. one groupBy(prediction) computing the k×n match counts and
-  *      sizes (driver collect is O(k·n), never O(rows));
-  *   3. re-assign every row by the frequency distance with the k×n
-  *      weights folded in as literals — ties to the lowest cluster id.
-  * A cluster the Hamming pass left EMPTY falls back to plain Hamming
-  * distance for that center, mirroring [[LocalKModes.fit]]'s
-  * `prevSizes(c) > 0` guard.
-  *
-  * At 100 TB: two scans of the input (one per assignment) and one
-  * k×n-bounded shuffle — the same shape as a single Lloyd iteration.
+/** One frequency-weighted assignment step against FIXED centers: R5's
+  * frequency dissimilarity, the kernel [[Coded.nearestWeighted]] that
+  * ensemble stage 2 runs. A mismatching or missing position costs 1, a
+  * matching one `1 − freq(value)/|cluster|`; at a match the row's value IS
+  * the center's, so that cost depends only on (cluster, position).
+  *   1. One job with no exchange Hamming-assigns every row to the centers
+  *      ([[Coded.Centers]], [[Coded.nearest]]) — the populations of
+  *      [[LocalKModes.fit]]'s previous pass — and counts each cluster's
+  *      size and k×n match counts.
+  *   2. A narrow expression ([[WeightedAssign]]) re-assigns every row by
+  *      the frequency distance, ties to the lowest id; a center the
+  *      Hamming pass left EMPTY costs its Hamming distance.
+  * A null array is left out of the populations and gets a null prediction
+  * and min_dist; a null element is the null category.
   */
 object FrequencyAssign {
 
@@ -39,51 +30,32 @@ object FrequencyAssign {
       featuresCol: String,
       centers: Array[Array[String]]): DataFrame = {
     require(centers.nonEmpty, "FrequencyAssign: no centers")
-    val k = centers.length
-    val n = centers(0).length
-    val cLit = typedlit(centers.map(_.toSeq).toSeq)
-    val f = transform(col(featuresCol),
-      x => coalesce(x, lit(ArrayModeAggregator.NullSentinel)))
+    val cs = KModes.coded(centers.toSeq.map(_.toSeq))
+    val cc = cs.rows // the centers as codes
 
-    // pass 1: Hamming populations + per-(cluster, position) match counts
-    val p0 = Distances.assign(f, cLit).getField("prediction")
-    val matchCols = (0 until n).map { i =>
-      sum(when(element_at(f, i + 1) ===
-        element_at(element_at(cLit, p0 + 1), i + 1), 1L).otherwise(0L))
-        .as(s"m$i")
-    }
-    val stats = df
-      .groupBy(p0.as("p"))
-      .agg(count(lit(1)).as("sz"), matchCols: _*)
-      .collect()
-    val bySize = stats.map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val weights: Array[Array[Double]] = Array.tabulate(k, n) { (c, i) =>
-      bySize.get(c) match {
-        case Some(sz) if sz > 0 =>
-          stats.find(_.getInt(0) == c).get.getLong(2 + i).toDouble / sz.toDouble
-        case _ => Double.NaN // empty cluster → Hamming fallback below
-      }
+    // pass 1: per cluster, its size, then its match count per position
+    val counts = df.select(col(featuresCol)).queryExecution.toRdd
+      .aggregate(cc.map(c => new Array[Long](1 + c.length)))(
+        (acc, r) => {
+          if (!r.isNullAt(0)) {
+            val row = cs.code(r.getArray(0), ArrayModeAggregator.NullSentinelUtf8)
+            val p = Coded.prediction(Coded.nearest(row, 0, row.length, cc))
+            acc(p)(0) += 1
+            for (i <- 0 until math.min(row.length, cc(p).length) if row(i) == cc(p)(i))
+              acc(p)(1 + i) += 1
+          }
+          acc
+        },
+        (a, b) => { for (c <- a.indices; i <- a(c).indices) a(c)(i) += b(c)(i); a })
+    val cost = counts.map { n =>
+      if (n(0) == 0) null else n.tail.map(m => 1.0 - m.toDouble / n(0))
     }
 
-    // pass 2: literal-folded frequency distances, left-to-right sums so
-    // an external replay adds in the identical IEEE order
-    def distTo(c: Int): Column = {
-      val terms = (0 until n).map { i =>
-        val cv = lit(centers(c)(i))
-        if (weights(c)(i).isNaN)
-          when(element_at(f, i + 1) =!= cv, 1.0).otherwise(0.0)
-        else
-          when(element_at(f, i + 1) =!= cv, 1.0)
-            .otherwise(lit(1.0) - lit(weights(c)(i)))
-      }
-      terms.reduceLeft(_ + _)
-    }
-    val ds = (0 until k).map(distTo)
-    val pred = (0 until k - 1).foldRight(lit(k - 1): Column) { (c, rest) =>
-      when((c until k).drop(1).map(j => ds(c) <= ds(j)).reduce(_ && _), c)
-        .otherwise(rest)
-    }
-    df.withColumn("prediction", pred)
-      .withColumn("min_dist", least(ds: _*))
+    // pass 2: the weighted kernel per row
+    val a = "__frequency_assign"
+    df.withColumn(a, Bridge.column(WeightedAssign(Bridge.expression(col(featuresCol)), cs, cost)))
+      .withColumn("prediction", col(s"$a.prediction"))
+      .withColumn("min_dist", col(s"$a.min_dist"))
+      .drop(a)
   }
 }

@@ -21,30 +21,26 @@ import org.apache.spark.unsafe.types.UTF8String
   * (mirrors `ml.clustering.KMeans` shape, SURVEY.md §8.1). Two fit
   * algorithms behind `initMode`:
   *
-  *  - `global` (default): plain distributed Lloyd with no row shuffle,
-  *    and the input plan runs once per fit. One job reads the raw
-  *    features column: each partition codes its rows (a null element read
-  *    as the null category) into per-position dictionary codes, one per
-  *    distinct byte string ([[Coded]]), ranks the coded rows in the
-  *    seeded-hash order, keyed from their values ([[InitOrder]]), and keeps
-  *    its k smallest distinct rows for the init (the driver merges the P×k
-  *    rows). The
-  *    codes are held `MEMORY_AND_DISK` for the fit: 4 bytes per feature
-  *    and row, plus an offset and the partition's dictionaries. Each
-  *    iteration is ONE job over those cached codes: every partition maps
-  *    the k centers into its code space, assigns its rows to the nearest
-  *    by int Hamming (ties to the lowest id), counts them into int arrays
-  *    and returns per-cluster row counts, distance sums and
-  *    [[ModeCounts]] tables keyed by value. A partition's result is
-  *    bounded by k × n_features × the distinct values in that partition,
-  *    never by its row count. At a few partitions the driver merges them
-  *    all; at many, depth 2 adds one executor-side merge level (a shuffle
-  *    of partition results, not of rows) so the driver merges ~√P. An
-  *    empty-cluster reseed ranks the cached codes in the same order,
-  *    farthest rows first, and the final cost pass reads them too.
-  *    `transform`, `computeCost` and `predict` code each raw feature row
-  *    against the centers ([[Coded.Centers]]) and run the same int
-  *    kernel. Deterministic and partition-invariant.
+  *  - `global` (default): plain distributed Lloyd with no row shuffle;
+  *    the input plan runs once per fit. One job reads the raw features
+  *    column: each partition codes its rows (a null element read as the
+  *    null category) into per-position dictionary codes, one per distinct
+  *    byte string ([[Coded]]), and keeps its k smallest distinct rows in
+  *    the seeded-hash order keyed from their values ([[InitOrder]]); the
+  *    driver merges the P×k rows into the init. The codes are held
+  *    `MEMORY_AND_DISK` for the fit (4 bytes per feature and row, plus an
+  *    offset and the partition's dictionaries). Each iteration is ONE job
+  *    over them: every partition maps the centers into its code space,
+  *    assigns its rows by int Hamming (ties to the lowest id) and returns
+  *    per-cluster row counts, distance sums and [[ModeCounts]] tables
+  *    keyed by value — bounded by k × n_features × its distinct values,
+  *    never by its row count; a depth-2 tree merge (a shuffle of partition
+  *    results, not of rows) leaves the driver ~√P of them. An empty-cluster
+  *    reseed ranks the cached codes in the same order, farthest rows first,
+  *    and the final cost pass reads them too. `transform`, `computeCost`
+  *    and `predict` code each raw row against the centers
+  *    ([[Coded.Centers]]) and run the same kernel. Deterministic and
+  *    partition-invariant.
   *
   *  - `ensemble` (reference fidelity): stage 1 runs [[LocalKModes]]
   *    independently inside each partition [UP iter_k_modes /
@@ -59,7 +55,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *    shuffles; the result depends on partitioning exactly like the
   *    reference. Local fits order values in Java `String` order, where
   *    the global fit's [[ModeCounts]] use UTF-8 byte order; both assign
-  *    with the one kernel [[Coded.nearest]], and so does the cost pass.
+  *    with the one Hamming kernel [[Coded.nearest]], and so does the cost
+  *    pass (stage 2 with `distance = frequency`: [[Coded.nearestWeighted]]).
   *
   * Determinism contract (required for the DuckDB oracle, SURVEY §2):
   * seeded hash-order init, assignment ties → lowest cluster id, mode ties
@@ -76,9 +73,11 @@ trait KModesParams extends Params {
     ParamValidators.inArray(Array("global", "ensemble")))
   /** Dissimilarity for ensemble stage-2 meta-clustering (R5/R11):
     * `hamming` = simple matching; `frequency` = the ensemble paper's
-    * frequency-weighted variant (matches against weak mode values still
-    * cost 1 - freq/size). Stage 1 and the global algorithm always use
-    * Hamming, like the reference.
+    * frequency-weighted kernel [[Coded.nearestWeighted]] (a match costs
+    * 1 - freq/size in the previous pass's cluster; the first pass is
+    * Hamming), the one [[FrequencyAssign]] runs against fixed centers.
+    * Stage 1 and the global algorithm always use Hamming, like the
+    * reference.
     */
   final val distance = new Param[String](this, "distance", "hamming|frequency",
     ParamValidators.inArray(Array("hamming", "frequency")))
@@ -225,14 +224,12 @@ class KModes(override val uid: String) extends Estimator[KModesModel] with KMode
     val mi = $(maxIter)
     val sd = $(seed)
 
-    // Stage 1: local Lloyd per partition (zero shuffles), seeded per
-    // partition id — deterministic for a fixed partitioning, exactly the
-    // reference's semantics (result depends on layout, SURVEY §5). Each
-    // partition codes its raw feature arrays (a null element read as the
-    // null category) and fits the codes.
-    // R14 (every partition holds >= k records, the reference's fit()
-    // precondition [UP ~L155-175 | conf=M]) rides along in the same pass
-    // as a per-partition size marker instead of costing its own scan.
+    // Stage 1: local Lloyd per partition on its coded raw feature arrays
+    // (a null element read as the null category), seeded per partition id
+    // — deterministic for a fixed partitioning, exactly the reference's
+    // semantics (result depends on layout, SURVEY §5). R14 (every
+    // partition holds >= k records [UP ~L155-175 | conf=M]) rides along as
+    // a per-partition size marker instead of costing its own scan.
     val stage1: Array[(Int, Long, Array[String])] =
       df.select(col($(featuresCol))).queryExecution.toRdd
         .mapPartitionsWithIndex { (pid, rows) =>
@@ -300,9 +297,10 @@ class KModesModel(
 
   override def transform(dataset: Dataset[_]): DataFrame = {
     transformSchema(dataset.schema)
-    dataset.withColumn($(predictionCol),
-      KModes.assign(col($(featuresCol)), typedlit(clusterCenters.toSeq.map(_.toSeq)))
-        .getField("prediction"))
+    // the nearest center, a null feature element read as the null category
+    val a = HammingAssign(Bridge.expression(col($(featuresCol))),
+      Bridge.expression(typedlit(clusterCenters.toSeq.map(_.toSeq))), nullsAsSentinel = true)
+    dataset.withColumn($(predictionCol), Bridge.column(a).getField("prediction"))
   }
 
   /** Reference-fidelity alias for the fitted centers
@@ -336,14 +334,6 @@ object KModes {
   def assemble(cols: org.apache.spark.sql.Column*): org.apache.spark.sql.Column =
     array(cols.map(c => coalesce(c.cast("string"),
       lit(ArrayModeAggregator.NullSentinel))): _*)
-
-  /** struct(prediction, min_dist) of the nearest center, reading a null
-    * feature element as the null category: K-modes' assignment over the
-    * raw features column.
-    */
-  private[operators] def assign(f: Column, centers: Column): Column =
-    Bridge.column(HammingAssign(Bridge.expression(f), Bridge.expression(centers),
-      nullsAsSentinel = true))
 
   /** Mean Hamming distance of the rows of `ds` (raw features `f`; a null
     * array is skipped, a null element is the null category) to their

@@ -82,9 +82,9 @@ object LocalKModes {
     val centers = init(data, k, seed)
     val kEff = centers.length // may be < k when distinct rows < k
     val assign = Array.fill(n)(-1)
-    // the previous pass's counts feed the frequency-weighted dissimilarity
-    // (ensemble paper, stage 2), so the first pass is plain Hamming
-    var prev: Coded.Counts = null
+    // the frequency-weighted dissimilarity (ensemble paper, stage 2) reads
+    // the previous pass's match costs, so the first pass is plain Hamming
+    var matchCost: Array[Array[Double]] = null
 
     var iter = 0
     var moved = true
@@ -95,8 +95,8 @@ object LocalKModes {
       var r = 0
       while (r < n) {
         val best =
-          if (useFrequency && prev != null) nearestWeighted(data, r, centers, prev)
-          else Coded.prediction(data.nearest(r, centers))
+          if (matchCost == null) Coded.prediction(data.nearest(r, centers))
+          else Coded.nearestWeighted(data.codes, data.start(r), data.length(r), centers, matchCost)
         if (best != assign(r)) { moved = true; assign(r) = best }
         counts.add(r, best)
         r += 1
@@ -117,7 +117,7 @@ object LocalKModes {
         }
         c += 1
       }
-      prev = counts
+      if (useFrequency) matchCost = counts.matchCost(centers)
       iter += 1
     }
     // final assignment against final centers (so cost matches centers)
@@ -148,40 +148,6 @@ object LocalKModes {
       }
     }
     set.toArray[T](new Array[T](0))
-  }
-
-  /** The nearest center under the frequency-weighted dissimilarity of
-    * the ensemble paper (R5: a mismatch or a missing position costs 1, a
-    * match `1 - count/size` of the value in the center's cluster) with the
-    * previous pass's counts, Hamming against a center that had no rows;
-    * ties to the lowest id.
-    */
-  private def nearestWeighted(data: Coded[String], r: Int, centers: Array[Array[Int]],
-      counts: Coded.Counts): Int = {
-    val from = data.start(r)
-    val len = data.start(r + 1) - from
-    var best = 0
-    var bestD = Double.MaxValue
-    var c = 0
-    while (c < centers.length) {
-      val d =
-        if (counts.size(c) == 0) data.hamming(r, centers(c)).toDouble
-        else {
-          val center = centers(c)
-          val size = counts.size(c).toDouble
-          var s = 0.0
-          var i = 0
-          while (i < math.min(len, center.length)) {
-            val v = data.codes(from + i)
-            s += (if (v != center(i)) 1.0 else 1.0 - counts.of(c)(i)(v).toDouble / size)
-            i += 1
-          }
-          s + math.abs(len - center.length)
-        }
-      if (d < bestD) { bestD = d; best = c }
-      c += 1
-    }
-    best
   }
 
   /** The row farthest from its own center, ties by `-rowHash(row, seed)`
@@ -223,11 +189,14 @@ object LocalKModes {
   * for `values(f)(c)`. A row holds 4 bytes per position, plus one offset;
   * each position's dictionary holds the distinct values seen there.
   *
-  * [[Coded.nearest]] is the engine's one Hamming assignment kernel: every
-  * coded Lloyd pass runs it on its rows, and [[Coded.Centers]] runs it on
-  * raw Spark rows (`transform`, `computeCost`, `predict`, the ensemble's
-  * cost pass, `graft_hamming_assign`). [[Coded.Counts]] and [[cost]] are
-  * the passes' one count and one cost routine.
+  * The engine's two assignment kernels are here. [[Coded.nearest]]
+  * (Hamming) runs in every coded Lloyd pass and, through [[Coded.Centers]],
+  * on raw Spark rows (`transform`, `computeCost`, `predict`, the cost
+  * passes, `graft_hamming_assign`, [[FrequencyAssign]]'s first pass).
+  * [[Coded.nearestWeighted]] (the ensemble paper's frequency weighting)
+  * runs in [[LocalKModes]]' `useFrequency` passes and [[FrequencyAssign]]'s
+  * second pass. [[Coded.Counts]] and [[cost]] are the passes' one count
+  * and one cost routine.
   *
   * Two value modes:
   *  - `Coded[String]` (the local fits, [[LocalKModes]]): codes follow
@@ -366,6 +335,39 @@ private[graft] object Coded {
     d
   }
 
+  /** [[nearest]] under the frequency-weighted distance [[weighted]]. */
+  def nearestWeighted(codes: Array[Int], from: Int, len: Int, centers: Array[Array[Int]],
+      cost: Array[Array[Double]]): Int = {
+    var best = 0
+    var bestD = Double.MaxValue
+    var c = 0
+    while (c < centers.length) {
+      val d = weighted(codes, from, len, centers(c), cost(c))
+      if (d < bestD) { bestD = d; best = c }
+      c += 1
+    }
+    best
+  }
+
+  /** The ensemble paper's frequency-weighted distance (stage 2, R5) of a
+    * row to `center`: a mismatch costs 1, a match at position i `cost(i)`
+    * (`1 - count/size` of the value in the center's cluster), summed left
+    * to right from 0.0, then 1 per position only one side has. A null
+    * `cost` (a cluster with no rows) gives the Hamming distance.
+    */
+  def weighted(codes: Array[Int], from: Int, len: Int, center: Array[Int],
+      cost: Array[Double]): Double =
+    if (cost == null) hamming(codes, from, len, center, Int.MaxValue).toDouble
+    else {
+      var s = 0.0
+      var i = 0
+      while (i < math.min(len, center.length)) {
+        s += (if (codes(from + i) != center(i)) 1.0 else cost(i))
+        i += 1
+      }
+      s + math.abs(len - center.length)
+    }
+
   def prediction(nearest: Long): Int = (nearest >>> 32).toInt
   def minDist(nearest: Long): Int = nearest.toInt
 
@@ -387,6 +389,15 @@ private[graft] object Coded {
       var f = 0
       while (f < len) { cs(f)(data.codes(from + f)) += 1; f += 1 }
     }
+
+    /** [[weighted]]'s match costs of `centers`, null for a cluster with
+      * no rows.
+      */
+    def matchCost(centers: Array[Array[Int]]): Array[Array[Double]] =
+      Array.tabulate(k) { c =>
+        if (size(c) == 0) null
+        else Array.tabulate(centers(c).length)(i => 1.0 - of(c)(i)(centers(c)(i)).toDouble / size(c))
+      }
   }
 
   /** A center list as the kernel reads it from Spark: one dictionary over
@@ -402,18 +413,25 @@ private[graft] object Coded {
       while (c < centers.numElements()) { b.addRow(centers.getArray(c)); c += 1 }
       b.result()
     }
-    private val rows = Array.tabulate(dict.rows)(dict.row)
+    /** The centers as rows of codes. */
+    val rows: Array[Array[Int]] = Array.tabulate(dict.rows)(dict.row)
 
-    /** The nearest center to `a`, a null element read as `nullAs` (null
-      * itself matches a null center element).
+    /** `a` coded against the centers, a null element read as `nullAs`
+      * (null itself matches a null center element).
       */
-    def nearest(a: ArrayData, nullAs: UTF8String): Long = {
+    def code(a: ArrayData, nullAs: UTF8String): Array[Int] = {
       val row = new Array[Int](a.numElements())
       var i = 0
       while (i < row.length) {
         row(i) = dict.code(i, if (a.isNullAt(i)) nullAs else a.getUTF8String(i))
         i += 1
       }
+      row
+    }
+
+    /** The nearest center to `a` (see [[code]]). */
+    def nearest(a: ArrayData, nullAs: UTF8String): Long = {
+      val row = code(a, nullAs)
       Coded.nearest(row, 0, row.length, rows)
     }
   }

@@ -73,9 +73,11 @@ private[graft] trait QueriesKModes { this: Queries.type =>
        |FROM d""".stripMargin
 
   /** R5 through the front door: one frequency-weighted assignment step
-    * against the fixed centers ([[FrequencyAssign]]). The oracle replays
-    * the reduction exactly: Hamming populations → k×n match-count
-    * weights → re-assignment where a matching position costs
+    * against the fixed centers ([[FrequencyAssign]]: a count job with no
+    * exchange, then the coded kernel `Coded.nearestWeighted` per row, so
+    * the registered plan is one narrow scan before the sort). The oracle
+    * replays the reduction exactly: Hamming populations → k×n
+    * match-count weights → re-assignment where a matching position costs
     * 1 − freq(center value)/|cluster| — all in plain SQL since the
     * weights are scalars, not per-row state. One branch is NOT
     * replayed: an empty Hamming cluster (operator falls back to plain

@@ -559,4 +559,81 @@ class KModesSpec extends SparkSuite {
     assert(fitted(m) == ((want.centers, want.cost, want.iterations)))
     assert(once > 0 && bytes == once, s"fit wrote $bytes shuffle bytes, one materialization $once")
   }
+
+  test("the frequency assignment step equals the driver reference on degenerate " +
+      "input: a null array, rows shorter and longer than the centers, nulls next " +
+      "to a literal ∅, centers of unequal length and a center with no rows") {
+    val s = ArrayModeAggregator.NullSentinel
+    // no row holds a "q" value, so the last center's Hamming cluster is empty
+    val centers = Array(Array("a", "b", "c"), Array("d", "e", s, "g"),
+      Array("q0", "q1", "q2", "q3", "q4"))
+    val rnd = new Random(101)
+    val vocab = Array("a", "b", "c", "d", "e", "g", "x", s, null)
+    val random = Seq.fill(150)(Seq.fill(1 + rnd.nextInt(6))(vocab(rnd.nextInt(vocab.length))))
+    val odd = Seq(null, Seq.empty[String], Seq("x", "y", "z", "w", "v"), Seq[String](null, s),
+      Seq("d", "e", null, "g", "a", "b"), Seq("d", "e", s))
+    val out = graft.operators.FrequencyAssign.assign((random ++ odd).toDF("features"), "features",
+      centers).select("features", "prediction", "min_dist").collect()
+    assert(out.length == random.length + odd.length)
+
+    // driver reference over the non-null arrays, a null element read as ∅:
+    // Hamming populations, then frequencyDissim (an empty cluster: Hamming)
+    val asRow = (f: Seq[String]) => f.map(v => if (v == null) s else v).toArray
+    val rows = (random ++ odd).filter(_ != null).map(asRow)
+    val hAssign = rows.map { r =>
+      centers.indices.minBy(c => (StringLocalKModes.hamming(r, centers(c)), c))
+    }
+    val sizes = Array.tabulate(centers.length)(c => hAssign.count(_ == c).toLong)
+    assert(sizes(0) > 0 && sizes(1) > 0 && sizes(2) == 0, sizes.toSeq)
+    val freqs = Array.tabulate(centers.length) { c =>
+      Array.tabulate(centers(c).length) { i =>
+        rows.zip(hAssign).collect { case (r, `c`) if r.length > i => r(i) }
+          .groupBy(identity).map { case (v, g) => v -> g.length.toLong }: collection.Map[String, Long]
+      }
+    }
+    def refDist(r: Array[String], c: Int): Double =
+      if (sizes(c) == 0) StringLocalKModes.hamming(r, centers(c)).toDouble
+      else StringLocalKModes.frequencyDissim(r, centers(c), freqs(c), sizes(c))
+    out.foreach { row =>
+      if (row.isNullAt(0)) assert(row.isNullAt(1) && row.isNullAt(2), "a null array")
+      else {
+        val f = asRow(row.getSeq[String](0))
+        val ds = centers.indices.map(refDist(f, _))
+        val expP = centers.indices.minBy(c => (ds(c), c))
+        assert(row.getInt(1) == expP, s"row ${f.toSeq}")
+        assert(row.getDouble(2) == ds(expP), s"row ${f.toSeq}")
+      }
+    }
+  }
+
+  test("building the frequency assignment step runs one job and writes no " +
+      "shuffle bytes") {
+    val df = plantedDf(400, 4, 3, 43).localCheckpoint(true)
+    val centers = Array(
+      Array("g0v0", "g0v1", "g0v2", "g0v3"),
+      Array("g1v0", "g1v1", "g1v2", "g1v3"),
+      Array("g2v0", "g2v1", "g2v2", "g2v3"))
+    val (jobs, bytes) = jobsAndShuffleBytes(
+      graft.operators.FrequencyAssign.assign(df, "features", centers))
+    assert(jobs == 1, s"jobs $jobs")
+    assert(bytes == 0L, s"shuffle-write bytes $bytes")
+  }
+
+  test("an ensemble fit with frequency stage 2 equals the String oracle: each " +
+      "partition's local fit, then the frequency-weighted fit of their modes") {
+    val (k, maxIter, seed) = (4, 10, 7L)
+    val df = plantedDf(800, 6, 4, 59, signal = 0.6).repartition(4, col("features"))
+      .localCheckpoint(true)
+    val parts = df.select("features").as[Seq[String]].rdd.glom().collect()
+    assert(parts.length == 4)
+    val modes = parts.zipWithIndex.flatMap { case (part, pid) =>
+      StringLocalKModes.fit(part.map(_.toArray), k, maxIter, seed + pid)._1.centers
+    }
+    val (want, _) = StringLocalKModes.fit(modes, k, maxIter, seed, useFrequency = true)
+    assert(want.iterations > 1, "no pass ran with the frequency weights")
+    val m = new KModes().setK(k).setMaxIter(maxIter).setSeed(seed).setInitMode("ensemble")
+      .setDistance("frequency").fit(df)
+    assert(m.clusterCenters.map(_.toSeq).toSeq == want.centers.map(_.toSeq).toSeq)
+    assert(m.iterations == want.iterations)
+  }
 }
