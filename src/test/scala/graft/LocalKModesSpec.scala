@@ -196,4 +196,15 @@ class LocalKModesSpec extends AnyFunSuite {
     assert(StringLocalKModes.frequencyDissim(Array("a", "b", "c"), Array("a"),
       Array.fill(3)(Map("a" -> 1L)), 2L) == 2.5)
   }
+
+  test("coded frequency-weighted fit equals the String oracle on ragged rows") {
+    // rows of 2 to 6 positions: a position only one side has costs 1 in
+    // every weighted pass
+    for (seed <- 1 to 6) {
+      val rnd = new Random(seed)
+      val data = noisy(200, 6, 4, 4, signal = 0.6, seed).map(_.take(2 + rnd.nextInt(5)))
+      for (k <- Seq(3, 6); maxIter <- Seq(2, 10))
+        sameAsOracle(data, k, maxIter, seed, useFrequency = true)
+    }
+  }
 }
